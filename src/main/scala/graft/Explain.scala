@@ -1,20 +1,15 @@
 package graft
 
 import graft.queries.Registry
-import org.apache.spark.sql.SparkSession
 
 /** Plan-audit helper: prints the formatted physical plan for the given
-  * queries (all if none named) — used to keep pushdown, pruning,
-  * broadcast choices, and TakeOrderedAndProject visible while tuning. */
+  * queries (all if none named) under the Bench/Verify session policy —
+  * used to keep pushdown, pruning, broadcast choices, and
+  * TakeOrderedAndProject visible while tuning. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder(8, sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else Registry.queries.keys.toSeq.sorted
     names.foreach { n =>

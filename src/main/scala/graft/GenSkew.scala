@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Hot-key skew fixture for the salted-join A/B (round-10 VERDICT item
@@ -20,13 +19,8 @@ object GenSkew {
   def main(args: Array[String]): Unit = {
     val src = if (args.length > 0) args(0) else "/root/repo/benchdata/sf1"
     val out = if (args.length > 1) args(1) else "/root/repo/benchdata/sf1_skew"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Session.builder(cpus, src).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // flip half of all rows to the hot type; the survivors keep their
     // original ~1/5 split, so the hot key ends near 50% + 10% = 60%

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,21 +6,9 @@ object Verify {
   def main(args: Array[String]): Unit = {
     LocalCatalog.reset() // Derby/warehouse are per-session scratch (round-13)
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Same broadcast policy as Bench (see its scaladoc): no static
-    // auto-broadcasts — AQE upgrades joins from real runtime sizes
-    // instead of pre-execution guesses, so the big-SF oracle gates run
-    // the cliff-free plans too.
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_AUTO_BROADCAST", "-1"))
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_ADAPTIVE_BROADCAST", "8m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    // the Bench session policy, so the oracle gates check Bench's plans
+    val spark = Session.builder(cpus, sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // optional subset (comma-separated names): big-SF local gates skip

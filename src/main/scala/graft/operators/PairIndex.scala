@@ -568,18 +568,11 @@ object PairIndex {
     import org.apache.spark.storage.StorageLevel
     // per-phase wall is ALWAYS exported to Telemetry (round-13, VERDICT
     // item 7) so a bench regression in the advance is attributable from
-    // BENCH_wall.json without a debug rerun; the env flag only adds the
-    // live print + job-description tagging for UI drill-down
-    val __dbg = sys.env.get("SPARK_GRAFT_ADV_DEBUG").contains("1")
+    // BENCH_wall.json without a debug rerun
     def ph[T](name: String)(f: => T): T = {
-      if (__dbg) spark.sparkContext.setJobDescription(s"adv:$name")
       val t0 = System.nanoTime(); val r = f
       val ms = (System.nanoTime() - t0) / 1000000L
       graft.Telemetry.record(s"pairindex.advance_ms_$name", ms)
-      if (__dbg) {
-        println(f"ADVPHASE $name%-24s ${ms / 1e3}%8.2f s")
-        spark.sparkContext.setJobDescription(null)
-      }
       r
     }
     val postingsTable = idx.postingsTable.getOrElse(throw new IllegalArgumentException(

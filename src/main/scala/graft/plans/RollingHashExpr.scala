@@ -582,7 +582,7 @@ case class WinnowExpr(child: Expression, k: Int, w: Int)
 }
 
 /** Session extensions: registers engine-native SQL functions.
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * `withExtensions(new GraftExtensions)` on a session builder, or
   * `spark.sql.extensions=graft.plans.GraftExtensions`. */
 /** Shared SQL-surface builders: extract foldable INT literals for the
   * parameterized expressions so `graft_shingles(text, 3)` etc. work

@@ -91,18 +91,14 @@ object DocsStreaming {
   }
 
   /** One-micro-batch-per-file reader over staged (doc_id, text) chunks.
-    * `SPARK_GRAFT_STREAM_MAXFILES` overrides the files-per-trigger for
-    * batch-count sensitivity experiments ONLY (round-20, VERDICT item
-    * 5) — the registered default stays 1 file per micro-batch, which
-    * is the cross-batch-suppression contract the q33 oracle pin
-    * exercises (fewer batches exercise less of the state machinery,
-    * not less data). */
+    * One file per micro-batch is the cross-batch-suppression contract
+    * the q33 oracle pin exercises (fewer batches exercise less of the
+    * state machinery, not less data). */
   def readDocChunkStream(spark: SparkSession,
                          streamDir: java.nio.file.Path): DataFrame =
     spark.readStream
       .schema("doc_id LONG, text STRING")
-      .option("maxFilesPerTrigger",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_MAXFILES", "1"))
+      .option("maxFilesPerTrigger", 1)
       .parquet(streamDir.toString)
 
   /** Cross-batch exact dedup: emit the smallest-id row the FIRST time a

@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Session
 import graft.operators.{PairIndex, TextAnalysis}
 import graft.sources.Tables
 
@@ -38,11 +38,7 @@ object CrossJvmPin {
     // recovered from the metastore by a different application) — the
     // embedded Derby metastore_db in cwd plays the served metastore a
     // real cluster shares between jobs
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = Session.builder(8, sfDir)
       .enableHiveSupport()
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -1,8 +1,8 @@
 package graft.tools
 
-import graft.{LocalCatalog, Telemetry}
+import graft.{LocalCatalog, Session, Telemetry}
 import graft.operators.PairIndex
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Frozen-cap drift ladder (round-14, VERDICT items 1+2): the
@@ -63,32 +63,10 @@ object DriftLadder {
       .toInt.min(mod - 1).max(1)
     val baseRest = sys.env.getOrElse("SPARK_GRAFT_DRIFT_BASE", "slice0") == "rest"
     val chainRuns = sys.env.getOrElse("SPARK_GRAFT_DRIFT_RUNS", "2").toInt.max(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val inputBytes = {
-      val root = java.nio.file.Paths.get(sfDir)
-      val walk = java.nio.file.Files.walk(root)
-      try walk.filter(java.nio.file.Files.isRegularFile(_))
-        .mapToLong(java.nio.file.Files.size(_)).sum()
-      finally walk.close()
-    }
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val initialParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS",
-      math.min(1024L, math.max(cpus.toLong, inputBytes * 8 / (64L << 20))).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", initialParts)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_AUTO_BROADCAST", "-1"))
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_ADAPTIVE_BROADCAST", "8m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Session.builder(cpus, sfDir)
       // 7 advances × eager localCheckpoints — release blocks promptly
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "30s"))
+      .config("spark.cleaner.periodicGC.interval", "30s")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("sum(id)").collect() // warm-up
