@@ -349,7 +349,8 @@ object Dedup {
     // native kernel (plans.WinnowExpr): one byte scan per row — md5 of
     // each k-gram span via a thread-local digest, monotonic-deque
     // sliding minima, open-addressing distinct. The declarative twin
-    // below is its equivalence baseline; the interpreted
+    // in the specs (graft.DeclarativeTwins) is its equivalence
+    // baseline; the interpreted
     // md5→hex→conv round trip per gram and per-window slice()
     // allocation made the hot path GC-bound at the sf10 decade.
     import org.apache.spark.sql.GraftColumnBridge
@@ -357,30 +358,6 @@ object Dedup {
       explode(GraftColumnBridge.column(graft.plans.WinnowExpr(
         GraftColumnBridge.expression(col(textCol).cast("string")), k, w)))
         .as("fingerprint"))
-  }
-
-  /** Interpreted reference implementation of `winnowFingerprints`
-    * (kept for the equivalence property spec; do not use on hot
-    * paths). Every array feeding a lambda is materialized as a column
-    * first: lambdas re-evaluate non-attribute operands per element (no
-    * CSE through lambda bodies), so inlining the token array would
-    * re-split per k-gram and inlining the hash array would re-md5 per
-    * window — each a quadratic blowup (the un-materialized form
-    * measured >10 min vs ~2 s at sf0.1). */
-  def winnowFingerprintsDeclarative(df: DataFrame, idCol: String, textCol: String,
-                                    k: Int = 3, w: Int = 4): DataFrame = {
-    val withGrams = df.select(col(idCol).as("doc_id"),
-      TextAnalysis.shinglesCol(col(textCol), k).as("__g"))
-    val hashed = withGrams.select(col("doc_id"),
-      transform(col("__g"), g =>
-        conv(substring(md5(g), 1, 8), 16, 10).cast("long")).as("__h"))
-    val nh = size(col("__h"))
-    // fewer than w hashes: the whole doc is one window
-    val mins = when(nh === 0, array().cast("array<long>"))
-      .otherwise(transform(
-        sequence(lit(1), greatest(nh - (w - 1), lit(1))),
-        j => array_min(slice(col("__h"), j, least(lit(w), nh)))))
-    hashed.select(col("doc_id"), explode(array_distinct(mins)).as("fingerprint"))
   }
 
   // ---------------- exact-substring matches (d35) ----------------

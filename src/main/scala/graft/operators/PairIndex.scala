@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Telemetry
+import graft.etl.Layout
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Materialized candidate-pair index — the compute-once/join-many
   * protocol a 100 TB dedup run actually uses (round-11, VERDICT item
@@ -60,7 +63,10 @@ object PairIndex {
     * advance overhead the round-12 measurements flagged. */
   final case class DocIndex(survivorsTable: String, pairsTable: String,
                             postingsTable: Option[String] = None,
-                            dfTable: Option[String] = None)
+                            dfTable: Option[String] = None) {
+    def tables: Seq[String] =
+      Seq(survivorsTable, pairsTable) ++ postingsTable ++ dfTable
+  }
 
   val SurvivorsBase = "graft_pair_survivors"
   val PairsBase = "graft_pair_index"
@@ -77,9 +83,7 @@ object PairIndex {
     * advance phase at sf30 (~4 s of md5 over 1.5M docs per advance; at
     * 100 TB it is a full corpus text scan per day for a value that
     * never changes). Stored once at materialize, the probe reads a
-    * 32-byte column with the text pruned out of the scan entirely.
-    * Advances of a pre-round-15 index (no such column) fall back to
-    * deriving the hash — back-compat, at the old cost. */
+    * 32-byte column with the text pruned out of the scan entirely. */
   val HashCol = "graft_h"
 
   // per-JVM tag + per-call counter: two concurrent consumers in one
@@ -157,10 +161,10 @@ object PairIndex {
     * are copied so `advanceDocIndex` reads the same semantics. */
   def cloneDocIndex(spark: SparkSession, idx: DocIndex): DocIndex =
     DocIndex(
-      cloneTableWithData(spark, idx.survivorsTable, SurvivorsBase),
-      cloneTableWithData(spark, idx.pairsTable, PairsBase),
-      idx.postingsTable.map(cloneTableWithData(spark, _, PostingsBase)),
-      idx.dfTable.map(cloneTableWithData(spark, _, DfBase)))
+      cloneTableWithData(spark, idx.survivorsTable, freshName(SurvivorsBase)),
+      cloneTableWithData(spark, idx.pairsTable, freshName(PairsBase)),
+      idx.postingsTable.map(cloneTableWithData(spark, _, freshName(PostingsBase))),
+      idx.dfTable.map(cloneTableWithData(spark, _, freshName(DfBase))))
 
   /** One table of the storage-level clone: catalog-metadata copy
     * (schema + bucket spec + graft.* TBLPROPERTIES in one
@@ -170,9 +174,8 @@ object PairIndex {
     * former warehouse-dir string convention silently produced an
     * empty clone under a non-default database). */
   private def cloneTableWithData(spark: SparkSession, src: String,
-                                 prefix: String): String = {
+                                 dst: String): String = {
     val hconf = spark.sparkContext.hadoopConfiguration
-    val dst = freshName(prefix)
     val (sloc, dloc) = org.apache.spark.sql.GraftColumnBridge
       .cloneTableDefinition(spark, src, dst)
     val fs = sloc.getFileSystem(hconf)
@@ -193,9 +196,7 @@ object PairIndex {
   /** Drop one generation's tables (call after the consuming action when
     * the index is no longer needed — e.g. specs and one-shot flows). */
   def dropDocIndex(spark: SparkSession, idx: DocIndex): Unit =
-    (Seq(idx.survivorsTable, idx.pairsTable)
-      ++ idx.postingsTable ++ idx.dfTable)
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    idx.tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
 
   // ---- own-JVM generation bound (round-13, VERDICT item 4) ----
   // The registered queries (d28-d32) materialize a fresh generation per
@@ -260,8 +261,7 @@ object PairIndex {
   }
 
   def keepLatest(spark: SparkSession, key: String, idx: DocIndex): Unit =
-    keepLatest(spark, key,
-      Seq(idx.survivorsTable, idx.pairsTable) ++ idx.postingsTable ++ idx.dfTable)
+    keepLatest(spark, key, idx.tables)
 
   def dropCorpusIndex(spark: SparkSession, idx: CorpusIndex): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS `${idx.hashesTable}`")
@@ -324,6 +324,72 @@ object PairIndex {
     else (bytes / target).min(BigInt(4096)).max(BigInt(32)).toInt
   }
 
+  /** The `graft.*` TBLPROPERTIES stamp on a pairs table: the semantics
+    * the index was materialized with (`advanceDocIndex` reads them, so
+    * an advance never runs with a different cap/threshold than the
+    * index it extends), the survivor count the advance's economy guard
+    * compares against, and the frozen-drift accumulators. */
+  private[graft] final case class Stamp(threshold: Double, maxDocFreq: Int,
+                                        shingleK: Int, numBuckets: Int,
+                                        nDocs: Long, drift: Drift = Drift())
+
+  /** Frozen-advance drift accumulators (`driftEstimate` reads them). A
+    * frozen advance's contribution is normalized AT ADVANCE TIME, when
+    * the corpus statistics it depends on are current, so reading the
+    * estimate later is a pure TBLPROPERTIES lookup. Model (validated
+    * against the DriftLadder's measured drift, both shapes):
+    *   - a flip perturbs the capped shingle sets of its ~h holder docs
+    *     (h = the flip's smaller-side df);
+    *   - each perturbed doc's pairs move by ~one shingle out of a
+    *     ~ū-shingle union, ū ≈ 4c̄/(3+t) (n1≈n2≈c̄ and J≈(t+1)/2 give
+    *     u = 2c/(1+J)), so the |ΔJ| mass added per flip is
+    *     ~h·d̄·(1/ū) over d̄·nDocs/2 = nPairs pairs;
+    *   - the mean-over-all-pairs contribution per advance collapses to
+    *     Σh·(3+t)/(2·Σ_capped df) — nDocs and nPairs both cancel.
+    * Stored in nano-units as a long (a float accumulator would invite
+    * rounding-format drift in the string-valued properties). */
+  private[graft] final case class Drift(advances: Long = 0L, flips: Long = 0L,
+                                        holders: Long = 0L, contribNano: Long = 0L) {
+    /** The accumulators after one advance. An exact advance rescores
+      * only pairs touching A, so pairs outside A keep their (possibly
+      * drifted) scores and the accumulated drift CARRIES; only a full
+      * rematerialization resets it. */
+    def after(frozenCaps: Boolean, nFlips: Long, flipHolders: Long,
+              cappedPosts: Long, threshold: Double): Drift =
+      if (!frozenCaps) this
+      else {
+        val c =
+          if (flipHolders > 0 && cappedPosts > 0)
+            math.round(flipHolders.toDouble * (3.0 + threshold) / (2.0 * cappedPosts) * 1e9)
+          else 0L
+        Drift(advances + 1, flips + nFlips, holders + flipHolders, contribNano + c)
+      }
+  }
+
+  private def writeStamp(spark: SparkSession, table: String, s: Stamp): Unit = {
+    val kv = Seq("threshold" -> s.threshold, "maxDocFreq" -> s.maxDocFreq,
+      "shingleK" -> s.shingleK, "numBuckets" -> s.numBuckets, "nDocs" -> s.nDocs,
+      "drift.advances" -> s.drift.advances, "drift.flips" -> s.drift.flips,
+      "drift.holders" -> s.drift.holders, "drift.contrib_nano" -> s.drift.contribNano)
+    spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES(" +
+      kv.map { case (k, v) => s"'graft.$k'='$v'" }.mkString(",") + ")")
+  }
+
+  private[graft] def readStamp(spark: SparkSession, table: String): Stamp = {
+    val props = spark.sql(s"SHOW TBLPROPERTIES `$table`")
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    def prop(k: String): String = props.getOrElse(s"graft.$k",
+      throw new IllegalArgumentException(
+        s"$table lacks TBLPROPERTY graft.$k — not a materializeDocIndex artifact"))
+    def drift(k: String): Long = props.getOrElse(s"graft.drift.$k", "0").toLong
+    Stamp(prop("threshold").toDouble, prop("maxDocFreq").toInt,
+      prop("shingleK").toInt, prop("numBuckets").toInt, prop("nDocs").toLong,
+      Drift(drift("advances"), drift("flips"), drift("holders"), drift("contrib_nano")))
+  }
+
+  /** A long aggregate cell, 0 when null (a sum over no rows). */
+  private def longOr0(r: Row, i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
+
   /** Compute survivors + pair index once and write both bucketed.
     * `numBuckets` sizes the co-location unit — pass 0 (the default)
     * to derive it from the input size (`autoBuckets`); at corpus
@@ -383,16 +449,9 @@ object PairIndex {
     // can never silently run with a different cap/threshold than the
     // index it extends. nDocs (survivor count — a parquet metadata
     // read) feeds the advance's economy guard.
-    val nDocs = spark.table(survivorsTable).count()
-    spark.sql(
-      s"ALTER TABLE `$pairsTable` SET TBLPROPERTIES(" +
-        s"'graft.threshold'='$threshold','graft.maxDocFreq'='$maxDocFreq'," +
-        s"'graft.shingleK'='$shingleK','graft.numBuckets'='$buckets'," +
-        s"'graft.nDocs'='$nDocs'," +
-        // fresh exact scores → zeroed drift accumulators (driftEstimate)
-        "'graft.drift.advances'='0','graft.drift.flips'='0'," +
-        "'graft.drift.holders'='0','graft.drift.contrib_nano'='0'," +
-        "'graft.drift.untracked'='0')")
+    // fresh exact scores → zeroed drift accumulators (driftEstimate)
+    writeStamp(spark, pairsTable, Stamp(threshold, maxDocFreq, shingleK,
+      buckets, spark.table(survivorsTable).count()))
     DocIndex(survivorsTable, pairsTable,
       if (keepPostings) Some(postingsTable) else None,
       if (keepPostings) Some(dfTable) else None)
@@ -414,519 +473,451 @@ object PairIndex {
     * postings and df tables live inside `advanced`). Call once the old
     * generation's readers are done. */
   def dropSuperseded(spark: SparkSession, old: DocIndex, advanced: DocIndex): Unit = {
-    val live = Set(advanced.survivorsTable, advanced.pairsTable) ++
-      advanced.postingsTable ++ advanced.dfTable
-    (Seq(old.survivorsTable, old.pairsTable) ++ old.postingsTable ++ old.dfTable)
-      .filterNot(live).foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    old.tables.filterNot(advanced.tables.toSet)
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
   }
 
-  /** Advance a standing doc index with a new batch WITHOUT full
-    * rematerialization (round-12, VERDICT item 2) — what a daily
-    * 100 TB pipeline does between corpus snapshots. The post-advance
-    * index is row-identical to `materializeDocIndex` on corpus ∪ batch
-    * (PairIndexSpec pins all three tables on both code paths; the
-    * registered d31 query pins the curation consumer against the d12
-    * oracle end-to-end).
+  /** Advance a standing doc index with a new batch without full
+    * rematerialization — what a daily pipeline does between corpus
+    * snapshots. The post-advance index is row-identical to
+    * `materializeDocIndex` on corpus ∪ batch (PairIndexSpec pins all
+    * four tables on every write case; the registered d31/d39 queries
+    * pin the curation consumer against the d12 oracle end-to-end).
     *
-    * Why append-only is NOT exact, and what is: the pair scores are
+    * Why append-only is not exact, and what is: pair scores are
     * Jaccard over the df-CAPPED shingle universe, and the batch moves
     * document frequencies. A shingle crossing the cap (either way —
     * batch postings push it over, an eviction pulls it back under)
-    * changes the capped universe, which changes intersection counts
-    * AND per-doc cardinalities of OLD pairs; shrinking a pair's union
-    * can even lift a previously sub-threshold pair above threshold, so
-    * the delta is not purely additive. The exact affected set is
+    * changes intersection counts AND per-doc cardinalities of OLD
+    * pairs; shrinking a pair's union can even lift a sub-threshold pair
+    * above threshold. The exact affected set is
     *
     *   A = batch survivors ∪ evicted corpus docs
     *       ∪ old docs holding any shingle whose cap status changed
     *
-    * — every pair with BOTH endpoints outside A is unchanged (its
-    * shared shingles kept their status, and each endpoint's
-    * cardinality is a function of its own shingles' statuses alone).
-    * So the advance rescores exactly the pairs touching A, over the
-    * candidate shingles SA = shingles of A docs (any pair touching A
-    * shares only shingles its A-endpoint holds, so SA covers every
-    * intersection it needs), with cardinalities recomputed for the
-    * delta-pair participants over the full capped combined universe.
+    * — a pair with both endpoints outside A is unchanged. So the
+    * advance rescores exactly the pairs touching A, over the candidate
+    * shingles of A's docs, with cardinalities recomputed over the full
+    * capped combined universe.
     *
-    * Physical shape (nothing here shuffles the full index):
-    *  - every doc-keyed access goes through `survivorsTable` (bucketed
-    *    by the id: affected/participant docs are re-shingled from a
-    *    bucket-co-located semi join + the native shingle kernel, never
-    *    by re-keying the posting table);
-    *  - every shingle-keyed access goes through `postingsTable` /
-    *    `dfTable` (bucketed by `s`: the candidate semi joins and the
-    *    df aggregation ride the bucketing with no exchange);
-    *  - the combined per-shingle cap-status relation is computed in
-    *    ONE pass per advance — off the standing df artifact
-    *    (~|distinct shingles| delta rows) when present, off a single
-    *    postings aggregation otherwise — persisted, and probed by all
-    *    three key sets. (Round 12 shipped this as three separate
-    *    full-postings aggregations; measured at 2.6-6.6× the cost of
-    *    rematerialization at sf0.1-sf1, which round 13 exists to fix.)
-    *  - everything else is batch- or delta-scale, EXCEPT what the
-    *    cap-cascade forces: the affected set scales with the CORPUS
-    *    for a fixed batch fraction (shingles sit in a band near the
-    *    df-cap and any batch flips some; measured 27.7k affected docs
-    *    at sf1 → 277k at sf10 for the same 1.6% batch), so the
-    *    rescore + the copy-forward pairs rewrite are an irreducible
-    *    corpus-coupled tax of EXACT global-df-cap semantics. Honest,
-    *    measured cost model (BENCH_decades_r13.json): the exact
-    *    advance lands at ~1.0-1.3× a full rematerialization at every
-    *    decade tried — use it as the AUDITED path (and after
-    *    eviction-heavy batches), not the daily one. The daily path is
-    *    `frozenCaps` below (0.38× rebuild wall at sf1 → 0.27× at
-    *    sf10, growing with scale); the economy guard turns the
-    *    stress case into plain rebuild cost automatically.
+    * Phases, in order (private steps below; `AdvanceRun` runs each
+    * one under the job description `advanceDocIndex:<phase>` and
+    * records its wall as `pairindex.advance_ms_<phase>`):
+    *  1. decide (`decideBatch`): exact-dedup the batch and probe the
+    *     survivors' stored canonical hash → new survivors and evicted
+    *     corpus docs, counted in one action.
+    *  2. cap status (`capStatus`): the df delta of batch and
+    *     evictions, ONE combined per-shingle cap-status relation off
+    *     the df artifact (the advance's only corpus-scale cache), the
+    *     flip scalars and the affected old docs.
+    *  3. economy guard (`rematerialize`): when new + evicted + affected
+    *     docs exceed `economyGuard` × corpus docs (the stamped
+    *     `graft.nDocs`), the delta path cannot beat a rebuild; the
+    *     advance writes fresh generations from the decided survivors
+    *     instead — row-identical either way, telemetry
+    *     `pairindex.advance_fallback` records it. Pass
+    *     `Double.PositiveInfinity` to force the delta path.
+    *  4. delta rescore (`rescoreDelta`): pairs touching A.
+    *  5. write (`writeDelta`), by case:
+    *     - no evictions: no existing survivor, posting or df row
+    *       changes, so those three tables are APPENDED in place; the
+    *       pairs table is appended too when no old doc is affected
+    *       (the delta is then exactly the new cross+within pairs),
+    *       else rewritten to a fresh generation (copy-forward of pairs
+    *       not touching A, plus the delta). The cap cascade makes the
+    *       rewrite the normal daily case at scale — any large corpus
+    *       has a band of shingles near the df-cap and any batch flips
+    *       some.
+    *     - evictions: all four tables get a fresh generation with
+    *       copy-forward of live rows. Still no pair regeneration.
+    *  6. finish: outcome telemetry.
     *
-    * Write strategy, chosen from two scalar counts:
-    *  - no evictions, no cap crossings → all four artifacts APPENDED
-    *    in place (`Layout.appendBucketed`); the delta is purely the
-    *    new cross+within pairs.
-    *  - no evictions, cap crossings (the NORMAL daily case at scale —
-    *    every large corpus has a band of shingles near the df-cap and
-    *    any batch flips some) → survivors, postings and df still
-    *    append in place (no existing row of any changes), and only the
-    *    PAIRS table is rewritten to a fresh generation (copy-forward
-    *    of pairs not touching A, plus the delta).
-    *  - evictions → all four tables get a fresh generation with
-    *    copy-forward of live rows. Still no pair regeneration.
-    *  - economy guard (`economyGuard`, round-13): when
-    *    nNew + nEvicted + nAffected exceeds `economyGuard` × corpus
-    *    docs (from the stamped `graft.nDocs`), the delta path cannot
-    *    beat a rebuild — the advance INTERNALLY rematerializes fresh
-    *    generations instead (reusing the already-made survivor
-    *    decisions), so callers get the same row-identical result
-    *    either way; telemetry `pairindex.advance_fallback` records it.
-    *    Pass `Double.PositiveInfinity` to force the delta path (specs
-    *    pinning the delta algebra do).
+    * Physical shape: doc-keyed access goes through `survivorsTable`
+    * (bucketed by the id), shingle-keyed access through the postings
+    * and df tables (bucketed by `s`); nothing shuffles the full index.
+    * What stays corpus-coupled is forced by the cap cascade: the
+    * affected set grows with the corpus for a fixed batch fraction
+    * (measured 27.7k affected docs at sf1 → 277k at sf10 for the same
+    * 1.6% batch), so the exact advance lands at ~1.0-1.3× a full
+    * rematerialization (BENCH_decades_r13.json) — the AUDITED path,
+    * not the daily one.
     *
-    * `frozenCaps = true` selects the cheap daily mode (round-13): NEW
-    * pairs are scored over the CURRENT capped universe exactly as the
-    * exact mode scores them, but existing pairs KEEP their birth
-    * scores — the cap-flip detection, affected-set rescore and the
-    * pairs copy-forward are all skipped, so a no-eviction frozen
-    * advance is pure batch-scale compute + four bucketed appends.
-    * When no shingle's cap status actually flips, frozen and exact
-    * advances are ROW-IDENTICAL (PairIndexSpec pins this); when flips
-    * occur, old-pair scores drift from the exact universe until the
-    * next rematerialization absorbs them — run exact advances (or
-    * periodic rebuilds) on an audit cadence and frozen advances
-    * day-to-day.
+    * `frozenCaps = true` is the daily mode (0.38× rebuild wall at sf1 →
+    * 0.27× at sf10): NEW pairs are scored over the current capped
+    * universe exactly as above, but existing pairs KEEP their birth
+    * scores — no flip rescore, no pairs copy-forward, so a no-eviction
+    * frozen advance is batch-scale compute plus four bucketed appends.
+    * Flip-free, frozen and exact are row-identical; otherwise old-pair
+    * scores drift until a rematerialization absorbs them, and the
+    * advance accumulates the drift estimate (`driftEstimate`) on the
+    * pairs table. `assertNoCapFlips` makes a frozen advance fail with
+    * an attributable message when the batch flips any cap status — for
+    * callers (d32) whose correctness pin assumes it does not.
     *
-    * Snapshot isolation is per-TABLE, scoped to what a path rewrites:
-    * a partial rewrite leaves the old PAIRS generation intact for
-    * concurrent readers but appends to the survivors/postings/df
-    * tables the superseded DocIndex shares, so a reader of the OLD
-    * index can observe appended survivor/posting rows with no
-    * corresponding pairs. Readers needing a full-index snapshot must
-    * read a generation that is not being advanced (the full-rewrite
-    * and fallback paths provide exactly that). Release superseded
-    * tables with `dropSuperseded` (NOT a blind `dropDocIndex(old)` —
-    * a partial rewrite REUSES the old survivors/postings/df tables in
-    * the advanced index).
+    * `preserveInput = true` selects copy-on-write: the tables the
+    * write would append to are first CLONED (`cloneDocIndex`'s
+    * storage-level file copy — ~0.3 s vs ~3.5 s for a four-table
+    * copy-forward at sf0.1, metadata-only on a snapshotting table
+    * format), so the input index is never mutated and several
+    * consumers can advance one standing base. Without it, the append
+    * cases mutate the input's tables: a reader of the old index can
+    * observe appended rows with no corresponding pairs, so release
+    * superseded tables with `dropSuperseded`, never a blind
+    * `dropDocIndex(old)`.
     *
-    * Semantics parameters (threshold/cap/k/buckets) are read from the
-    * TBLPROPERTIES `materializeDocIndex` stamped on the pairs table —
-    * an advance can never run with different semantics than the index
-    * it extends. Preconditions: the index was materialized with
-    * `keepPostings = true`; batch ids are distinct from surviving
-    * corpus ids; batch schema matches the corpus schema.
+    * Failure: the caches are released on every exit, and a throw drops
+    * every table this call created (clones and fresh generations) —
+    * never a table of the input index. Appends already made to the
+    * input's own tables (default mode) are not rolled back.
     *
-    * Append-path atomicity caveat: in-place appends are sequenced and
-    * each append's plan reads only pre-append table state, but a
-    * concurrent reader of the SAME DocIndex can observe a partially
-    * advanced index.
-    *
-    * `preserveInput = true` (round-19; reshaped round-20) selects
-    * COPY-ON-WRITE: every artifact of the RESULT is a fresh generation
-    * and the input index is never mutated — full snapshot isolation
-    * for concurrent readers of the old generation, and the property
-    * that lets several consumers advance the SAME standing base (the
-    * suite's shared fixture; see queries.StandingFixtures). Round 19
-    * implemented it by redirecting the append and partial-rewrite
-    * paths to the full-rewrite branch — an O(index) copy-forward
-    * (shuffle + parquet re-encode of all four tables) per advance,
-    * the round-19 VERDICT's top scale problem. Round 20: the paths
-    * keep their own write shapes and the tables they would mutate
-    * in place are CLONED first (`cloneDocIndex` — a storage-level
-    * file copy, metadata-only on a snapshotting table format), so a
-    * preserved advance costs one index file copy plus the same
-    * batch-scale appends as the default mode; the partial-rewrite
-    * path clones only the three appended tables (the pairs table is
-    * rewritten fresh either way). Row-identical to the default mode
-    * by construction — the clone is byte-identical and the append
-    * algebra is unchanged (PairIndexSpec pins all three shapes). */
+    * Preconditions: the index was materialized with `keepPostings =
+    * true` (postings and df artifacts; a missing one is an
+    * `IllegalArgumentException`) and carries its `graft.*` stamp —
+    * semantics are read from it, so an advance never runs with
+    * different threshold/cap/k/buckets than the index it extends;
+    * batch ids are distinct from surviving corpus ids; the batch
+    * schema matches the corpus schema. */
   def advanceDocIndex(spark: SparkSession, idx: DocIndex, batch: DataFrame,
                       idCol: String, textCol: String,
                       frozenCaps: Boolean = false,
                       economyGuard: Double = 0.3,
                       assertNoCapFlips: Boolean = false,
-                      driftStats: Boolean = true,
-                      autoCompactMaxFiles: Double = 0.0,
                       preserveInput: Boolean = false): AdvanceResult = {
-    import org.apache.spark.storage.StorageLevel
-    // per-phase wall is ALWAYS exported to Telemetry (round-13, VERDICT
-    // item 7) so a bench regression in the advance is attributable from
-    // BENCH_wall.json without a debug rerun
-    def ph[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      val ms = (System.nanoTime() - t0) / 1000000L
-      graft.Telemetry.record(s"pairindex.advance_ms_$name", ms)
-      r
+    val in = new AdvanceInput(spark, idx, idCol, textCol)
+    val run = new AdvanceRun(spark)
+    val (result, fallback) = run.guarded {
+      val d = decideBatch(in, run, batch)
+      val cs = capStatus(in, run, d, frozenCaps, assertNoCapFlips)
+      if (!frozenCaps &&
+          (d.nNew + d.nEvicted + cs.nAffected).toDouble > economyGuard * in.stamp.nDocs)
+        (rematerialize(in, run, d, cs), true)
+      else (writeDelta(in, run, d, cs, rescoreDelta(in, run, d, cs), preserveInput), false)
     }
-    val postingsTable = idx.postingsTable.getOrElse(throw new IllegalArgumentException(
-      s"advanceDocIndex needs the postings artifact: materialize ${idx.pairsTable} " +
-        "with keepPostings = true"))
-    val props = spark.sql(s"SHOW TBLPROPERTIES `${idx.pairsTable}`")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    def prop(k: String): String = props.getOrElse(s"graft.$k",
-      throw new IllegalArgumentException(
-        s"${idx.pairsTable} lacks TBLPROPERTY graft.$k — not a materializeDocIndex artifact"))
-    val threshold = prop("threshold").toDouble
-    val cap = prop("maxDocFreq").toInt
-    val shingleK = prop("shingleK").toInt
-    val numBuckets = prop("numBuckets").toInt
+    finish(result, fallback, frozenCaps)
+  }
 
-    val survivors = spark.table(idx.survivorsTable)
-    val stored = spark.table(postingsTable)
+  /** The one runner of an advance's phases, and the owner of what they
+    * leave behind: every cache and every table the call creates is
+    * registered here, and `guarded` releases the caches on every exit
+    * and drops the created tables on a throw. */
+  private final class AdvanceRun(spark: SparkSession) {
+    private val sc = spark.sparkContext
+    private val caches = scala.collection.mutable.Buffer.empty[DataFrame]
+    private val created = scala.collection.mutable.Buffer.empty[String]
+
+    /** One named phase: its jobs carry the description
+      * `advanceDocIndex:<name>` (the caller's description is restored
+      * after; its job group is never touched), and its wall is always
+      * exported to Telemetry so a bench regression in the advance is
+      * attributable without a debug rerun. */
+    def phase[T](name: String)(body: => T): T = {
+      val callerDescription = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(s"advanceDocIndex:$name")
+      try {
+        val t0 = System.nanoTime()
+        val r = body
+        Telemetry.record(s"pairindex.advance_ms_$name", (System.nanoTime() - t0) / 1000000L)
+        r
+      } finally sc.setJobDescription(callerDescription)
+    }
+
+    /** A phase whose output is eagerly localCheckpoint'd, not persisted:
+      * a lazy advance DAG grows multiplicatively — every downstream
+      * plan embeds the full upstream tree, and Catalyst re-analyzing
+      * thousands of nodes per action measured ~half the advance wall at
+      * sf0.1 (and an explain-string heap blowout in long sessions). A
+      * checkpoint is one small eager job whose output the rest of the
+      * advance reads as a flat block scan; its plan references no
+      * catalog table, so in-place appends cannot trigger a
+      * CacheManager refresh through it. Blocks are released by
+      * ContextCleaner (set spark.cleaner.periodicGC.interval low on
+      * long-lived sessions); advance-internal state is not recoverable
+      * on executor loss — rerun the advance. */
+    def checkpoint(name: String)(df: => DataFrame): DataFrame =
+      phase(name)(df.localCheckpoint(true))
+
+    def cache(df: DataFrame, level: StorageLevel): DataFrame = {
+      caches += df
+      df.persist(level)
+    }
+
+    /** Release before mutating any table a cache reads: an insert
+      * re-executes every cache entry whose plan contains the table
+      * (CacheManager refresh) — a measured 10× CPU storm at sf0.01. */
+    def releaseCaches(): Unit = {
+      caches.foreach(_.unpersist())
+      caches.clear()
+    }
+
+    /** A fresh generation name owned by this call. */
+    def fresh(prefix: String): String = {
+      val t = freshName(prefix)
+      created += t
+      t
+    }
+
+    def cloneTable(src: String, prefix: String): String =
+      cloneTableWithData(spark, src, fresh(prefix))
+
+    def guarded[T](body: => T): T = {
+      var completed = false
+      try {
+        val r = body
+        completed = true
+        r
+      } finally {
+        releaseCaches()
+        // created names are fresh generations, never the input's tables
+        if (!completed)
+          created.foreach(t => scala.util.Try(spark.sql(s"DROP TABLE IF EXISTS `$t`")))
+      }
+    }
+  }
+
+  /** What every advance step reads: the input index's tables and the
+    * semantics stamped on it. */
+  private final class AdvanceInput(val spark: SparkSession, val idx: DocIndex,
+                                   val idCol: String, val textCol: String) {
+    private def required(table: Option[String], artifact: String): String =
+      table.getOrElse(throw new IllegalArgumentException(
+        s"advanceDocIndex needs the $artifact artifact: materialize " +
+          s"${idx.pairsTable} with keepPostings = true"))
+    val postingsTable: String = required(idx.postingsTable, "postings")
+    val dfTable: String = required(idx.dfTable, "df")
+    val stamp: Stamp = readStamp(spark, idx.pairsTable)
+    val survivors: DataFrame = spark.table(idx.survivorsTable)
+    val stored: DataFrame = spark.table(postingsTable)
+    val survCols = survivors.columns.toIndexedSeq.map(col)
+
     def hashedPostings(docs: DataFrame): DataFrame =
-      Dedup.shingles(docs, idCol, textCol, shingleK)
+      Dedup.shingles(docs, idCol, textCol, stamp.shingleK)
         .select(col("doc_id"), xxhash64(col("s")).as("s"))
         .distinct()
+  }
 
-    // ---- exact-dedup advance (eviction-aware) ----
+  /** Step 1 output: the batch's survivors (with their canonical hash)
+    * and the corpus docs they evict. */
+  private final case class Decision(newSurv: DataFrame, evictedIds: DataFrame,
+                                    nNew: Long, nEvicted: Long)
+
+  // evictions are bounded by the batch's duplicate count — broadcast
+  // the anti side only when the measured count says it fits, else a
+  // plain equi anti join (AQE may still promote it at runtime)
+  private def evictedSide(in: AdvanceInput, d: Decision): DataFrame = {
+    val e = d.evictedIds.select(col(in.idCol).as("__eid"))
+    if (d.nEvicted <= 5000000L) broadcast(e) else e
+  }
+
+  private def decideBatch(in: AdvanceInput, run: AdvanceRun, batch: DataFrame): Decision = {
+    import in._
     // Corpus survivors are unique per canonical hash, so the left join
     // fans out at most 1:1; the decision relation is batch-scale and is
-    // persisted so every downstream plan (counts, three writes) reads
-    // the decided state instead of replaying the join against a table
-    // that later appends mutate.
-    val batchD = Dedup.dropExactDuplicates(batch, idCol, textCol)
-      .withColumn("__h", TextAnalysis.textHash(col(textCol)))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nBatch = ph("count_batch")(batchD.count())
-    // Batch ≪ corpus is the daily regime, so the exact-dedup decision
-    // is a PROBE of the corpus, not a merge with it (round-15, VERDICT
-    // item 5): the old merge-hinted plan shuffled AND sorted the full
-    // survivors relation by canonical hash every advance — measured as
-    // ~5 s of the 23.5 s warm frozen advance at sf30 for a 23.7k-row
-    // batch. Instead: (1) semi-join the survivors scan against the
-    // broadcast batch-hash set — one corpus scan, no shuffle, no sort,
-    // output ≤ |batch| rows (survivors are unique per hash); (2) left-
-    // join the batch against the broadcast matches. Both broadcasts are
-    // batch-scale. Falls back to the merge plan when the batch exceeds
-    // the broadcast budget (conf-tunable; specs pin row-identity on
-    // both plans).
+    // persisted so every downstream plan reads the decided state instead
+    // of replaying the join against a table that later appends mutate.
+    val batchD = run.cache(Dedup.dropExactDuplicates(batch, idCol, textCol)
+      .withColumn("__h", TextAnalysis.textHash(col(textCol))),
+      StorageLevel.MEMORY_AND_DISK)
+    val nBatch = run.phase("count_batch")(batchD.count())
+    // Batch ≪ corpus is the daily regime, so the decision is a PROBE of
+    // the corpus, not a merge with it: the merge plan shuffled and
+    // sorted the full survivors relation by hash every advance (~5 s of
+    // a 23.5 s warm frozen advance at sf30 for a 23.7k-row batch).
+    // Instead semi-join the survivors' stored hash column (a pruned
+    // two-column scan — no text read, no re-hash) against the broadcast
+    // batch hashes, then left-join the batch against the broadcast
+    // matches; both broadcasts are batch-scale. Above the broadcast
+    // budget the merge plan stays (specs pin row identity on both).
     val probeMax = spark.conf
       .get("spark.graft.advance.broadcastProbeMaxBatch", "5000000").toLong
-    // the stored canonical-hash column (HashCol, round-15) turns the
-    // corpus side of the probe into a pruned two-column scan — no text
-    // read, no per-advance re-hash; pre-round-15 artifacts derive it
-    val hasStoredHash = survivors.columns.contains(HashCol)
-    val survHashed =
-      if (hasStoredHash)
-        survivors.select(col(idCol).as("__cid"), col(HashCol).as("__h"))
-      else survivors.select(col(idCol).as("__cid"),
-        TextAnalysis.textHash(col(textCol)).as("__h"))
-    val decided = (
+    val survHashed = survivors.select(col(idCol).as("__cid"), col(HashCol).as("__h"))
+    val decided = run.cache(
       if (nBatch <= probeMax) {
         val matched = survHashed.join(
           broadcast(batchD.select(col("__h"))), Seq("__h"), "left_semi")
         batchD.join(broadcast(matched), Seq("__h"), "left")
       } else
-        batchD.join(survHashed.hint("merge"), Seq("__h"), "left")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    val newSurv0 = decided
-      .filter(col("__cid").isNull || col(idCol) < col("__cid"))
-    val newSurv =
-      if (hasStoredHash) newSurv0.withColumn(HashCol, col("__h"))
-        .drop("__h", "__cid")
-      else newSurv0.drop("__h", "__cid")
-    val evictedIds = decided
-      .filter(col("__cid").isNotNull && col(idCol) < col("__cid"))
-      .select(col("__cid").as(idCol))
+        batchD.join(survHashed.hint("merge"), Seq("__h"), "left"),
+      StorageLevel.MEMORY_AND_DISK)
+    val evicts = col("__cid").isNotNull && col(idCol) < col("__cid")
+    val keeps = col("__cid").isNull || col(idCol) < col("__cid")
     // both decision counts in ONE action over the persisted relation —
     // each count() here is a full multi-stage job at small batch sizes
-    val cnts = ph("count_new_evicted")(decided.agg(
-      sum(when(col("__cid").isNotNull && col(idCol) < col("__cid"), 1L)
-        .otherwise(0L)).as("e"),
-      sum(when(col("__cid").isNull || col(idCol) < col("__cid"), 1L)
-        .otherwise(0L)).as("n")).head())
-    val nEvicted = if (cnts.isNullAt(0)) 0L else cnts.getLong(0)
-    val nNew = if (cnts.isNullAt(1)) 0L else cnts.getLong(1)
+    val cnts = run.phase("count_new_evicted")(decided.agg(
+      sum(when(evicts, 1L).otherwise(0L)).as("e"),
+      sum(when(keeps, 1L).otherwise(0L)).as("n")).head())
+    Decision(
+      newSurv = decided.filter(keeps)
+        .withColumn(HashCol, col("__h")).drop("__h", "__cid"),
+      evictedIds = decided.filter(evicts).select(col("__cid").as(idCol)),
+      nNew = longOr0(cnts, 1), nEvicted = longOr0(cnts, 0))
+  }
 
-    // Batch-scale waypoints are EAGERLY localCheckpoint'd, not
-    // persisted (round-13): the advance's lazy DAG grew multiplicative
-    // — every downstream plan embedded the full upstream tree, so
-    // Catalyst re-analyzed thousands of nodes per action (a
-    // driver-serial cost measured as ~half the advance wall at sf0.1,
-    // and an explain-string heap blowout in long sessions). Each
-    // checkpoint is a small eager job whose output the rest of the
-    // advance consumes as a flat block scan; blocks are released by
-    // ContextCleaner (set spark.cleaner.periodicGC.interval low on
-    // long-lived sessions). Same executor-loss caveat as the write
-    // checkpoints below: advance-internal state is not recoverable
-    // mid-call — rerun the advance on failure.
-    val shB = ph("ckpt_shb")(hashedPostings(newSurv).localCheckpoint(true))
+  /** Step 2 output. `dfB` is the batch's per-shingle df; `dfCombFull`
+    * the combined cap-status relation (s, __dfo0 = df before, __dfc =
+    * df after); `drift` the stamp's accumulators after this advance. */
+  private final case class CapStatus(shB: DataFrame, dfB: DataFrame,
+                                     dfCombFull: DataFrame,
+                                     affectedOld: DataFrame, nAffected: Long,
+                                     nFlips: Long, flipHolders: Long, drift: Drift)
+
+  private def capStatus(in: AdvanceInput, run: AdvanceRun, d: Decision,
+                        frozenCaps: Boolean, assertNoCapFlips: Boolean): CapStatus = {
+    import in._
+    val cap = stamp.maxDocFreq
+    val shB = run.checkpoint("ckpt_shb")(hashedPostings(d.newSurv))
     val dfB = shB.groupBy(col("s")).agg(count(lit(1)).as("__dfb"))
     // per-shingle df deltas: batch additions minus eviction removals —
     // df can only change for shingles present in one of these
-    val dfDelta = ph("ckpt_dfdelta")(
-      (if (nEvicted == 0) dfB.withColumn("__dfe", lit(0L))
-       else dfB.join(
-           hashedPostings(survivors.join(evictedIds, Seq(idCol), "left_semi"))
-             .groupBy(col("s")).agg(count(lit(1)).as("__dfe")),
-           Seq("s"), "full_outer")
-         .select(col("s"), coalesce(col("__dfb"), lit(0L)).as("__dfb"),
-           coalesce(col("__dfe"), lit(0L)).as("__dfe")))
-      .localCheckpoint(true))
-    // ---- ONE corpus-wide df pass per advance (round-13, VERDICT 1a).
-    // The df source is the standing df artifact when present — a
-    // bucketed scan + bucket-local sum over ~|distinct shingles| delta
-    // rows — with a single postings aggregation as back-compat for
-    // pre-round-13 indexes. The combined cap-status relation is
-    // computed once, persisted, and PROBED by every consumer; round 12
-    // instead re-ran the full postings aggregation under each of three
-    // key sets, the measured dominant overhead of the whole advance.
-    val dfAgg = idx.dfTable match {
-      case Some(t) =>
-        spark.table(t).groupBy(col("s")).agg(sum(col("cnt")).as("__dfo"))
-      case None => stored.groupBy(col("s")).agg(count(lit(1)).as("__dfo"))
-    }
-    // serialized storage: this is the advance's one corpus-scale cache
-    // (~|distinct shingles| rows) — serialized columnar batches keep it
-    // 2-3x smaller so it doesn't squeeze execution memory out of the
-    // unified pool under full task concurrency (measured at sf10:
-    // deserialized caching starved the bucketed sorts to OOM)
-    val dfCombFull = dfAgg
-      .join(dfDelta, Seq("s"), "full_outer")
-      .select(col("s"), coalesce(col("__dfo"), lit(0L)).as("__dfo0"),
-        (coalesce(col("__dfo"), lit(0L)) - coalesce(col("__dfe"), lit(0L))
-          + coalesce(col("__dfb"), lit(0L))).as("__dfc"))
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    // merge hints, not broadcast, on the probes: at corpus scale a key
-    // set can outgrow any broadcast limit (AQE still upgrades small
-    // ones at runtime from real sizes)
-    def dfComb(keys: DataFrame): DataFrame =
-      keys.hint("merge").join(dfCombFull, Seq("s"), "left")
-        .select(col("s"), coalesce(col("__dfo0"), lit(0L)).as("__dfo0"),
-          coalesce(col("__dfc"), lit(0L)).as("__dfc"))
-
+    val dfDelta = run.checkpoint("ckpt_dfdelta")(
+      if (d.nEvicted == 0) dfB.withColumn("__dfe", lit(0L))
+      else dfB.join(
+          hashedPostings(survivors.join(d.evictedIds, Seq(idCol), "left_semi"))
+            .groupBy(col("s")).agg(count(lit(1)).as("__dfe")),
+          Seq("s"), "full_outer")
+        .select(col("s"), coalesce(col("__dfb"), lit(0L)).as("__dfb"),
+          coalesce(col("__dfe"), lit(0L)).as("__dfe")))
+    // ONE corpus-wide df pass per advance: a bucketed scan + bucket-
+    // local sum over the df artifact's ~|distinct shingles| delta rows,
+    // computed once and probed by every consumer (three separate
+    // full-postings aggregations measured 2.6-6.6× a rematerialization
+    // at sf0.1-sf1). Serialized storage: this is the advance's one
+    // corpus-scale cache, and deserialized caching starved the bucketed
+    // sorts to OOM at sf10.
+    val dfCombFull = run.cache(
+      spark.table(dfTable).groupBy(col("s")).agg(sum(col("cnt")).as("__dfo"))
+        .join(dfDelta, Seq("s"), "full_outer")
+        .select(col("s"), coalesce(col("__dfo"), lit(0L)).as("__dfo0"),
+          (coalesce(col("__dfo"), lit(0L)) - coalesce(col("__dfe"), lit(0L))
+            + coalesce(col("__dfb"), lit(0L))).as("__dfc")),
+      StorageLevel.MEMORY_AND_DISK_SER)
     // shingles whose cap status changes AND that some old doc holds:
-    // only these can perturb old-old pairs / old cardinalities. Comes
-    // straight off the persisted relation — a flip requires a df
-    // change, and rows absent from dfDelta have __dfc == __dfo0, so no
-    // key-set join is needed at all. frozenCaps skips flip detection
-    // by definition (existing pairs keep their birth scores).
-    val changedKeys = dfCombFull
-      .filter(col("__dfo0") >= 1 &&
-        ((col("__dfo0") <= cap) =!= (col("__dfc") <= cap)))
-      .select(col("s"))
-    // `assertNoCapFlips` (round-14, ADVICE): a frozen advance whose
-    // correctness gate pins it to the EXACT oracle (d32) is only valid
-    // under the data-dependent precondition that the batch flips no
-    // shingle's cap status. Asserting the precondition here makes a
-    // violated fixture fail with an ATTRIBUTABLE message instead of an
-    // anonymous hash mismatch that reads as an advance bug. The count
-    // runs off the already-persisted cap-status relation — it does not
-    // change the advance's semantics, only adds one aggregation (so the
-    // daily production path leaves it off).
-    // Frozen-mode drift accounting (round-15, VERDICT item 1): ONE
-    // fused pass over the already-persisted cap-status relation yields
-    // the flip count, the flip HOLDER mass (Σ per flipped shingle of
-    // its smaller-side df — the docs whose capped shingle sets the flip
-    // perturbs), and the current capped posting mass (→ mean capped
-    // per-doc cardinality c̄, the score-granularity scale). These three
-    // scalars are what `driftEstimate` accumulates — the cheap online
-    // stand-in for the DriftLadder's exact-reference drift measurement.
-    // `driftStats = false` skips the aggregation for a rung that wants
-    // the bare advance wall.
+    // only these can perturb old pairs. A flip requires a df change, and
+    // rows absent from dfDelta have __dfc == __dfo0, so no key-set join
+    // is needed.
     val flipCond = col("__dfo0") >= 1 &&
       ((col("__dfo0") <= cap) =!= (col("__dfc") <= cap))
+    val changedKeys = dfCombFull.filter(flipCond).select(col("s"))
+    // Frozen mode skips the rescore by definition, but ONE fused pass
+    // over the persisted relation yields the flip count, the flip
+    // HOLDER mass (Σ per flipped shingle of its smaller-side df) and the
+    // current capped posting mass — the scalars the drift estimate
+    // accumulates.
     val (nFlips, flipHolders, cappedPostCur) =
-      if (!frozenCaps) (ph("count_changed")(changedKeys.count()), 0L, 0L)
-      else if (driftStats || assertNoCapFlips) {
-        val r = ph("count_changed")(dfCombFull.agg(
+      if (!frozenCaps)
+        (run.phase("count_changed")(changedKeys.count()), 0L, 0L)
+      else {
+        val r = run.phase("count_changed")(dfCombFull.agg(
           sum(when(flipCond, 1L).otherwise(0L)).as("f"),
           sum(when(flipCond, least(col("__dfo0"), col("__dfc")))
             .otherwise(0L)).as("h"),
           sum(when(col("__dfc") >= 1 && col("__dfc") <= cap, col("__dfc"))
             .otherwise(0L)).as("p")).head())
-        def l(i: Int) = if (r.isNullAt(i)) 0L else r.getLong(i)
-        (l(0), l(1), l(2))
-      } else (0L, 0L, 0L)
-    if (frozenCaps && assertNoCapFlips && nFlips > 0) {
-      dfCombFull.unpersist(); decided.unpersist(); batchD.unpersist()
+        (longOr0(r, 0), longOr0(r, 1), longOr0(r, 2))
+      }
+    if (frozenCaps && assertNoCapFlips && nFlips > 0)
       throw new IllegalStateException(
         s"frozen-cap advance precondition violated: $nFlips shingle cap-status " +
           "flip(s) occurred, so frozen scores will drift from the exact " +
           "universe — this is a property of the batch/fixture (regenerate the " +
           "fixture or re-pin the oracle), not an advance bug. Run with " +
           "frozenCaps=false (exact) if the batch must be absorbed exactly.")
-    }
     val nChanged = if (frozenCaps) 0L else nFlips
     val affectedOld =
-      if (nChanged == 0) newSurv.select(col(idCol)).limit(0)
-      else ph("ckpt_affected")(stored.join(changedKeys, Seq("s"), "left_semi")
-        .select(col("doc_id").as(idCol)).distinct()
-        .localCheckpoint(true))
-    val nAffected = ph("count_affected")(if (nChanged == 0) 0L else affectedOld.count())
+      if (nChanged == 0) d.newSurv.select(col(idCol)).limit(0)
+      else run.checkpoint("ckpt_affected")(
+        stored.join(changedKeys, Seq("s"), "left_semi")
+          .select(col("doc_id").as(idCol)).distinct())
+    val nAffected = run.phase("count_affected")(
+      if (nChanged == 0) 0L else affectedOld.count())
+    CapStatus(shB, dfB, dfCombFull, affectedOld, nAffected, nFlips, flipHolders,
+      stamp.drift.after(frozenCaps, nFlips, flipHolders, cappedPostCur, stamp.threshold))
+  }
 
-    // evictions are bounded by the batch's duplicate count — broadcast
-    // the anti side only when the measured count says it fits, else a
-    // plain equi anti join (AQE may still promote it at runtime)
-    def evictedSide: DataFrame = {
-      val e = evictedIds.select(col(idCol).as("__eid"))
-      if (nEvicted <= 5000000L) broadcast(e) else e
+  /** Step 3, the economy-guard fallback: the delta path's cost scales
+    * with the touched set (new + evicted + affected docs drive the
+    * re-shingles, the rescore and the copy-forward rewrites); once that
+    * set is a sizable fraction of the corpus, from-scratch pair
+    * generation is cheaper. Reuses the survivor DECISIONS (no second
+    * exact-dedup window) and writes fresh generations exactly like
+    * `materializeDocIndex`. */
+  private def rematerialize(in: AdvanceInput, run: AdvanceRun, d: Decision,
+                            cs: CapStatus): AdvanceResult = {
+    import in._
+    val sTab = run.fresh(SurvivorsBase)
+    val pTab = run.fresh(PairsBase)
+    val postTab = run.fresh(PostingsBase)
+    val dTab = run.fresh(DfBase)
+    run.phase("fallback_rematerialize") {
+      val combinedSurv = liveSurvivors(in, d).select(survCols: _*)
+        .unionByName(d.newSurv.select(survCols: _*))
+      // the fallback replaces ALL four tables, so the bucket count is
+      // re-derived from the combined survivors — an index born small
+      // that grew 10× through appends must not keep its birth count;
+      // max() with it so an unknown-stats estimate (autoBuckets' floor)
+      // never SHRINKS a large index's parallelism
+      val fbBuckets = math.max(stamp.numBuckets, autoBuckets(combinedSurv))
+      Layout.writeBucketed(combinedSurv, sTab, idCol, fbBuckets)
+      Layout.writeBucketed(hashedPostings(spark.table(sTab)), postTab, "s", fbBuckets)
+      Layout.writeBucketed(
+        spark.table(postTab).groupBy(col("s")).agg(count(lit(1)).as("cnt")),
+        dTab, "s", fbBuckets)
+      Layout.writeBucketed(
+        Dedup.jaccardPairsHashed(spark.table(postTab), stamp.threshold, stamp.maxDocFreq),
+        pTab, "doc_id2", fbBuckets)
+      // every pair rescored exactly: accumulated frozen drift resets
+      writeStamp(spark, pTab, stamp.copy(numBuckets = fbBuckets,
+        nDocs = stamp.nDocs + d.nNew - d.nEvicted, drift = Drift()))
     }
-    val survCols = spark.table(idx.survivorsTable).columns.toIndexedSeq.map(col)
-    // ---- accumulated drift counters (round-15, VERDICT item 1) ----
-    // A frozen advance's drift contribution is normalized AT ADVANCE
-    // TIME (when the corpus statistics it depends on are current) and
-    // accumulated on the artifact, so reading the estimate later is a
-    // pure TBLPROPERTIES lookup — O(1), no job. Model (validated
-    // against the DriftLadder's measured drift, both shapes):
-    //   - a flip perturbs the capped shingle sets of its ~h holder docs
-    //     (h = the flip's smaller-side df — the docs that gain/lose the
-    //     shingle from their capped universe);
-    //   - each perturbed doc's pairs move by ~one shingle out of a
-    //     ~ū-shingle union, ū ≈ 4c̄/(3+t) (n1≈n2≈c̄ and J≈(t+1)/2 give
-    //     u = 2c/(1+J)), so the |ΔJ| mass added per flip is
-    //     ~h·d̄·(1/ū) over d̄·nDocs/2 = nPairs pairs;
-    //   - mean-over-all-pairs contribution per advance therefore
-    //     collapses to Σh·(3+t)/(2·Σ_capped df) — nDocs and nPairs both
-    //     cancel, leaving exactly the two scalars the fused flip
-    //     aggregation above computed.
-    // Stored in nano-units as a long (TBLPROPERTIES are strings; a
-    // float accumulator would invite rounding-format drift).
-    val drift0 = Seq("advances", "flips", "holders", "contrib_nano",
-      "untracked").map(k => props.getOrElse(s"graft.drift.$k", "0").toLong)
-    val contribNano =
-      if (frozenCaps && flipHolders > 0 && cappedPostCur > 0)
-        math.round(flipHolders.toDouble * (3.0 + threshold)
-          / (2.0 * cappedPostCur) * 1e9)
-      else 0L
-    val driftAdv: Seq[Long] =
-      if (frozenCaps)
-        Seq(drift0(0) + 1, drift0(1) + nFlips, drift0(2) + flipHolders,
-          drift0(3) + contribNano,
-          drift0(4) + (if (driftStats || assertNoCapFlips) 0L else 1L))
-      else drift0 // exact advance: rescores pairs touching A, but pairs
-                  // outside A keep their (possibly drifted) scores, so
-                  // accumulated frozen drift CARRIES — only a full
-                  // rematerialization (fallback / materialize) resets it
-    def driftProps(d: Seq[Long]): String =
-      Seq("advances", "flips", "holders", "contrib_nano", "untracked")
-        .zip(d).map { case (k, v) => s"'graft.drift.$k'='$v'" }.mkString(",")
-    def stampProps(tab: String, n: Long): Unit = spark.sql(
-      s"ALTER TABLE `$tab` SET TBLPROPERTIES(" +
-        s"'graft.threshold'='$threshold','graft.maxDocFreq'='$cap'," +
-        s"'graft.shingleK'='$shingleK','graft.numBuckets'='$numBuckets'," +
-        s"'graft.nDocs'='$n',${driftProps(driftAdv)})")
-    def finish(result: AdvanceResult, fallback: Boolean): AdvanceResult = {
-      graft.Telemetry.record("pairindex.advance_appended",
-        if (result.appended) 1L else 0L)
-      graft.Telemetry.record("pairindex.advance_fallback", if (fallback) 1L else 0L)
-      graft.Telemetry.record("pairindex.advance_frozen", if (frozenCaps) 1L else 0L)
-      graft.Telemetry.record("pairindex.advance_new_docs", result.newDocs)
-      graft.Telemetry.record("pairindex.advance_evicted", result.evicted)
-      graft.Telemetry.record("pairindex.advance_affected_old", result.affectedOld)
-      graft.Telemetry.record("pairindex.advance_cap_flips", result.capFlips)
-      graft.Telemetry.record("pairindex.advance_flip_holders", result.flipHolders)
-      result
-    }
+    AdvanceResult(DocIndex(sTab, pTab, Some(postTab), Some(dTab)),
+      appended = false, d.nNew, d.nEvicted, cs.nAffected, cs.nFlips, 0L)
+  }
 
-    // ---- economy guard (round-13, VERDICT item 1b) ----
-    // The delta path's cost scales with the touched set (new + evicted
-    // + affected docs drive the re-shingles, the rescore and the
-    // copy-forward rewrites); once that set approaches a sizable
-    // fraction of the corpus, from-scratch pair generation is cheaper
-    // than grinding through a losing delta. The three scalars are
-    // already counted, the corpus size is stamped on the artifact —
-    // compare and fall back BEFORE any delta work. The fallback reuses
-    // the survivor DECISIONS made above (no second exact-dedup window)
-    // and writes fresh generations exactly like materializeDocIndex,
-    // so the result is row-identical to the delta path either way.
-    val nCorpus = props.get("graft.nDocs").map(_.toLong)
-      .getOrElse(ph("count_corpus")(survivors.count()))
-    if (!frozenCaps &&
-        (nNew + nEvicted + nAffected).toDouble > economyGuard * nCorpus) {
-      val sTab = freshName(SurvivorsBase); val pTab = freshName(PairsBase)
-      val postTab = freshName(PostingsBase); val dTab = freshName(DfBase)
-      ph("fallback_rematerialize") {
-        val liveSurv =
-          if (nEvicted == 0) survivors
-          else survivors.join(evictedSide,
-            survivors(idCol) === col("__eid"), "left_anti")
-        val combinedSurv = liveSurv.select(survCols: _*)
-          .unionByName(newSurv.select(survCols: _*))
-        // the fallback replaces ALL four tables, so nothing downstream
-        // requires bucket compatibility with the superseded generation
-        // — re-derive the count from the combined survivors (round-14,
-        // VERDICT item 3): an index born small that grew 10× through
-        // appends would otherwise keep its birth bucket count through
-        // a full internal rematerialization, exactly the fixed-bucket
-        // failure autoBuckets exists to prevent. max() with the birth
-        // count so an unknown-stats estimate (autoBuckets' 32-floor
-        // fallback) can never SHRINK a large index's parallelism.
-        val fbBuckets = math.max(numBuckets, autoBuckets(combinedSurv))
-        graft.etl.Layout.writeBucketed(combinedSurv, sTab, idCol, fbBuckets)
-        graft.etl.Layout.writeBucketed(
-          hashedPostings(spark.table(sTab)), postTab, "s", fbBuckets)
-        graft.etl.Layout.writeBucketed(
-          spark.table(postTab).groupBy(col("s")).agg(count(lit(1)).as("cnt")),
-          dTab, "s", fbBuckets)
-        graft.etl.Layout.writeBucketed(
-          Dedup.jaccardPairsHashed(spark.table(postTab), threshold, cap),
-          pTab, "doc_id2", fbBuckets)
-        // full rematerialization: every pair rescored exactly over the
-        // combined capped universe — accumulated frozen drift RESETS
-        spark.sql(
-          s"ALTER TABLE `$pTab` SET TBLPROPERTIES(" +
-            s"'graft.threshold'='$threshold','graft.maxDocFreq'='$cap'," +
-            s"'graft.shingleK'='$shingleK','graft.numBuckets'='$fbBuckets'," +
-            s"'graft.nDocs'='${nCorpus + nNew - nEvicted}'," +
-            s"${driftProps(Seq(0L, 0L, 0L, 0L, 0L))})")
-      }
-      dfCombFull.unpersist(); decided.unpersist(); batchD.unpersist()
-      return finish(AdvanceResult(
-        DocIndex(sTab, pTab, Some(postTab), Some(dTab)),
-        appended = false, nNew, nEvicted, nAffected, nFlips, 0L), fallback = true)
-    }
+  private def liveSurvivors(in: AdvanceInput, d: Decision): DataFrame =
+    if (d.nEvicted == 0) in.survivors
+    else in.survivors.join(evictedSide(in, d), in.survivors(in.idCol) === col("__eid"), "left_anti")
 
-    // ---- delta pair rescore over candidate shingles SA ----
-    val aOldDocs = affectedOld // evicted docs carry no postings → no pairs
+  /** Step 4 output, every frame checkpointed: the rescored pairs
+    * touching A, A's ids, and the new survivor rows to write. */
+  private final case class Delta(pairs: DataFrame, aIds: DataFrame, newSurv: DataFrame)
+
+  private def rescoreDelta(in: AdvanceInput, run: AdvanceRun, d: Decision,
+                           cs: CapStatus): Delta = {
+    import in._
+    val (threshold, cap) = (stamp.threshold, stamp.maxDocFreq)
+    // merge hints, not broadcast, on the cap-status probes: at corpus
+    // scale a key set can outgrow any broadcast limit (AQE still
+    // upgrades small ones at runtime from real sizes)
+    def cappedKeys(keys: DataFrame): DataFrame =
+      keys.hint("merge").join(cs.dfCombFull, Seq("s"), "left")
+        .filter(coalesce(col("__dfc"), lit(0L)) <= cap).select(col("s"))
+    // evicted docs carry no postings → no pairs; A's old side is the
+    // affected set
+    val aOldDocs = cs.affectedOld
     val shAOld =
-      if (nAffected == 0) shB.limit(0)
+      if (cs.nAffected == 0) cs.shB.limit(0)
       else hashedPostings(survivors.join(
         aOldDocs.select(col(idCol)), Seq(idCol), "left_semi"))
-    val candKeys = dfB.select(col("s"))
+    val candKeys = cs.dfB.select(col("s"))
       .unionByName(shAOld.select(col("s"))).distinct()
-    // batch-scale key set, re-walked by aPart (twice: A-B join and
-    // A-A kernel) and bPart — persist so the dfComb probe runs once
-    val cappedCandKeys = ph("ckpt_capped_cand")(dfComb(candKeys)
-      .filter(col("__dfc") <= cap).select(col("s"))
-      .localCheckpoint(true))
+    // batch-scale key set, re-walked by aPart (twice: A-B join and A-A
+    // kernel) and bPart — checkpointed so the cap-status probe runs once
+    val cappedCandKeys = run.checkpoint("ckpt_capped_cand")(cappedKeys(candKeys))
     val storedCand = {
       val sc = stored.join(cappedCandKeys, Seq("s"), "left_semi")
-      if (nEvicted == 0) sc
-      else sc.join(evictedSide, sc("doc_id") === col("__eid"), "left_anti")
+      if (d.nEvicted == 0) sc
+      else sc.join(evictedSide(in, d), sc("doc_id") === col("__eid"), "left_anti")
     }
-    // Pairs touching A, built ASYMMETRICALLY by provenance rather than
-    // generate-all-then-filter: the capped candidate postings split
-    // into disjoint halves — aPart (batch postings + affected-old
+    // Pairs touching A, built ASYMMETRICALLY by provenance: the capped
+    // candidate postings split into aPart (batch postings + affected-old
     // stored postings: exactly A's docs) and bPart (every other stored
     // holder). A×B intersections are one linear join (≤ |aPart| × cap
-    // rows — batch-scale × cap, the true output bound); A×A runs the
-    // shared pairIntersections kernel over batch-scale postings only.
-    // The symmetric alternative (pairIntersections over ALL candidate
-    // holders, then semi-join to A) pays df² per candidate shingle for
-    // B×B pairs it immediately discards — measured 7× slower at
-    // sf0.01, and the gap grows with near-dup density since a batch
-    // shingle's holders are mostly old docs.
-    val shBCap = shB.join(cappedCandKeys, Seq("s"), "left_semi")
+    // rows); A×A runs the shared pairIntersections kernel over
+    // batch-scale postings only. Generate-all-then-filter pays df² per
+    // candidate shingle for B×B pairs it discards — measured 7× slower
+    // at sf0.01, growing with near-dup density.
+    val shBCap = cs.shB.join(cappedCandKeys, Seq("s"), "left_semi")
     val (aPart0, bPart) =
-      if (nAffected == 0) (shBCap, storedCand.select(col("doc_id"), col("s")))
+      if (cs.nAffected == 0) (shBCap, storedCand.select(col("doc_id"), col("s")))
       else {
         val sc = storedCand.select(col("doc_id"), col("s"))
         val aOldSet = aOldDocs.select(col(idCol).as("__aoid"))
@@ -935,42 +926,32 @@ object PairIndex {
          sc.join(aOldSet, sc("doc_id") === col("__aoid"), "left_anti"))
       }
     // batch-scale postings, consumed by the A-B join, the A-A kernel
-    // and the naA cardinalities — one evaluation, flat thereafter
-    val aPart = ph("ckpt_apart")(aPart0.localCheckpoint(true))
+    // and the naA cardinalities
+    val aPart = run.checkpoint("ckpt_apart")(aPart0)
     // candidate keys cover every pair-touching-A intersection: a shared
-    // shingle of any such pair is held by its A-side doc, and candKeys
-    // = dfB ∪ shAOld = all shingles of all A docs
+    // shingle of any such pair is held by its A-side doc
     val interAB = aPart.select(col("s"), col("doc_id").as("__a"))
       .join(bPart.select(col("s"), col("doc_id").as("__b")), Seq("s"))
       .groupBy(least(col("__a"), col("__b")).as("doc_id1"),
         greatest(col("__a"), col("__b")).as("doc_id2"))
       .agg(count(lit(1)).as("n_inter"))
-    val aIds = ph("ckpt_aids")(newSurv.select(col(idCol).as("__aid"))
-      .unionByName(aOldDocs.select(col(idCol).as("__aid")))
-      .localCheckpoint(true))
+    val aIds = run.checkpoint("ckpt_aids")(d.newSurv.select(col(idCol).as("__aid"))
+      .unionByName(aOldDocs.select(col(idCol).as("__aid"))))
     val interA = Dedup.pairIntersections(aPart).unionByName(interAB)
-    // A-side capped-universe cardinalities come FREE from aPart: an A
-    // doc's shingles are all in candKeys by construction, so its aPart
-    // rows are exactly its capped shingle set — no re-shingle, no df
-    // probe, batch-scale
-    val naA = ph("ckpt_naa")(
-      aPart.groupBy(col("doc_id")).agg(count(lit(1)).as("__na"))
-        .localCheckpoint(true))
-    // ---- exact length-bound prune (round-13, the advance's real
-    // scale fix). interA holds every ordered pair sharing >=1 capped
-    // candidate shingle — overwhelmingly n_inter=1-2 junk from common
-    // shingles sitting under the df-cap, connecting the batch to a
-    // large fraction of the corpus (measured at sf0.1: participants
-    // ~ corpus-sized, making the cardinality stage re-shingle most of
-    // the corpus — the dominant advance cost). But a qualifying pair
-    // needs j = i/(n1+n2-i) >= t, and n2 >= i forces i >= t*n1 for
-    // EACH endpoint — so any pair with i < t*na on a known (A-side)
-    // endpoint can never pass, and dropping it is exact. Survivors of
-    // the prune are true near-dup candidates: batch-scale, so the
-    // B-side cardinality stage below touches only them. The epsilon
-    // keeps FP rounding from dropping an exactly-boundary pair (the
-    // exact scorer re-filters anyway).
-    val interPruned = ph("ckpt_inter_pruned")(interA
+    // A-side capped cardinalities come free from aPart: an A doc's
+    // aPart rows are exactly its capped shingle set
+    val naA = run.checkpoint("ckpt_naa")(
+      aPart.groupBy(col("doc_id")).agg(count(lit(1)).as("__na")))
+    // Exact length-bound prune: interA holds every pair sharing >=1
+    // capped candidate shingle — overwhelmingly n_inter=1-2 junk from
+    // common shingles, connecting the batch to a large fraction of the
+    // corpus (at sf0.1 the participants were ~corpus-sized, making the
+    // cardinality stage re-shingle most of the corpus). A qualifying
+    // pair needs i/(n1+n2-i) >= t, and n2 >= i forces i >= t*n1 for
+    // EACH endpoint, so dropping a pair with i < t*na on a known
+    // (A-side) endpoint is exact. The epsilon keeps FP rounding from
+    // dropping an exactly-boundary pair (the scorer re-filters anyway).
+    val interPruned = run.checkpoint("ckpt_inter_pruned")(interA
       .join(naA.select(col("doc_id").as("doc_id1"), col("__na").as("__na1")),
         Seq("doc_id1"), "left")
       .join(naA.select(col("doc_id").as("doc_id2"), col("__na").as("__na2")),
@@ -980,218 +961,126 @@ object PairIndex {
           col("n_inter").cast("double") >= lit(threshold) * col("__na1") - lit(1e-9)) &&
         (col("__na2").isNull ||
           col("n_inter").cast("double") >= lit(threshold) * col("__na2") - lit(1e-9)))
-      .select(col("doc_id1"), col("doc_id2"), col("n_inter"))
-      .localCheckpoint(true))
-    // cardinalities for the pruned pairs' B-side participants only
-    // (A-side is naA): re-shingled via the survivors bucketing (never
-    // a doc-keyed pass over the s-bucketed posting table), then df
-    // probed — all delta-scale after the prune
+      .select(col("doc_id1"), col("doc_id2"), col("n_inter")))
+    // cardinalities for the pruned pairs' B-side participants only,
+    // re-shingled via the survivors bucketing (never a doc-keyed pass
+    // over the s-bucketed posting table) — delta-scale after the prune
     val bParticipants = interPruned.select(col("doc_id1").as("__pid"))
       .unionByName(interPruned.select(col("doc_id2").as("__pid"))).distinct()
       .join(aIds, col("__pid") === col("__aid"), "left_anti")
-    val bSh = ph("ckpt_bsh")(hashedPostings(survivors.join(
-      bParticipants.select(col("__pid").as(idCol)), Seq(idCol), "left_semi"))
-      .localCheckpoint(true))
-    val cappedBKeys = dfComb(bSh.select(col("s")).distinct())
-      .filter(col("__dfc") <= cap).select(col("s"))
-    val card = ph("ckpt_card")(bSh.join(cappedBKeys, Seq("s"), "left_semi")
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      .unionByName(naA.select(col("doc_id"), col("__na").as("n")))
-      .localCheckpoint(true))
-    // the delta itself is checkpointed too: every write below then
-    // reads flat blocks, and — since the write plans reference no
-    // catalog table — they are structurally immune to the CacheManager
-    // refresh storm that in-place appends trigger on plans reading the
-    // mutated tables
-    val delta = ph("force_delta")(
-      Dedup.scoreJaccardPairs(interPruned, card, threshold)
-        .localCheckpoint(true))
-    // remaining write inputs: delta and shB are already checkpointed;
-    // newSurv reads the decided cache (about to be released) so it
-    // gets its own flat copy, and the df maintenance rows are a flat
-    // scan+agg off the shB checkpoint (no catalog refs — immune to
-    // the CacheManager refresh storm in-place appends trigger)
-    val (deltaCk, shBCk) = (delta, shB)
-    val newSurvCk = ph("checkpoint_writes")(
-      newSurv.select(survCols: _*).localCheckpoint(true))
-    val dfBCk = idx.dfTable.map(_ =>
-      dfB.select(col("s"), col("__dfb").as("cnt")))
+    val bSh = run.checkpoint("ckpt_bsh")(hashedPostings(survivors.join(
+      bParticipants.select(col("__pid").as(idCol)), Seq(idCol), "left_semi")))
+    val card = run.checkpoint("ckpt_card")(
+      bSh.join(cappedKeys(bSh.select(col("s")).distinct()), Seq("s"), "left_semi")
+        .groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+        .unionByName(naA.select(col("doc_id"), col("__na").as("n"))))
+    val pairs = run.checkpoint("force_delta")(
+      Dedup.scoreJaccardPairs(interPruned, card, threshold))
+    // newSurv reads the decided cache, released before the writes
+    Delta(pairs, aIds, run.checkpoint("checkpoint_writes")(d.newSurv.select(survCols: _*)))
+  }
 
-    // ---- write ----
-    def unpersistAll(): Unit = {
-      dfCombFull.unpersist()
-      decided.unpersist()
-      batchD.unpersist()
-    }
-    val result =
-      if (nEvicted == 0 && nAffected == 0) {
-        // pure append: A == batch, so the delta is exactly the new
-        // cross+within pairs and no existing row changes. The caches
-        // are released BEFORE the tables they read are mutated —
-        // an insert RE-EXECUTES every registered cache entry whose
-        // plan contains the table (CacheManager refresh), which
-        // replayed the whole candidate pipeline per append before the
-        // round-12 fix (a measured 10× CPU storm at sf0.01). The
-        // appends themselves write the CHECKPOINTED frames, whose
-        // plans reference no catalog table, so they can run in any
-        // order relative to the mutations.
-        //
-        // preserveInput (round-20): the appends land on a storage-level
-        // CLONE of the index instead of redirecting to the full-rewrite
-        // branch — round-19 shipped copy-on-write as "take the
-        // copy-forward rewrite of all four tables", i.e. O(index)
-        // shuffle+rewrite compute per advance; the clone is a plain
-        // file copy (metadata-only on Iceberg/Delta), after which the
-        // advance is the same batch-scale append as the default mode
-        // (measured at sf0.1: ~0.3 s clone vs ~3.5 s four-table
-        // copy-forward). The input index is never touched either way.
-        val target =
-          if (!preserveInput) idx
-          else ph("clone_index")(cloneDocIndex(spark, idx))
-        unpersistAll()
-        ph("append_pairs")(graft.etl.Layout.appendBucketed(deltaCk, target.pairsTable, "doc_id2", numBuckets))
-        ph("append_postings")(graft.etl.Layout.appendBucketed(shBCk, target.postingsTable.get, "s", numBuckets))
-        ph("append_survivors")(graft.etl.Layout.appendBucketed(newSurvCk,
-          target.survivorsTable, idCol, numBuckets))
-        target.dfTable.foreach(t => ph("append_df")(
-          graft.etl.Layout.appendBucketed(dfBCk.get, t, "s", numBuckets)))
-        stampProps(target.pairsTable, nCorpus + nNew)
-        AdvanceResult(target, appended = !preserveInput, nNew, 0L, 0L,
-          nFlips, flipHolders)
-      } else if (nEvicted == 0) {
-        // partial rewrite (the common cap-cascade case): with no
-        // evictions, NO existing survivor or posting row changes —
-        // affected-old docs keep their rows; only their PAIR scores
-        // move. So survivors, postings and df append in place exactly
-        // like the pure-append path, and only the pairs table gets the
-        // copy-forward rewrite (drop pairs touching A, add the delta).
-        // This matters at scale: the cap cascade is inherent — any
-        // large corpus has a band of shingles sitting near the df-cap,
-        // and ANY batch flips some of them, each flip touching up to
-        // `cap` docs — so nAffected>0 is the NORMAL daily outcome, and
-        // before this split the advance paid a full three-table
-        // copy-forward (I/O ≈ a rematerialization) for it. The pairs
-        // rewrite reads the OLD pairs table and writes a fresh
-        // generation, so it runs before the cache release; the
-        // appends write checkpointed frames afterwards.
-        //
-        // preserveInput clones only the three appended tables — the
-        // pairs table is rewritten to a fresh generation either way,
-        // and it is the LARGEST artifact, so cloning it would be pure
-        // wasted I/O.
-        val target =
-          if (!preserveInput) idx
-          else ph("clone_index")(DocIndex(
-            cloneTableWithData(spark, idx.survivorsTable, SurvivorsBase),
-            idx.pairsTable, // read-only below; replaced by pTab in the result
-            idx.postingsTable.map(cloneTableWithData(spark, _, PostingsBase)),
-            idx.dfTable.map(cloneTableWithData(spark, _, DfBase))))
-        val pTab = freshName(PairsBase)
-        val keptPairs = spark.table(idx.pairsTable)
-          .join(aIds, col("doc_id1") === col("__aid"), "left_anti")
-          .join(aIds, col("doc_id2") === col("__aid"), "left_anti")
-        ph("rewrite_pairs")(graft.etl.Layout.writeBucketed(
-          keptPairs.unionByName(deltaCk), pTab, "doc_id2", numBuckets))
-        stampProps(pTab, nCorpus + nNew)
-        unpersistAll()
-        ph("append_postings")(graft.etl.Layout.appendBucketed(shBCk, target.postingsTable.get, "s", numBuckets))
-        ph("append_survivors")(graft.etl.Layout.appendBucketed(newSurvCk,
-          target.survivorsTable, idCol, numBuckets))
-        target.dfTable.foreach(t => ph("append_df")(
-          graft.etl.Layout.appendBucketed(dfBCk.get, t, "s", numBuckets)))
-        AdvanceResult(DocIndex(target.survivorsTable, pTab,
-            target.postingsTable, target.dfTable),
-          appended = false, nNew, 0L, nAffected, nFlips, flipHolders)
-      } else {
-        // full rewrite: evictions delete rows from all four tables, so
-        // each gets a fresh generation with copy-forward of live rows
-        // (the df table is compacted from the persisted cap-status
-        // relation below rather than copy-forwarded)
-        val sTab = freshName(SurvivorsBase)
-        val pTab = freshName(PairsBase)
-        val postTab = freshName(PostingsBase)
-        val liveSurv =
-          if (nEvicted == 0) survivors
-          else survivors.join(evictedSide, survivors(idCol) === col("__eid"), "left_anti")
-        ph("rewrite_survivors")(graft.etl.Layout.writeBucketed(
-          liveSurv.select(survCols: _*).unionByName(newSurvCk),
-          sTab, idCol, numBuckets))
-        val livePost =
-          if (nEvicted == 0) stored
-          else stored.join(evictedSide, stored("doc_id") === col("__eid"), "left_anti")
-        ph("rewrite_postings")(graft.etl.Layout.writeBucketed(
-          livePost.select(col("doc_id"), col("s")).unionByName(shBCk),
-          postTab, "s", numBuckets))
-        val removal = aIds.unionByName(evictedIds.select(col(idCol).as("__aid")))
-        val oldPairs = spark.table(idx.pairsTable)
-        val keptPairs = oldPairs
-          .join(removal, col("doc_id1") === col("__aid"), "left_anti")
-          .join(removal, col("doc_id2") === col("__aid"), "left_anti")
-        ph("rewrite_pairs")(graft.etl.Layout.writeBucketed(
-          keptPairs.unionByName(deltaCk), pTab, "doc_id2", numBuckets))
-        stampProps(pTab, nCorpus + nNew - nEvicted)
-        // fresh COMPACTED df generation straight off the persisted
-        // cap-status relation (so it must be written before the
-        // unpersist); net-zero shingles (all holders evicted) drop out
-        val newDf = idx.dfTable.map { _ =>
-          val dTab = freshName(DfBase)
-          ph("rewrite_df")(graft.etl.Layout.writeBucketed(
-            dfCombFull.filter(col("__dfc") > 0)
-              .select(col("s"), col("__dfc").as("cnt")),
-            dTab, "s", numBuckets))
-          dTab
+  /** Step 5: the write cases of the scaladoc above. Every frame written
+    * is a checkpoint (or a scan of the old pairs table), so the writes
+    * never replay the candidate pipeline. */
+  private def writeDelta(in: AdvanceInput, run: AdvanceRun, d: Decision,
+                         cs: CapStatus, delta: Delta,
+                         preserveInput: Boolean): AdvanceResult = {
+    import in._
+    val nb = stamp.numBuckets
+    val dfRows = cs.dfB.select(col("s"), col("__dfb").as("cnt"))
+    if (d.nEvicted == 0) {
+      val appendPairs = cs.nAffected == 0
+      // preserveInput clones exactly the tables about to be appended; a
+      // rewritten pairs table — the largest artifact — is never cloned
+      val target =
+        if (!preserveInput) idx
+        else run.phase("clone_index")(DocIndex(
+          run.cloneTable(idx.survivorsTable, SurvivorsBase),
+          if (appendPairs) run.cloneTable(idx.pairsTable, PairsBase) else idx.pairsTable,
+          Some(run.cloneTable(postingsTable, PostingsBase)),
+          Some(run.cloneTable(dfTable, DfBase))))
+      run.releaseCaches()
+      val pairsTable =
+        if (appendPairs) {
+          run.phase("append_pairs")(
+            Layout.appendBucketed(delta.pairs, target.pairsTable, "doc_id2", nb))
+          target.pairsTable
+        } else {
+          val pTab = run.fresh(PairsBase)
+          val keptPairs = spark.table(idx.pairsTable)
+            .join(delta.aIds, col("doc_id1") === col("__aid"), "left_anti")
+            .join(delta.aIds, col("doc_id2") === col("__aid"), "left_anti")
+          run.phase("rewrite_pairs")(Layout.writeBucketed(
+            keptPairs.unionByName(delta.pairs), pTab, "doc_id2", nb))
+          pTab
         }
-        unpersistAll()
-        AdvanceResult(DocIndex(sTab, pTab, Some(postTab), newDf),
-          appended = false, nNew, nEvicted, nAffected, nFlips, flipHolders)
-      }
-    // ---- self-triggered file hygiene (round-16, VERDICT item 3) ----
-    // The drift estimator already makes the REBUILD decision adaptive;
-    // this makes the FILE decision adaptive too: once any artifact's
-    // files/bucket exceeds the caller's bound, compact the advanced
-    // generation before handing it back, so a long frozen-advance
-    // chain keeps its consumers at bounded read amplification with no
-    // manual compactDocIndex call. The check is a pure FS listing per
-    // table (no job); compaction cost is the zero-shuffle per-bucket
-    // rewrite. Intermediate tables the compaction supersedes are
-    // released here — EXCEPT any still shared with the caller's input
-    // index (the append path reuses all of them), whose release stays
-    // the caller's dropSuperseded decision. Runs BEFORE finish() so
-    // the telemetry counters describe the RETURNED result (an
-    // auto-compacted append must not record advance_appended=1 for a
-    // result whose tables are a fresh generation).
-    val compactedResult =
-      if (autoCompactMaxFiles > 0 &&
-          compactDue(spark, result.idx, autoCompactMaxFiles)) {
-        val compacted = ph("auto_compact")(compactDocIndex(spark, result.idx, idCol))
-        graft.Telemetry.record("pairindex.advance_autocompact", 1L)
-        val callerLive = (Seq(idx.survivorsTable, idx.pairsTable) ++
-          idx.postingsTable ++ idx.dfTable).toSet ++
-          (Seq(compacted.survivorsTable, compacted.pairsTable) ++
-            compacted.postingsTable ++ compacted.dfTable)
-        (Seq(result.idx.survivorsTable, result.idx.pairsTable) ++
-          result.idx.postingsTable ++ result.idx.dfTable)
-          .filterNot(callerLive)
-          .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
-        result.copy(idx = compacted, appended = false)
-      } else result
-    finish(compactedResult, fallback = false)
+      run.phase("append_postings")(
+        Layout.appendBucketed(cs.shB, target.postingsTable.get, "s", nb))
+      run.phase("append_survivors")(
+        Layout.appendBucketed(delta.newSurv, target.survivorsTable, idCol, nb))
+      run.phase("append_df")(
+        Layout.appendBucketed(dfRows, target.dfTable.get, "s", nb))
+      writeStamp(spark, pairsTable,
+        stamp.copy(nDocs = stamp.nDocs + d.nNew, drift = cs.drift))
+      AdvanceResult(target.copy(pairsTable = pairsTable),
+        appended = appendPairs && !preserveInput,
+        d.nNew, 0L, cs.nAffected, cs.nFlips, cs.flipHolders)
+    } else {
+      val sTab = run.fresh(SurvivorsBase)
+      val pTab = run.fresh(PairsBase)
+      val postTab = run.fresh(PostingsBase)
+      val dTab = run.fresh(DfBase)
+      run.phase("rewrite_survivors")(Layout.writeBucketed(
+        liveSurvivors(in, d).select(survCols: _*).unionByName(delta.newSurv),
+        sTab, idCol, nb))
+      val livePost = stored.join(evictedSide(in, d), stored("doc_id") === col("__eid"), "left_anti")
+      run.phase("rewrite_postings")(Layout.writeBucketed(
+        livePost.select(col("doc_id"), col("s")).unionByName(cs.shB),
+        postTab, "s", nb))
+      val removal = delta.aIds.unionByName(d.evictedIds.select(col(idCol).as("__aid")))
+      val keptPairs = spark.table(idx.pairsTable)
+        .join(removal, col("doc_id1") === col("__aid"), "left_anti")
+        .join(removal, col("doc_id2") === col("__aid"), "left_anti")
+      run.phase("rewrite_pairs")(Layout.writeBucketed(
+        keptPairs.unionByName(delta.pairs), pTab, "doc_id2", nb))
+      writeStamp(spark, pTab,
+        stamp.copy(nDocs = stamp.nDocs + d.nNew - d.nEvicted, drift = cs.drift))
+      // a fresh COMPACTED df generation straight off the cached
+      // cap-status relation; net-zero shingles (all holders evicted)
+      // drop out
+      run.phase("rewrite_df")(Layout.writeBucketed(
+        cs.dfCombFull.filter(col("__dfc") > 0).select(col("s"), col("__dfc").as("cnt")),
+        dTab, "s", nb))
+      AdvanceResult(DocIndex(sTab, pTab, Some(postTab), Some(dTab)),
+        appended = false, d.nNew, d.nEvicted, cs.nAffected, cs.nFlips, cs.flipHolders)
+    }
+  }
+
+  /** Step 6: outcome telemetry, describing the RETURNED result. */
+  private def finish(r: AdvanceResult, fallback: Boolean,
+                     frozenCaps: Boolean): AdvanceResult = {
+    def flag(b: Boolean) = if (b) 1L else 0L
+    Seq("appended" -> flag(r.appended), "fallback" -> flag(fallback),
+      "frozen" -> flag(frozenCaps), "new_docs" -> r.newDocs,
+      "evicted" -> r.evicted, "affected_old" -> r.affectedOld,
+      "cap_flips" -> r.capFlips, "flip_holders" -> r.flipHolders)
+      .foreach { case (k, v) => Telemetry.record(s"pairindex.advance_$k", v) }
+    r
   }
 
   /** Files-per-bucket hygiene check for a standing index: true when
     * any artifact's per-bucket data-file count exceeds
-    * `maxFilesPerBucket` — the trigger advances consult for
-    * self-compaction (`advanceDocIndex(autoCompactMaxFiles = …)`), or
-    * callers poll between advances. Pure filesystem listings, no
-    * Spark job. */
+    * `maxFilesPerBucket`. Callers that keep a long advance chain poll
+    * it between advances and compose it with `compactDocIndex` (then
+    * `dropSuperseded`). Pure filesystem listings, no Spark job. */
   def compactDue(spark: SparkSession, idx: DocIndex,
                  maxFilesPerBucket: Double): Boolean =
-    (Seq(idx.survivorsTable, idx.pairsTable) ++ idx.postingsTable ++ idx.dfTable)
-      .exists(t => filesPerBucket(spark, t) > maxFilesPerBucket)
+    idx.tables.exists(t => filesPerBucket(spark, t) > maxFilesPerBucket)
 
   // ---- online drift estimator (round-15, VERDICT item 1) ----
   // Calibration constants for the closed-form drift model documented at
-  // the accumulation site (stampProps): the model is dimensionally
+  // the accumulators (`Drift`): the model is dimensionally
   // right (drift ∝ flip-holder mass / capped posting mass) but carries
   // an O(1) constant absorbing holder overlap, the |ΔJ|-per-perturbed-
   // pair distribution (most perturbed pairs move far less than the 1/ū
@@ -1220,8 +1109,7 @@ object PairIndex {
     * VALIDATED against measured drift by `tools.DriftLadder`, which
     * builds the exact reference this estimator exists to avoid. */
   final case class DriftEstimate(
-      frozenAdvances: Long, untrackedAdvances: Long,
-      capFlips: Long, flipHolders: Long,
+      frozenAdvances: Long, capFlips: Long, flipHolders: Long,
       estMeanScoreDrift: Double, estSpuriousFrac: Double) {
     def rebuildDue(meanScoreTolerance: Double): Boolean =
       estMeanScoreDrift >= meanScoreTolerance
@@ -1232,14 +1120,11 @@ object PairIndex {
   }
 
   def driftEstimate(spark: SparkSession, idx: DocIndex): DriftEstimate = {
-    val props = spark.sql(s"SHOW TBLPROPERTIES `${idx.pairsTable}`")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    def p(k: String) = props.getOrElse(s"graft.drift.$k", "0").toLong
-    val threshold = props.getOrElse("graft.threshold", "0.6").toDouble
-    val contrib = p("contrib_nano") / 1e9
-    DriftEstimate(p("advances"), p("untracked"), p("flips"), p("holders"),
+    val stamp = readStamp(spark, idx.pairsTable)
+    val contrib = stamp.drift.contribNano / 1e9
+    DriftEstimate(stamp.drift.advances, stamp.drift.flips, stamp.drift.holders,
       estMeanScoreDrift = DriftKappaMean * contrib,
-      estSpuriousFrac = DriftKappaSpurious * contrib / (1.0 - threshold))
+      estSpuriousFrac = DriftKappaSpurious * contrib / (1.0 - stamp.threshold))
   }
 
   // ---- artifact compaction (round-15, VERDICT item 2) ----
@@ -1278,13 +1163,7 @@ object PairIndex {
     * readers are done. */
   def compactDocIndex(spark: SparkSession, idx: DocIndex,
                       idCol: String): DocIndex = {
-    val props = spark.sql(s"SHOW TBLPROPERTIES `${idx.pairsTable}`")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      .filter(_._1.startsWith("graft."))
-    val numBuckets = props.getOrElse("graft.numBuckets",
-      throw new IllegalArgumentException(
-        s"${idx.pairsTable} lacks graft.numBuckets — not a doc-index artifact"))
-      .toInt
+    val stamp = readStamp(spark, idx.pairsTable)
     // FORCE the bucketed scan for the duration of the rewrites: without
     // it the planner reads a write-only query one-task-per-FILE
     // ("Bucketed: false (disabled by query planner)"), elides the
@@ -1297,7 +1176,7 @@ object PairIndex {
     val scanConf = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     val prevScan = spark.conf.getOption(scanConf)
     spark.conf.set(scanConf, "false")
-    try compactRewrites(spark, idx, idCol, numBuckets, props)
+    try compactRewrites(spark, idx, idCol, stamp)
     finally prevScan match {
       case Some(v) => spark.conf.set(scanConf, v)
       case None => spark.conf.unset(scanConf)
@@ -1305,37 +1184,29 @@ object PairIndex {
   }
 
   private def compactRewrites(spark: SparkSession, idx: DocIndex,
-                              idCol: String, numBuckets: Int,
-                              props: Map[String, String]): DocIndex = {
-    def rewrite(label: String, old: String, fresh: String,
+                              idCol: String, stamp: Stamp): DocIndex = {
+    def rewrite(label: String, df: DataFrame, prefix: String,
                 bucketCol: String): String = {
+      val fresh = freshName(prefix)
       val t0 = System.nanoTime()
-      graft.etl.Layout.writeBucketed(spark.table(old), fresh, bucketCol, numBuckets)
-      graft.Telemetry.record(s"pairindex.compact_ms_$label",
+      Layout.writeBucketed(df, fresh, bucketCol, stamp.numBuckets)
+      Telemetry.record(s"pairindex.compact_ms_$label",
         (System.nanoTime() - t0) / 1000000L)
       fresh
     }
-    val sTab = rewrite("survivors", idx.survivorsTable, freshName(SurvivorsBase), idCol)
-    val pTab = rewrite("pairs", idx.pairsTable, freshName(PairsBase), "doc_id2")
+    val sTab = rewrite("survivors", spark.table(idx.survivorsTable), SurvivorsBase, idCol)
+    val pTab = rewrite("pairs", spark.table(idx.pairsTable), PairsBase, "doc_id2")
     val postTab = idx.postingsTable.map(t =>
-      rewrite("postings", t, freshName(PostingsBase), "s"))
+      rewrite("postings", spark.table(t), PostingsBase, "s"))
     // the df artifact is append-only ±delta rows by design — compaction
     // additionally COLLAPSES each shingle's delta rows to its net df
     // (net-zero shingles drop out), which is row-count hygiene the
     // plain rewrite wouldn't buy
-    val dTab = idx.dfTable.map { t =>
-      val fresh = freshName(DfBase)
-      val t0 = System.nanoTime()
-      graft.etl.Layout.writeBucketed(
-        spark.table(t).groupBy(col("s")).agg(sum(col("cnt")).as("cnt"))
-          .filter(col("cnt") > 0),
-        fresh, "s", numBuckets)
-      graft.Telemetry.record("pairindex.compact_ms_df",
-        (System.nanoTime() - t0) / 1000000L)
-      fresh
-    }
-    spark.sql(s"ALTER TABLE `$pTab` SET TBLPROPERTIES(" +
-      props.map { case (k, v) => s"'$k'='$v'" }.mkString(",") + ")")
+    val dTab = idx.dfTable.map(t => rewrite("df",
+      spark.table(t).groupBy(col("s")).agg(sum(col("cnt")).as("cnt"))
+        .filter(col("cnt") > 0),
+      DfBase, "s"))
+    writeStamp(spark, pTab, stamp)
     DocIndex(sTab, pTab, postTab, dTab)
   }
 
@@ -1392,9 +1263,9 @@ object PairIndex {
       percentile_approx(dAbs, lit(0.99), lit(10000)).as("p99"),
       sum(when(col("__jf").isNull, 1L).otherwise(0L)).as("nm"),
       sum(when(col("__je").isNull, 1L).otherwise(0L)).as("ns")).head()
-    def l(i: Int) = if (r.isNullAt(i)) 0L else r.getLong(i)
     def d(i: Int) = if (r.isNullAt(i)) 0.0 else r.getDouble(i)
-    DriftReport(l(0), l(1), l(2), l(3), d(4), d(5), d(6), l(7), l(8))
+    DriftReport(longOr0(r, 0), longOr0(r, 1), longOr0(r, 2), longOr0(r, 3),
+      d(4), d(5), d(6), longOr0(r, 7), longOr0(r, 8))
   }
 
   /** End-answer drift of the curation consumer: full-outer merge of
@@ -1412,8 +1283,7 @@ object PairIndex {
       sum(when(col("__e").isNotNull, 1L).otherwise(0L)),
       sum(when(col("__f").isNotNull, 1L).otherwise(0L)),
       sum(when(col("__e").isNull || col("__f").isNull, 1L).otherwise(0L))).head()
-    def l(i: Int) = if (r.isNullAt(i)) 0L else r.getLong(i)
-    (l(0), l(1), l(2))
+    (longOr0(r, 0), longOr0(r, 1), longOr0(r, 2))
   }
 
   /** Near-dup drop list from the index: distinct doc_id2. Rides the

@@ -26,21 +26,14 @@ object Similarity {
     * Computed by the native codegen expression (graft.plans.DotE12Expr):
     * Spark's higher-order functions are interpreted per element, which
     * made all-pairs scoring ~100× slower; the fused loop is the scale
-    * path. The declarative twin below is its equivalence baseline. */
+    * path. Its equivalence baseline, the declarative fold, lives with
+    * the specs (`graft.DeclarativeTwins`). */
   def dotE12(a: Column, b: Column): Column = {
     import org.apache.spark.sql.GraftColumnBridge
     GraftColumnBridge.column(graft.plans.DotE12Expr(
       GraftColumnBridge.expression(a.cast("array<float>")),
       GraftColumnBridge.expression(b.cast("array<float>"))))
   }
-
-  /** Interpreted reference implementation of dotE12 (kept for the
-    * equivalence spec; do not use on hot paths). */
-  def dotE12Declarative(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) =>
-        round(x.cast("double") * y.cast("double") * lit(1.0e12), 0).cast("long")),
-      lit(0L), (acc, x) => acc + x)
 
   /** Σ round(a_i^2 * 1e12) as long. */
   def norm2E12(a: Column): Column = dotE12(a, a)

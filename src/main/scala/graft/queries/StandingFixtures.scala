@@ -42,9 +42,6 @@ object StandingFixtures {
 
   private val memo = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
-  private def docTables(idx: PairIndex.DocIndex): Seq[String] =
-    Seq(idx.survivorsTable, idx.pairsTable) ++ idx.postingsTable ++ idx.dfTable
-
   private def timed[T](key: String)(f: => T): T = {
     val t0 = System.nanoTime()
     val r = f
@@ -58,7 +55,7 @@ object StandingFixtures {
     synchronized {
       memo.get(key) match {
         case idx: PairIndex.DocIndex
-            if docTables(idx).forall(s.catalog.tableExists) => idx
+            if idx.tables.forall(s.catalog.tableExists) => idx
         case _ =>
           val idx = timed(key.takeWhile(_ != ':'))(build)
           memo.put(key, idx)
@@ -122,8 +119,8 @@ object StandingFixtures {
   def advanceConsumed(s: SparkSession, dir: String, consumerKey: String,
                       base: PairIndex.DocIndex,
                       adv: PairIndex.AdvanceResult): Unit = {
-    val baseTabs = docTables(base).toSet
-    val entangled = adv.appended || docTables(adv.idx).exists(baseTabs)
+    val baseTabs = base.tables.toSet
+    val entangled = adv.appended || adv.idx.tables.exists(baseTabs)
     if (entangled) synchronized {
       memo.remove(s"base63_doc_index:$dir"); ()
     }

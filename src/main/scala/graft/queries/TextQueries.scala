@@ -1255,7 +1255,7 @@ object TextQueries {
       frozenCaps = true, assertNoCapFlips = true)
     // the advanced index IS the clone (in-place append), already in
     // the ring above — register only a generation the advance wrote
-    // fresh (eviction/auto-compact outcomes)
+    // fresh (eviction outcomes)
     if (adv.idx != base) PairIndex.keepLatest(s, "d32", adv.idx)
     PairIndex.curateFromIndex(s, adv.idx, "doc_id", "text")
       .groupBy(col("split"))

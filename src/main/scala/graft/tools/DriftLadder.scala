@@ -104,9 +104,7 @@ object DriftLadder {
       spark.catalog.clearCache()
       var idx = PairIndex.materializeDocIndex(base, "doc_id", "text",
         keepPostings = true)
-      val cap = spark.sql(s"SHOW TBLPROPERTIES `${idx.pairsTable}`")
-        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-        .apply("graft.maxDocFreq").toInt
+      val cap = PairIndex.readStamp(spark, idx.pairsTable).maxDocFreq
       val stepRows = (1 to steps).map { k =>
         // untimed pre-advance df snapshot: eager localCheckpoint so the
         // flip count later reads a flat block scan, immune to the

@@ -171,6 +171,11 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
       103L -> "m n o p q r s u") // within-batch near-dup of 102
     val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
       numBuckets = 4, keepPostings = true)
+    // precondition: an index without its df artifact is refused up
+    // front, like one without postings
+    val noDf = intercept[IllegalArgumentException](PairIndex.advanceDocIndex(
+      spark, idx.copy(dfTable = None), batch, "doc_id", "text"))
+    assert(noDf.getMessage.contains("df artifact"))
     val r = PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text",
       economyGuard = Double.PositiveInfinity)
     assert(r.appended && r.newDocs === 3 && r.evicted === 0 && r.affectedOld === 0)
@@ -602,34 +607,6 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     PairIndex.dropDocIndex(spark, scratch)
   }
 
-  test("advance on a pre-df-artifact index (back-compat) falls back to the postings aggregation") {
-    val corpus = docsDf(
-      1L -> "a b c d e f g h",
-      2L -> "totally unrelated content sits here quietly")
-    val batch = docsDf(101L -> "a b c d e f g y")
-    val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
-      numBuckets = 4, keepPostings = true)
-    // simulate an index materialized before the df artifact existed
-    idx.dfTable.foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
-    val legacy = idx.copy(dfTable = None)
-    val r = PairIndex.advanceDocIndex(spark, legacy, batch, "doc_id", "text",
-      economyGuard = Double.PositiveInfinity)
-    assert(r.appended && r.idx.dfTable.isEmpty) // stays df-less
-    val scratch = PairIndex.materializeDocIndex(
-      corpus.unionByName(batch), "doc_id", "text",
-      numBuckets = 4, keepPostings = true)
-    // pairs/survivors/postings row-identical; no df table to compare
-    def eq(ta: String, tb: String): Unit = {
-      val (da, db) = (spark.table(ta), spark.table(tb))
-      assert(da.exceptAll(db).isEmpty && db.exceptAll(da).isEmpty, s"$ta vs $tb")
-    }
-    eq(r.idx.survivorsTable, scratch.survivorsTable)
-    eq(r.idx.pairsTable, scratch.pairsTable)
-    eq(r.idx.postingsTable.get, scratch.postingsTable.get)
-    PairIndex.dropDocIndex(spark, r.idx)
-    PairIndex.dropDocIndex(spark, scratch)
-  }
-
   test("autoBuckets floors small inputs at 32 and scales big ones to the 4096 cap") {
     // tiny real table → the pinned small-scale floor
     assert(PairIndex.autoBuckets(Tables.documents(spark, sfDir)) === 32)
@@ -876,7 +853,6 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     assert(e1.estMeanScoreDrift > 0.0 && e1.estSpuriousFrac > 0.0)
     assert(e1.rebuildDue(e1.estMeanScoreDrift / 2) &&
       !e1.rebuildDue(e1.estMeanScoreDrift * 2))
-    assert(e1.untrackedAdvances === 0)
     // EXACT advance (flip-free batch): accumulated frozen drift CARRIES
     // (untouched pairs keep their possibly-drifted scores)
     val r2 = PairIndex.advanceDocIndex(spark, r1.idx,
@@ -896,25 +872,6 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     PairIndex.dropSuperseded(spark, r1.idx, r2.idx)
     PairIndex.dropSuperseded(spark, r2.idx, r3.idx)
     PairIndex.dropDocIndex(spark, r3.idx)
-  }
-
-  test("driftStats=false records an untracked frozen advance") {
-    val corpus = docsDf(
-      1L -> "p q r s t u",
-      2L -> "p q r s t v")
-    val idx0 = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
-      threshold = 0.6, maxDocFreq = 2, numBuckets = 4, keepPostings = true)
-    val r = PairIndex.advanceDocIndex(spark, idx0,
-      docsDf(101L -> "p q r z1 z2 z3"), "doc_id", "text",
-      frozenCaps = true, driftStats = false)
-    assert(r.capFlips === 0) // not measured, by request
-    val e = PairIndex.driftEstimate(spark, r.idx)
-    // the estimator can't see the skipped advance's drift — but it KNOWS
-    // it's blind: untracked counts the estimate-invisible advances
-    assert(e.frozenAdvances === 1 && e.untrackedAdvances === 1 &&
-      e.estMeanScoreDrift === 0.0)
-    PairIndex.dropSuperseded(spark, idx0, r.idx)
-    PairIndex.dropDocIndex(spark, r.idx)
   }
 
   test("merge-probe fallback (batch above broadcast budget) stays row-identical") {
@@ -995,10 +952,10 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("auto-compaction keeps a 10-frozen-advance chain within the files/bucket bound") {
-    // round-16, VERDICT item 3: advances consult compactDue themselves —
-    // a long frozen chain must keep its consumers at bounded read
-    // amplification with NO manual compactDocIndex call, and the chain
-    // must stay row-identical to from-scratch materialization.
+    // the caller's hygiene loop: after each advance, compactDue (a pure
+    // FS listing) decides and compactDocIndex rewrites — a long frozen
+    // chain must stay at bounded read amplification, and row-identical
+    // to from-scratch materialization.
     val corpus = docsDf(
       1L -> "a b c d e f g h",
       2L -> "totally unrelated content sits here quietly")
@@ -1010,31 +967,117 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     var compactions = 0
     for (i <- 1 to 10) {
       // distinct tokens per batch → flip-free, so every advance takes
-      // the pure-append path unless the auto-compaction fires
+      // the pure-append path
       val b = docsDf((100L + i) ->
         s"w${i}a w${i}b w${i}c w${i}d w${i}e w${i}f w${i}g w${i}h")
       all = all.unionByName(b)
-      val prev = cur
-      val r = PairIndex.advanceDocIndex(spark, prev, b, "doc_id", "text",
-        frozenCaps = true, autoCompactMaxFiles = bound)
-      if (!r.appended) compactions += 1
-      for (t <- Seq(r.idx.survivorsTable, r.idx.pairsTable) ++
-          r.idx.postingsTable ++ r.idx.dfTable)
+      val r = PairIndex.advanceDocIndex(spark, cur, b, "doc_id", "text",
+        frozenCaps = true)
+      PairIndex.dropSuperseded(spark, cur, r.idx)
+      cur = r.idx
+      if (PairIndex.compactDue(spark, cur, bound)) {
+        val compacted = PairIndex.compactDocIndex(spark, cur, "doc_id")
+        PairIndex.dropSuperseded(spark, cur, compacted)
+        cur = compacted
+        compactions += 1
+      }
+      for (t <- Seq(cur.survivorsTable, cur.pairsTable) ++
+          cur.postingsTable ++ cur.dfTable)
         assert(PairIndex.filesPerBucket(spark, t) <= bound,
           s"advance $i left $t over the $bound files/bucket bound")
-      assert(!PairIndex.compactDue(spark, r.idx, bound))
-      PairIndex.dropSuperseded(spark, prev, r.idx)
-      cur = r.idx
+      assert(!PairIndex.compactDue(spark, cur, bound))
     }
     // 10 appends against a 3-files/bucket bound must have compacted
     // more than once — otherwise the bound assert above proved nothing
-    assert(compactions >= 2, s"expected >=2 auto-compactions, saw $compactions")
+    assert(compactions >= 2, s"expected >=2 compactions, saw $compactions")
     val scratch = PairIndex.materializeDocIndex(all, "doc_id", "text",
       numBuckets = 2, keepPostings = true)
     assertTablesEqual(cur, scratch)
     PairIndex.dropDocIndex(spark, idx0)
     PairIndex.dropDocIndex(spark, cur)
     PairIndex.dropDocIndex(spark, scratch)
+  }
+
+  test("a phase that throws after clone_index leaves no table behind and the input intact") {
+    // a stamp whose bucket count disagrees with the tables' physical
+    // bucket spec: every phase up to the clone runs, and the first
+    // bucketed append after it fails (Spark enforces the bucket spec).
+    // The append fixture fails on its cloned pairs table; the cap-flip
+    // fixture after rewriting a fresh pairs generation, on the cloned
+    // postings table — both kinds of created table must be dropped.
+    val appendCase = (
+      docsDf(1L -> "a b c d e f g h", 2L -> "a b c d e f g x"),
+      docsDf(101L -> "a b c d e f g y"), 0.6, 100)
+    val capFlipCase = (
+      docsDf(1L -> "p q r s t u", 2L -> "p q r s t v"),
+      docsDf(101L -> "p q r z1 z2 z3"), 0.6, 2)
+    def catalogTables(): Set[String] =
+      spark.catalog.listTables().collect().map(_.name).toSet
+    for ((corpus, batch, threshold, cap) <- Seq(appendCase, capFlipCase)) {
+      val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
+        threshold = threshold, maxDocFreq = cap, numBuckets = 4, keepPostings = true)
+      spark.sql(s"ALTER TABLE `${idx.pairsTable}` SET TBLPROPERTIES('graft.numBuckets'='8')")
+      val inputTables = Seq(idx.survivorsTable, idx.pairsTable) ++
+        idx.postingsTable ++ idx.dfTable
+      val before = inputTables.map(t => t -> spark.table(t).collect().toSet).toMap
+      val tablesBefore = catalogTables()
+      Telemetry.drain()
+      intercept[org.apache.spark.sql.AnalysisException] {
+        PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text",
+          economyGuard = Double.PositiveInfinity, preserveInput = true)
+      }
+      assert(Telemetry.drain().contains("pairindex.advance_ms_clone_index"))
+      assert(catalogTables() === tablesBefore)
+      before.foreach { case (t, rows) =>
+        assert(spark.table(t).collect().toSet === rows, s"failed advance mutated $t")
+      }
+      PairIndex.dropDocIndex(spark, idx)
+    }
+  }
+
+  test("every advance job carries its phase description; the caller's labels survive") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.GraftColumnBridge
+    // the cap-flip partial rewrite under copy-on-write runs nearly every
+    // phase: decide, cap status, rescore, clone, rewrite and appends
+    val idx = PairIndex.materializeDocIndex(
+      docsDf(1L -> "p q r s t u", 2L -> "p q r s t v"), "doc_id", "text",
+      threshold = 0.6, maxDocFreq = 2, numBuckets = 4, keepPostings = true)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        jobs.add((p.map(_.getProperty("spark.job.description")).orNull,
+          p.map(_.getProperty("spark.jobGroup.id")).orNull))
+      }
+    }
+    val sc = spark.sparkContext
+    assert(GraftColumnBridge.waitListenerBusEmpty(spark, 30000))
+    sc.setJobGroup("caller-group", "caller description")
+    sc.addSparkListener(listener)
+    val r =
+      try PairIndex.advanceDocIndex(spark, idx, docsDf(101L -> "p q r z1 z2 z3"),
+        "doc_id", "text", economyGuard = Double.PositiveInfinity, preserveInput = true)
+      finally {
+        assert(GraftColumnBridge.waitListenerBusEmpty(spark, 30000))
+        sc.removeSparkListener(listener)
+        assert(sc.getLocalProperty("spark.job.description") === "caller description")
+        assert(sc.getLocalProperty("spark.jobGroup.id") === "caller-group")
+        sc.clearJobGroup()
+      }
+    import scala.jdk.CollectionConverters._
+    val seen = jobs.asScala.toSeq
+    assert(seen.nonEmpty)
+    seen.foreach { case (desc, group) =>
+      assert(desc != null && desc.startsWith("advanceDocIndex:"), s"unlabelled job: $desc")
+      assert(group === "caller-group")
+    }
+    val phases = seen.map(_._1.stripPrefix("advanceDocIndex:")).toSet
+    Seq("count_batch", "ckpt_shb", "ckpt_affected", "force_delta",
+      "rewrite_pairs", "append_postings")
+      .foreach(p => assert(phases.contains(p), s"no job labelled $p in $phases"))
+    PairIndex.dropDocIndex(spark, idx)
+    PairIndex.dropDocIndex(spark, r.idx)
   }
 
   test("clusterCurationFromIndex keeps exactly one doc per cluster plus singletons") {

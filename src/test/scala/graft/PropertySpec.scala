@@ -205,7 +205,7 @@ class PropertySpec extends AnyFunSuite with SparkTestSession {
     for ((k, w) <- Seq((3, 4), (2, 3), (1, 1))) {
       val native = Dedup.winnowFingerprints(df, "doc_id", "text", k, w)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val decl = Dedup.winnowFingerprintsDeclarative(df, "doc_id", "text", k, w)
+      val decl = DeclarativeTwins.winnowFingerprintsDeclarative(df, "doc_id", "text", k, w)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(native === decl, s"winnow mismatch at k=$k w=$w")
     }

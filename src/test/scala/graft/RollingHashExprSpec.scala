@@ -66,7 +66,7 @@ class RollingHashExprSpec extends AnyFunSuite with SparkTestSession {
     val diff = a.join(b, col("v1") < col("v2"))
       .select(
         Similarity.dotE12(col("e1"), col("e2")).as("native"),
-        Similarity.dotE12Declarative(col("e1"), col("e2")).as("decl"))
+        DeclarativeTwins.dotE12Declarative(col("e1"), col("e2")).as("decl"))
       .filter(col("native") =!= col("decl"))
       .count()
     assert(diff === 0L)
