@@ -312,7 +312,11 @@ object Components {
                            checkpointDir: Option[String]): DataFrame => DataFrame =
     checkpointDir match {
       case Some(dir) =>
-        edges.sparkSession.sparkContext.setCheckpointDir(dir)
+        val sc = edges.sparkSession.sparkContext
+        // a dir that came from the context (spark.checkpoint.dir) is
+        // already its checkpoint root; setting it again would nest a
+        // fresh subdirectory under it
+        if (!sc.getCheckpointDir.contains(dir)) sc.setCheckpointDir(dir)
         df => df.checkpoint()
       case None =>
         df => df.localCheckpoint()

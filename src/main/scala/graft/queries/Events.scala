@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.functions.ExactNum.cents
 import graft.sources.Tables
+import graft.streaming.{DocsStreaming, EventsStreaming, Replay}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -127,23 +128,19 @@ object Events {
 
   /** Streaming runtime end-to-end (q29): run the Structured Streaming
     * pipeline — file-stream source, 30-minute watermark, tumbling-window
-    * aggregation, foreachBatch parquet sink — to completion with an
-    * AvailableNow trigger, then read the sink back as the result. The
+    * aggregation, foreachBatch parquet sink — to completion through
+    * `Replay.runBounded`, then read the sink back as the result. The
     * aggregation is the streaming twin of q16, so q16's SQL is an exact
     * oracle for what the STREAMING RUNTIME produced (not just the
     * logical aggregation shape, which q16 already pins). Complete mode
     * recomputes every window per micro-batch, so the bounded-source run
     * converges to the batch answer regardless of how the source splits
     * into micro-batches. */
-  private def q29(s: SparkSession, dir: String): DataFrame = {
-    val sink = graft.streaming.EventsStreaming
-      .tempDirDeletedOnExit("graft_q29_sink").toString
-    val sq = graft.streaming.EventsStreaming.runToParquetSink(s, dir, sink)
-    sq.awaitTermination()
-    graft.streaming.EventsStreaming.recordStateTelemetry("q29", sq)
-    s.read.parquet(sink)
-      .orderBy(col("hour"), col("event_type"))
-  }
+  private def q29(s: SparkSession, dir: String): DataFrame =
+    Replay.runBounded(s, "q29") { sink =>
+      Replay.parquetSink(EventsStreaming.hourlyAgg(
+        EventsStreaming.readEventsStream(s, dir)), sink, "complete", "overwrite")
+    }.orderBy(col("hour"), col("event_type"))
 
   /** Batch sessionization (q30): gap-based sessions per user — a new
     * session starts when >30 min separates consecutive events. The
@@ -201,20 +198,16 @@ object Events {
     * (not the last event itself). All comparisons run on integer
     * micros, so the nanos→micros read truncation can't flip a
     * boundary. */
-  private def q31(s: SparkSession, dir: String): DataFrame = {
-    val sink = graft.streaming.EventsStreaming
-      .tempDirDeletedOnExit("graft_q31_sink").toString
-    val sq = graft.streaming.EventsStreaming
-      .runSessionsToParquetSink(s, dir, sink, gap = "30 minutes")
-    sq.awaitTermination()
-    graft.streaming.EventsStreaming.recordStateTelemetry("q31", sq)
-    s.read.parquet(sink)
-      .select(col("user_id"),
+  private def q31(s: SparkSession, dir: String): DataFrame =
+    Replay.runBounded(s, "q31") { sink =>
+      Replay.parquetSink(EventsStreaming.userSessions(
+          EventsStreaming.readEventsStream(s, dir), gap = "30 minutes"),
+        sink, "complete", "overwrite", confs = EventsStreaming.mergeSessionsLocally)
+    }.select(col("user_id"),
         unix_micros(col("session_start")).as("start_us"),
         unix_micros(col("session_end")).as("end_us"),
         col("n_events"), col("value_cents"))
       .orderBy(col("user_id"), col("start_us"))
-  }
 
   private val q31Sql =
     """WITH ev AS (
@@ -252,8 +245,6 @@ object Events {
     * oracle; the out-of-order and checkpoint-restart state semantics
     * are pinned in StreamingSpec. */
   private def q33(s: SparkSession, dir: String): DataFrame = {
-    val sink = graft.streaming.EventsStreaming
-      .tempDirDeletedOnExit("graft_q33_sink").toString
     // the gate corpora carry ZERO exact duplicates (verified at every
     // driver SF), so the registered replay INJECTS deterministic
     // copies — the d38/d20 precedent: ids offset by 10M/20M sort into
@@ -267,15 +258,14 @@ object Events {
         .select((col("doc_id") + 10000000L).as("doc_id"), col("text")))
       .unionByName(base.filter(pmod(col("doc_id"), lit(14)) === 0)
         .select((col("doc_id") + 20000000L).as("doc_id"), col("text")))
-    val sq = graft.streaming.DocsStreaming
-      .runDedupToParquetSink(s, docs, sink, chunks = 4)
-    sq.awaitTermination()
-    // state telemetry (round-19, VERDICT item 5): final state rows
-    // should equal the distinct canonical forms seen — the measured
-    // state ∝ distinct-forms curve the 100 TB sharding story needs
-    graft.streaming.EventsStreaming.recordStateTelemetry("q33", sq)
-    s.read.parquet(sink)
-      .select(col("doc_id"), md5(col("text")).as("text_md5"),
+    // q33.state_rows should equal the distinct canonical forms seen —
+    // the measured state ∝ distinct-forms curve
+    Replay.runBounded(s, "q33") { sink =>
+      val chunks = Replay.scratchDir("graft_doc_chunks")
+      Replay.stageChunks(docs, "doc_id", 4, chunks)
+      Replay.parquetSink(DocsStreaming.dedupDocsStream(s,
+        Replay.readChunks(s, DocsStreaming.docSchema, chunks)), sink, "append", "append")
+    }.select(col("doc_id"), md5(col("text")).as("text_md5"),
         graft.operators.TextAnalysis.tokenCount(col("text")).as("n_tokens"))
       .orderBy(col("doc_id"))
   }

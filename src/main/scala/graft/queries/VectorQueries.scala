@@ -266,7 +266,7 @@ object VectorQueries {
     * design's N^1.5 instead of the pinned-cell N²/16 cliff; the
     * mirror computes the identical count from the same table. The
     * decade BENCH protocol still records e08 as the corpus-scale
-    * stand-in (tools/run_decade_chunk.sh). Candidate pairs must
+    * stand-in (tools/run_legs.sh bench). Candidate pairs must
     * share a cell, so the plan is a shuffled equi-join on cell_id,
     * never a cartesian/BroadcastNestedLoopJoin. Approximate (a pair
     * split across cells is missed) but deterministic, with the full

@@ -1,9 +1,8 @@
 package graft.streaming
 
 import graft.functions.ExactNum.cents
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming over the `events` table (SURVEY.md §7.5 — the
@@ -38,62 +37,20 @@ object EventsStreaming {
       case f => f
     })
 
-  /** Scratch directory removed recursively at JVM exit — the staging
-    * symlink dir and the q29 sink cannot accumulate across repeated
-    * bench/verify runs (each round is its own JVM; within a JVM the
-    * sink dir is still live when the lazy read-back executes, so
-    * eager deletion is not an option). */
-  /** State-store telemetry for a completed bounded streaming run
-    * (round-19, VERDICT item 5): surface the
-    * `StreamingQueryProgress.stateOperators` numbers into `Telemetry`
-    * — which Bench drains into its per-query JSON — so state growth
-    * carries a MEASURED curve instead of a scaladoc sentence (q33's
-    * seen-form state is exact-forever by contract: one boolean per
-    * distinct canonical form, sharded by the group exchange; the
-    * sharding/compaction story at 100 TB plans against these numbers).
-    * Records the FINAL state size (rows/bytes — the cross-batch
-    * carry), total state rows updated across batches, and the
-    * data-bearing batch count. */
-  def recordStateTelemetry(prefix: String, q: StreamingQuery): Unit = {
-    val ps = q.recentProgress.toSeq
-    val withState = ps.filter(_.stateOperators.nonEmpty)
-    withState.lastOption.foreach { last =>
-      graft.Telemetry.record(s"$prefix.state_rows",
-        last.stateOperators.map(_.numRowsTotal).sum)
-      graft.Telemetry.record(s"$prefix.state_bytes",
-        last.stateOperators.map(_.memoryUsedBytes).sum)
-      graft.Telemetry.record(s"$prefix.state_rows_updated",
-        withState.flatMap(_.stateOperators).map(_.numRowsUpdated).sum)
+  /** The events files' schema for `dir` and the `ts` normalization the
+    * sources apply. readStream requires an explicit schema, so the
+    * batch-side footer probe decides which ts layout this dir carries
+    * (see Tables.events); the cast to session-TZ timestamp is a
+    * value-preserving no-op for already-TimestampType files (sessions
+    * pin UTC). */
+  private def layout(spark: SparkSession, dir: String): (StructType, Column) =
+    graft.sources.Tables.eventsTsNativeType(spark, dir) match {
+      case Some(tsType) => (eventsNativeSchema(tsType), col("ts").cast("timestamp"))
+      case None => (eventsRawSchema, timestamp_micros(expr("ts div 1000")))
     }
-    graft.Telemetry.record(s"$prefix.batches",
-      ps.count(_.numInputRows > 0))
-    // per-phase durations summed across micro-batches (round-19): the
-    // bounded streaming registrations are fixed-cost dominated, and
-    // these numbers say WHICH phase (planning, state commit, sink
-    // addBatch) carries that cost — the same attribution contract as
-    // pairindex.advance_ms_*
-    import scala.jdk.CollectionConverters._
-    ps.flatMap(_.durationMs.asScala)
-      .groupBy(_._1).foreach { case (k, vs) =>
-        graft.Telemetry.record(s"$prefix.dur_$k",
-          vs.map(_._2.longValue()).sum)
-      }
-  }
 
-  def tempDirDeletedOnExit(prefix: String): java.nio.file.Path = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-    sys.addShutdownHook {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      if (Files.exists(dir)) {
-        val walk = Files.walk(dir)
-        try walk.sorted(Comparator.reverseOrder[Path]())
-          .forEach(p => Files.deleteIfExists(p))
-        finally walk.close()
-      }
-    }
-    dir
-  }
+  private def eventsPath(dir: String) =
+    java.nio.file.Paths.get(dir, "events.parquet").toAbsolutePath
 
   /** Streaming source over the events parquet (file-stream source; in
     * production this is Kafka/rate — same DataFrame downstream). The
@@ -106,8 +63,8 @@ object EventsStreaming {
     * 15). So stage symlinks into a scratch directory: the file itself,
     * or each part file when the source is a directory. */
   def readEventsStream(spark: SparkSession, dir: String): DataFrame = {
-    val src = java.nio.file.Paths.get(dir, "events.parquet").toAbsolutePath
-    val streamDir = tempDirDeletedOnExit("graft_events_stream")
+    val src = eventsPath(dir)
+    val streamDir = Replay.scratchDir("graft_events_stream")
     if (java.nio.file.Files.isDirectory(src)) {
       var staged = 0L
       val ls = java.nio.file.Files.list(src)
@@ -126,114 +83,29 @@ object EventsStreaming {
           "unsupported events layout for the file-stream source")
     } else
       java.nio.file.Files.createSymbolicLink(streamDir.resolve("events.parquet"), src)
-    // readStream requires an explicit schema, so the batch-side footer
-    // probe decides which ts layout this dir carries (see Tables.events);
-    // the cast to session-TZ timestamp is a value-preserving no-op for
-    // already-TimestampType files (sessions pin UTC).
-    graft.sources.Tables.eventsTsNativeType(spark, dir) match {
-      case Some(tsType) =>
-        spark.readStream
-          .schema(eventsNativeSchema(tsType))
-          .parquet(streamDir.toString)
-          .withColumn("ts", col("ts").cast("timestamp"))
-      case None =>
-        spark.readStream
-          .schema(eventsRawSchema)
-          .parquet(streamDir.toString)
-          .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    }
+    val (schema, ts) = layout(spark, dir)
+    spark.readStream.schema(schema).parquet(streamDir.toString)
+      .withColumn("ts", ts)
   }
 
-  /** Multi-batch replay of the bounded events table: stages the events
-    * into `chunks` time-contiguous parquet files with strictly
-    * increasing modification times, then reads them with
-    * `maxFilesPerTrigger=1` — so an AvailableNow run executes one
-    * micro-batch PER CHUNK, in event-time order (the file source
-    * dequeues oldest-modified first). The single-file source above
-    * degenerates to one micro-batch, which exercises none of the
-    * cross-batch machinery; this variant is what proves watermark
-    * advance, session merges ACROSS batches, and carried
-    * mapGroupsWithState state actually execute (StreamingSpec drives
-    * ≥3 micro-batches through the same sinks and hash-compares to the
-    * batch twins).
-    *
-    * The ntile split runs over a single global sort — test-scale
-    * scaffolding by design (production streams arrive pre-chunked from
-    * Kafka/object-store listings; nothing downstream depends on how
-    * the chunks were made). */
-  def readEventsStreamChunked(spark: SparkSession, dir: String,
-                              chunks: Int): DataFrame = {
-    val streamDir = tempDirDeletedOnExit("graft_events_chunks")
-    stageEventChunks(spark, dir, chunks, streamDir)
-    readChunkDirStream(spark, dir, streamDir)
-  }
+  /** The events table as its files lay it out (the streams' schema,
+    * before ts normalization): the input `Replay.stageChunks` splits
+    * into a multi-batch replay that `readChunkDirStream` reads back.
+    * The single-file source above degenerates to one micro-batch,
+    * which exercises none of the cross-batch machinery; a ts-ordered
+    * chunk replay is what proves watermark advance, session merges
+    * ACROSS batches, and carried mapGroupsWithState state. */
+  def eventsFile(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(layout(spark, dir)._1).parquet(eventsPath(dir).toString)
 
-  /** Write the events table as `chunks` time-contiguous single-file
-    * parquet chunks (strictly increasing mtimes) into `streamDir` —
-    * the staging half of `readEventsStreamChunked`, exposed so the
-    * checkpoint-restart spec can stage a PREFIX of the chunks, run a
-    * query to a checkpoint, then stage the rest and restart. Returns
-    * the chunk paths in replay order. */
-  def stageEventChunks(spark: SparkSession, dir: String, chunks: Int,
-                       streamDir: java.nio.file.Path): Seq[java.nio.file.Path] = {
-    import org.apache.spark.sql.expressions.Window
-    require(chunks >= 2, "need at least 2 chunks for a multi-batch replay")
-    val scratch = tempDirDeletedOnExit("graft_events_chunks_stage")
-    val tsType = graft.sources.Tables.eventsTsNativeType(spark, dir)
-    val schema = tsType.map(eventsNativeSchema).getOrElse(eventsRawSchema)
-    val src = java.nio.file.Paths.get(dir, "events.parquet").toAbsolutePath
-    // ONE partitioned write instead of one filter+write job per chunk
-    // (round-19): the per-chunk loop re-executed the global ntile sort
-    // `chunks` times — 4 jobs, 4 sorts for 4 chunks. A single-task
-    // dynamic-partition write evaluates the sort once and emits exactly
-    // one file per __chunk directory (the writer starts a new file per
-    // partition value). Chunk contents are identical (same ntile rows);
-    // the partition column is stripped from the files by partitionBy,
-    // exactly like the old drop("__chunk").
-    val chunked = spark.read.schema(schema).parquet(src.toString)
-      .withColumn("__chunk", ntile(chunks).over(Window.orderBy(col("ts"))))
-    val stage = scratch.resolve("all")
-    chunked.repartition(1).write.partitionBy("__chunk").parquet(stage.toString)
-    (1 to chunks).map { i =>
-      val chunkDir = stage.resolve(s"__chunk=$i")
-      // an input with fewer rows than chunks leaves high ntile groups
-      // EMPTY — no partition directory is written, and the listing
-      // below would die with an anonymous NoSuchFileException (ADVICE
-      // round-19); fail attributably instead
-      require(java.nio.file.Files.isDirectory(chunkDir),
-        s"stageEventChunks: chunk $i of $chunks is empty — the input has " +
-          "fewer rows than chunks; use fewer chunks or a larger input")
-      val part = {
-        val ls = java.nio.file.Files.list(chunkDir)
-        try ls.filter(_.getFileName.toString.endsWith(".parquet"))
-          .findFirst().get()
-        finally ls.close()
-      }
-      val target = streamDir.resolve(f"chunk_$i%03d.parquet")
-      java.nio.file.Files.move(part, target)
-      // strictly increasing mtimes pin the replay order (the source
-      // breaks mtime ties by path, but explicit is better than tied)
-      java.nio.file.Files.setLastModifiedTime(target,
-        java.nio.file.attribute.FileTime.fromMillis(1500000000000L + i * 60000L))
-      target
-    }
-  }
-
-  /** One-micro-batch-per-file reader over a staged chunk directory
-    * (`maxFilesPerTrigger=1`), with the same ts normalization as the
-    * other sources. `dir` is the ORIGINAL sf dir — it decides the ts
-    * layout the staged chunks inherited. */
+  /** One-micro-batch-per-file reader over events chunks staged from
+    * `eventsFile`, with the same ts normalization as the other source.
+    * `dir` is the ORIGINAL sf dir — it decides the ts layout the
+    * staged chunks inherited. */
   def readChunkDirStream(spark: SparkSession, dir: String,
                          streamDir: java.nio.file.Path): DataFrame = {
-    val tsType = graft.sources.Tables.eventsTsNativeType(spark, dir)
-    val schema = tsType.map(eventsNativeSchema).getOrElse(eventsRawSchema)
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(streamDir.toString)
-    tsType match {
-      case Some(_) => stream.withColumn("ts", col("ts").cast("timestamp"))
-      case None => stream.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    }
+    val (schema, ts) = layout(spark, dir)
+    Replay.readChunks(spark, schema, streamDir).withColumn("ts", ts)
   }
 
   /** Tumbling 1-hour windowed aggregation with a 30-minute watermark —
@@ -249,61 +121,14 @@ object EventsStreaming {
         col("window.start").as("hour"),
         col("event_type"), col("n_events"), col("value_cents"))
 
-  /** Run the stream to completion over the (bounded) file source into an
-    * in-memory sink — the local smoke path; swap the sink for
-    * `foreachBatch { (batch, id) => batch.write.format("delta")... }`
-    * in production. Returns the queryable sink table name. */
-  def runToMemorySink(spark: SparkSession, dir: String,
-                      sinkName: String = "events_hourly"): StreamingQuery = {
-    val q = hourlyAgg(readEventsStream(spark, dir))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(sinkName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q
-  }
-
-  /** Production-shaped sink: foreachBatch lands each micro-batch of the
-    * windowed aggregation into the curated layer (parquet here; swap the
-    * writer for Delta/JDBC unchanged). Complete mode + overwrite keeps
-    * the sink idempotent per batch. */
-  def runToParquetSink(spark: SparkSession, dir: String,
-                       outDir: String): StreamingQuery =
-    hourlyAgg(readEventsStream(spark, dir))
-      .writeStream
-      .outputMode("complete")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("overwrite").parquet(outDir)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** Session windows through the real streaming runtime into a parquet
-    * sink (q31) — same file-stream source and foreachBatch shape as
-    * `runToParquetSink`, but the aggregation is `session_window` per
-    * user. Complete mode: every micro-batch rewrites the full session
-    * state, so the bounded AvailableNow run converges to the batch
-    * answer no matter how the source splits into micro-batches (late
-    * rows re-merge sessions instead of being dropped at the sink). */
-  def runSessionsToParquetSink(spark: SparkSession, dir: String,
-                               outDir: String, gap: String): StreamingQuery = {
-    // pre-merge sessions within each input partition before the state
-    // shuffle — the session-window analog of map-side partial
-    // aggregation (off by default in Spark; measured 2x+ on this
-    // pipeline, and the win grows with events-per-session at scale)
-    spark.conf.set(
-      "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition", "true")
-    userSessions(readEventsStream(spark, dir), gap)
-      .writeStream
-      .outputMode("complete")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("overwrite").parquet(outDir)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+  /** Pre-merge sessions within each input partition before the state
+    * shuffle — the session-window analog of map-side partial
+    * aggregation (off by default in Spark; measured 2x+ on the q31
+    * pipeline, and the win grows with events-per-session at scale).
+    * Stream-start confs for `Replay.parquetSink`, so the caller's
+    * session keeps its own value. */
+  val mergeSessionsLocally: Map[String, String] = Map(
+    "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition" -> "true")
 
   /** Watermarked streaming deduplication: drop events whose event_id
     * reappears within the watermark horizon — the streaming face of the

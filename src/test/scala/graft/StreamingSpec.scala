@@ -3,9 +3,9 @@ package graft
 import graft.functions.ExactNum
 import graft.queries.Registry
 import graft.sources.Tables
-import graft.streaming.EventsStreaming
+import graft.streaming.{DocsStreaming, EventsStreaming, Replay}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming/batch equivalence (SURVEY.md §7.5): the windowed streaming
@@ -17,8 +17,27 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
 
   private val sfDir = "/root/testdata/sf0.001"
 
+  /** The hourly aggregate over `src` into a parquet sink at `out`,
+    * through the runner q29 uses. */
+  private def hourlyToParquet(src: String, out: String): Unit =
+    Replay.parquetSink(EventsStreaming.hourlyAgg(
+      EventsStreaming.readEventsStream(spark, src)), out, "complete", "overwrite")
+      .awaitTermination()
+
+  /** The sf0.001 events as a ts-ordered `chunks`-file replay (one
+    * micro-batch per chunk). */
+  private def chunkedEvents(chunks: Int) = {
+    val dir = Replay.scratchDir("graft_events_chunks")
+    Replay.stageChunks(EventsStreaming.eventsFile(spark, sfDir), "ts", chunks, dir)
+    EventsStreaming.readChunkDirStream(spark, sfDir, dir)
+  }
+
   test("streaming hourly agg == batch q16 on the bounded source") {
-    val q = EventsStreaming.runToMemorySink(spark, sfDir, "events_hourly_test")
+    val q = EventsStreaming.hourlyAgg(EventsStreaming.readEventsStream(spark, sfDir))
+      .writeStream.outputMode("complete").format("memory")
+      .queryName("events_hourly_test")
+      .trigger(Trigger.AvailableNow())
+      .start()
     q.awaitTermination()
     val streamed = spark.table("events_hourly_test")
       .collect()
@@ -40,13 +59,11 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     // and leave the sink empty. Rewrite the sf0.001 events as a
     // 3-part-file directory and drive the same source + sink over it:
     // the result must equal the batch q16 answer, not be empty.
-    val staged = EventsStreaming
-      .tempDirDeletedOnExit("graft_events_dirsource").toString
+    val staged = Replay.scratchDir("graft_events_dirsource").toString
     Tables.events(spark, sfDir).repartition(3)
       .write.parquet(s"$staged/events.parquet")
-    val sink = EventsStreaming
-      .tempDirDeletedOnExit("graft_events_dirsource_sink").toString
-    EventsStreaming.runToParquetSink(spark, staged, sink).awaitTermination()
+    val sink = Replay.scratchDir("graft_events_dirsource_sink").toString
+    hourlyToParquet(staged, sink)
     val streamed = spark.read.parquet(sink)
       .collect()
       .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getLong(3)))
@@ -61,8 +78,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
 
   test("foreachBatch parquet sink lands the same hourly aggregate") {
     val out = java.nio.file.Files.createTempDirectory("graft_stream_sink").toString
-    val q = EventsStreaming.runToParquetSink(spark, sfDir, out)
-    q.awaitTermination()
+    hourlyToParquet(sfDir, out)
     val sunk = spark.read.parquet(out)
       .collect()
       .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getLong(3)))
@@ -181,8 +197,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     // micro-batch, which is cross-batch-state-trivially correct. The
     // chunked source forces one batch per time-contiguous chunk, so
     // the aggregation state must carry and merge across batches.
-    val src = EventsStreaming.readEventsStreamChunked(spark, sfDir, chunks = 4)
-    val q = EventsStreaming.hourlyAgg(src)
+    val q = EventsStreaming.hourlyAgg(chunkedEvents(4))
       .writeStream.outputMode("complete").format("memory")
       .queryName("hourly_multibatch")
       .trigger(Trigger.AvailableNow())
@@ -207,27 +222,13 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     // micro-batches — the session store must merge them, not emit two
     // half-sessions. Compare against the same session_window plan run
     // in batch mode (proven equal to the Sessionize twin above).
-    val src = EventsStreaming.readEventsStreamChunked(spark, sfDir, chunks = 4)
     val out = java.nio.file.Files.createTempDirectory("graft_mb_sessions").toString
-    // restore the shared test session's conf afterwards — a leaked
-    // session-merge toggle would make later streaming tests
-    // order-dependent (it is a pre-merge optimization, but test
-    // isolation should not lean on that)
-    val mergeKey =
-      "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition"
-    val prevMerge = spark.conf.getOption(mergeKey)
-    spark.conf.set(mergeKey, "true")
-    val batches = try {
-      val q = EventsStreaming.userSessions(src, "10 minutes")
-        .writeStream.outputMode("complete")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          batch.write.mode("overwrite").parquet(out)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.recentProgress.map(_.batchId).distinct
-    } finally prevMerge.fold(spark.conf.unset(mergeKey))(spark.conf.set(mergeKey, _))
+    // the session-merge conf binds to this stream only (set around its
+    // start), so the shared test session is left as it was
+    val q = Replay.parquetSink(EventsStreaming.userSessions(chunkedEvents(4), "10 minutes"),
+      out, "complete", "overwrite", confs = EventsStreaming.mergeSessionsLocally)
+    q.awaitTermination()
+    val batches = q.recentProgress.map(_.batchId).distinct
     assert(batches.length >= 3, s"expected >=3 micro-batches, got ${batches.toSeq}")
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getTimestamp(0), r.getTimestamp(1), r.getLong(2),
@@ -248,9 +249,9 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     // RESTORED — if state were lost, the complete-mode rewrite after
     // restart would contain only chunk-3/4 sessions and the final
     // equality against the batch twin would fail.
-    val streamDir = EventsStreaming.tempDirDeletedOnExit("graft_ckpt_chunks")
-    val pending = EventsStreaming.tempDirDeletedOnExit("graft_ckpt_pending")
-    val all = EventsStreaming.stageEventChunks(spark, sfDir, 4, pending)
+    val streamDir = Replay.scratchDir("graft_ckpt_chunks")
+    val pending = Replay.scratchDir("graft_ckpt_pending")
+    val all = Replay.stageChunks(EventsStreaming.eventsFile(spark, sfDir), "ts", 4, pending)
     // phase 1: only chunks 1-2 visible
     all.take(2).foreach { p =>
       java.nio.file.Files.move(p, streamDir.resolve(p.getFileName))
@@ -258,16 +259,9 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     val out = java.nio.file.Files.createTempDirectory("graft_ckpt_sink").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_loc").toString
     def runOnce(): Long = {
-      val q = EventsStreaming
-        .userSessions(EventsStreaming.readChunkDirStream(spark, sfDir, streamDir),
-          "10 minutes")
-        .writeStream.outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          batch.write.mode("overwrite").parquet(out)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
+      val q = Replay.parquetSink(EventsStreaming.userSessions(
+          EventsStreaming.readChunkDirStream(spark, sfDir, streamDir), "10 minutes"),
+        out, "complete", "overwrite", checkpoint = Some(ckpt))
       q.awaitTermination()
       q.recentProgress.map(_.batchId).distinct.length.toLong
     }
@@ -290,8 +284,12 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("streaming exact dedup: cross-batch suppression, first-arrival state, restart") {
-    import graft.streaming.DocsStreaming
     import spark.implicits._
+    def dedupInto(chunks: java.nio.file.Path, out: String,
+                  ckpt: Option[String]): Unit =
+      Replay.parquetSink(DocsStreaming.dedupDocsStream(spark,
+          Replay.readChunks(spark, DocsStreaming.docSchema, chunks)),
+        out, "append", "append", checkpoint = ckpt).awaitTermination()
     // fixture: form A appears in chunks 1 and 3, form B twice within
     // chunk 2, forms C/D unique — ids chosen so ntile(3) over id order
     // yields chunks [1,2],[3,4],[5,6]
@@ -300,11 +298,10 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       (3L, "gamma text"), (4L, "beta text"),     // chunk 2: B dup (in-batch)
       (5L, "alpha text"), (6L, "delta text"))    // chunk 3: A dup (cross-batch)
       .toDF("doc_id", "text")
-    val streamDir = EventsStreaming.tempDirDeletedOnExit("graft_dd_chunks")
-    DocsStreaming.stageDocChunks(spark, docs, 3, streamDir)
+    val streamDir = Replay.scratchDir("graft_dd_chunks")
+    Replay.stageChunks(docs, "doc_id", 3, streamDir)
     val out = java.nio.file.Files.createTempDirectory("graft_dd_sink").toString
-    DocsStreaming.runDedupFromChunkDir(spark, streamDir, out, None)
-      .awaitTermination()
+    dedupInto(streamDir, out, None)
     val kept = spark.read.parquet(out).select("doc_id")
       .as[Long].collect().sorted.toSeq
     // in-batch dup keeps the min (2 not 4); cross-batch dup suppressed
@@ -317,16 +314,15 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     // 1's id-2 copy), the documented stream semantics when arrival
     // order is not id order; the REGISTERED q33 stages id-ordered
     // chunks precisely so first-arrival == min id == the batch oracle
-    val streamDir2 = EventsStreaming.tempDirDeletedOnExit("graft_dd_chunks2")
-    val staged = DocsStreaming.stageDocChunks(spark, docs, 3, streamDir2)
+    val streamDir2 = Replay.scratchDir("graft_dd_chunks2")
+    val staged = Replay.stageChunks(docs, "doc_id", 3, streamDir2)
     staged.zipWithIndex.foreach { case (p, i) =>
       java.nio.file.Files.setLastModifiedTime(p,
         java.nio.file.attribute.FileTime.fromMillis(
           1500000000000L + (staged.size - i) * 60000L))
     }
     val out2 = java.nio.file.Files.createTempDirectory("graft_dd_sink2").toString
-    DocsStreaming.runDedupFromChunkDir(spark, streamDir2, out2, None)
-      .awaitTermination()
+    dedupInto(streamDir2, out2, None)
     val kept2 = spark.read.parquet(out2).select("doc_id")
       .as[Long].collect().sorted.toSeq
     assert(kept2 === Seq(3L, 4L, 5L, 6L), s"got $kept2")
@@ -335,22 +331,65 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     // stage chunk 3, restart — the restored seen-form state must
     // suppress doc 5 (form A was seen before the crash); losing state
     // would re-emit it
-    val pending = EventsStreaming.tempDirDeletedOnExit("graft_dd_pending")
-    val live = EventsStreaming.tempDirDeletedOnExit("graft_dd_live")
-    val all = DocsStreaming.stageDocChunks(spark, docs, 3, pending)
+    val pending = Replay.scratchDir("graft_dd_pending")
+    val live = Replay.scratchDir("graft_dd_live")
+    val all = Replay.stageChunks(docs, "doc_id", 3, pending)
     all.take(2).foreach(p =>
       java.nio.file.Files.move(p, live.resolve(p.getFileName)))
     val out3 = java.nio.file.Files.createTempDirectory("graft_dd_sink3").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_dd_ckpt").toString
-    DocsStreaming.runDedupFromChunkDir(spark, live, out3, Some(ckpt))
-      .awaitTermination()
+    dedupInto(live, out3, Some(ckpt))
     all.drop(2).foreach(p =>
       java.nio.file.Files.move(p, live.resolve(p.getFileName)))
-    DocsStreaming.runDedupFromChunkDir(spark, live, out3, Some(ckpt))
-      .awaitTermination()
+    dedupInto(live, out3, Some(ckpt))
     val kept3 = spark.read.parquet(out3).select("doc_id")
       .as[Long].collect().sorted.toSeq
     assert(kept3 === Seq(1L, 2L, 3L, 6L), s"restart lost dedup state: $kept3")
+  }
+
+  test("registered streaming queries keep their micro-batch cadence and telemetry keys") {
+    // q29/q31 read the single-file testdata as ONE micro-batch; q33
+    // replays 4 id-ordered chunks as 4. The `<tag>.*` keys feed
+    // perfbench's streaming.* layer metrics, so the set is pinned too.
+    val keys = Set("batches", "state_rows", "state_bytes", "state_rows_updated",
+      "dur_addBatch", "dur_commitOffsets", "dur_getBatch", "dur_latestOffset",
+      "dur_queryPlanning", "dur_triggerExecution", "dur_walCommit")
+    for (dir <- Seq(sfDir, java.nio.file.Paths.get(sfDir).resolveSibling("sf0.01").toString);
+         (name, tag, batches) <- Seq(("q29_events_stream_sink", "q29", 1L),
+           ("q31_sessions_stream_sink", "q31", 1L), ("q33_stream_dedup", "q33", 4L))) {
+      Telemetry.drain()
+      assert(Registry.queries(name)(spark, dir).count() > 0)
+      val t = Telemetry.drain().collect {
+        case (k, v) if k.startsWith(s"$tag.") => k.stripPrefix(s"$tag.") -> v
+      }
+      assert(t.keySet === keys, s"$name at $dir")
+      assert(t("batches") === batches, s"$name at $dir")
+    }
+  }
+
+  test("q31 leaves the caller's session conf as it was; its stream still merges sessions locally") {
+    val key = EventsStreaming.mergeSessionsLocally.keys.head
+    val before = spark.conf.getOption(key)
+    // the query starts its stream internally: catch the handle when the
+    // start event is posted (synchronously, while the query is active)
+    var started: Option[StreamingQuery] = None
+    val listener = new StreamingQueryListener {
+      import StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        started = Option(spark.streams.get(e.id))
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try Registry.queries("q31_sessions_stream_sink")(spark, sfDir).collect()
+    finally spark.streams.removeListener(listener)
+    assert(spark.conf.getOption(key) === before)
+    val plan = started.get
+      .asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.lastExecution.executedPlan.toString
+    // the local pre-merge adds a MergingSessions below the state-store
+    // exchange, on top of the one after the state restore
+    assert("MergingSessions".r.findAllIn(plan).size === 2, plan)
   }
 
   test("session windows produce bounded, ordered sessions") {
