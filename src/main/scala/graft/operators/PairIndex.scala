@@ -269,27 +269,41 @@ object PairIndex {
   }
 
   /** Bucket count for a corpus artifact set when the caller doesn't
-    * pin one (round-13): Catalyst's pre-scan size estimate of the
-    * input divided by a per-bucket input target, clamped to
-    * [32, 4096]. Buckets are simultaneously the parallelism floor and
-    * the per-task sort/memory unit of every downstream no-shuffle
-    * join, so a FIXED count fails at one end or the other: 32 buckets
-    * over a multi-TB corpus means ~100 GB bucket sorts (the sf10
-    * ladder's OOM mode), while 4096 buckets over 60k docs is file-
-    * count overhead. The 128 MB input target assumes the ~10x
-    * text→posting expansion of the shingle pipeline, i.e. ~1 GB of
-    * postings per bucket — comfortably inside one executor task's
-    * memory. The floor keeps every driver-verified SF at the pinned
-    * 32 (bucket-compatible with the bench's
-    * spark.sql.shuffle.partitions=32), so small-scale plans are
-    * unchanged; the stats read costs no job.
+    * pin one: Catalyst's pre-scan size estimate of the input divided by
+    * a per-bucket input target, floored at the session's shuffle-
+    * partition count and capped at 4096 (the cap applies last).
+    * Buckets are simultaneously the parallelism floor and the per-task
+    * sort/memory unit of every downstream no-shuffle join, so a FIXED
+    * count fails at one end or the other: 32 buckets over a multi-TB
+    * corpus means ~100 GB bucket sorts (the sf10 ladder's OOM mode),
+    * while 4096 buckets over 60k docs is file-count overhead. The
+    * 128 MB input target assumes the ~10x text→posting expansion of the
+    * shingle pipeline, i.e. ~1 GB of postings per bucket — comfortably
+    * inside one executor task's memory.
     *
-    * Unknown stats (round-14, ADVICE): a non-file-backed input (an
-    * in-memory relation after joins, a view without stats) can report
-    * Catalyst's `defaultSizeInBytes` SENTINEL instead of a real
-    * estimate — trusting it would silently clamp tiny data to 4096
-    * buckets (4096 files per artifact, 4096-task jobs). Any estimate
-    * at or beyond the sentinel falls back to the 32-bucket floor; pin
+    * The floor is `spark.sql.shuffle.partitions` (SQLConf's
+    * `defaultNumShufflePartitions`), so a small index stays
+    * bucket-compatible with the shuffles that meet it, and it has as
+    * many scan tasks as the session has shuffle parallelism — no more.
+    * It is deliberately not `numShufflePartitions`: with AQE coalescing
+    * on, that getter returns `adaptive.coalescePartitions.initialPartitionNum`,
+    * which `graft.Session` scales with the input directory's size (about
+    * 20 at sf1, 600 at sf30), and which AQE coalesces back down after
+    * the map side — a bucket count cannot be coalesced, so a floor
+    * taken from it would leave a small index with hundreds of files and
+    * scan tasks. `graft.Session` sets `spark.sql.shuffle.partitions` to
+    * the core count: local[4] gets 4 buckets, local[32] 32. A floor
+    * above the core count only adds scan tasks whose deserialization
+    * outweighs their work. Bucket count is layout, not result:
+    * consumers give the same rows at any count. The stats read costs
+    * no job.
+    *
+    * Unknown stats: a non-file-backed input (an in-memory relation
+    * after joins, a view without stats) can report Catalyst's
+    * `defaultSizeInBytes` SENTINEL instead of a real estimate —
+    * trusting it would silently clamp tiny data to 4096 buckets (4096
+    * files per artifact, 4096-task jobs). Any estimate at or beyond the
+    * sentinel falls back to the same shuffle-partition floor; pin
     * `numBuckets` explicitly for non-file sources that are genuinely
     * large.
     *
@@ -303,25 +317,28 @@ object PairIndex {
       else df.sparkSession.conf
         .get("spark.graft.autoBuckets.targetBytes", (128L << 20).toString).toLong
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    // the sentinel comes from THIS DataFrame's session conf, not the
-    // thread-local SQLConf.get (round-15, ADVICE): in a multi-session
-    // or background-thread context the thread-local can belong to a
-    // different session, making the comparison use the wrong sentinel
-    val sentinel = BigInt(
-      df.sparkSession.sessionState.conf.defaultSizeInBytes)
+    // the sentinel and the floor come from THIS DataFrame's session
+    // conf, not the thread-local SQLConf.get: in a multi-session or
+    // background-thread context the thread-local can belong to a
+    // different session
+    val conf = df.sparkSession.sessionState.conf
+    val floor = conf.defaultNumShufflePartitions
+    val sentinel = BigInt(conf.defaultSizeInBytes)
     // >= (not ==): any plan whose summed stats INCLUDE one sentinel-
     // sized leaf (a union with an unknown-stats child) is equally
-    // untrustworthy. Log the degradation so a 32-bucket index over a
+    // untrustworthy. Log the degradation so a floor-sized index over a
     // genuinely large non-file input is attributable from the run log
     // rather than discovered as an undersized-parallelism mystery.
-    if (bytes >= sentinel) {
-      System.err.println(
-        s"[PairIndex.autoBuckets] size estimate $bytes >= unknown-stats " +
-          s"sentinel $sentinel — falling back to the 32-bucket floor; pin " +
-          "numBuckets explicitly if this input is genuinely large")
-      32
-    }
-    else (bytes / target).min(BigInt(4096)).max(BigInt(32)).toInt
+    val wanted =
+      if (bytes >= sentinel) {
+        System.err.println(
+          s"[PairIndex.autoBuckets] size estimate $bytes >= unknown-stats " +
+            s"sentinel $sentinel — falling back to the shuffle-partition floor " +
+            s"($floor buckets); pin numBuckets explicitly if this input is " +
+            "genuinely large")
+        BigInt(floor)
+      } else (bytes / target).max(BigInt(floor))
+    wanted.min(BigInt(4096)).toInt
   }
 
   /** The `graft.*` TBLPROPERTIES stamp on a pairs table: the semantics
@@ -392,9 +409,11 @@ object PairIndex {
 
   /** Compute survivors + pair index once and write both bucketed.
     * `numBuckets` sizes the co-location unit — pass 0 (the default)
-    * to derive it from the input size (`autoBuckets`); at corpus
-    * scale it should track executor count × a small factor (buckets
-    * are the parallelism floor of every downstream no-shuffle join).
+    * to derive it from the input size, floored at the session's
+    * shuffle-partition count (`autoBuckets`): buckets are the
+    * parallelism of every downstream no-shuffle join, so a small index
+    * gets one bucket per shuffle partition and a large one one per
+    * 128 MB of input.
     * Default table names are per-invocation-unique (`freshName`);
     * pass explicit names for a standing artifact consumed across
     * sessions. */

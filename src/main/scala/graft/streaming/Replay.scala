@@ -17,13 +17,29 @@ import org.apache.spark.sql.types.StructType
   *    chunk;
   *  - `parquetSink` lands each micro-batch through `foreachBatch` under
   *    an `AvailableNow` trigger (swap the writer for Delta/JDBC in
-  *    production);
+  *    production), checkpointing through Spark's FileSystem-based
+  *    checkpoint manager, which renames without forking a process per
+  *    file (see `parquetSink`);
   *  - `runBounded` runs one such stream into a scratch sink, awaits it,
   *    records its `<tag>.*` state and phase telemetry, and returns the
   *    sink read back as the query result.
   *
   * Trigger, state and sink policy for all three queries change here. */
 object Replay {
+
+  /** Scratch directories to remove at JVM exit — one shutdown hook
+    * for all of them, so repeated runs in one JVM add paths, not hooks. */
+  private val scratchDirs = java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
+
+  sys.addShutdownHook {
+    // each dir on its own: one that fails to delete spares the rest
+    scratchDirs.forEach(dir => scala.util.Try(if (Files.exists(dir)) {
+      val walk = Files.walk(dir)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.deleteIfExists(p))
+      finally walk.close()
+    }))
+  }
 
   /** Scratch directory removed recursively at JVM exit — staged chunks
     * and sinks cannot accumulate across repeated bench/verify runs
@@ -32,14 +48,7 @@ object Replay {
     * an option). */
   def scratchDir(prefix: String): Path = {
     val dir = Files.createTempDirectory(prefix)
-    sys.addShutdownHook {
-      if (Files.exists(dir)) {
-        val walk = Files.walk(dir)
-        try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(p => Files.deleteIfExists(p))
-        finally walk.close()
-      }
-    }
+    scratchDirs.add(dir)
     dir
   }
 
@@ -93,6 +102,12 @@ object Replay {
       .option("maxFilesPerTrigger", "1")
       .parquet(dir.toString)
 
+  /** The checkpoint-manager conf every `parquetSink` stream starts
+    * with (see there). */
+  private val checkpointManager = Map(
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
+
   /** Start `stream` into a parquet sink at `outDir`: every micro-batch
     * is written with `saveMode` (complete + overwrite keeps the sink
     * idempotent per batch; append + append accumulates survivors) under
@@ -101,7 +116,15 @@ object Replay {
     * (restart specs); without one the stream checkpoints to a temporary
     * directory. `confs` are session confs set only around `start()`:
     * the stream clones the session when it starts, so they bind to this
-    * stream alone and the caller's values are restored. */
+    * stream alone and the caller's values are restored.
+    *
+    * Every stream also starts with `checkpointManager`, the same way.
+    * Without libhadoop, Hadoop's local `FileContext` forks a `readlink`
+    * process to resolve each rename's path, so Spark's default
+    * FileContext-based checkpoint manager forks once for every offset,
+    * commit, metadata and state file it writes (~110 per q29 run). The
+    * FileSystem-based manager renames with one `rename(2)`. Spark's
+    * checkpoint checksum files are written either way. */
   def parquetSink[T](stream: Dataset[T], outDir: String, outputMode: String,
                      saveMode: String, checkpoint: Option[String] = None,
                      confs: Map[String, String] = Map.empty): StreamingQuery = {
@@ -113,7 +136,9 @@ object Replay {
       .trigger(Trigger.AvailableNow())
     checkpoint.foreach(cp => writer.option("checkpointLocation", cp))
     val conf = stream.sparkSession.conf
-    val prev = confs.map { case (k, v) => val p = conf.getOption(k); conf.set(k, v); k -> p }
+    val prev = (checkpointManager ++ confs).map { case (k, v) =>
+      val p = conf.getOption(k); conf.set(k, v); k -> p
+    }
     try writer.start()
     finally prev.foreach { case (k, p) => p.fold(conf.unset(k))(conf.set(k, _)) }
   }

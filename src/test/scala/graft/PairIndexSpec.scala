@@ -607,14 +607,69 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     PairIndex.dropDocIndex(spark, scratch)
   }
 
-  test("autoBuckets floors small inputs at 32 and scales big ones to the 4096 cap") {
-    // tiny real table → the pinned small-scale floor
-    assert(PairIndex.autoBuckets(Tables.documents(spark, sfDir)) === 32)
+  test("autoBuckets floors small inputs at the shuffle-partition count, caps at 4096") {
+    // tiny real table → the session's shuffle-partition count
+    val docs = Tables.documents(spark, sfDir)
+    assert(PairIndex.autoBuckets(docs) ===
+      spark.sessionState.conf.defaultNumShufflePartitions)
+    val key = "spark.sql.shuffle.partitions"
+    val initKey = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    val prev = spark.conf.get(key)
+    val prevInit = spark.conf.getOption(initKey)
+    spark.conf.set(key, "8")
+    try {
+      assert(PairIndex.autoBuckets(docs) === 8)
+      // graft.Session scales AQE's initial partition count with the
+      // input size; the floor must stay spark.sql.shuffle.partitions
+      spark.conf.set(initKey, "64")
+      assert(spark.sessionState.conf.numShufflePartitions === 64)
+      assert(PairIndex.autoBuckets(docs) === 8)
+    } finally {
+      spark.conf.set(key, prev)
+      prevInit.fold(spark.conf.unset(initKey))(spark.conf.set(initKey, _))
+    }
     // range() carries an exact 8-bytes/row size estimate with no data
     // materialized: 2^37 rows ≈ 1 TiB → target count far past the cap
     assert(PairIndex.autoBuckets(spark.range(1L << 37).toDF("x")) === 4096)
     // mid-scale: ~32 GiB at the 128 MiB target → 256 buckets
     assert(PairIndex.autoBuckets(spark.range(1L << 32).toDF("x")) === 256)
+  }
+
+  test("bucket count is layout, not result: consumers and an append agree at 1/4/32") {
+    // autoBuckets follows the session's shuffle-partition count, so the
+    // same corpus is bucketed differently on different machines; what
+    // the index answers must not follow it
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy(df.columns.map(col).toSeq: _*).collect().toSeq
+    val docs = Tables.documents(spark, sfDir)
+    val byBuckets = Seq(1, 4, 32).map(n => n -> PairIndex.materializeDocIndex(
+      docs, "doc_id", "text", numBuckets = n, keepPostings = true)).toMap
+    val curated = byBuckets.map { case (n, i) =>
+      n -> rows(PairIndex.curateFromIndex(spark, i, "doc_id", "text")) }
+    val clusters = byBuckets.map { case (n, i) =>
+      n -> rows(PairIndex.clustersFromIndex(spark, i)) }
+    assert(curated(1).nonEmpty && clusters(1).nonEmpty)
+    for (n <- Seq(4, 32)) {
+      assert(curated(n) === curated(1), s"curateFromIndex at $n buckets vs 1")
+      assert(clusters(n) === clusters(1), s"clustersFromIndex at $n buckets vs 1")
+    }
+    byBuckets.values.foreach(PairIndex.dropDocIndex(spark, _))
+    // the advance family's shape: a 63/64 base, advanced by the rest
+    val base = docs.filter(pmod(col("doc_id"), lit(64)) =!= 0)
+    val batch = docs.filter(pmod(col("doc_id"), lit(64)) === 0)
+    val advanced = Seq(4, 32).map { n =>
+      val r = PairIndex.advanceDocIndex(spark,
+        PairIndex.materializeDocIndex(base, "doc_id", "text",
+          numBuckets = n, keepPostings = true),
+        batch, "doc_id", "text", economyGuard = Double.PositiveInfinity)
+      assert(r.appended, s"expected the append path at $n buckets")
+      r
+    }
+    val Seq(a4, a32) = advanced
+    assert((a4.newDocs, a4.evicted, a4.affectedOld) ===
+      (a32.newDocs, a32.evicted, a32.affectedOld))
+    assertTablesEqual(a4.idx, a32.idx)
+    advanced.foreach(r => PairIndex.dropDocIndex(spark, r.idx))
   }
 
   test("keepLatest retains one grace generation, drops at the second supersede") {
@@ -686,17 +741,19 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     val df = spark.createDataFrame(rdd, StructType(Seq(StructField("x", LongType))))
     assert(df.queryExecution.optimizedPlan.stats.sizeInBytes >=
       BigInt(org.apache.spark.sql.internal.SQLConf.get.defaultSizeInBytes))
-    assert(PairIndex.autoBuckets(df) === 32)
+    assert(PairIndex.autoBuckets(df) ===
+      spark.sessionState.conf.defaultNumShufflePartitions)
   }
 
   test("autoBuckets per-bucket target is conf-tunable") {
     val docs = Tables.documents(spark, sfDir)
+    val floor = spark.sessionState.conf.defaultNumShufflePartitions
     val dflt = PairIndex.autoBuckets(docs)
-    assert(dflt === 32) // tiny table at the 128 MB default target
+    assert(dflt === floor) // tiny table at the 128 MB default target
     spark.conf.set("spark.graft.autoBuckets.targetBytes", "64")
     try {
       val tuned = PairIndex.autoBuckets(docs)
-      assert(tuned > 32, s"expected a 64-byte target to beat the floor, got $tuned")
+      assert(tuned > floor, s"expected a 64-byte target to beat the floor, got $tuned")
     } finally spark.conf.unset("spark.graft.autoBuckets.targetBytes")
   }
 

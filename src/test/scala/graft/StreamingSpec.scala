@@ -7,6 +7,7 @@ import graft.streaming.{DocsStreaming, EventsStreaming, Replay}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Streaming/batch equivalence (SURVEY.md §7.5): the windowed streaming
   * aggregation over the bounded events file must produce exactly the
@@ -390,6 +391,54 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     // the local pre-merge adds a MergingSessions below the state-store
     // exchange, on top of the one after the state restore
     assert("MergingSessions".r.findAllIn(plan).size === 2, plan)
+  }
+
+  test("replay checkpoints keep checksums and leak no checkpoint-manager conf") {
+    val key = "spark.sql.streaming.checkpointFileManagerClass"
+    assert(spark.conf.getOption(key).isEmpty)
+    // each registered query starts its stream internally: catch the
+    // handles when the start events are posted (synchronously, while
+    // the queries are active)
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[StreamingQuery]()
+    val listener = new StreamingQueryListener {
+      import StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        started.add(spark.streams.get(e.id))
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try for (name <- Seq("q29_events_stream_sink", "q31_sessions_stream_sink",
+                         "q33_stream_dedup")) {
+      assert(Registry.queries(name)(spark, sfDir).count() > 0)
+      assert(spark.conf.getOption(key).isEmpty, s"$name left $key set")
+    } finally spark.streams.removeListener(listener)
+    // ... and their streams' own sessions ran with the FileSystem manager
+    val managers = started.asScala.toSeq.map(_.asInstanceOf[
+        org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.lastExecution.sparkSession.conf.getOption(key))
+    assert(managers === Seq.fill(3)(Some("org.apache.spark.sql.execution.streaming." +
+      "checkpointing.FileSystemBasedCheckpointFileManager")))
+    // a durable checkpoint written through the runner still carries
+    // Spark's own checksum files (`<file>.crc`, next to Hadoop's hidden
+    // `.<file>.crc`) for its state files
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_crc_ckpt")
+    val out = java.nio.file.Files.createTempDirectory("graft_crc_sink").toString
+    Replay.parquetSink(EventsStreaming.hourlyAgg(
+        EventsStreaming.readEventsStream(spark, sfDir)), out, "complete", "overwrite",
+      checkpoint = Some(ckpt.toString)).awaitTermination()
+    val files = {
+      val walk = java.nio.file.Files.walk(ckpt)
+      try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(ckpt.relativize(_).toString).toList
+      finally walk.close()
+    }
+    val sparkCrcs = files.filter { f =>
+      val name = java.nio.file.Paths.get(f).getFileName.toString
+      name.endsWith(".crc") && !name.startsWith(".")
+    }
+    assert(sparkCrcs.exists(_.startsWith("state/")), files.sorted.mkString("\n"))
+    assert(spark.conf.getOption(key).isEmpty)
   }
 
   test("session windows produce bounded, ordered sessions") {
