@@ -51,7 +51,7 @@ object LocalCatalog {
     if (sys.env.get("SPARK_GRAFT_KEEP_WAREHOUSE").contains("1")) return
     liveForeignOwner() match {
       case Some(pid) =>
-        System.err.println(
+        Log.warn(
           s"[LocalCatalog] NOT wiping metastore_db/spark-warehouse: live JVM " +
             s"(pid $pid) owns generations here. Run from a separate cwd, or " +
             "set SPARK_GRAFT_KEEP_WAREHOUSE=1 to silence this warning. " +

@@ -91,7 +91,7 @@ object Components {
     try minLabel(edges, srcCol, dstCol, maxIter, checkpointDir).labels
     catch {
       case _: NonConvergenceException =>
-        System.err.println(
+        graft.Log.warn(
           s"[components] min-label hit maxIter=$maxIter; falling back to " +
             s"large/small-star (maxIter=$starMaxIter)")
         graft.Telemetry.record("components.fallback_star", 1L)
@@ -224,7 +224,7 @@ object Components {
         s"connectedComponents did not converge in $maxIter rounds — " +
           "pathological chain graph; use connectedComponentsStar instead")
     GraftColumnBridge.unpersistCheckpointed(onedir)
-    System.err.println(s"[components] min-label converged in $iter rounds")
+    graft.Log.info(s"[components] min-label converged in $iter rounds")
     graft.Telemetry.record("components.min_label_rounds", iter.toLong)
     Result(labels, iter)
   }
@@ -297,7 +297,7 @@ object Components {
       .unionByName(in.select(col("b").as("v"))).distinct()
     val labels = verts.join(cur.withColumnRenamed("a", "v"), Seq("v"), "left")
       .select(col("v"), coalesce(col("b"), col("v")).as("lbl"))
-    System.err.println(s"[components] large/small-star converged in $iter rounds")
+    graft.Log.info(s"[components] large/small-star converged in $iter rounds")
     graft.Telemetry.record("components.star_rounds", iter.toLong)
     Result(labels, iter)
   }

@@ -263,11 +263,6 @@ object PairIndex {
   def keepLatest(spark: SparkSession, key: String, idx: DocIndex): Unit =
     keepLatest(spark, key, idx.tables)
 
-  def dropCorpusIndex(spark: SparkSession, idx: CorpusIndex): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS `${idx.hashesTable}`")
-    spark.sql(s"DROP TABLE IF EXISTS `${idx.shinglesTable}`")
-  }
-
   /** Bucket count for a corpus artifact set when the caller doesn't
     * pin one: Catalyst's pre-scan size estimate of the input divided by
     * a per-bucket input target, floored at the session's shuffle-
@@ -331,7 +326,7 @@ object PairIndex {
     // rather than discovered as an undersized-parallelism mystery.
     val wanted =
       if (bytes >= sentinel) {
-        System.err.println(
+        graft.Log.warn(
           s"[PairIndex.autoBuckets] size estimate $bytes >= unknown-stats " +
             s"sentinel $sentinel — falling back to the shuffle-partition floor " +
             s"($floor buckets); pin numBuckets explicitly if this input is " +
@@ -1132,10 +1127,6 @@ object PairIndex {
       estMeanScoreDrift: Double, estSpuriousFrac: Double) {
     def rebuildDue(meanScoreTolerance: Double): Boolean =
       estMeanScoreDrift >= meanScoreTolerance
-    /** Conservative presence-grade trigger: rebuild when the estimated
-      * over-drop (spurious-pair) fraction exceeds the budget. */
-    def rebuildDueSpurious(spuriousFracBudget: Double): Boolean =
-      estSpuriousFrac >= spuriousFracBudget
   }
 
   def driftEstimate(spark: SparkSession, idx: DocIndex): DriftEstimate = {

@@ -157,8 +157,4 @@ object StandingFixtures {
           idx
       }
     }
-
-  /** Test hook: drop every memoized fixture (tables are left to the
-    * keepLatest rings / warehouse reset). */
-  def invalidateAll(): Unit = synchronized { memo.clear() }
 }

@@ -39,8 +39,8 @@ object EventsStreaming {
 
   /** The events files' schema for `dir` and the `ts` normalization the
     * sources apply. readStream requires an explicit schema, so the
-    * batch-side footer probe decides which ts layout this dir carries
-    * (see Tables.events); the cast to session-TZ timestamp is a
+    * batch-side schema probe (resolved once per session) decides which
+    * ts layout this dir carries (see Tables.events); the cast to session-TZ timestamp is a
     * value-preserving no-op for already-TimestampType files (sessions
     * pin UTC). */
   private def layout(spark: SparkSession, dir: String): (StructType, Column) =

@@ -41,7 +41,7 @@ object GraftColumnBridge {
             df.sparkSession.sparkContext.hadoopConfiguration)
           try fs.delete(path, true)
           catch { case e: java.io.IOException =>
-            System.err.println(
+            graft.Log.warn(
               s"[graft] checkpoint cleanup of $p failed: ${e.getMessage}")
           }
         }

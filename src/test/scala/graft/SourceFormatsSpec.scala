@@ -1,6 +1,8 @@
 package graft
 
 import graft.sources.Tables
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -59,5 +61,69 @@ class SourceFormatsSpec extends AnyFunSuite with SparkTestSession {
       df.select("event_id", "ts").orderBy("event_id").collect().toSeq
     assert(rows(legacy) === rows(native))
     assert(rows(native).nonEmpty)
+  }
+
+  /** Spark jobs started by `body` on this thread (tagged by a job
+    * group, so jobs from other threads are not counted). */
+  private def jobsDuring(s: SparkSession)(body: => Unit): Int = {
+    val tag = s"graft-jobs-${System.nanoTime}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == tag) n.incrementAndGet()
+    }
+    s.sparkContext.addSparkListener(listener)
+    s.sparkContext.setJobGroup(tag, tag)
+    try body
+    finally {
+      s.sparkContext.clearJobGroup()
+      assert(GraftColumnBridge.waitListenerBusEmpty(s, 10000))
+      s.sparkContext.removeSparkListener(listener)
+    }
+    n.get
+  }
+
+  test("every table reads with the schema Spark itself infers") {
+    def fields(st: org.apache.spark.sql.types.StructType) =
+      st.fields.toSeq.map(f => (f.name, f.dataType, f.nullable, f.metadata))
+    Tables.all.foreach { n =>
+      val inferred = spark.read.parquet(s"$sfDir/$n.parquet").schema
+      assert(fields(Tables.table(spark, sfDir, n).schema) === fields(inferred), n)
+    }
+    val rawEvents = spark.read.parquet(s"$sfDir/events.parquet")
+    val tsType = rawEvents.schema("ts").dataType
+    assert(tsType === org.apache.spark.sql.types.TimestampNTZType)
+    assert(Tables.eventsTsNativeType(spark, sfDir) === Some(tsType))
+    assert(fields(Tables.events(spark, sfDir).schema) ===
+      fields(rawEvents.withColumn("ts", col("ts").cast("timestamp")).schema))
+  }
+
+  test("a table's schema is inferred once per session, not once per build") {
+    Tables.lineitem(spark, sfDir)
+    Tables.events(spark, sfDir)
+    assert(jobsDuring(spark) {
+      Tables.lineitem(spark, sfDir)
+      Tables.events(spark, sfDir)
+    } === 0)
+    val other = spark.newSession()
+    assert(jobsDuring(other)(Tables.lineitem(other, sfDir)) >= 1)
+    assert(jobsDuring(other)(Tables.lineitem(other, sfDir)) === 0)
+  }
+
+  test("a path rewritten with a different schema is inferred again") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_rewrite").toString
+    val path = s"$dir/t.parquet"
+    spark.range(3).selectExpr("id AS a").write.mode("overwrite").parquet(path)
+    val before = Tables.table(spark, dir, "t")
+    assert(before.columns.toSeq === Seq("a"))
+    assert(before.count() === 3)
+    spark.range(5).selectExpr("CAST(id AS STRING) AS b", "id * 2 AS c")
+      .write.mode("overwrite").parquet(path)
+    val after = Tables.table(spark, dir, "t")
+    assert(after.schema === spark.read.parquet(path).schema)
+    assert(after.columns.toSeq === Seq("b", "c"))
+    assert(after.orderBy("c").collect().map(r => (r.getString(0), r.getLong(1))).toSeq ===
+      (0L until 5L).map(i => (i.toString, 2 * i)))
   }
 }
