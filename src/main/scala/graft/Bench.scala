@@ -25,7 +25,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(graft.queries.Registry.subset(_, "SPARK_GRAFT_BENCH_ONLY"))
     val spark = Session.builder(cpus, sfDir).getOrCreate()
     val initialParts =
       spark.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum")

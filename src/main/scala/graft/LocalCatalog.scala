@@ -14,17 +14,15 @@ package graft
   *
   * `reset()` deletes `./metastore_db` and `./spark-warehouse` (cwd —
   * where local-mode Derby and the default warehouse land) BEFORE the
-  * SparkSession exists. Opt out with SPARK_GRAFT_KEEP_WAREHOUSE=1 when
-  * a run must consume tables a previous JVM materialized (the
-  * cross-JVM persisted-index pin does). */
+  * SparkSession exists. A main that must consume tables a previous JVM
+  * materialized (the cross-JVM persisted-index pin) does not call it. */
 object LocalCatalog {
 
   /** True iff the cwd warehouse holds a pid-tagged `graft_*` generation
     * whose owning JVM is still alive on this host — the signal that a
     * CONCURRENT bench/verify JVM shares this cwd and wiping would pull
     * its live Derby db and tables out from under it (round-14, ADVICE:
-    * reset() previously defeated sweepStale's liveness protection
-    * unless the operator remembered SPARK_GRAFT_KEEP_WAREHOUSE=1).
+    * reset() previously defeated sweepStale's liveness protection).
     * Unparseable pid tags count as dead, mirroring sweepStale. The
     * scan is restricted to `graft_`-prefixed directory names (round-15,
     * ADVICE): only PairIndex generations carry meaningful pid tags, so
@@ -48,13 +46,11 @@ object LocalCatalog {
   }
 
   def reset(): Unit = {
-    if (sys.env.get("SPARK_GRAFT_KEEP_WAREHOUSE").contains("1")) return
     liveForeignOwner() match {
       case Some(pid) =>
         Log.warn(
           s"[LocalCatalog] NOT wiping metastore_db/spark-warehouse: live JVM " +
-            s"(pid $pid) owns generations here. Run from a separate cwd, or " +
-            "set SPARK_GRAFT_KEEP_WAREHOUSE=1 to silence this warning. " +
+            s"(pid $pid) owns generations here. Run from a separate cwd. " +
             "(If no graft JVM is actually running, the OS may have recycled " +
             "that pid onto an unrelated process — delete the stale " +
             "spark-warehouse/graft_* directories by hand.)")

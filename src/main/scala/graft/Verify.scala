@@ -7,21 +7,14 @@ object Verify {
     LocalCatalog.reset() // Derby/warehouse are per-session scratch (round-13)
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    // optional subset (comma-separated names): big-SF local gates skip
+    // the queries whose DuckDB oracle is itself quadratic-cost
+    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
+      .map(graft.queries.Registry.subset(_, "SPARK_GRAFT_VERIFY_ONLY"))
     // the Bench session policy, so the oracle gates check Bench's plans
     val spark = Session.builder(cpus, sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // optional subset (comma-separated names): big-SF local gates skip
-    // the queries whose DuckDB oracle is itself quadratic-cost.
-    // Unknown names fail loudly — a typo must not silently shrink the
-    // gate while it prints all-green.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_VERIFY_ONLY names unknown queries: ${unknown.mkString(", ")}")
-    }
     val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
     // Shared micro-nat tables for the d19/d21/d23 mirrors: materialize
     // the engine's integer cost/idf tables once so the DuckDB oracle

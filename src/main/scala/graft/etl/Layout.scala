@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions.col
 
 /** Storage-layout operators for the 100 TB regime (SURVEY.md §4.3): the
@@ -93,9 +93,6 @@ object Layout {
     df.write.mode(SaveMode.Overwrite)
       .partitionBy(partitionCol)
       .parquet(path)
-
-  def readTable(spark: SparkSession, table: String): DataFrame =
-    spark.table(table)
 
   /** True iff a filter on the partition column pruned the file listing
     * (PartitionFilters in the scan node) — used by LayoutSpec to prove

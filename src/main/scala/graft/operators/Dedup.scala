@@ -33,10 +33,6 @@ object Dedup {
            max(col(idCol)).as("max_doc_id"))
       .filter(col("n_docs") > 1)
 
-  /** Exact duplicate groups: canonical-form hash → groups with >1 doc. */
-  def exactDuplicateGroups(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    duplicateGroups(df, idCol, TextAnalysis.textHash(col(textCol)), "text_hash")
-
   /** Deterministic exact dedup: keep the smallest id per canonical hash.
     * (dropDuplicates keeps an arbitrary row; a window makes the survivor
     * reproducible — SURVEY.md §7.4 determinism policy.) */

@@ -147,32 +147,19 @@ object PairIndex {
       }
   }
 
-  /** Storage-level snapshot CLONE of a doc index (round-19,
-    * optimization): fresh catalog tables with the source's schema and
-    * bucket spec whose data files are byte-copied — the cheap snapshot
-    * a pipeline takes before exercising an in-place-append advance
-    * against a shared standing base. On a snapshotting table format
-    * (Iceberg/Delta) this is a metadata-only operation; on bare
-    * bucketed parquet it is one file copy of the index — still far
-    * cheaper than recomputing survivors/shingles/pairs from text
-    * (measured at sf0.1: ~0.3 s copy vs ~4.7 s rebuild). Bucket file
-    * names are preserved, so the clone's bucket layout (and every
-    * exchange-free consumer plan) is identical; graft.* TBLPROPERTIES
-    * are copied so `advanceDocIndex` reads the same semantics. */
-  def cloneDocIndex(spark: SparkSession, idx: DocIndex): DocIndex =
-    DocIndex(
-      cloneTableWithData(spark, idx.survivorsTable, freshName(SurvivorsBase)),
-      cloneTableWithData(spark, idx.pairsTable, freshName(PairsBase)),
-      idx.postingsTable.map(cloneTableWithData(spark, _, freshName(PostingsBase))),
-      idx.dfTable.map(cloneTableWithData(spark, _, freshName(DfBase))))
-
-  /** One table of the storage-level clone: catalog-metadata copy
+  /** Storage-level clone of one table — how an advance gets a copy of
+    * an input table it appends to (`writeDelta`): catalog-metadata copy
     * (schema + bucket spec + graft.* TBLPROPERTIES in one
     * SessionCatalog call — SQL round-trips dominated the first
     * implementation at 1.8 s for ~15 MB) plus a parallel byte-copy of
     * the bucket files between the CATALOG-resolved locations (the
     * former warehouse-dir string convention silently produced an
-    * empty clone under a non-default database). */
+    * empty clone under a non-default database). Bucket file names are
+    * preserved, so the clone's bucket layout (and every exchange-free
+    * consumer plan) is identical. On a snapshotting table format
+    * (Iceberg/Delta) this is a metadata-only operation; on bare
+    * bucketed parquet it is one file copy (measured at sf0.1: ~0.3 s
+    * for the four tables vs ~4.7 s to rebuild the index). */
   private def cloneTableWithData(spark: SparkSession, src: String,
                                  dst: String): String = {
     val hconf = spark.sparkContext.hadoopConfiguration
@@ -232,9 +219,8 @@ object PairIndex {
       kept = keep
       keep
     })
-    // a generation may REUSE tables of an earlier one (partial-rewrite
-    // advances keep the survivors/postings/df tables) — never drop a
-    // table any retained generation still names
+    // two registered generations may name the same table — never drop
+    // a table any retained generation still names
     val live = kept.flatten.toSet
     evicted.filterNot(live).foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
   }
@@ -339,50 +325,15 @@ object PairIndex {
   /** The `graft.*` TBLPROPERTIES stamp on a pairs table: the semantics
     * the index was materialized with (`advanceDocIndex` reads them, so
     * an advance never runs with a different cap/threshold than the
-    * index it extends), the survivor count the advance's economy guard
-    * compares against, and the frozen-drift accumulators. */
+    * index it extends) and the survivor count the advance's economy
+    * guard compares against. Other `graft.*` keys on an older index
+    * (the former `graft.drift.*` counters) are ignored. */
   private[graft] final case class Stamp(threshold: Double, maxDocFreq: Int,
-                                        shingleK: Int, numBuckets: Int,
-                                        nDocs: Long, drift: Drift = Drift())
-
-  /** Frozen-advance drift accumulators (`driftEstimate` reads them). A
-    * frozen advance's contribution is normalized AT ADVANCE TIME, when
-    * the corpus statistics it depends on are current, so reading the
-    * estimate later is a pure TBLPROPERTIES lookup. Model (validated
-    * against the DriftLadder's measured drift, both shapes):
-    *   - a flip perturbs the capped shingle sets of its ~h holder docs
-    *     (h = the flip's smaller-side df);
-    *   - each perturbed doc's pairs move by ~one shingle out of a
-    *     ~ū-shingle union, ū ≈ 4c̄/(3+t) (n1≈n2≈c̄ and J≈(t+1)/2 give
-    *     u = 2c/(1+J)), so the |ΔJ| mass added per flip is
-    *     ~h·d̄·(1/ū) over d̄·nDocs/2 = nPairs pairs;
-    *   - the mean-over-all-pairs contribution per advance collapses to
-    *     Σh·(3+t)/(2·Σ_capped df) — nDocs and nPairs both cancel.
-    * Stored in nano-units as a long (a float accumulator would invite
-    * rounding-format drift in the string-valued properties). */
-  private[graft] final case class Drift(advances: Long = 0L, flips: Long = 0L,
-                                        holders: Long = 0L, contribNano: Long = 0L) {
-    /** The accumulators after one advance. An exact advance rescores
-      * only pairs touching A, so pairs outside A keep their (possibly
-      * drifted) scores and the accumulated drift CARRIES; only a full
-      * rematerialization resets it. */
-    def after(frozenCaps: Boolean, nFlips: Long, flipHolders: Long,
-              cappedPosts: Long, threshold: Double): Drift =
-      if (!frozenCaps) this
-      else {
-        val c =
-          if (flipHolders > 0 && cappedPosts > 0)
-            math.round(flipHolders.toDouble * (3.0 + threshold) / (2.0 * cappedPosts) * 1e9)
-          else 0L
-        Drift(advances + 1, flips + nFlips, holders + flipHolders, contribNano + c)
-      }
-  }
+                                        shingleK: Int, numBuckets: Int, nDocs: Long)
 
   private def writeStamp(spark: SparkSession, table: String, s: Stamp): Unit = {
     val kv = Seq("threshold" -> s.threshold, "maxDocFreq" -> s.maxDocFreq,
-      "shingleK" -> s.shingleK, "numBuckets" -> s.numBuckets, "nDocs" -> s.nDocs,
-      "drift.advances" -> s.drift.advances, "drift.flips" -> s.drift.flips,
-      "drift.holders" -> s.drift.holders, "drift.contrib_nano" -> s.drift.contribNano)
+      "shingleK" -> s.shingleK, "numBuckets" -> s.numBuckets, "nDocs" -> s.nDocs)
     spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES(" +
       kv.map { case (k, v) => s"'graft.$k'='$v'" }.mkString(",") + ")")
   }
@@ -393,10 +344,8 @@ object PairIndex {
     def prop(k: String): String = props.getOrElse(s"graft.$k",
       throw new IllegalArgumentException(
         s"$table lacks TBLPROPERTY graft.$k — not a materializeDocIndex artifact"))
-    def drift(k: String): Long = props.getOrElse(s"graft.drift.$k", "0").toLong
     Stamp(prop("threshold").toDouble, prop("maxDocFreq").toInt,
-      prop("shingleK").toInt, prop("numBuckets").toInt, prop("nDocs").toLong,
-      Drift(drift("advances"), drift("flips"), drift("holders"), drift("contrib_nano")))
+      prop("shingleK").toInt, prop("numBuckets").toInt, prop("nDocs").toLong)
   }
 
   /** A long aggregate cell, 0 when null (a sum over no rows). */
@@ -463,7 +412,6 @@ object PairIndex {
     // can never silently run with a different cap/threshold than the
     // index it extends. nDocs (survivor count — a parquet metadata
     // read) feeds the advance's economy guard.
-    // fresh exact scores → zeroed drift accumulators (driftEstimate)
     writeStamp(spark, pairsTable, Stamp(threshold, maxDocFreq, shingleK,
       buckets, spark.table(survivorsTable).count()))
     DocIndex(survivorsTable, pairsTable,
@@ -471,25 +419,13 @@ object PairIndex {
       if (keepPostings) Some(dfTable) else None)
   }
 
-  /** Outcome of one `advanceDocIndex` call. `appended == true` means
-    * all standing tables were extended in place; `false` means
-    * at least the pairs table is a new generation (`idx` names the
-    * live tables — some may be REUSED from the input index, so release
-    * the superseded ones via `dropSuperseded`, not a blind drop of the
-    * old index). */
-  final case class AdvanceResult(idx: DocIndex, appended: Boolean,
-                                 newDocs: Long, evicted: Long,
+  /** Outcome of one `advanceDocIndex` call. `idx` names tables the
+    * call wrote; none of them is a table of the input index, so the
+    * input can be released with `dropDocIndex` once its readers are
+    * done. */
+  final case class AdvanceResult(idx: DocIndex, newDocs: Long, evicted: Long,
                                  affectedOld: Long,
                                  capFlips: Long = 0L, flipHolders: Long = 0L)
-
-  /** Drop the tables of a superseded generation that the advanced
-    * index does NOT reuse (a partial rewrite keeps the old survivors,
-    * postings and df tables live inside `advanced`). Call once the old
-    * generation's readers are done. */
-  def dropSuperseded(spark: SparkSession, old: DocIndex, advanced: DocIndex): Unit = {
-    old.tables.filterNot(advanced.tables.toSet)
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
-  }
 
   /** Advance a standing doc index with a new batch without full
     * rematerialization — what a daily pipeline does between corpus
@@ -534,14 +470,16 @@ object PairIndex {
     *  4. delta rescore (`rescoreDelta`): pairs touching A.
     *  5. write (`writeDelta`), by case:
     *     - no evictions: no existing survivor, posting or df row
-    *       changes, so those three tables are APPENDED in place; the
-    *       pairs table is appended too when no old doc is affected
-    *       (the delta is then exactly the new cross+within pairs),
-    *       else rewritten to a fresh generation (copy-forward of pairs
-    *       not touching A, plus the delta). The cap cascade makes the
-    *       rewrite the normal daily case at scale — any large corpus
-    *       has a band of shingles near the df-cap and any batch flips
-    *       some.
+    *       changes, so those three tables are CLONED (phase
+    *       `clone_index`: a storage-level file copy, metadata-only on
+    *       a snapshotting table format) and the batch rows APPENDED to
+    *       the clones; the pairs table is cloned and appended too when
+    *       no old doc is affected (the delta is then exactly the new
+    *       cross+within pairs), else rewritten to a fresh generation
+    *       (copy-forward of pairs not touching A, plus the delta). The
+    *       cap cascade makes the rewrite the normal daily case at
+    *       scale — any large corpus has a band of shingles near the
+    *       df-cap and any batch flips some.
     *     - evictions: all four tables get a fresh generation with
     *       copy-forward of live rows. Still no pair regeneration.
     *  6. finish: outcome telemetry.
@@ -560,29 +498,24 @@ object PairIndex {
     * 0.27× at sf10): NEW pairs are scored over the current capped
     * universe exactly as above, but existing pairs KEEP their birth
     * scores — no flip rescore, no pairs copy-forward, so a no-eviction
-    * frozen advance is batch-scale compute plus four bucketed appends.
+    * frozen advance is batch-scale compute plus four clone-and-appends.
     * Flip-free, frozen and exact are row-identical; otherwise old-pair
-    * scores drift until a rematerialization absorbs them, and the
-    * advance accumulates the drift estimate (`driftEstimate`) on the
-    * pairs table. `assertNoCapFlips` makes a frozen advance fail with
+    * scores drift until a rematerialization absorbs them (the
+    * `pairindex.advance_cap_flips`/`_flip_holders` telemetry counts
+    * the flips). `assertNoCapFlips` makes a frozen advance fail with
     * an attributable message when the batch flips any cap status — for
     * callers (d32) whose correctness pin assumes it does not.
     *
-    * `preserveInput = true` selects copy-on-write: the tables the
-    * write would append to are first CLONED (`cloneDocIndex`'s
-    * storage-level file copy — ~0.3 s vs ~3.5 s for a four-table
-    * copy-forward at sf0.1, metadata-only on a snapshotting table
-    * format), so the input index is never mutated and several
-    * consumers can advance one standing base. Without it, the append
-    * cases mutate the input's tables: a reader of the old index can
-    * observe appended rows with no corresponding pairs, so release
-    * superseded tables with `dropSuperseded`, never a blind
-    * `dropDocIndex(old)`.
+    * The input index is never written: every case writes its result
+    * to tables the call creates (a clone is ~0.3 s vs ~3.5 s for a
+    * four-table copy-forward at sf0.1), so the result shares no table
+    * with the input and several consumers can advance one standing
+    * base (the registered d31/d32/d39 do). Release the input with
+    * `dropDocIndex` once its readers are done.
     *
-    * Failure: the caches are released on every exit, and a throw drops
-    * every table this call created (clones and fresh generations) —
-    * never a table of the input index. Appends already made to the
-    * input's own tables (default mode) are not rolled back.
+    * Failure: the caches are released on every exit, and a throw in any
+    * phase drops every table this call created (clones and fresh
+    * generations). The input index is left as it was.
     *
     * Preconditions: the index was materialized with `keepPostings =
     * true` (postings and df artifacts; a missing one is an
@@ -595,8 +528,7 @@ object PairIndex {
                       idCol: String, textCol: String,
                       frozenCaps: Boolean = false,
                       economyGuard: Double = 0.3,
-                      assertNoCapFlips: Boolean = false,
-                      preserveInput: Boolean = false): AdvanceResult = {
+                      assertNoCapFlips: Boolean = false): AdvanceResult = {
     val in = new AdvanceInput(spark, idx, idCol, textCol)
     val run = new AdvanceRun(spark)
     val (result, fallback) = run.guarded {
@@ -605,7 +537,7 @@ object PairIndex {
       if (!frozenCaps &&
           (d.nNew + d.nEvicted + cs.nAffected).toDouble > economyGuard * in.stamp.nDocs)
         (rematerialize(in, run, d, cs), true)
-      else (writeDelta(in, run, d, cs, rescoreDelta(in, run, d, cs), preserveInput), false)
+      else (writeDelta(in, run, d, cs, rescoreDelta(in, run, d, cs)), false)
     }
     finish(result, fallback, frozenCaps)
   }
@@ -641,9 +573,7 @@ object PairIndex {
       * thousands of nodes per action measured ~half the advance wall at
       * sf0.1 (and an explain-string heap blowout in long sessions). A
       * checkpoint is one small eager job whose output the rest of the
-      * advance reads as a flat block scan; its plan references no
-      * catalog table, so in-place appends cannot trigger a
-      * CacheManager refresh through it. Blocks are released by
+      * advance reads as a flat block scan. Blocks are released by
       * ContextCleaner (set spark.cleaner.periodicGC.interval low on
       * long-lived sessions); advance-internal state is not recoverable
       * on executor loss — rerun the advance. */
@@ -655,9 +585,8 @@ object PairIndex {
       df.persist(level)
     }
 
-    /** Release before mutating any table a cache reads: an insert
-      * re-executes every cache entry whose plan contains the table
-      * (CacheManager refresh) — a measured 10× CPU storm at sf0.01. */
+    /** Release once the frames the writes read are checkpointed, so the
+      * write phases do not share executor memory with the caches. */
     def releaseCaches(): Unit = {
       caches.foreach(_.unpersist())
       caches.clear()
@@ -727,7 +656,7 @@ object PairIndex {
     // Corpus survivors are unique per canonical hash, so the left join
     // fans out at most 1:1; the decision relation is batch-scale and is
     // persisted so every downstream plan reads the decided state instead
-    // of replaying the join against a table that later appends mutate.
+    // of replaying the join.
     val batchD = run.cache(Dedup.dropExactDuplicates(batch, idCol, textCol)
       .withColumn("__h", TextAnalysis.textHash(col(textCol))),
       StorageLevel.MEMORY_AND_DISK)
@@ -768,11 +697,11 @@ object PairIndex {
 
   /** Step 2 output. `dfB` is the batch's per-shingle df; `dfCombFull`
     * the combined cap-status relation (s, __dfo0 = df before, __dfc =
-    * df after); `drift` the stamp's accumulators after this advance. */
+    * df after). */
   private final case class CapStatus(shB: DataFrame, dfB: DataFrame,
                                      dfCombFull: DataFrame,
                                      affectedOld: DataFrame, nAffected: Long,
-                                     nFlips: Long, flipHolders: Long, drift: Drift)
+                                     nFlips: Long, flipHolders: Long)
 
   private def capStatus(in: AdvanceInput, run: AdvanceRun, d: Decision,
                         frozenCaps: Boolean, assertNoCapFlips: Boolean): CapStatus = {
@@ -812,21 +741,18 @@ object PairIndex {
       ((col("__dfo0") <= cap) =!= (col("__dfc") <= cap))
     val changedKeys = dfCombFull.filter(flipCond).select(col("s"))
     // Frozen mode skips the rescore by definition, but ONE fused pass
-    // over the persisted relation yields the flip count, the flip
-    // HOLDER mass (Σ per flipped shingle of its smaller-side df) and the
-    // current capped posting mass — the scalars the drift estimate
-    // accumulates.
-    val (nFlips, flipHolders, cappedPostCur) =
+    // over the persisted relation yields the flip count and the flip
+    // HOLDER mass (Σ per flipped shingle of its smaller-side df): how
+    // far the frozen scores drift, exported as telemetry.
+    val (nFlips, flipHolders) =
       if (!frozenCaps)
-        (run.phase("count_changed")(changedKeys.count()), 0L, 0L)
+        (run.phase("count_changed")(changedKeys.count()), 0L)
       else {
         val r = run.phase("count_changed")(dfCombFull.agg(
           sum(when(flipCond, 1L).otherwise(0L)).as("f"),
           sum(when(flipCond, least(col("__dfo0"), col("__dfc")))
-            .otherwise(0L)).as("h"),
-          sum(when(col("__dfc") >= 1 && col("__dfc") <= cap, col("__dfc"))
-            .otherwise(0L)).as("p")).head())
-        (longOr0(r, 0), longOr0(r, 1), longOr0(r, 2))
+            .otherwise(0L)).as("h")).head())
+        (longOr0(r, 0), longOr0(r, 1))
       }
     if (frozenCaps && assertNoCapFlips && nFlips > 0)
       throw new IllegalStateException(
@@ -843,8 +769,7 @@ object PairIndex {
           .select(col("doc_id").as(idCol)).distinct())
     val nAffected = run.phase("count_affected")(
       if (nChanged == 0) 0L else affectedOld.count())
-    CapStatus(shB, dfB, dfCombFull, affectedOld, nAffected, nFlips, flipHolders,
-      stamp.drift.after(frozenCaps, nFlips, flipHolders, cappedPostCur, stamp.threshold))
+    CapStatus(shB, dfB, dfCombFull, affectedOld, nAffected, nFlips, flipHolders)
   }
 
   /** Step 3, the economy-guard fallback: the delta path's cost scales
@@ -878,12 +803,11 @@ object PairIndex {
       Layout.writeBucketed(
         Dedup.jaccardPairsHashed(spark.table(postTab), stamp.threshold, stamp.maxDocFreq),
         pTab, "doc_id2", fbBuckets)
-      // every pair rescored exactly: accumulated frozen drift resets
       writeStamp(spark, pTab, stamp.copy(numBuckets = fbBuckets,
-        nDocs = stamp.nDocs + d.nNew - d.nEvicted, drift = Drift()))
+        nDocs = stamp.nDocs + d.nNew - d.nEvicted))
     }
     AdvanceResult(DocIndex(sTab, pTab, Some(postTab), Some(dTab)),
-      appended = false, d.nNew, d.nEvicted, cs.nAffected, cs.nFlips, 0L)
+      d.nNew, d.nEvicted, cs.nAffected, cs.nFlips, 0L)
   }
 
   private def liveSurvivors(in: AdvanceInput, d: Decision): DataFrame =
@@ -998,22 +922,19 @@ object PairIndex {
     * is a checkpoint (or a scan of the old pairs table), so the writes
     * never replay the candidate pipeline. */
   private def writeDelta(in: AdvanceInput, run: AdvanceRun, d: Decision,
-                         cs: CapStatus, delta: Delta,
-                         preserveInput: Boolean): AdvanceResult = {
+                         cs: CapStatus, delta: Delta): AdvanceResult = {
     import in._
     val nb = stamp.numBuckets
     val dfRows = cs.dfB.select(col("s"), col("__dfb").as("cnt"))
     if (d.nEvicted == 0) {
       val appendPairs = cs.nAffected == 0
-      // preserveInput clones exactly the tables about to be appended; a
-      // rewritten pairs table — the largest artifact — is never cloned
-      val target =
-        if (!preserveInput) idx
-        else run.phase("clone_index")(DocIndex(
-          run.cloneTable(idx.survivorsTable, SurvivorsBase),
-          if (appendPairs) run.cloneTable(idx.pairsTable, PairsBase) else idx.pairsTable,
-          Some(run.cloneTable(postingsTable, PostingsBase)),
-          Some(run.cloneTable(dfTable, DfBase))))
+      // clone exactly the tables about to be appended; a rewritten
+      // pairs table — the largest artifact — is never cloned
+      val target = run.phase("clone_index")(DocIndex(
+        run.cloneTable(idx.survivorsTable, SurvivorsBase),
+        if (appendPairs) run.cloneTable(idx.pairsTable, PairsBase) else idx.pairsTable,
+        Some(run.cloneTable(postingsTable, PostingsBase)),
+        Some(run.cloneTable(dfTable, DfBase))))
       run.releaseCaches()
       val pairsTable =
         if (appendPairs) {
@@ -1035,10 +956,8 @@ object PairIndex {
         Layout.appendBucketed(delta.newSurv, target.survivorsTable, idCol, nb))
       run.phase("append_df")(
         Layout.appendBucketed(dfRows, target.dfTable.get, "s", nb))
-      writeStamp(spark, pairsTable,
-        stamp.copy(nDocs = stamp.nDocs + d.nNew, drift = cs.drift))
+      writeStamp(spark, pairsTable, stamp.copy(nDocs = stamp.nDocs + d.nNew))
       AdvanceResult(target.copy(pairsTable = pairsTable),
-        appended = appendPairs && !preserveInput,
         d.nNew, 0L, cs.nAffected, cs.nFlips, cs.flipHolders)
     } else {
       val sTab = run.fresh(SurvivorsBase)
@@ -1058,8 +977,7 @@ object PairIndex {
         .join(removal, col("doc_id2") === col("__aid"), "left_anti")
       run.phase("rewrite_pairs")(Layout.writeBucketed(
         keptPairs.unionByName(delta.pairs), pTab, "doc_id2", nb))
-      writeStamp(spark, pTab,
-        stamp.copy(nDocs = stamp.nDocs + d.nNew - d.nEvicted, drift = cs.drift))
+      writeStamp(spark, pTab, stamp.copy(nDocs = stamp.nDocs + d.nNew - d.nEvicted))
       // a fresh COMPACTED df generation straight off the cached
       // cap-status relation; net-zero shingles (all holders evicted)
       // drop out
@@ -1067,7 +985,7 @@ object PairIndex {
         cs.dfCombFull.filter(col("__dfc") > 0).select(col("s"), col("__dfc").as("cnt")),
         dTab, "s", nb))
       AdvanceResult(DocIndex(sTab, pTab, Some(postTab), Some(dTab)),
-        appended = false, d.nNew, d.nEvicted, cs.nAffected, cs.nFlips, cs.flipHolders)
+        d.nNew, d.nEvicted, cs.nAffected, cs.nFlips, cs.flipHolders)
     }
   }
 
@@ -1075,225 +993,12 @@ object PairIndex {
   private def finish(r: AdvanceResult, fallback: Boolean,
                      frozenCaps: Boolean): AdvanceResult = {
     def flag(b: Boolean) = if (b) 1L else 0L
-    Seq("appended" -> flag(r.appended), "fallback" -> flag(fallback),
+    Seq("fallback" -> flag(fallback),
       "frozen" -> flag(frozenCaps), "new_docs" -> r.newDocs,
       "evicted" -> r.evicted, "affected_old" -> r.affectedOld,
       "cap_flips" -> r.capFlips, "flip_holders" -> r.flipHolders)
       .foreach { case (k, v) => Telemetry.record(s"pairindex.advance_$k", v) }
     r
-  }
-
-  /** Files-per-bucket hygiene check for a standing index: true when
-    * any artifact's per-bucket data-file count exceeds
-    * `maxFilesPerBucket`. Callers that keep a long advance chain poll
-    * it between advances and compose it with `compactDocIndex` (then
-    * `dropSuperseded`). Pure filesystem listings, no Spark job. */
-  def compactDue(spark: SparkSession, idx: DocIndex,
-                 maxFilesPerBucket: Double): Boolean =
-    idx.tables.exists(t => filesPerBucket(spark, t) > maxFilesPerBucket)
-
-  // ---- online drift estimator (round-15, VERDICT item 1) ----
-  // Calibration constants for the closed-form drift model documented at
-  // the accumulators (`Drift`): the model is dimensionally
-  // right (drift ∝ flip-holder mass / capped posting mass) but carries
-  // an O(1) constant absorbing holder overlap, the |ΔJ|-per-perturbed-
-  // pair distribution (most perturbed pairs move far less than the 1/ū
-  // upper bound — the flipped shingle is often outside the pair's
-  // intersection, and cardinality shifts partially cancel in J) and
-  // the near-threshold score density. Fitted ONCE against the sf1
-  // mod-64 daily DriftLadder (raw-model-vs-measured ×15.5 for the
-  // mean, stable to ±2% across all 7 chained batches — the shape is
-  // right, only the constant was off; spurious geomean ×59.5 over the
-  // raw model) and then VALIDATED — not refitted — at every k of both
-  // ladder shapes and at sf10 (benchlogs_r15/drift_ladder_*.json emit
-  // est_vs_measured_* per step; the contract is est within ~2× of
-  // measured everywhere).
-  val DriftKappaMean = 1.0 / 15.5
-  val DriftKappaSpurious = 0.4 / 23.8
-
-  /** The cheap online drift estimate of a standing index: a pure
-    * TBLPROPERTIES read (no job) of the counters every frozen advance
-    * accumulates, turned into the two numbers the rebuild decision
-    * needs. This is what replaces the fixture-derived fixed cadence
-    * ("rebuild every ~ε/0.004 batches") with an adaptive trigger:
-    * `rebuildDue(ε)` per advance, where ε is the consumer's mean score
-    * tolerance (presence-grade consumers instead budget on
-    * `estSpuriousFrac` — `pairs_missing` is structurally 0 in frozen
-    * mode, the ladder-proved superset property). The estimator is
-    * VALIDATED against measured drift by `tools.DriftLadder`, which
-    * builds the exact reference this estimator exists to avoid. */
-  final case class DriftEstimate(
-      frozenAdvances: Long, capFlips: Long, flipHolders: Long,
-      estMeanScoreDrift: Double, estSpuriousFrac: Double) {
-    def rebuildDue(meanScoreTolerance: Double): Boolean =
-      estMeanScoreDrift >= meanScoreTolerance
-  }
-
-  def driftEstimate(spark: SparkSession, idx: DocIndex): DriftEstimate = {
-    val stamp = readStamp(spark, idx.pairsTable)
-    val contrib = stamp.drift.contribNano / 1e9
-    DriftEstimate(stamp.drift.advances, stamp.drift.flips, stamp.drift.holders,
-      estMeanScoreDrift = DriftKappaMean * contrib,
-      estSpuriousFrac = DriftKappaSpurious * contrib / (1.0 - stamp.threshold))
-  }
-
-  // ---- artifact compaction (round-15, VERDICT item 2) ----
-
-  /** Per-bucket data-file count of a catalog table — the read
-    * amplification every bucketed-scan consumer pays (each bucket's
-    * files are unioned and re-sorted locally). 1.0 after a fresh
-    * `writeBucketed`; +1 per `appendBucketed`. */
-  def filesPerBucket(spark: SparkSession, table: String): Double = {
-    val cat = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val loc = new org.apache.hadoop.fs.Path(cat.location)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = fs.listStatus(loc).count { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
-    val buckets = cat.bucketSpec.map(_.numBuckets)
-      .getOrElse(throw new IllegalArgumentException(s"$table is not bucketed"))
-    files.toDouble / buckets
-  }
-
-  /** Rewrite every artifact of a standing index in place — same rows,
-    * same bucketing, fresh generation names — restoring one file per
-    * bucket. Decouples FILE HYGIENE from the exactness audit: before
-    * this, only the (expensive) exact rebuild compacted the append-
-    * accumulated file sets, so a ~30-frozen-advance audit cadence meant
-    * every consumer paid up to ~30 files/bucket of read amplification
-    * between audits. Compaction is pure I/O + one batch-scale-free
-    * shuffle per table (the writeBucketed pre-repartition) — no
-    * shingling, no pair scoring, no score changes: TBLPROPERTIES
-    * (semantics AND accumulated drift counters) carry over verbatim,
-    * so `driftEstimate` is unaffected. Generation semantics match
-    * `advanceDocIndex`'s rewrite paths: the old generation stays live
-    * for concurrent readers; release it with `dropSuperseded` once its
-    * readers are done. */
-  def compactDocIndex(spark: SparkSession, idx: DocIndex,
-                      idCol: String): DocIndex = {
-    val stamp = readStamp(spark, idx.pairsTable)
-    // FORCE the bucketed scan for the duration of the rewrites: without
-    // it the planner reads a write-only query one-task-per-FILE
-    // ("Bucketed: false (disabled by query planner)"), elides the
-    // writeBucketed repartition as redundant against the matching
-    // bucket spec, and each input file re-emerges as one output file —
-    // a compaction that compacts nothing (measured: N file sets in, N
-    // out). With the bucketed scan each task IS one bucket (all its
-    // file sets together), so the rewrite is a zero-shuffle per-bucket
-    // read→sort→write — the cheapest possible compaction plan.
-    val scanConf = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prevScan = spark.conf.getOption(scanConf)
-    spark.conf.set(scanConf, "false")
-    try compactRewrites(spark, idx, idCol, stamp)
-    finally prevScan match {
-      case Some(v) => spark.conf.set(scanConf, v)
-      case None => spark.conf.unset(scanConf)
-    }
-  }
-
-  private def compactRewrites(spark: SparkSession, idx: DocIndex,
-                              idCol: String, stamp: Stamp): DocIndex = {
-    def rewrite(label: String, df: DataFrame, prefix: String,
-                bucketCol: String): String = {
-      val fresh = freshName(prefix)
-      val t0 = System.nanoTime()
-      Layout.writeBucketed(df, fresh, bucketCol, stamp.numBuckets)
-      Telemetry.record(s"pairindex.compact_ms_$label",
-        (System.nanoTime() - t0) / 1000000L)
-      fresh
-    }
-    val sTab = rewrite("survivors", spark.table(idx.survivorsTable), SurvivorsBase, idCol)
-    val pTab = rewrite("pairs", spark.table(idx.pairsTable), PairsBase, "doc_id2")
-    val postTab = idx.postingsTable.map(t =>
-      rewrite("postings", spark.table(t), PostingsBase, "s"))
-    // the df artifact is append-only ±delta rows by design — compaction
-    // additionally COLLAPSES each shingle's delta rows to its net df
-    // (net-zero shingles drop out), which is row-count hygiene the
-    // plain rewrite wouldn't buy
-    val dTab = idx.dfTable.map(t => rewrite("df",
-      spark.table(t).groupBy(col("s")).agg(sum(col("cnt")).as("cnt"))
-        .filter(col("cnt") > 0),
-      DfBase, "s"))
-    writeStamp(spark, pTab, stamp)
-    DocIndex(sTab, pTab, postTab, dTab)
-  }
-
-  /** Drift of one index relative to an exact reference — the
-    * measurement contract behind the frozen-cap (d32) daily mode
-    * (round-14, VERDICT item 1). A frozen advance keeps existing pairs'
-    * birth scores, so after cap flips its pairs table DRIFTS from what
-    * an exact rebuild of the same corpus produces, in three ways a
-    * 100 TB operator needs numbers for before committing to a rebuild
-    * cadence:
-    *  - score drift: pairs present in both whose jaccard differs
-    *    (`nScoreDrifted`, `maxAbsJaccardDelta`) — affects any consumer
-    *    that reads scores;
-    *  - missing pairs: in the exact universe but not the frozen index
-    *    (`nPairsMissing`) — near-dups the frozen index under-reports;
-    *  - spurious pairs: in the frozen index but no longer qualifying
-    *    exactly (`nPairsSpurious`) — over-aggressive drops.
-    * Presence drift (missing/spurious) is what moves END answers: the
-    * curation consumers use pair PRESENCE only (droplist = distinct
-    * doc_id2), so `droplistDrift`/the d12-tail diff below quantify the
-    * survivor-set delta directly. All counts come from ONE full-outer
-    * merge of the two bucketed pairs tables (same-key bucketing → no
-    * exchange) and one aggregation. */
-  final case class DriftReport(
-      nPairsExact: Long, nPairsFrozen: Long, nPairsCommon: Long,
-      nScoreDrifted: Long, maxAbsJaccardDelta: Double,
-      meanAbsJaccardDelta: Double, p99AbsJaccardDelta: Double,
-      nPairsMissing: Long, nPairsSpurious: Long) {
-    def fracPairsDrifted: Double =
-      (nScoreDrifted + nPairsMissing + nPairsSpurious).toDouble /
-        math.max(nPairsExact, 1L)
-  }
-
-  def pairDrift(spark: SparkSession, frozen: DocIndex, exact: DocIndex): DriftReport = {
-    val f = spark.table(frozen.pairsTable)
-      .select(col("doc_id1"), col("doc_id2"), col("jaccard_r4").as("__jf"))
-    val e = spark.table(exact.pairsTable)
-      .select(col("doc_id1"), col("doc_id2"), col("jaccard_r4").as("__je"))
-    val both = col("__je").isNotNull && col("__jf").isNotNull
-    // mean/p99 are over ALL common pairs (drifted or not), so they
-    // answer the score consumer's real question — "how wrong is a
-    // score I read, typically / in the tail" — rather than "how wrong
-    // are the wrong ones". p99 uses percentile_approx (the metric is
-    // a contract threshold, not an oracle-pinned result; the default
-    // accuracy's error bound is far below the 1e-4 score grid).
-    val dAbs = when(both, abs(col("__jf") - col("__je"))).otherwise(lit(null))
-    val r = f.join(e, Seq("doc_id1", "doc_id2"), "full_outer").agg(
-      sum(when(col("__je").isNotNull, 1L).otherwise(0L)).as("ne"),
-      sum(when(col("__jf").isNotNull, 1L).otherwise(0L)).as("nf"),
-      sum(when(both, 1L).otherwise(0L)).as("nc"),
-      sum(when(both && col("__je") =!= col("__jf"), 1L).otherwise(0L)).as("nd"),
-      max(coalesce(dAbs, lit(0.0))).as("mx"),
-      avg(dAbs).as("mean"),
-      percentile_approx(dAbs, lit(0.99), lit(10000)).as("p99"),
-      sum(when(col("__jf").isNull, 1L).otherwise(0L)).as("nm"),
-      sum(when(col("__je").isNull, 1L).otherwise(0L)).as("ns")).head()
-    def d(i: Int) = if (r.isNullAt(i)) 0.0 else r.getDouble(i)
-    DriftReport(longOr0(r, 0), longOr0(r, 1), longOr0(r, 2), longOr0(r, 3),
-      d(4), d(5), d(6), longOr0(r, 7), longOr0(r, 8))
-  }
-
-  /** End-answer drift of the curation consumer: full-outer merge of
-    * `curateFromIndex` over the two indexes on the id — (nExact,
-    * nFrozen, nSymmetricDiff). The symmetric difference IS the
-    * survivor-set delta a frozen cadence trades for its speed. */
-  def curationDrift(spark: SparkSession, frozen: DocIndex, exact: DocIndex,
-                    idCol: String, textCol: String,
-                    lang: String = "en", minQuality: Double = 0.3): (Long, Long, Long) = {
-    val f = curateFromIndex(spark, frozen, idCol, textCol, lang, minQuality)
-      .select(col(idCol), lit(1L).as("__f"))
-    val e = curateFromIndex(spark, exact, idCol, textCol, lang, minQuality)
-      .select(col(idCol), lit(1L).as("__e"))
-    val r = f.join(e, Seq(idCol), "full_outer").agg(
-      sum(when(col("__e").isNotNull, 1L).otherwise(0L)),
-      sum(when(col("__f").isNotNull, 1L).otherwise(0L)),
-      sum(when(col("__e").isNull || col("__f").isNull, 1L).otherwise(0L))).head()
-    (longOr0(r, 0), longOr0(r, 1), longOr0(r, 2))
   }
 
   /** Near-dup drop list from the index: distinct doc_id2. Rides the
@@ -1410,35 +1115,5 @@ object PairIndex {
       .select(col("inc_id").as(idCol))
       .distinct()
     fresh.join(nearIds.hint("merge"), Seq(idCol), "left_anti")
-  }
-
-  /** d21's keep-best-per-cluster reading the index: components over the
-    * materialized pairs, LM-quality best pick (lowest mean neg-log-prob,
-    * id tie-break), singletons unioned back — all over the survivor
-    * universe the index governs. */
-  def clusterCurationFromIndex(spark: SparkSession, idx: DocIndex,
-                               idCol: String, textCol: String,
-                               checkpointDir: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val survivors = spark.table(idx.survivorsTable)
-    val cc = Components.connectedComponents(
-      spark.table(idx.pairsTable), "doc_id1", "doc_id2",
-      checkpointDir = checkpointDir)
-    val scores = LmScore.score(survivors, idCol, textCol)
-      .select(col(idCol), (col("sum_nlp_micro").cast("double")
-        / col("n_tokens").cast("double")).as("__score"))
-    val sized = cc.hint("merge")
-      .join(cc.groupBy(col("lbl")).agg(count(lit(1)).as("cluster_size")), "lbl")
-    val best = sized.join(scores, sized("v") === scores(idCol))
-      .withColumn("__rk", row_number().over(
-        Window.partitionBy(col("lbl")).orderBy(col("__score"), col("v"))))
-      .filter(col("__rk") === 1)
-      .select(col("v").as(idCol), col("lbl").as("cluster_rep"),
-        col("cluster_size"), lit("best_in_cluster").as("kept_reason"))
-    val singletons = survivors.select(col(idCol))
-      .join(cc, survivors(idCol) === cc("v"), "left_anti")
-      .select(col(idCol), col(idCol).as("cluster_rep"),
-        lit(1L).as("cluster_size"), lit("singleton").as("kept_reason"))
-    best.unionByName(singletons)
   }
 }

@@ -687,8 +687,8 @@ object Similarity {
     *     cluster, id tie-break — a per-CLUSTER window, never global;
     *  4. singletons (no semantic near-dup) pass through labeled.
     *
-    * Same output contract as the lexical twin
-    * `PairIndex.clusterCurationFromIndex` (d21), so downstream
+    * Same output contract as the lexical cluster curation (the
+    * registered d21), so downstream
     * curation consumers can switch between lexical and semantic
     * dedup without plan changes.
     *

@@ -73,8 +73,7 @@ object TextAnalysis {
     stopwordCount(text, stops).cast("double") / tokenCount(text).cast("double")
 
   /** Whitespace collapse + trim + lowercase: the canonical form for
-    * exact deduplication. Collapse BEFORE trim (not
-    * TextFunctions.collapseWhitespace, which trims first): Spark trim
+    * exact deduplication. Collapse BEFORE trim: Spark trim
     * strips only 0x20 spaces, so collapsing first guarantees edge
     * tabs/newlines become plain spaces that trim removes — keeps the
     * form idempotent and byte-identical to the DuckDB oracle mirrors. */

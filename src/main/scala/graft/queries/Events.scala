@@ -136,11 +136,12 @@ object Events {
     * recomputes every window per micro-batch, so the bounded-source run
     * converges to the batch answer regardless of how the source splits
     * into micro-batches. */
-  private def q29(s: SparkSession, dir: String): DataFrame =
-    Replay.runBounded(s, "q29") { sink =>
-      Replay.parquetSink(EventsStreaming.hourlyAgg(
-        EventsStreaming.readEventsStream(s, dir)), sink, "complete", "overwrite")
+  private def q29(s: SparkSession, dir: String): DataFrame = {
+    val hourly = EventsStreaming.hourlyAgg(EventsStreaming.readEventsStream(s, dir))
+    Replay.runBounded(s, "q29", hourly.schema) { sink =>
+      Replay.parquetSink(hourly, sink, "complete", "overwrite")
     }.orderBy(col("hour"), col("event_type"))
+  }
 
   /** Batch sessionization (q30): gap-based sessions per user — a new
     * session starts when >30 min separates consecutive events. The
@@ -198,16 +199,18 @@ object Events {
     * (not the last event itself). All comparisons run on integer
     * micros, so the nanos→micros read truncation can't flip a
     * boundary. */
-  private def q31(s: SparkSession, dir: String): DataFrame =
-    Replay.runBounded(s, "q31") { sink =>
-      Replay.parquetSink(EventsStreaming.userSessions(
-          EventsStreaming.readEventsStream(s, dir), gap = "30 minutes"),
-        sink, "complete", "overwrite", confs = EventsStreaming.mergeSessionsLocally)
+  private def q31(s: SparkSession, dir: String): DataFrame = {
+    val sessions = EventsStreaming.userSessions(
+      EventsStreaming.readEventsStream(s, dir), gap = "30 minutes")
+    Replay.runBounded(s, "q31", sessions.schema) { sink =>
+      Replay.parquetSink(sessions, sink, "complete", "overwrite",
+        confs = EventsStreaming.mergeSessionsLocally)
     }.select(col("user_id"),
         unix_micros(col("session_start")).as("start_us"),
         unix_micros(col("session_end")).as("end_us"),
         col("n_events"), col("value_cents"))
       .orderBy(col("user_id"), col("start_us"))
+  }
 
   private val q31Sql =
     """WITH ev AS (
@@ -260,11 +263,12 @@ object Events {
         .select((col("doc_id") + 20000000L).as("doc_id"), col("text")))
     // q33.state_rows should equal the distinct canonical forms seen —
     // the measured state ∝ distinct-forms curve
-    Replay.runBounded(s, "q33") { sink =>
-      val chunks = Replay.scratchDir("graft_doc_chunks")
-      Replay.stageChunks(docs, "doc_id", 4, chunks)
-      Replay.parquetSink(DocsStreaming.dedupDocsStream(s,
-        Replay.readChunks(s, DocsStreaming.docSchema, chunks)), sink, "append", "append")
+    val chunks = Replay.scratchDir("graft_doc_chunks")
+    Replay.stageChunks(docs, "doc_id", 4, chunks)
+    val deduped = DocsStreaming.dedupDocsStream(s,
+      Replay.readChunks(s, DocsStreaming.docSchema, chunks))
+    Replay.runBounded(s, "q33", deduped.schema) { sink =>
+      Replay.parquetSink(deduped, sink, "append", "append")
     }.select(col("doc_id"), md5(col("text")).as("text_md5"),
         graft.operators.TextAnalysis.tokenCount(col("text")).as("n_tokens"))
       .orderBy(col("doc_id"))

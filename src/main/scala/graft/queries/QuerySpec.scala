@@ -30,4 +30,16 @@ object Registry {
     specs.map(q => q.name -> q.run).toMap
   def oracleSql: Map[String, String] =
     specs.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** The query names of a comma-separated subset list (the mains'
+    * `SPARK_GRAFT_*_ONLY` values): trimmed, empties dropped. An unknown
+    * name fails, naming `source` — a typo must not silently shrink a
+    * run whose result still looks complete. */
+  def subset(list: String, source: String): Set[String] = {
+    val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = names -- queries.keySet
+    require(unknown.isEmpty,
+      s"$source names unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    names
+  }
 }

@@ -23,20 +23,16 @@ import org.apache.spark.sql.functions._
   * surfaced loudly via `Telemetry` (`fixture.*_build_ms`) so the bench
   * attributes it instead of burying it in whichever query ran first.
   *
-  * SHARING CONTRACT for the advanced base (d31/d32/d39): an advance
-  * leaves its input index INTACT only when it writes fresh
-  * generations (the preserveInput copy-on-write mode d31/d39 use);
-  * the append/partial-rewrite paths extend the base tables in place.
-  * The in-place consumer (d32) therefore advances a storage-level
-  * CLONE (`consumableBaseDocIndex` — file-copy snapshot, round-19)
-  * so the shared base stays pristine and is built exactly once per
-  * run; `advanceConsumed` remains the safety net for the preserved
-  * consumers — it inspects every advance outcome and INVALIDATES the
-  * shared base the moment an advance appended to it or the advanced
-  * generation still references a base table, so the next consumer
-  * rebuilds rather than advancing an already-advanced base.
+  * SHARING CONTRACT for the advanced base (d31/d32/d39): each consumer
+  * advances the shared base directly. `advanceDocIndex` never writes
+  * its input — every write case lands in tables the call creates — so
+  * the base is built once per run and every consumer advances the same
+  * rows. A consumer registers its advanced generation under its OWN
+  * `keepLatest` ring; the base stays owned by the fixture ring. If a
+  * base table is dropped anyway (a warehouse reset, a session change),
+  * the memo's table-existence check rebuilds it.
   * Correctness never depends on the memo: each consumer's result is
-  * pinned by its own oracle whichever path the fixture takes.
+  * pinned by its own oracle.
   */
 object StandingFixtures {
 
@@ -77,8 +73,8 @@ object StandingFixtures {
 
   /** 63/64-corpus base index with postings + df (the advance family's
     * standing input) — shared by d31/d32/d39, each of which advances
-    * it with the mod-64 batch. Consumers MUST report their advance
-    * outcome through `advanceConsumed`. */
+    * it with the mod-64 batch and registers the result under its own
+    * `keepLatest` ring. */
   def baseDocIndex(s: SparkSession, dir: String): PairIndex.DocIndex =
     cachedDocIndex(s, s"base63_doc_index:$dir") {
       PairIndex.sweepStale(s, PairIndex.SurvivorsBase)
@@ -92,48 +88,6 @@ object StandingFixtures {
       PairIndex.keepLatest(s, "fx_base63_doc_index", idx)
       idx
     }
-
-  /** Storage-level CLONE of the shared 63/64 base for a consumer that
-    * advances IN PLACE (d32's append path) — round-19 optimization.
-    * Before this, d32's append consumed the shared base every run and
-    * the next consumer (d39, alphabetically) paid a full ~4.7 s
-    * rebuild in EVERY bench window; a file-copy snapshot of the
-    * bucketed index costs ~0.3 s, preserves bucket layout and
-    * TBLPROPERTIES (`PairIndex.cloneDocIndex`), and leaves the shared
-    * base pristine, so it is built exactly once per JVM run. The clone
-    * is the caller's to register under ITS keepLatest ring (the
-    * advance mutates it in place, so the advanced index IS the clone).
-    * This mirrors production: the append path is exercised against a
-    * storage snapshot, not against the live shared artifact. */
-  def consumableBaseDocIndex(s: SparkSession, dir: String): PairIndex.DocIndex = {
-    val base = baseDocIndex(s, dir)
-    timed("base63_clone")(PairIndex.cloneDocIndex(s, base))
-  }
-
-  /** Post-advance bookkeeping for a shared-base consumer: registers
-    * the advanced generation under the CONSUMER's keepLatest ring and
-    * invalidates the shared base if the advance mutated or still
-    * references it (see the sharing contract above). Never calls
-    * `dropSuperseded` — the base generation stays live for the next
-    * consumer and is bounded by its own fixture ring. */
-  def advanceConsumed(s: SparkSession, dir: String, consumerKey: String,
-                      base: PairIndex.DocIndex,
-                      adv: PairIndex.AdvanceResult): Unit = {
-    val baseTabs = base.tables.toSet
-    val entangled = adv.appended || adv.idx.tables.exists(baseTabs)
-    if (entangled) synchronized {
-      memo.remove(s"base63_doc_index:$dir"); ()
-    }
-    // an entangled advanced generation shares tables with the base —
-    // registering it under the consumer ring would eventually DROP
-    // base tables out from under the fixture ring, so only the
-    // disjoint (full-rewrite) generations enter the consumer ring;
-    // entangled ones stay owned by the fixture ring until its next
-    // rebuild supersedes them
-    if (!entangled) PairIndex.keepLatest(s, consumerKey, adv.idx)
-    graft.Telemetry.record("fixture.base63_invalidated",
-      if (entangled) 1L else 0L)
-  }
 
   /** 4/5-corpus hash + shingle index — d30's standing corpus side. */
   def corpusIndex(s: SparkSession, dir: String): PairIndex.CorpusIndex =

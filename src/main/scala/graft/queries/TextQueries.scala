@@ -1152,14 +1152,8 @@ object TextQueries {
     import graft.operators.PairIndex
     // the 63/64 base index is the shared standing fixture (round-19,
     // VERDICT item 4): built once per run, advanced by d31/d32/d39
-    // alike. preserveInput (copy-on-write) makes THIS consumer's
-    // advance leave the base intact whichever write path the data
-    // selects — the driver corpora carry zero exact dups, so the
-    // default mode would append in place and consume the shared base;
-    // advanceConsumed double-checks the outcome and invalidates the
-    // fixture if an advance ever entangles with it (see
-    // StandingFixtures' sharing contract), which also replaces the
-    // old dropSuperseded call (the base must outlive this consumer).
+    // alike; the advance never writes its input (see StandingFixtures'
+    // sharing contract)
     val base = StandingFixtures.baseDocIndex(s, dir)
     val docs = Tables.documents(s, dir)
     // guard disabled: this query exists to oracle-pin the EXACT delta
@@ -1168,8 +1162,8 @@ object TextQueries {
     // 20% batch made one registered query a third of the whole suite
     val adv = PairIndex.advanceDocIndex(
       s, base, docs.filter(pmod(col("doc_id"), lit(64)) === 0), "doc_id", "text",
-      economyGuard = Double.PositiveInfinity, preserveInput = true)
-    StandingFixtures.advanceConsumed(s, dir, "d31", base, adv)
+      economyGuard = Double.PositiveInfinity)
+    PairIndex.keepLatest(s, "d31", adv.idx)
     PairIndex.curateFromIndex(s, adv.idx, "doc_id", "text")
       .groupBy(col("split"))
       .agg(count(lit(1)).as("n_docs"),
@@ -1193,16 +1187,13 @@ object TextQueries {
     * two registrations cover both sides of the economy decision. */
   private def d39(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.PairIndex
-    // shared base fixture — see d31 for the sharing contract; the
-    // guard-ON fallback rematerializes FRESH generations internally,
-    // and preserveInput keeps the guard-off outcome from consuming
-    // the base, so it survives this consumer on BOTH decision paths
+    // shared base fixture — see d31; the base survives this consumer
+    // on both sides of the guard decision
     val base = StandingFixtures.baseDocIndex(s, dir)
     val docs = Tables.documents(s, dir)
     val adv = PairIndex.advanceDocIndex(
-      s, base, docs.filter(pmod(col("doc_id"), lit(64)) === 0), "doc_id", "text",
-      preserveInput = true)
-    StandingFixtures.advanceConsumed(s, dir, "d39", base, adv)
+      s, base, docs.filter(pmod(col("doc_id"), lit(64)) === 0), "doc_id", "text")
+    PairIndex.keepLatest(s, "d39", adv.idx)
     PairIndex.curateFromIndex(s, adv.idx, "doc_id", "text")
       .groupBy(col("split"))
       .agg(count(lit(1)).as("n_docs"),
@@ -1216,7 +1207,7 @@ object TextQueries {
     * universe, existing pairs keep their birth scores, and no cap-flip
     * detection, affected-set rescore or pairs copy-forward runs — a
     * no-eviction frozen advance is batch-scale compute plus four
-    * bucketed appends. Row-identical to the exact advance (and hence
+    * clone-and-appends. Row-identical to the exact advance (and hence
     * to d12's full-corpus oracle, which pins this query) whenever the
     * batch flips no shingle's cap status — empirically true for the
     * testdata's mod-64 split at every driver-verified SF; if a data
@@ -1225,24 +1216,9 @@ object TextQueries {
     * exactly what it would detect) instead of silently drifting. */
   private def d32(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.PairIndex
-    // d32 deliberately does NOT pass preserveInput: the frozen daily
-    // path's whole identity is "batch-scale compute + four bucketed
-    // APPENDS", and this registration is the one that driver-gates the
-    // in-place append write path end-to-end. Round-19 optimization: the
-    // append runs against a storage-level CLONE of the shared base
-    // (file-copy snapshot, ~0.3 s) instead of consuming the shared
-    // fixture — previously the invalidation forced the next consumer
-    // (d39) into a full ~4.7 s index rebuild in every bench window.
-    // The advance itself is unchanged: same in-place append against a
-    // byte-identical index, same oracle pin.
-    val base = StandingFixtures.consumableBaseDocIndex(s, dir)
-    // the clone enters this consumer's ring BEFORE the advance
-    // (round-20, ADVICE): if the advance throws (assertNoCapFlips on a
-    // dup-heavy fixture) or takes a rewrite path, an unregistered
-    // clone's four tables would belong to no ring and leak for the
-    // JVM's lifetime — keepLatest's live-set check keeps the
-    // append-path (adv.idx == clone) registration safe
-    PairIndex.keepLatest(s, "d32", base)
+    // shared base fixture — see d31; this registration oracle-gates
+    // the frozen clone-and-append write path end-to-end
+    val base = StandingFixtures.baseDocIndex(s, dir)
     val docs = Tables.documents(s, dir)
     // assertNoCapFlips (round-14, ADVICE): this query's oracle pin is
     // only valid when the mod-64 batch flips no shingle's cap status —
@@ -1252,10 +1228,7 @@ object TextQueries {
     val adv = PairIndex.advanceDocIndex(
       s, base, docs.filter(pmod(col("doc_id"), lit(64)) === 0), "doc_id", "text",
       frozenCaps = true, assertNoCapFlips = true)
-    // the advanced index IS the clone (in-place append), already in
-    // the ring above — register only a generation the advance wrote
-    // fresh (eviction outcomes)
-    if (adv.idx != base) PairIndex.keepLatest(s, "d32", adv.idx)
+    PairIndex.keepLatest(s, "d32", adv.idx)
     PairIndex.curateFromIndex(s, adv.idx, "doc_id", "text")
       .groupBy(col("split"))
       .agg(count(lit(1)).as("n_docs"),

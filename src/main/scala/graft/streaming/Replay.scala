@@ -22,7 +22,7 @@ import org.apache.spark.sql.types.StructType
   *    file (see `parquetSink`);
   *  - `runBounded` runs one such stream into a scratch sink, awaits it,
   *    records its `<tag>.*` state and phase telemetry, and returns the
-  *    sink read back as the query result.
+  *    sink read back, with the stream's own schema, as the query result.
   *
   * Trigger, state and sink policy for all three queries change here. */
 object Replay {
@@ -146,14 +146,19 @@ object Replay {
   /** Run one bounded stream to completion and return what it sank:
     * `start` receives a fresh scratch sink dir and starts the stream
     * into it; the run is awaited, its telemetry recorded under `tag`,
-    * and the sink read back (lazily — the dir lives until JVM exit). */
-  def runBounded(spark: SparkSession, tag: String)(
+    * and the sink read back (lazily — the dir lives until JVM exit)
+    * with `schema`, the stream's output schema. Each run sinks to a
+    * fresh dir, so inferring the schema from it would cost one Spark
+    * job per run; a file source reads every given field as nullable,
+    * exactly as inference does, so the result schema is the same
+    * (StreamingSpec pins it). */
+  def runBounded(spark: SparkSession, tag: String, schema: StructType)(
       start: String => StreamingQuery): DataFrame = {
     val sink = scratchDir(s"graft_${tag}_sink").toString
     val q = start(sink)
     q.awaitTermination()
     recordStateTelemetry(tag, q)
-    spark.read.parquet(sink)
+    spark.read.schema(schema).parquet(sink)
   }
 
   /** State-store and phase telemetry for a completed bounded run, into

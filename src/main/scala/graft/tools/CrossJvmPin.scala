@@ -21,10 +21,11 @@ import graft.sources.Tables
   *  2. `read <sfDir>`: in a fresh JVM, first CONSUME the persisted
   *     index (the printed aggregate must equal the writer's), then
   *     ADVANCE it with the mod-16 batch — threshold/cap/k/buckets all
-  *     come from the TBLPROPERTIES round-trip — and print both the
-  *     advanced index's curation and a from-scratch full-corpus
-  *     reference computed in this same JVM. The script diffs
-  *     writer-vs-reader consumption and advanced-vs-scratch. */
+  *     come from the TBLPROPERTIES round-trip, and the advance writes
+  *     new tables, leaving the persisted ones as they were — and print
+  *     both the advanced index's curation and a from-scratch
+  *     full-corpus reference computed in this same JVM. The script
+  *     diffs writer-vs-reader consumption and advanced-vs-scratch. */
 object CrossJvmPin {
   private val Surv = "xjvm_pair_survivors"
   private val Pairs = "xjvm_pair_index"
@@ -69,7 +70,7 @@ object CrossJvmPin {
           keepPostings = true)
         show("fullscratch", curate(scratch))
         PairIndex.dropDocIndex(spark, scratch)
-        PairIndex.dropSuperseded(spark, idx, adv.idx)
+        PairIndex.dropDocIndex(spark, idx)
         PairIndex.dropDocIndex(spark, adv.idx)
     }
     spark.stop()

@@ -50,8 +50,9 @@ object GraftColumnBridge {
 
   /** Create `dst` as a catalog-metadata copy of managed table `src`
     * (schema, bucket spec, format, table properties) at dst's own
-    * default managed location — the metadata half of a storage-level
-    * table clone (PairIndex.cloneDocIndex). One SessionCatalog call
+    * default managed location — the metadata half of the storage-level
+    * table clone an index advance appends to (PairIndex's
+    * `cloneTableWithData`). One SessionCatalog call
     * instead of CREATE LIKE + SHOW TBLPROPERTIES + ALTER + REFRESH
     * round-trips through the SQL layer (each of which pays a full
     * parse/analyze; measured as most of a 1.3 s clone of a 15 MB

@@ -21,9 +21,6 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestSession {
     val kept = Dedup.dropExactDuplicates(docs, "doc_id", "text")
       .select("doc_id").as[Long].collect().sorted
     assert(kept.toSeq === Seq(1L, 3L, 4L))
-    val groups = Dedup.exactDuplicateGroups(docs, "doc_id", "text").collect()
-    assert(groups.length === 1)
-    assert(groups.head.getLong(1) === 2L) // n_docs
   }
 
   test("minhash LSH surfaces exact and near dups, not unrelated docs") {

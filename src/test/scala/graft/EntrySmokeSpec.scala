@@ -11,4 +11,13 @@ class EntrySmokeSpec extends AnyFunSuite with SparkTestSession {
     // every oracle key corresponds to a registered query
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
+
+  test("the Bench/Verify subset list trims names and rejects unknown ones") {
+    import graft.queries.Registry.subset
+    assert(subset(" q01_pricing_summary, d31_pair_index_advance ,,", "X") ===
+      Set("q01_pricing_summary", "d31_pair_index_advance"))
+    val e = intercept[IllegalArgumentException](
+      subset("q01_pricing_summary,q01_pricing_sumary", "SPARK_GRAFT_BENCH_ONLY"))
+    assert(e.getMessage.contains("SPARK_GRAFT_BENCH_ONLY names unknown queries: q01_pricing_sumary"))
+  }
 }

@@ -16,8 +16,8 @@ class LayoutSaltingAsOfSpec extends AnyFunSuite with SparkTestSession {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = Layout.readTable(spark, "orders_b")
-        .join(Layout.readTable(spark, "lineitem_b"),
+      val joined = spark.table("orders_b")
+        .join(spark.table("lineitem_b"),
           col("o_orderkey") === col("l_orderkey"))
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"), s"expected shuffle-free plan:\n$plan")
@@ -112,7 +112,7 @@ class LayoutSaltingAsOfSpec extends AnyFunSuite with SparkTestSession {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val t = Layout.readTable(spark, "ivf_assigned_b")
+      val t = spark.table("ivf_assigned_b")
       val pairs = t.as("a").join(t.as("b"),
         col("a.cell_id") === col("b.cell_id") && col("a.vec_id") < col("b.vec_id"))
       val plan = pairs.queryExecution.executedPlan.toString

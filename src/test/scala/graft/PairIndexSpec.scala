@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.{CorpusPipeline, Dedup, PairIndex}
 import graft.sources.Tables
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -160,6 +161,38 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
       s"df artifacts ${a.dfTable.get} vs ${b.dfTable.get} differ")
   }
 
+  /** Every table of `idx` with its rows, taken before an advance. */
+  private def snapshot(idx: PairIndex.DocIndex): Map[String, Set[Row]] =
+    idx.tables.map(t => t -> spark.table(t).collect().toSet).toMap
+
+  /** The advance contract: no input table changed, and the result
+    * shares no table with the input. */
+  private def assertInputIntact(before: Map[String, Set[Row]],
+                                r: PairIndex.AdvanceResult): Unit = {
+    val shared = r.idx.tables.toSet.intersect(before.keySet)
+    assert(shared.isEmpty, s"advance result reuses input tables: $shared")
+    before.foreach { case (t, rows) =>
+      assert(spark.table(t).collect().toSet === rows, s"advance changed input table $t")
+    }
+  }
+
+  /** DESCRIBE EXTENDED of a table as key -> value. */
+  private def describe(t: String): Map[String, String] =
+    spark.sql(s"DESCRIBE EXTENDED `$t`").collect()
+      .map(r => r.getString(0) -> Option(r.getString(1)).getOrElse("")).toMap
+
+  /** A table's data files (name -> bytes) at its catalog location. */
+  private def dataFiles(t: String): Map[String, Seq[Byte]] = {
+    val dir = java.nio.file.Paths.get(new java.net.URI(describe(t)("Location")))
+    val ls = java.nio.file.Files.list(dir)
+    try {
+      import scala.jdk.CollectionConverters._
+      ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => !n.startsWith("_") && !n.startsWith("."))
+        .map(n => n -> java.nio.file.Files.readAllBytes(dir.resolve(n)).toSeq).toMap
+    } finally ls.close()
+  }
+
   test("advanceDocIndex append path is row-identical to from-scratch materialization") {
     val corpus = docsDf(
       1L -> "a b c d e f g h",
@@ -176,10 +209,11 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     val noDf = intercept[IllegalArgumentException](PairIndex.advanceDocIndex(
       spark, idx.copy(dfTable = None), batch, "doc_id", "text"))
     assert(noDf.getMessage.contains("df artifact"))
+    val before = snapshot(idx)
     val r = PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text",
       economyGuard = Double.PositiveInfinity)
-    assert(r.appended && r.newDocs === 3 && r.evicted === 0 && r.affectedOld === 0)
-    assert(r.idx === idx) // in-place advance keeps the table names
+    assert(r.newDocs === 3 && r.evicted === 0 && r.affectedOld === 0)
+    assertInputIntact(before, r)
     val scratch = PairIndex.materializeDocIndex(
       corpus.unionByName(batch), "doc_id", "text",
       numBuckets = 4, keepPostings = true)
@@ -190,17 +224,16 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
       .map(x => (x.getLong(0), x.getLong(1))).toSet
     assert(pairKeys.contains((102L, 103L)))
     assert(pairKeys.exists { case (x, y) => x <= 2 && y === 101L })
+    PairIndex.dropDocIndex(spark, idx)
     PairIndex.dropDocIndex(spark, r.idx)
     PairIndex.dropDocIndex(spark, scratch)
   }
 
   test("preserveInput advance never mutates the input index and stays row-identical") {
-    // same fixture as the append-path test: without preserveInput this
-    // is a pure in-place append (r.appended, r.idx eq idx); with it the
-    // advance must write ALL-fresh generations, leave every input
-    // table byte-identical, and still equal the from-scratch answer —
-    // the copy-on-write contract the shared suite fixture relies on
-    // (round-19, StandingFixtures)
+    // the input-preserving (copy-on-write) contract the shared suite
+    // fixture relies on (StandingFixtures), exact and frozen: every
+    // input table unchanged, no table shared, and the from-scratch
+    // answer either way
     val corpus = docsDf(
       1L -> "a b c d e f g h",
       2L -> "a b c d e f g x",
@@ -211,33 +244,18 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
       103L -> "m n o p q r s u")
     val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
       numBuckets = 4, keepPostings = true)
-    val before = (Seq(idx.survivorsTable, idx.pairsTable)
-      ++ idx.postingsTable ++ idx.dfTable)
-      .map(t => t -> spark.table(t).collect().toSet).toMap
+    val before = snapshot(idx)
     val r = PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text",
-      economyGuard = Double.PositiveInfinity, preserveInput = true)
-    assert(!r.appended, "preserveInput must never report an in-place append")
-    val inputTables = before.keySet
-    val resultTables = (Seq(r.idx.survivorsTable, r.idx.pairsTable)
-      ++ r.idx.postingsTable ++ r.idx.dfTable).toSet
-    assert(resultTables.intersect(inputTables).isEmpty,
-      s"preserveInput result reuses input tables: ${resultTables.intersect(inputTables)}")
-    before.foreach { case (t, rows) =>
-      assert(spark.table(t).collect().toSet === rows,
-        s"preserveInput mutated input table $t")
-    }
+      economyGuard = Double.PositiveInfinity)
+    assertInputIntact(before, r)
     val scratch = PairIndex.materializeDocIndex(
       corpus.unionByName(batch), "doc_id", "text",
       numBuckets = 4, keepPostings = true)
     assertTablesEqual(r.idx, scratch)
-    // frozen daily mode under copy-on-write: same guarantees
+    // frozen daily mode: same guarantees
     val rf = PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text",
-      frozenCaps = true, preserveInput = true)
-    assert(!rf.appended)
-    before.foreach { case (t, rows) =>
-      assert(spark.table(t).collect().toSet === rows,
-        s"frozen preserveInput mutated input table $t")
-    }
+      frozenCaps = true)
+    assertInputIntact(before, rf)
     assertTablesEqual(rf.idx, scratch)
     PairIndex.dropDocIndex(spark, idx)
     PairIndex.dropDocIndex(spark, r.idx)
@@ -246,13 +264,12 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("preserveInput pure-append advance is clone+append, not a copy-forward rewrite") {
-    // round-20 (VERDICT-19 item 1): a preserved advance with no
-    // evictions and no cap flips must take the APPEND write shape
-    // against a storage-level clone — O(batch) Spark compute plus one
-    // file copy — instead of redirecting to the full-rewrite branch's
-    // O(index) copy-forward. The phase telemetry is the contract: the
-    // clone phase plus the four append phases fire, and none of the
-    // rewrite phases do.
+    // round-20 (VERDICT-19 item 1): an advance with no evictions and
+    // no cap flips must take the APPEND write shape against a
+    // storage-level clone — O(batch) Spark compute plus one file copy
+    // — instead of the full-rewrite branch's O(index) copy-forward.
+    // The phase telemetry is the contract: the clone phase plus the
+    // four append phases fire, and none of the rewrite phases do.
     val corpus = docsDf(
       1L -> "a b c d e f g h",
       2L -> "a b c d e f g x",
@@ -263,23 +280,45 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
       103L -> "m n o p q r s u")
     val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
       numBuckets = 4, keepPostings = true)
+    val before = snapshot(idx)
+    val inputFiles = idx.tables.map(t => t -> dataFiles(t)).toMap
     graft.Telemetry.drain()
     val r = PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text",
-      economyGuard = Double.PositiveInfinity, preserveInput = true)
+      economyGuard = Double.PositiveInfinity)
     val tel = graft.Telemetry.drain()
     assert(tel.contains("pairindex.advance_ms_clone_index"))
     Seq("append_pairs", "append_postings", "append_survivors", "append_df")
       .foreach(p => assert(tel.contains(s"pairindex.advance_ms_$p"),
-        s"preserved pure-append advance skipped phase $p"))
+        s"pure-append advance skipped phase $p"))
     tel.keys.filter(_.startsWith("pairindex.advance_ms_rewrite"))
-      .foreach(p => fail(s"preserved pure-append advance ran rewrite phase $p"))
-    assert(!r.appended && r.affectedOld === 0 && r.evicted === 0)
+      .foreach(p => fail(s"pure-append advance ran rewrite phase $p"))
+    assert(r.affectedOld === 0 && r.evicted === 0)
+    assertInputIntact(before, r)
+    // each result table is a clone of its input plus the appended
+    // files: every input data file is there under its own name, byte
+    // for byte, and the bucket spec is the input's — so the bucket
+    // layout, and every exchange-free consumer plan, carries over
+    idx.tables.zip(r.idx.tables).foreach { case (src, dst) =>
+      val copied = dataFiles(dst)
+      inputFiles(src).foreach { case (name, bytes) =>
+        assert(copied.get(name).contains(bytes), s"$dst lacks $src's file $name")
+      }
+      assert(copied.size > inputFiles(src).size, s"$dst got no appended file")
+      Seq("Num Buckets", "Bucket Columns", "Sort Columns").foreach(k =>
+        assert(describe(dst).get(k) === describe(src).get(k), s"$dst $k"))
+    }
+    // the clone carries the stamp the next advance reads its semantics from
+    val props = spark.sql(s"SHOW TBLPROPERTIES `${r.idx.pairsTable}`")
+      .collect().map(x => x.getString(0) -> x.getString(1)).toMap
+    assert(props.get("graft.threshold").contains("0.6"))
+    assert(props.get("graft.numBuckets").contains("4"))
+    assert(props.get("graft.nDocs").contains("6"))
     PairIndex.dropDocIndex(spark, idx)
     PairIndex.dropDocIndex(spark, r.idx)
   }
 
   test("preserveInput covers the cap-flip partial rewrite: input intact, row-identical") {
-    // the cap-flip fixture of the rescore test, under copy-on-write:
+    // the cap-flip fixture of the rescore test:
     // the partial-rewrite shape (cloned survivors/postings/df + fresh
     // pairs generation) must leave every input table byte-identical
     // and still equal the from-scratch answer
@@ -289,14 +328,12 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     val batch = docsDf(101L -> "p q r z1 z2 z3")
     val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
       threshold = 0.6, maxDocFreq = 2, numBuckets = 4, keepPostings = true)
-    val before = (Seq(idx.survivorsTable, idx.pairsTable)
-      ++ idx.postingsTable ++ idx.dfTable)
-      .map(t => t -> spark.table(t).collect().toSet).toMap
+    val before = snapshot(idx)
     graft.Telemetry.drain()
     val r = PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text",
-      economyGuard = Double.PositiveInfinity, preserveInput = true)
+      economyGuard = Double.PositiveInfinity)
     val tel = graft.Telemetry.drain()
-    assert(!r.appended && r.affectedOld === 2 && r.evicted === 0)
+    assert(r.affectedOld === 2 && r.evicted === 0)
     // partial-rewrite shape: pairs rewritten fresh, the rest appended
     // to clones — never the full-rewrite branch's survivor/posting
     // copy-forward
@@ -304,15 +341,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     assert(tel.contains("pairindex.advance_ms_rewrite_pairs"))
     assert(!tel.contains("pairindex.advance_ms_rewrite_survivors"))
     assert(!tel.contains("pairindex.advance_ms_rewrite_postings"))
-    val resultTables = (Seq(r.idx.survivorsTable, r.idx.pairsTable)
-      ++ r.idx.postingsTable ++ r.idx.dfTable).toSet
-    assert(resultTables.intersect(before.keySet).isEmpty,
-      s"preserved cap-flip advance reuses input tables: " +
-        s"${resultTables.intersect(before.keySet)}")
-    before.foreach { case (t, rows) =>
-      assert(spark.table(t).collect().toSet === rows,
-        s"preserved cap-flip advance mutated input table $t")
-    }
+    assertInputIntact(before, r)
     val scratch = PairIndex.materializeDocIndex(
       corpus.unionByName(batch), "doc_id", "text",
       threshold = 0.6, maxDocFreq = 2, numBuckets = 4, keepPostings = true)
@@ -330,79 +359,17 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     val batch = docsDf(5L -> "alpha beta gamma delta epsilon zeta") // == doc 10
     val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
       numBuckets = 4, keepPostings = true)
-    val before = (Seq(idx.survivorsTable, idx.pairsTable)
-      ++ idx.postingsTable ++ idx.dfTable)
-      .map(t => t -> spark.table(t).collect().toSet).toMap
+    val before = snapshot(idx)
     val r = PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text",
-      economyGuard = Double.PositiveInfinity, preserveInput = true)
-    assert(!r.appended && r.evicted === 1 && r.newDocs === 1)
-    before.foreach { case (t, rows) =>
-      assert(spark.table(t).collect().toSet === rows,
-        s"preserved eviction advance mutated input table $t")
-    }
+      economyGuard = Double.PositiveInfinity)
+    assert(r.evicted === 1 && r.newDocs === 1)
+    assertInputIntact(before, r)
     val scratch = PairIndex.materializeDocIndex(
       corpus.unionByName(batch), "doc_id", "text",
       numBuckets = 4, keepPostings = true)
     assertTablesEqual(r.idx, scratch)
     PairIndex.dropDocIndex(spark, idx)
     PairIndex.dropDocIndex(spark, r.idx)
-    PairIndex.dropDocIndex(spark, scratch)
-  }
-
-  test("cloneDocIndex snapshots byte-identically and isolates in-place appends") {
-    // the round-19 suite optimization: d32's in-place append runs
-    // against a storage-level clone so the shared base fixture stays
-    // pristine. The clone must (a) equal the source row-for-row on all
-    // four tables, (b) carry the graft.* TBLPROPERTIES the advance
-    // reads its semantics from, (c) keep the bucket layout (consumer
-    // plans stay exchange-free), and (d) absorb an in-place append
-    // WITHOUT the source observing any change.
-    val corpus = docsDf(
-      1L -> "a b c d e f g h",
-      2L -> "a b c d e f g x",
-      3L -> "totally unrelated content sits here quietly")
-    val batch = docsDf(
-      101L -> "a b c d e f g y",
-      102L -> "m n o p q r s t",
-      103L -> "m n o p q r s u")
-    val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
-      numBuckets = 4, keepPostings = true)
-    val before = (Seq(idx.survivorsTable, idx.pairsTable)
-      ++ idx.postingsTable ++ idx.dfTable)
-      .map(t => t -> spark.table(t).collect().toSet).toMap
-    val clone = PairIndex.cloneDocIndex(spark, idx)
-    val cloneTabs = Seq(clone.survivorsTable, clone.pairsTable) ++
-      clone.postingsTable ++ clone.dfTable
-    assert(cloneTabs.toSet.intersect(before.keySet).isEmpty)
-    // (a) row-identical snapshot
-    (Seq(idx.survivorsTable -> clone.survivorsTable,
-      idx.pairsTable -> clone.pairsTable) ++
-      idx.postingsTable.zip(clone.postingsTable) ++
-      idx.dfTable.zip(clone.dfTable)).foreach { case (src, dst) =>
-      assert(spark.table(dst).collect().toSet === before(src),
-        s"clone $dst differs from $src")
-    }
-    // (b) advance semantics readable off the clone's pairs table
-    val props = spark.sql(s"SHOW TBLPROPERTIES `${clone.pairsTable}`")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(props.get("graft.threshold").contains("0.6"))
-    assert(props.get("graft.numBuckets").contains("4"))
-    // (c)+(d) the in-place append advances the CLONE and the source
-    // stays byte-identical; the advanced clone equals a from-scratch
-    // materialization of corpus ∪ batch
-    val r = PairIndex.advanceDocIndex(spark, clone, batch, "doc_id", "text",
-      economyGuard = Double.PositiveInfinity)
-    assert(r.appended && (r.idx === clone))
-    before.foreach { case (t, rows) =>
-      assert(spark.table(t).collect().toSet === rows,
-        s"append to clone mutated source table $t")
-    }
-    val scratch = PairIndex.materializeDocIndex(
-      corpus.unionByName(batch), "doc_id", "text",
-      numBuckets = 4, keepPostings = true)
-    assertTablesEqual(r.idx, scratch)
-    PairIndex.dropDocIndex(spark, idx)
-    PairIndex.dropDocIndex(spark, clone)
     PairIndex.dropDocIndex(spark, scratch)
   }
 
@@ -419,17 +386,16 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
       threshold = 0.6, maxDocFreq = 2, numBuckets = 4, keepPostings = true)
     assert(spark.table(idx.pairsTable).count() === 1) // (1,2) pre-advance
+    val before = snapshot(idx)
     val r = PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text",
       economyGuard = Double.PositiveInfinity)
-    assert(!r.appended && r.affectedOld === 2 && r.evicted === 0)
-    assert(r.idx.pairsTable !== idx.pairsTable) // fresh generation
+    assert(r.affectedOld === 2 && r.evicted === 0)
+    assertInputIntact(before, r)
     assert(spark.table(r.idx.pairsTable).count() === 0)
     val scratch = PairIndex.materializeDocIndex(
       corpus.unionByName(batch), "doc_id", "text",
       threshold = 0.6, maxDocFreq = 2, numBuckets = 4, keepPostings = true)
     assertTablesEqual(r.idx, scratch)
-    // old generation stays intact for concurrent readers until dropped
-    assert(spark.table(idx.pairsTable).count() === 1)
     PairIndex.dropDocIndex(spark, idx)
     PairIndex.dropDocIndex(spark, r.idx)
     PairIndex.dropDocIndex(spark, scratch)
@@ -443,9 +409,11 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     val batch = docsDf(5L -> "alpha beta gamma delta epsilon zeta") // == doc 10
     val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
       numBuckets = 4, keepPostings = true)
+    val before = snapshot(idx)
     val r = PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text",
       economyGuard = Double.PositiveInfinity)
-    assert(!r.appended && r.evicted === 1 && r.newDocs === 1)
+    assert(r.evicted === 1 && r.newDocs === 1)
+    assertInputIntact(before, r)
     val survivors = spark.table(r.idx.survivorsTable)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(survivors === Set(5L, 11L, 12L))
@@ -466,11 +434,15 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     val b2 = docsDf(201L -> "j k l m n o p r") // near-dup of B1's doc
     val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
       numBuckets = 4, keepPostings = true)
+    val before = snapshot(idx)
     val r1 = PairIndex.advanceDocIndex(spark, idx, b1, "doc_id", "text",
       economyGuard = Double.PositiveInfinity)
+    val before1 = snapshot(r1.idx)
     val r2 = PairIndex.advanceDocIndex(spark, r1.idx, b2, "doc_id", "text",
       economyGuard = Double.PositiveInfinity)
-    assert(r1.appended && r2.appended)
+    for (r <- Seq(r1, r2)) assert(r.evicted === 0 && r.affectedOld === 0)
+    assertInputIntact(before, r1)
+    assertInputIntact(before1, r2)
     val pairKeys = spark.table(r2.idx.pairsTable)
       .select("doc_id1", "doc_id2").collect()
       .map(x => (x.getLong(0), x.getLong(1))).toSet
@@ -479,8 +451,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
       corpus.unionByName(b1).unionByName(b2), "doc_id", "text",
       numBuckets = 4, keepPostings = true)
     assertTablesEqual(r2.idx, scratch)
-    PairIndex.dropDocIndex(spark, r2.idx)
-    PairIndex.dropDocIndex(spark, scratch)
+    Seq(idx, r1.idx, r2.idx, scratch).foreach(PairIndex.dropDocIndex(spark, _))
   }
 
   test("economy guard falls back to rematerialization and stays row-identical") {
@@ -495,14 +466,13 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
       102L -> "m n o p q r s t")
     val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
       numBuckets = 4, keepPostings = true)
+    val before = snapshot(idx)
     Telemetry.drain()
     val r = PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text")
     val tel = Telemetry.drain()
     assert(tel.get("pairindex.advance_fallback").contains(1L))
-    assert(!r.appended && r.newDocs === 2)
-    // fallback writes FRESH generations — nothing reused from the old
-    assert(r.idx.survivorsTable !== idx.survivorsTable)
-    assert(r.idx.pairsTable !== idx.pairsTable)
+    assert(r.newDocs === 2)
+    assertInputIntact(before, r)
     val scratch = PairIndex.materializeDocIndex(
       corpus.unionByName(batch), "doc_id", "text",
       numBuckets = 4, keepPostings = true)
@@ -527,13 +497,16 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
       103L -> "m n o p q r s u")
     val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
       numBuckets = 4, keepPostings = true)
+    val before = snapshot(idx)
     val r = PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text",
       frozenCaps = true)
-    assert(r.appended && r.newDocs === 3 && r.affectedOld === 0)
+    assert(r.newDocs === 3 && r.evicted === 0 && r.affectedOld === 0)
+    assertInputIntact(before, r)
     val scratch = PairIndex.materializeDocIndex(
       corpus.unionByName(batch), "doc_id", "text",
       numBuckets = 4, keepPostings = true)
     assertTablesEqual(r.idx, scratch)
+    PairIndex.dropDocIndex(spark, idx)
     PairIndex.dropDocIndex(spark, r.idx)
     PairIndex.dropDocIndex(spark, scratch)
   }
@@ -550,13 +523,16 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     val batch = docsDf(101L -> "p q r z1 z2 z3")
     val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
       threshold = 0.6, maxDocFreq = 2, numBuckets = 4, keepPostings = true)
+    val before = snapshot(idx)
     val r = PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text",
       frozenCaps = true)
-    assert(r.appended && r.affectedOld === 0)
+    assert(r.evicted === 0 && r.affectedOld === 0)
+    assertInputIntact(before, r)
     val pairs = spark.table(r.idx.pairsTable)
       .select("doc_id1", "doc_id2").collect()
       .map(x => (x.getLong(0), x.getLong(1))).toSet
     assert(pairs === Set((1L, 2L))) // stale-but-kept; no new pair clears 0.6
+    PairIndex.dropDocIndex(spark, idx)
     PairIndex.dropDocIndex(spark, r.idx)
   }
 
@@ -568,9 +544,11 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     val batch = docsDf(5L -> "alpha beta gamma delta epsilon zeta") // == doc 10
     val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
       numBuckets = 4, keepPostings = true)
+    val before = snapshot(idx)
     val r = PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text",
       frozenCaps = true)
-    assert(!r.appended && r.evicted === 1 && r.newDocs === 1)
+    assert(r.evicted === 1 && r.newDocs === 1)
+    assertInputIntact(before, r)
     // no cap flips in this fixture, so frozen == exact == from-scratch
     val scratch = PairIndex.materializeDocIndex(
       corpus.unionByName(batch), "doc_id", "text",
@@ -589,11 +567,15 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     val b2 = docsDf(201L -> "j k l m n o p r") // near-dup of B1's doc
     val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
       numBuckets = 4, keepPostings = true)
+    val before = snapshot(idx)
     val r1 = PairIndex.advanceDocIndex(spark, idx, b1, "doc_id", "text",
       frozenCaps = true)
+    val before1 = snapshot(r1.idx)
     val r2 = PairIndex.advanceDocIndex(spark, r1.idx, b2, "doc_id", "text",
       frozenCaps = true)
-    assert(r1.appended && r2.appended)
+    for (r <- Seq(r1, r2)) assert(r.evicted === 0 && r.affectedOld === 0)
+    assertInputIntact(before, r1)
+    assertInputIntact(before1, r2)
     // advance 2 saw B1's appended postings AND df rows
     val pairKeys = spark.table(r2.idx.pairsTable)
       .select("doc_id1", "doc_id2").collect()
@@ -603,8 +585,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
       corpus.unionByName(b1).unionByName(b2), "doc_id", "text",
       numBuckets = 4, keepPostings = true)
     assertTablesEqual(r2.idx, scratch)
-    PairIndex.dropDocIndex(spark, r2.idx)
-    PairIndex.dropDocIndex(spark, scratch)
+    Seq(idx, r1.idx, r2.idx, scratch).foreach(PairIndex.dropDocIndex(spark, _))
   }
 
   test("autoBuckets floors small inputs at the shuffle-partition count, caps at 4096") {
@@ -658,11 +639,15 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     val base = docs.filter(pmod(col("doc_id"), lit(64)) =!= 0)
     val batch = docs.filter(pmod(col("doc_id"), lit(64)) === 0)
     val advanced = Seq(4, 32).map { n =>
-      val r = PairIndex.advanceDocIndex(spark,
-        PairIndex.materializeDocIndex(base, "doc_id", "text",
-          numBuckets = n, keepPostings = true),
+      val in = PairIndex.materializeDocIndex(base, "doc_id", "text",
+        numBuckets = n, keepPostings = true)
+      val before = snapshot(in)
+      val r = PairIndex.advanceDocIndex(spark, in,
         batch, "doc_id", "text", economyGuard = Double.PositiveInfinity)
-      assert(r.appended, s"expected the append path at $n buckets")
+      assert(r.evicted === 0 && r.affectedOld === 0,
+        s"expected the pure-append path at $n buckets")
+      assertInputIntact(before, r)
+      PairIndex.dropDocIndex(spark, in)
       r
     }
     val Seq(a4, a32) = advanced
@@ -769,20 +754,20 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
       102L -> "m n o p q r s t")
     val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
       numBuckets = 4, keepPostings = true)
+    val before = snapshot(idx)
     spark.conf.set("spark.graft.autoBuckets.targetBytes", "8")
     val r =
       try PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text",
         economyGuard = 0.0) // force the fallback
       finally spark.conf.unset("spark.graft.autoBuckets.targetBytes")
-    assert(!r.appended)
+    assertInputIntact(before, r)
     val props = spark.sql(s"SHOW TBLPROPERTIES `${r.idx.pairsTable}`")
       .collect().map(x => x.getString(0) -> x.getString(1)).toMap
     val stamped = props("graft.numBuckets").toInt
     assert(stamped > 4, s"fallback kept the birth bucket count: $stamped")
     // the physical table really carries the re-derived bucket spec, and
     // all four artifacts share it (the co-location contract)
-    def bucketsOf(t: String): String = spark.sql(s"DESCRIBE EXTENDED `$t`")
-      .collect().find(_.getString(0) == "Num Buckets").map(_.getString(1)).getOrElse("?")
+    def bucketsOf(t: String): String = describe(t).getOrElse("Num Buckets", "?")
     assert(bucketsOf(r.idx.pairsTable) === stamped.toString)
     assert(bucketsOf(r.idx.survivorsTable) === stamped.toString)
     assert(bucketsOf(r.idx.postingsTable.get) === stamped.toString)
@@ -822,113 +807,14 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     }
     assert(e.getMessage.contains("cap-status flip"))
     // flip-free batch passes with the assertion on
+    val before = snapshot(idx)
     val ok = PairIndex.advanceDocIndex(spark, idx,
       docsDf(102L -> "w1 w2 w3 w4 w5 w6"), "doc_id", "text",
       frozenCaps = true, assertNoCapFlips = true)
-    assert(ok.appended)
+    assert(ok.evicted === 0 && ok.affectedOld === 0)
+    assertInputIntact(before, ok)
+    PairIndex.dropDocIndex(spark, idx)
     PairIndex.dropDocIndex(spark, ok.idx)
-  }
-
-  test("pairDrift pins the frozen-vs-exact drift metrics on a known cap flip") {
-    // threshold 0.5, cap 2: corpus pair (1,2) is born at jaccard 3/5 =
-    // 0.6; the batch flips "p q r" over the cap, so the EXACT universe
-    // rescores the pair to 2/4 = 0.5 (still qualifying). The frozen
-    // index keeps the 0.6 birth score → exactly one score-drifted
-    // common pair, delta 0.1, nothing missing or spurious.
-    val corpus = docsDf(
-      1L -> "p q r s t u",
-      2L -> "p q r s t v")
-    val batch = docsDf(101L -> "p q r z1 z2 z3")
-    val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
-      threshold = 0.5, maxDocFreq = 2, numBuckets = 4, keepPostings = true)
-    val r = PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text",
-      frozenCaps = true)
-    val exact = PairIndex.materializeDocIndex(
-      corpus.unionByName(batch), "doc_id", "text",
-      threshold = 0.5, maxDocFreq = 2, numBuckets = 4, keepPostings = true)
-    val d = PairIndex.pairDrift(spark, r.idx, exact)
-    assert(d.nPairsExact === 1 && d.nPairsFrozen === 1 && d.nPairsCommon === 1)
-    assert(d.nScoreDrifted === 1 && d.nPairsMissing === 0 && d.nPairsSpurious === 0)
-    assert(math.abs(d.maxAbsJaccardDelta - 0.1) < 1e-9)
-    // magnitude stats over ALL common pairs: one pair, delta 0.1
-    assert(math.abs(d.meanAbsJaccardDelta - 0.1) < 1e-9)
-    assert(math.abs(d.p99AbsJaccardDelta - 0.1) < 1e-9)
-    assert(math.abs(d.fracPairsDrifted - 1.0) < 1e-9)
-    PairIndex.dropDocIndex(spark, r.idx)
-    PairIndex.dropDocIndex(spark, exact)
-  }
-
-  test("pairDrift counts a spurious frozen pair the exact universe dropped") {
-    // threshold 0.6 version of the same flip: exact mode DROPS (1,2)
-    // (2/4 = 0.5 < 0.6) while frozen keeps the 0.6 birth score — one
-    // spurious pair, zero common, frac 1.0 against an empty exact set
-    val corpus = docsDf(
-      1L -> "p q r s t u",
-      2L -> "p q r s t v")
-    val batch = docsDf(101L -> "p q r z1 z2 z3")
-    val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
-      threshold = 0.6, maxDocFreq = 2, numBuckets = 4, keepPostings = true)
-    val r = PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text",
-      frozenCaps = true)
-    val exact = PairIndex.materializeDocIndex(
-      corpus.unionByName(batch), "doc_id", "text",
-      threshold = 0.6, maxDocFreq = 2, numBuckets = 4, keepPostings = true)
-    val d = PairIndex.pairDrift(spark, r.idx, exact)
-    assert(d.nPairsExact === 0 && d.nPairsFrozen === 1 && d.nPairsCommon === 0)
-    assert(d.nScoreDrifted === 0 && d.nPairsMissing === 0 && d.nPairsSpurious === 1)
-    assert(d.meanAbsJaccardDelta === 0.0 && d.p99AbsJaccardDelta === 0.0)
-    assert(math.abs(d.fracPairsDrifted - 1.0) < 1e-9)
-    // the spurious pair moves the END answer: doc 2 is dropped by the
-    // frozen curation but kept by the exact one (lang/quality gates
-    // open so the synthetic corpus passes)
-    val lang = graft.operators.TextAnalysis.langIdHeuristic(col("text"))
-    val l = spark.createDataFrame(Seq(Tuple1("p q r s t u"))).toDF("text")
-      .select(lang).head().getString(0)
-    val (ne, nf, diff) = PairIndex.curationDrift(spark, r.idx, exact,
-      "doc_id", "text", lang = l, minQuality = 0.0)
-    assert(ne === nf + 1 && diff === 1)
-    PairIndex.dropDocIndex(spark, r.idx)
-    PairIndex.dropDocIndex(spark, exact)
-  }
-
-  test("frozen advances accumulate drift counters; exact carries; rematerialize resets") {
-    // flip fixture (same as the rescore spec): cap 2, the batch pushes
-    // "p q r" to df 3 > cap — one real cap flip under frozen mode
-    val corpus = docsDf(
-      1L -> "p q r s t u",
-      2L -> "p q r s t v")
-    val idx0 = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
-      threshold = 0.6, maxDocFreq = 2, numBuckets = 4, keepPostings = true)
-    val e0 = PairIndex.driftEstimate(spark, idx0)
-    assert(e0.frozenAdvances === 0 && e0.capFlips === 0 &&
-      e0.estMeanScoreDrift === 0.0 && !e0.rebuildDue(1e-9))
-    val r1 = PairIndex.advanceDocIndex(spark, idx0,
-      docsDf(101L -> "p q r z1 z2 z3"), "doc_id", "text", frozenCaps = true)
-    assert(r1.capFlips === 1 && r1.flipHolders === 2) // "p q r": df 2 -> 3
-    val e1 = PairIndex.driftEstimate(spark, r1.idx)
-    assert(e1.frozenAdvances === 1 && e1.capFlips === 1 && e1.flipHolders === 2)
-    assert(e1.estMeanScoreDrift > 0.0 && e1.estSpuriousFrac > 0.0)
-    assert(e1.rebuildDue(e1.estMeanScoreDrift / 2) &&
-      !e1.rebuildDue(e1.estMeanScoreDrift * 2))
-    // EXACT advance (flip-free batch): accumulated frozen drift CARRIES
-    // (untouched pairs keep their possibly-drifted scores)
-    val r2 = PairIndex.advanceDocIndex(spark, r1.idx,
-      docsDf(201L -> "w1 w2 w3 w4 w5 w6"), "doc_id", "text",
-      economyGuard = Double.PositiveInfinity)
-    val e2 = PairIndex.driftEstimate(spark, r2.idx)
-    assert(e2.frozenAdvances === 1 && e2.capFlips === 1 &&
-      e2.estMeanScoreDrift === e1.estMeanScoreDrift)
-    // economy-guard fallback = full rematerialization: drift RESETS
-    val r3 = PairIndex.advanceDocIndex(spark, r2.idx,
-      docsDf(301L -> "y1 y2 y3 y4 y5 y6"), "doc_id", "text",
-      economyGuard = 0.0)
-    val e3 = PairIndex.driftEstimate(spark, r3.idx)
-    assert(e3.frozenAdvances === 0 && e3.capFlips === 0 &&
-      e3.estMeanScoreDrift === 0.0)
-    PairIndex.dropSuperseded(spark, idx0, r1.idx)
-    PairIndex.dropSuperseded(spark, r1.idx, r2.idx)
-    PairIndex.dropSuperseded(spark, r2.idx, r3.idx)
-    PairIndex.dropDocIndex(spark, r3.idx)
   }
 
   test("merge-probe fallback (batch above broadcast budget) stays row-identical") {
@@ -962,99 +848,6 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     }
   }
 
-  test("compactDocIndex restores one file per bucket with rows, props and plans intact") {
-    val corpus = docsDf(
-      1L -> "a b c d e f g h",
-      2L -> "a b c d e f g x",
-      3L -> "totally unrelated content sits here quietly")
-    // 2 buckets so every bucket is non-empty (a bucket with no rows
-    // writes no file, which would make an exact ==1.0 check flaky)
-    val idx0 = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
-      numBuckets = 2, keepPostings = true)
-    // two append-path frozen advances -> >=3 file sets over 2 buckets
-    val r1 = PairIndex.advanceDocIndex(spark, idx0,
-      docsDf(101L -> "m n o p q r s t"), "doc_id", "text", frozenCaps = true)
-    val r2 = PairIndex.advanceDocIndex(spark, r1.idx,
-      docsDf(201L -> "m n o p q r s u"), "doc_id", "text", frozenCaps = true)
-    val beforeSurv = PairIndex.filesPerBucket(spark, r2.idx.survivorsTable)
-    assert(beforeSurv > 1.0)
-    val props0 = spark.sql(s"SHOW TBLPROPERTIES `${r2.idx.pairsTable}`")
-      .collect().map(r => r.getString(0) -> r.getString(1))
-      .filter(_._1.startsWith("graft.")).toMap
-    val compacted = PairIndex.compactDocIndex(spark, r2.idx, "doc_id")
-    for (t <- Seq(compacted.survivorsTable, compacted.pairsTable,
-        compacted.postingsTable.get, compacted.dfTable.get))
-      assert(PairIndex.filesPerBucket(spark, t) <= 1.0,
-        s"$t not compacted to <=1 file/bucket")
-    assert(PairIndex.filesPerBucket(spark, compacted.survivorsTable) < beforeSurv)
-    assertTablesEqual(compacted, r2.idx)
-    // semantics AND drift accumulators carry verbatim
-    val props1 = spark.sql(s"SHOW TBLPROPERTIES `${compacted.pairsTable}`")
-      .collect().map(r => r.getString(0) -> r.getString(1))
-      .filter(_._1.startsWith("graft.")).toMap
-    assert(props1 === props0)
-    // the hot consumer still plans with zero exchanges off the
-    // compacted artifacts
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val anti = spark.table(compacted.survivorsTable)
-        .join(PairIndex.droplist(spark, compacted, "doc_id"), Seq("doc_id"), "left_anti")
-      val plan = anti.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"), s"expected shuffle-free consumer:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    PairIndex.dropDocIndex(spark, idx0)
-    PairIndex.dropSuperseded(spark, r2.idx, compacted)
-    PairIndex.dropDocIndex(spark, compacted)
-  }
-
-  test("auto-compaction keeps a 10-frozen-advance chain within the files/bucket bound") {
-    // the caller's hygiene loop: after each advance, compactDue (a pure
-    // FS listing) decides and compactDocIndex rewrites — a long frozen
-    // chain must stay at bounded read amplification, and row-identical
-    // to from-scratch materialization.
-    val corpus = docsDf(
-      1L -> "a b c d e f g h",
-      2L -> "totally unrelated content sits here quietly")
-    val idx0 = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
-      numBuckets = 2, keepPostings = true)
-    val bound = 3.0
-    var cur = idx0
-    var all = corpus
-    var compactions = 0
-    for (i <- 1 to 10) {
-      // distinct tokens per batch → flip-free, so every advance takes
-      // the pure-append path
-      val b = docsDf((100L + i) ->
-        s"w${i}a w${i}b w${i}c w${i}d w${i}e w${i}f w${i}g w${i}h")
-      all = all.unionByName(b)
-      val r = PairIndex.advanceDocIndex(spark, cur, b, "doc_id", "text",
-        frozenCaps = true)
-      PairIndex.dropSuperseded(spark, cur, r.idx)
-      cur = r.idx
-      if (PairIndex.compactDue(spark, cur, bound)) {
-        val compacted = PairIndex.compactDocIndex(spark, cur, "doc_id")
-        PairIndex.dropSuperseded(spark, cur, compacted)
-        cur = compacted
-        compactions += 1
-      }
-      for (t <- Seq(cur.survivorsTable, cur.pairsTable) ++
-          cur.postingsTable ++ cur.dfTable)
-        assert(PairIndex.filesPerBucket(spark, t) <= bound,
-          s"advance $i left $t over the $bound files/bucket bound")
-      assert(!PairIndex.compactDue(spark, cur, bound))
-    }
-    // 10 appends against a 3-files/bucket bound must have compacted
-    // more than once — otherwise the bound assert above proved nothing
-    assert(compactions >= 2, s"expected >=2 compactions, saw $compactions")
-    val scratch = PairIndex.materializeDocIndex(all, "doc_id", "text",
-      numBuckets = 2, keepPostings = true)
-    assertTablesEqual(cur, scratch)
-    PairIndex.dropDocIndex(spark, idx0)
-    PairIndex.dropDocIndex(spark, cur)
-    PairIndex.dropDocIndex(spark, scratch)
-  }
-
   test("a phase that throws after clone_index leaves no table behind and the input intact") {
     // a stamp whose bucket count disagrees with the tables' physical
     // bucket spec: every phase up to the clone runs, and the first
@@ -1074,14 +867,12 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
       val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
         threshold = threshold, maxDocFreq = cap, numBuckets = 4, keepPostings = true)
       spark.sql(s"ALTER TABLE `${idx.pairsTable}` SET TBLPROPERTIES('graft.numBuckets'='8')")
-      val inputTables = Seq(idx.survivorsTable, idx.pairsTable) ++
-        idx.postingsTable ++ idx.dfTable
-      val before = inputTables.map(t => t -> spark.table(t).collect().toSet).toMap
+      val before = snapshot(idx)
       val tablesBefore = catalogTables()
       Telemetry.drain()
       intercept[org.apache.spark.sql.AnalysisException] {
         PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text",
-          economyGuard = Double.PositiveInfinity, preserveInput = true)
+          economyGuard = Double.PositiveInfinity)
       }
       assert(Telemetry.drain().contains("pairindex.advance_ms_clone_index"))
       assert(catalogTables() === tablesBefore)
@@ -1095,8 +886,8 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
   test("every advance job carries its phase description; the caller's labels survive") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.GraftColumnBridge
-    // the cap-flip partial rewrite under copy-on-write runs nearly every
-    // phase: decide, cap status, rescore, clone, rewrite and appends
+    // the cap-flip partial rewrite runs nearly every phase: decide, cap
+    // status, rescore, clone, rewrite and appends
     val idx = PairIndex.materializeDocIndex(
       docsDf(1L -> "p q r s t u", 2L -> "p q r s t v"), "doc_id", "text",
       threshold = 0.6, maxDocFreq = 2, numBuckets = 4, keepPostings = true)
@@ -1114,7 +905,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     sc.addSparkListener(listener)
     val r =
       try PairIndex.advanceDocIndex(spark, idx, docsDf(101L -> "p q r z1 z2 z3"),
-        "doc_id", "text", economyGuard = Double.PositiveInfinity, preserveInput = true)
+        "doc_id", "text", economyGuard = Double.PositiveInfinity)
       finally {
         assert(GraftColumnBridge.waitListenerBusEmpty(spark, 30000))
         sc.removeSparkListener(listener)
@@ -1137,18 +928,19 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     PairIndex.dropDocIndex(spark, r.idx)
   }
 
-  test("clusterCurationFromIndex keeps exactly one doc per cluster plus singletons") {
-    val out = PairIndex.clusterCurationFromIndex(spark, idx, "doc_id", "text")
-    val rows = out.collect()
-    val survivorCount = spark.table(idx.survivorsTable).count()
-    val clustered = PairIndex.clustersFromIndex(spark, idx)
-    val nClusters = clustered.select("cluster_rep").distinct().count()
-    val nClusteredDocs = clustered.count()
-    // one kept doc per cluster + every un-clustered survivor
-    assert(rows.length === (survivorCount - nClusteredDocs + nClusters))
-    assert(rows.count(_.getString(3) == "best_in_cluster") === nClusters)
-    // kept set is one-per-cluster_rep
-    val reps = rows.map(_.getLong(1))
-    assert(reps.distinct.length === reps.length)
+  test("d31, d32 and d39 advance the shared base fixture without changing it") {
+    // the suite's sharing contract (StandingFixtures): all three
+    // registered advance queries consume ONE 63/64 base index, so none
+    // may write it — same tables before and after, same row counts,
+    // same data files
+    val base = graft.queries.StandingFixtures.baseDocIndex(spark, sfDir)
+    def state(i: PairIndex.DocIndex) = i.tables.map(t =>
+      (t, spark.table(t).count(), dataFiles(t).keySet))
+    val before = state(base)
+    for (q <- Seq("d31_pair_index_advance", "d32_frozen_cap_advance", "d39_guarded_advance"))
+      assert(graft.queries.Registry.queries(q)(spark, sfDir).collect().nonEmpty, q)
+    val after = graft.queries.StandingFixtures.baseDocIndex(spark, sfDir)
+    assert(after === base)
+    assert(state(after) === before)
   }
 }

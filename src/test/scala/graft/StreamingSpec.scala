@@ -368,6 +368,38 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     }
   }
 
+  test("q29/q31/q33 read their sink back with the stream's own schema, inferring none") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.GraftColumnBridge
+    // a schema-inference job is a `parquet at` job outside any SQL
+    // execution; the sink writes and chunk staging run inside one
+    val inferred = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.stageInfos.exists(_.name.startsWith("parquet at Replay.scala")) &&
+            Option(e.properties).forall(_.getProperty("spark.sql.execution.id") == null))
+          inferred.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    for (name <- Seq("q29_events_stream_sink", "q31_sessions_stream_sink", "q33_stream_dedup")) {
+      assert(GraftColumnBridge.waitListenerBusEmpty(spark, 30000))
+      sc.addSparkListener(listener)
+      val df =
+        try Registry.queries(name)(spark, sfDir)
+        finally {
+          assert(GraftColumnBridge.waitListenerBusEmpty(spark, 30000))
+          sc.removeSparkListener(listener)
+        }
+      assert(inferred.getAndSet(0) === 0, s"$name inferred its sink's schema")
+      // the read-back is the result plan's only leaf
+      val Seq(readBack) = df.queryExecution.analyzed.collectLeaves()
+      val sinks = df.inputFiles.map(f => new org.apache.hadoop.fs.Path(f).getParent.toString)
+        .distinct.toSeq
+      assert(sinks.length === 1, s"$name: $sinks")
+      assert(readBack.schema === spark.read.parquet(sinks.head).schema, name)
+    }
+  }
+
   test("q31 leaves the caller's session conf as it was; its stream still merges sessions locally") {
     val key = EventsStreaming.mergeSessionsLocally.keys.head
     val before = spark.conf.getOption(key)
