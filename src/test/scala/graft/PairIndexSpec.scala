@@ -281,7 +281,6 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
       numBuckets = 4, keepPostings = true)
     val before = snapshot(idx)
-    val inputFiles = idx.tables.map(t => t -> dataFiles(t)).toMap
     graft.Telemetry.drain()
     val r = PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text",
       economyGuard = Double.PositiveInfinity)
@@ -294,27 +293,61 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
       .foreach(p => fail(s"pure-append advance ran rewrite phase $p"))
     assert(r.affectedOld === 0 && r.evicted === 0)
     assertInputIntact(before, r)
-    // each result table is a clone of its input plus the appended
-    // files: every input data file is there under its own name, byte
-    // for byte, and the bucket spec is the input's — so the bucket
-    // layout, and every exchange-free consumer plan, carries over
+    PairIndex.dropDocIndex(spark, idx)
+    PairIndex.dropDocIndex(spark, r.idx)
+  }
+
+  test("cloneDocIndex snapshots byte-identically and isolates in-place appends") {
+    // the advance's clone_index phase is the index clone: a pure-append
+    // advance copies each input table at the storage level and appends
+    // in place to the copy. Each result table must (a) hold every input
+    // data file under its own name, byte for byte, plus the appended
+    // files, (b) keep the input's bucket spec, so consumer plans stay
+    // exchange-free, (c) carry the graft.* TBLPROPERTIES the next
+    // advance reads its semantics from, and (d) absorb the appends
+    // WITHOUT the input observing any change.
+    val corpus = docsDf(
+      1L -> "a b c d e f g h",
+      2L -> "a b c d e f g x",
+      3L -> "totally unrelated content sits here quietly")
+    val batch = docsDf(
+      101L -> "a b c d e f g y",
+      102L -> "m n o p q r s t",
+      103L -> "m n o p q r s u")
+    val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
+      numBuckets = 4, keepPostings = true)
+    val before = snapshot(idx)
+    val inputFiles = idx.tables.map(t => t -> dataFiles(t)).toMap
+    val r = PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text",
+      economyGuard = Double.PositiveInfinity)
+    assert(r.affectedOld === 0 && r.evicted === 0)
     idx.tables.zip(r.idx.tables).foreach { case (src, dst) =>
+      // (a) the input's files, byte-identical, plus appended ones
       val copied = dataFiles(dst)
       inputFiles(src).foreach { case (name, bytes) =>
         assert(copied.get(name).contains(bytes), s"$dst lacks $src's file $name")
       }
       assert(copied.size > inputFiles(src).size, s"$dst got no appended file")
+      // (b) bucket layout carried over
       Seq("Num Buckets", "Bucket Columns", "Sort Columns").foreach(k =>
         assert(describe(dst).get(k) === describe(src).get(k), s"$dst $k"))
     }
-    // the clone carries the stamp the next advance reads its semantics from
+    // (c) advance semantics readable off the cloned pairs table
     val props = spark.sql(s"SHOW TBLPROPERTIES `${r.idx.pairsTable}`")
       .collect().map(x => x.getString(0) -> x.getString(1)).toMap
     assert(props.get("graft.threshold").contains("0.6"))
     assert(props.get("graft.numBuckets").contains("4"))
     assert(props.get("graft.nDocs").contains("6"))
+    // (d) the input is untouched and shares no table with the result;
+    // the appended clone equals a from-scratch materialization
+    assertInputIntact(before, r)
+    val scratch = PairIndex.materializeDocIndex(
+      corpus.unionByName(batch), "doc_id", "text",
+      numBuckets = 4, keepPostings = true)
+    assertTablesEqual(r.idx, scratch)
     PairIndex.dropDocIndex(spark, idx)
     PairIndex.dropDocIndex(spark, r.idx)
+    PairIndex.dropDocIndex(spark, scratch)
   }
 
   test("preserveInput covers the cap-flip partial rewrite: input intact, row-identical") {
