@@ -18,30 +18,41 @@ package graft
   * materialized (the cross-JVM persisted-index pin) does not call it. */
 object LocalCatalog {
 
-  /** True iff the cwd warehouse holds a pid-tagged `graft_*` generation
-    * whose owning JVM is still alive on this host — the signal that a
-    * CONCURRENT bench/verify JVM shares this cwd and wiping would pull
-    * its live Derby db and tables out from under it (round-14, ADVICE:
-    * reset() previously defeated sweepStale's liveness protection).
-    * Unparseable pid tags count as dead, mirroring sweepStale. The
-    * scan is restricted to `graft_`-prefixed directory names (round-15,
-    * ADVICE): only PairIndex generations carry meaningful pid tags, so
-    * an unrelated warehouse entry that happens to contain `_p<digits>_`
-    * can't match a recycled OS pid and silently skip the wipe. */
+  private val OwnerTag = "_p([0-9]+)_".r
+
+  /** The pid in a generation name's `_p<pid>_` owner tag
+    * (`PairIndex.freshName`) when that process is alive on this host.
+    * None — the generation is stale — for a dead owner, a name without
+    * a tag, or a tag that does not parse as a pid (a >19-digit run
+    * overflowing Long): `PairIndex.sweepStale` runs at the top of every
+    * registered query, so one weird directory name in a shared
+    * warehouse must not take the whole suite down (round-14, ADVICE). */
+  private[graft] def liveOwner(name: String): Option[Long] =
+    OwnerTag.findFirstMatchIn(name)
+      .flatMap(m => scala.util.Try(m.group(1).toLong).toOption)
+      .filter(pid => ProcessHandle.of(pid).map[Boolean](_.isAlive).orElse(false))
+
+  /** A live JVM other than this one that owns a `graft_*` generation in
+    * the cwd warehouse — the signal that a CONCURRENT bench/verify JVM
+    * shares this cwd and wiping would pull its live Derby db and tables
+    * out from under it (round-14, ADVICE: reset() previously defeated
+    * sweepStale's liveness protection). The scan is restricted to
+    * `graft_`-prefixed directory names (round-15, ADVICE): only
+    * PairIndex generations carry meaningful pid tags, so an unrelated
+    * warehouse entry that happens to contain `_p<digits>_` can't match
+    * a recycled OS pid and silently skip the wipe. */
   private def liveForeignOwner(): Option[Long] = {
     val wh = java.nio.file.Paths.get("spark-warehouse")
     if (!java.nio.file.Files.isDirectory(wh)) return None
-    val pidTag = "_p([0-9]+)_".r
     val self = ProcessHandle.current().pid()
     val ls = java.nio.file.Files.list(wh)
     try {
       import scala.jdk.CollectionConverters._
       ls.iterator().asScala
-        .filter(_.getFileName.toString.startsWith("graft_"))
-        .flatMap(p => pidTag.findFirstMatchIn(p.getFileName.toString))
-        .flatMap(m => scala.util.Try(m.group(1).toLong).toOption)
-        .find(pid => pid != self &&
-          ProcessHandle.of(pid).map[Boolean](_.isAlive).orElse(false))
+        .map(_.getFileName.toString)
+        .filter(_.startsWith("graft_"))
+        .flatMap(liveOwner)
+        .find(_ != self)
     } finally ls.close()
   }
 

@@ -5,16 +5,16 @@ import org.apache.spark.sql.functions.col
 
 /** Storage-layout operators for the 100 TB regime (SURVEY.md §4.3): the
   * reference's secondary indexes (schema.sql:44-45) map to physical
-  * layout in a lakehouse — partition pruning and bucketed co-location,
-  * not B-trees.
+  * layout in a lakehouse — bucketed co-location, not B-trees.
   *
   * Bucketing both sides of a recurring equi-join on the join key (same
   * bucket count) removes the shuffle from every subsequent join: the
   * scan's output partitioning already satisfies the join's requirement,
   * so Catalyst plans a SortMergeJoin with NO Exchange. That turns the
   * fact⋈fact join from the cluster-wide bottleneck into a per-bucket
-  * local merge. Verified by LayoutSpec, which asserts the joined plan
-  * contains no shuffle.
+  * local merge. Verified by LayoutSaltingAsOfSpec "bucketed co-located
+  * join plans with NO shuffle exchange", which asserts the joined plan
+  * contains no Exchange.
   */
 object Layout {
 
@@ -86,18 +86,4 @@ object Layout {
       .bucketBy(numBuckets, bucketCol)
       .sortBy(bucketCol)
       .saveAsTable(table)
-
-  /** Write partitioned by a low-cardinality column (e.g. release_year)
-    * for static/dynamic partition pruning on point and range filters. */
-  def writePartitioned(df: DataFrame, path: String, partitionCol: String): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCol)
-      .parquet(path)
-
-  /** True iff a filter on the partition column pruned the file listing
-    * (PartitionFilters in the scan node) — used by LayoutSpec to prove
-    * the pruning, and handy as a planning diagnostic. */
-  def partitionFilterCount(df: DataFrame): Int =
-    "PartitionFilters: \\[[^\\]]".r
-      .findAllIn(df.queryExecution.executedPlan.toString).length
 }

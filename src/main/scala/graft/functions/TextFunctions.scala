@@ -51,10 +51,6 @@ object TextFunctions {
   def splitGenres(genres: Column): Column =
     filter(transform(split(genres, "\\|"), g => trim(g)), g => length(g) > 0)
 
-  /** P8 helper (README.md:583): OMDb returns literal "N/A" strings —
-    * expose an explicit cleaning op. */
-  def nullifNA(c: Column): Column = when(c === "N/A", lit(null)).otherwise(c)
-
   /** F8 (etl1.py:254-257): Yes/No presence flag. */
   def yesNo(c: Column): Column = when(c.isNotNull, "Yes").otherwise("No")
 }

@@ -21,10 +21,10 @@ import org.apache.spark.sql.functions._
   */
 object AsOfJoin {
 
-  /** Single-stream variant: rows of one table where `probePred` rows
-    * get the most recent strictly-prior `refPred` row's `tieCol` value
-    * per `keyCol`, ordered by (`timeCol`, `tieCol`). Two-table as-of
-    * reduces to this by unioning minimal projections with a tag column.
+  /** Rows of one table where `probePred` rows get the most recent
+    * strictly-prior `refPred` row's `tieCol` value per `keyCol`, ordered
+    * by (`timeCol`, `tieCol`). A two-table as-of reduces to this by
+    * unioning minimal projections with a tag column.
     */
   def priorRefId(df: DataFrame,
                  keyCol: String, timeCol: String, tieCol: String,
@@ -36,33 +36,5 @@ object AsOfJoin {
     df.filter(refPred || probePred)
       .withColumn(outCol, last(when(refPred, col(tieCol)), ignoreNulls = true).over(w))
       .filter(probePred)
-  }
-
-  /** Two-table as-of: for each left row, the most recent right row with
-    * the same key at or before the left row's time (equal timestamps
-    * count as visible — refs sort before probes on ties). Right payload
-    * is carried as one struct column `asof`. */
-  def asOfPrior(left: DataFrame, right: DataFrame,
-                keyCol: String, timeCol: String,
-                leftTie: String, rightTie: String): DataFrame = {
-    val lType = org.apache.spark.sql.types.StructType(left.schema.fields)
-    val rType = org.apache.spark.sql.types.StructType(right.schema.fields)
-    val l = left.select(
-      lit(false).as("__is_ref"), lit(null).cast(rType).as("__p"),
-      struct(left.columns.toIndexedSeq.map(col): _*).as("__l"),
-      col(keyCol).as("__k"), col(timeCol).as("__t"),
-      col(leftTie).cast("long").as("__tie"))
-    val r = right.select(
-      lit(true).as("__is_ref"), struct(right.columns.toIndexedSeq.map(col): _*).as("__p"),
-      lit(null).cast(lType).as("__l"),
-      col(keyCol).as("__k"), col(timeCol).as("__t"),
-      col(rightTie).cast("long").as("__tie"))
-    val w = Window.partitionBy(col("__k"))
-      .orderBy(col("__t"), col("__is_ref").desc, col("__tie"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    l.unionByName(r)
-      .withColumn("asof", last(when(col("__is_ref"), col("__p")), ignoreNulls = true).over(w))
-      .filter(!col("__is_ref"))
-      .select(col("__l.*"), col("asof"))
   }
 }

@@ -77,27 +77,27 @@ object Components {
     * typed `NonConvergenceException` only — an unrelated failure
     * propagates) and the same edges re-run through
     * `connectedComponentsStar` (O(log² n) rounds on any shape, same
-    * (v, lbl) contract). The fallback's round budget is the explicit
-    * `starMaxIter` — NOT the caller's `maxIter`, which bounds diameter
-    * rounds and would be far too tight for log²-round star alternation;
-    * a caller using `maxIter` as a hard cost bound should lower
-    * `starMaxIter` to match (round-12, ADVICE). The fallback is
-    * observable: `components.fallback_star` = 1 plus the usual
+    * (v, lbl) contract). The fallback's round budget is its own
+    * `StarMaxIter` — NOT the caller's `maxIter`, which bounds diameter
+    * rounds and would be far too tight for log²-round star alternation
+    * (round-12, ADVICE). The fallback is observable:
+    * `components.fallback_star` = 1 plus the usual
     * `components.star_rounds` land in the telemetry map. */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
                           maxIter: Int = 25,
-                          checkpointDir: Option[String] = None,
-                          starMaxIter: Int = 50): DataFrame =
+                          checkpointDir: Option[String] = None): DataFrame =
     try minLabel(edges, srcCol, dstCol, maxIter, checkpointDir).labels
     catch {
       case _: NonConvergenceException =>
         graft.Log.warn(
           s"[components] min-label hit maxIter=$maxIter; falling back to " +
-            s"large/small-star (maxIter=$starMaxIter)")
+            s"large/small-star (maxIter=$StarMaxIter)")
         graft.Telemetry.record("components.fallback_star", 1L)
         connectedComponentsStar(edges, srcCol, dstCol,
-          maxIter = starMaxIter, checkpointDir = checkpointDir).labels
+          maxIter = StarMaxIter, checkpointDir = checkpointDir).labels
     }
+
+  private val StarMaxIter = 50
 
   /** `connectedComponents` with the iteration count — bench/scale runs
     * log it to confirm convergence behavior stays flat across scale

@@ -31,14 +31,11 @@ import org.apache.spark.storage.StorageLevel
   *   sf10   wall −7%  (CPU −34%)
   *   sf30   wall −30% (CPU −25%)
   * Persist never loses wall across a 300× scale span and wins CPU
-  * from sf10 up, so it is now the DEFAULT (the round-8 "4 s recompute
+  * from sf10 up, so `curate` always persists (the round-8 "4 s recompute
   * vs 11 s persisted" sf0.1 reading did not reproduce under the
   * hardened same-JVM protocol). The cache is corpus-survivor-sized,
   * spills under memory pressure by construction, and is released by
-  * `spark.catalog.clearCache()`, session end, or — when running many
-  * curations in one long-lived session — the unpersist handle
-  * `curateManaged` returns (call it after the action that consumes
-  * the curated output). Pass `persistSurvivors = None` to opt out.
+  * `spark.catalog.clearCache()` or session end.
   *
   * Near-dup drop policy: a document is dropped iff it is Jaccard-similar
   * (≥ threshold over the capped shingle universe) to ANY smaller-id
@@ -49,34 +46,16 @@ import org.apache.spark.storage.StorageLevel
   */
 object CorpusPipeline {
 
+  private[operators] val DefaultMinQuality = 0.3
+
   def curate(docs: DataFrame,
              jaccardThreshold: Double = 0.6,
              maxDocFreq: Int = 100,
-             lang: String = "en",
-             minQuality: Double = 0.3,
-             persistSurvivors: Option[StorageLevel] =
-               Some(StorageLevel.MEMORY_AND_DISK)): DataFrame =
-    curateManaged(docs, jaccardThreshold, maxDocFreq, lang, minQuality,
-      persistSurvivors)._1
-
-  /** As `curate`, but also returns the release handle for the survivor
-    * cache when `persistSurvivors` is set (a no-op handle otherwise).
-    * Call it after the action that consumes the curated output. */
-  def curateManaged(docs: DataFrame,
-                    jaccardThreshold: Double = 0.6,
-                    maxDocFreq: Int = 100,
-                    lang: String = "en",
-                    minQuality: Double = 0.3,
-                    persistSurvivors: Option[StorageLevel] =
-                      Some(StorageLevel.MEMORY_AND_DISK))
-      : (DataFrame, () => Unit) = {
-    val survivors = Dedup.dropExactDuplicates(docs, "doc_id", "text")
-    val exact = persistSurvivors.fold(survivors)(survivors.persist)
-    val release: () => Unit =
-      if (persistSurvivors.isDefined) () => { exact.unpersist(); () }
-      else () => ()
+             minQuality: Double = DefaultMinQuality): DataFrame = {
+    val exact = Dedup.dropExactDuplicates(docs, "doc_id", "text")
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val nearDupIds = Dedup
-      .jaccardPairs(Dedup.shingles(exact, "doc_id", "text", 3),
+      .jaccardPairs(Dedup.shingles(exact, "doc_id", "text", Dedup.ShingleK),
         jaccardThreshold, maxDocFreq)
       .select(col("doc_id2").as("doc_id"))
       .distinct()
@@ -92,13 +71,20 @@ object CorpusPipeline {
     // (benchlogs_r9/d12_shufflehash.log vs d12_stages.log s5) — the
     // single-partition hash build of the whole drop list loses to the
     // sort AQE can split — so merge stays.
-    val curated = exact
-      .hint("merge")
-      .join(nearDupIds, Seq("doc_id"), "left_anti")
-      .filter(TextAnalysis.langIdHeuristic(col("text")) === lang)
-      .filter(TextAnalysis.qualityScore(col("text")) >= minQuality)
-      .withColumn("split",
-        TextAnalysis.hashSplit(TextAnalysis.textHash(col("text"))))
-    (curated, release)
+    gate(exact.hint("merge").join(nearDupIds, Seq("doc_id"), "left_anti"),
+      "text", minQuality)
   }
+
+  /** The tail every curation ends with, over the near-dup survivors:
+    * keep English documents (`langIdHeuristic`) scoring at least
+    * `minQuality`, then tag each with its deterministic `hashSplit`.
+    * `PairIndex.curateFromIndex` runs the same gate over the index's
+    * survivors, which is what keeps the two row-identical. */
+  private[operators] def gate(survivors: DataFrame, textCol: String,
+                              minQuality: Double): DataFrame =
+    survivors
+      .filter(TextAnalysis.langIdHeuristic(col(textCol)) === "en")
+      .filter(TextAnalysis.qualityScore(col(textCol)) >= minQuality)
+      .withColumn("split",
+        TextAnalysis.hashSplit(TextAnalysis.textHash(col(textCol))))
 }

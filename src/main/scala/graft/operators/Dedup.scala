@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   *  - MinHash + LSH: shingle → k minhashes → band buckets → bucket join.
   *    The candidate join is on band keys, so cost is proportional to
   *    actual collisions, never all-pairs.
-  *  - SimHash: 64-bit weighted bit-vote fingerprint; near-dup = small
-  *    hamming distance, candidates blocked on 8-bit byte bands.
+  *  - SimHash: 64-bit bit-vote fingerprint per document; near-dups
+  *    sit at a small hamming distance.
   *  - n-gram Jaccard: inverted-index join on shingles (pairs that share
   *    at least one shingle), again never all-pairs.
   *
@@ -23,15 +23,6 @@ import org.apache.spark.sql.functions._
 object Dedup {
 
   // ---------------- exact ----------------
-
-  private def duplicateGroups(df: DataFrame, idCol: String,
-                              key: Column, keyName: String): DataFrame =
-    df.select(key.as(keyName), col(idCol))
-      .groupBy(col(keyName))
-      .agg(count(lit(1)).as("n_docs"),
-           min(col(idCol)).as("min_doc_id"),
-           max(col(idCol)).as("max_doc_id"))
-      .filter(col("n_docs") > 1)
 
   /** Deterministic exact dedup: keep the smallest id per canonical hash.
     * (dropDuplicates keeps an arbitrary row; a window makes the survivor
@@ -47,9 +38,19 @@ object Dedup {
   /** Bag-of-words fingerprint duplicate groups (order/repetition
     * invariant — catches shuffled near-dups). */
   def fingerprintDuplicateGroups(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    duplicateGroups(df, idCol, TextAnalysis.bagFingerprint(col(textCol)), "fp")
+    df.select(TextAnalysis.bagFingerprint(col(textCol)).as("fp"), col(idCol))
+      .groupBy(col("fp"))
+      .agg(count(lit(1)).as("n_docs"),
+           min(col(idCol)).as("min_doc_id"),
+           max(col(idCol)).as("max_doc_id"))
+      .filter(col("n_docs") > 1)
 
   // ---------------- shingles ----------------
+
+  /** Word-shingle width of every whole-document Jaccard near-dup
+    * contract: `CorpusPipeline.curate`, `dedupIncrement`, and the pair
+    * and corpus indexes that must stay row-identical to them. */
+  private[operators] val ShingleK = 3
 
   /** Distinct k-token shingles per document: (doc_id, s) — one narrow
     * pass over the corpus via the native generator. Per-document dedup
@@ -166,8 +167,7 @@ object Dedup {
     * (collision semantics identical to `jaccardPairs` by
     * construction). */
   def jaccardPairsHashed(sh0: DataFrame, threshold: Double,
-                         maxDocFreq: Int = Int.MaxValue,
-                         pairWidth: Option[Int] = None): DataFrame = {
+                         maxDocFreq: Int = Int.MaxValue): DataFrame = {
     // df-cap BEFORE the posting-list aggregation: the window counts
     // docs per shingle and drops over-cap shingles, so every
     // collect_list state below — map-side partials included — is
@@ -194,8 +194,7 @@ object Dedup {
     // zero joins from here to the result at ANY corpus size.
     val shN = sh.withColumn("n",
       count(lit(1)).over(Window.partitionBy(col("doc_id"))))
-    val p = pairWidth.getOrElse(pairParallelism(sh0))
-    require(p > 0, s"pairWidth must be positive: $p")
+    val p = pairParallelism(sh0)
     val postings = shN
       .repartition(p, col("s"))
       .groupBy(col("s"))
@@ -250,10 +249,9 @@ object Dedup {
     * small corpus run inside a session sized for a large one inherits
     * the full pinned task count over near-empty partitions, because
     * the numbered repartition is deliberately exempt from AQE
-    * coalescing. Callers that know their input is batch-scale pass
-    * `pairWidth` to `jaccardPairsHashed` and override the pin; the
-    * default stays session-scale because the pin exists precisely for
-    * inputs whose pair fan-out AQE's map-byte estimate cannot see. */
+    * coalescing. It stays session-scale because the pin exists
+    * precisely for inputs whose pair fan-out AQE's map-byte estimate
+    * cannot see. */
   private def pairParallelism(df: DataFrame): Int = {
     val ss = df.sparkSession
     val base = ss.sessionState.conf.numShufflePartitions
@@ -402,20 +400,18 @@ object Dedup {
     * deployment can binary-pack the digest to 16 bytes. Both
     * pair-volume shuffles (posting aggregation, island window) run at
     * the session's pinned pair width — AQE would coalesce them from
-    * pre-explosion map bytes (the round-16 lesson); `pairWidth`
-    * overrides for batch-scale invocations.
+    * pre-explosion map bytes (the round-16 lesson).
     *
     * Reference for the operator inventory: this is the one LLM-pipeline
     * capability round-16's VERDICT called out as missing (item 3). */
   def exactSubstringMatches(df: DataFrame, idCol: String, textCol: String,
-                            minTokens: Int, k: Int = 5, maxOcc: Int = 100,
-                            pairWidth: Option[Int] = None): DataFrame = {
+                            minTokens: Int, k: Int = 5,
+                            maxOcc: Int = 100): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     require(minTokens >= k,
       s"minTokens ($minTokens) must be >= gram size k ($k)")
     require(maxOcc >= 2, s"maxOcc must allow cross-doc pairs: $maxOcc")
-    val p = pairWidth.getOrElse(pairParallelism(df))
-    require(p > 0, s"pairWidth must be positive: $p")
+    val p = pairParallelism(df)
     // 1-based positions so the oracle's tokens[i] indexing mirrors
     // directly; md5 of the byte-span gram = md5 of the space-joined
     // token form on the single-space-normalized corpus. The
@@ -526,14 +522,12 @@ object Dedup {
   def exactSubstringContamination(corpus: DataFrame, probe: DataFrame,
                                   idCol: String, textCol: String,
                                   minTokens: Int, k: Int = 5,
-                                  maxOcc: Int = 100,
-                                  pairWidth: Option[Int] = None): DataFrame = {
+                                  maxOcc: Int = 100): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     require(minTokens >= k,
       s"minTokens ($minTokens) must be >= gram size k ($k)")
     require(maxOcc >= 2, s"maxOcc must allow cross-side pairs: $maxOcc")
-    val p = pairWidth.getOrElse(pairParallelism(corpus))
-    require(p > 0, s"pairWidth must be positive: $p")
+    val p = pairParallelism(corpus)
     def grams(df: DataFrame, side: Int): DataFrame = df
       .select(col(idCol).cast("long").as("doc_id"),
         posexplode(TextAnalysis.shinglesCol(col(textCol), k)).as(Seq("pos", "g")))
@@ -620,11 +614,10 @@ object Dedup {
     * aggregate; driver-verified with a from-scratch mirror. */
   def contaminationCapReport(corpus: DataFrame, probe: DataFrame,
                              idCol: String, textCol: String,
-                             k: Int = 5, maxOcc: Int = 100,
-                             pairWidth: Option[Int] = None): DataFrame = {
+                             k: Int = 5, maxOcc: Int = 100): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     require(maxOcc >= 2, s"maxOcc must allow cross-side pairs: $maxOcc")
-    val p = pairWidth.getOrElse(pairParallelism(corpus))
+    val p = pairParallelism(corpus)
     def grams(df: DataFrame, side: Int): DataFrame = df
       .select(col(idCol).cast("long").as("doc_id"),
         explode(TextAnalysis.shinglesCol(col(textCol), k)).as("g"))
@@ -723,11 +716,10 @@ object Dedup {
     * both halves oracle-mirrored from scratch. */
   def decontaminate(corpus: DataFrame, probe: DataFrame,
                     idCol: String, textCol: String,
-                    minTokens: Int, k: Int = 5, maxOcc: Int = 100,
-                    pairWidth: Option[Int] = None): DataFrame =
+                    minTokens: Int, k: Int = 5, maxOcc: Int = 100): DataFrame =
     exciseSpans(probe, idCol, textCol,
       exactSubstringContamination(corpus, probe, idCol, textCol,
-        minTokens, k, maxOcc, pairWidth))
+        minTokens, k, maxOcc))
 
   /** Contamination-aware dataset split (d42): the composition a
     * release pipeline actually ships — every corpus document gets its
@@ -744,10 +736,10 @@ object Dedup {
     * adds a corpus-scale stage beyond the sweep itself. */
   def contaminationAwareSplit(corpus: DataFrame, probe: DataFrame,
                               idCol: String, textCol: String,
-                              minTokens: Int, k: Int = 5, maxOcc: Int = 100,
-                              pairWidth: Option[Int] = None): DataFrame = {
+                              minTokens: Int, k: Int = 5,
+                              maxOcc: Int = 100): DataFrame = {
     val contaminated = exactSubstringContamination(corpus, probe,
-        idCol, textCol, minTokens, k, maxOcc, pairWidth)
+        idCol, textCol, minTokens, k, maxOcc)
       .select(col("corpus_id").as("__cid")).distinct()
       .withColumn("__cont", lit(true))
     corpus
@@ -847,6 +839,12 @@ object Dedup {
           .as("jaccard_r4"))
   }
 
+  /** Default Jaccard threshold and the df cap of the incremental
+    * contract, shared with `PairIndex.dedupIncrementFromIndex` (d30)
+    * so it stays row-identical to `dedupIncrement` (d13). */
+  private[operators] val IncrementThreshold = 0.6
+  private[operators] val IncrementMaxDocFreq = 100
+
   /** Incremental dedup — the daily-crawl workflow at corpus scale: a
     * new batch is deduplicated against an EXISTING corpus without
     * re-deduplicating the corpus itself. Survivors of `incoming` are
@@ -866,9 +864,7 @@ object Dedup {
     * keeping the two policies separate keeps both oracle-exact. */
   def dedupIncrement(corpus: DataFrame, incoming: DataFrame,
                      idCol: String, textCol: String,
-                     jaccardThreshold: Double = 0.6,
-                     maxDocFreq: Int = 100,
-                     shingleK: Int = 3): DataFrame = {
+                     jaccardThreshold: Double = IncrementThreshold): DataFrame = {
     val batch = dropExactDuplicates(incoming, idCol, textCol)
     // merge hint: the corpus hash set is Θ(corpus docs) and its
     // distinct-aggregate size estimate is unreliably small, so the
@@ -884,9 +880,9 @@ object Dedup {
       .join(corpusHashes.hint("merge"), Seq("__h"), "left_anti")
       .drop("__h")
     val nearIds = crossJaccardPairs(
-        shingles(fresh, idCol, textCol, shingleK),
-        shingles(corpus, idCol, textCol, shingleK),
-        jaccardThreshold, maxDocFreq)
+        shingles(fresh, idCol, textCol, ShingleK),
+        shingles(corpus, idCol, textCol, ShingleK),
+        jaccardThreshold, IncrementMaxDocFreq)
       .select(col("inc_id").as(idCol))
       .distinct()
     // same class: nearIds is batch-bounded in practice but estimated
@@ -901,15 +897,13 @@ object Dedup {
     * chars), per bit position sum ±1 votes across tokens (with
     * multiplicity), bit = sign of the sum. Cross-engine exact: integer
     * votes, no floats. The fingerprint is returned as one signed long
-    * (bit 63 set → negative — harmless: banding masks after the shift
-    * and hamming uses xor+bit_count, both sign-agnostic).
+    * (bit 63 set → negative — harmless for hamming distance, which
+    * is xor+bit_count and sign-agnostic).
     *
     * 64 bits (not 16): at corpus scale a 16-bit space has only 65,536
-    * distinct fingerprints, so banding buckets degenerate into mega-keys
-    * and the candidate join trends toward all-pairs. 64 bits gives
-    * `simhashPairs` room for hamming-radius-derived bands (4×16-bit at
-    * the default r=3) whose collision probability actually reflects
-    * similarity.
+    * distinct fingerprints, so unrelated documents collide; 64 bits
+    * leaves room for hamming-radius banding whose collision
+    * probability actually reflects similarity.
     */
   def simhash64(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     // The 64-bit digest prefix is carried as two 32-bit words (hi = hex
@@ -936,51 +930,6 @@ object Dedup {
       when(col(s"s$b") > 0, lit(1L << b)).otherwise(lit(0L)))
       .reduce(_ + _)
     agg.select(col("doc_id"), sim.cast("long").as("simhash"))
-  }
-
-  /** SimHash near-dup pairs within a hamming radius. Scale path: block on
-    * bit-range bands (pigeonhole: a pair within hamming r of 64 bits
-    * shares at least one of r+1 disjoint bands untouched), then verify
-    * with bit_count on candidates only.
-    *
-    * Band width is DERIVED from maxHamming — exactly r+1 bands of
-    * 64/(r+1) bits, the widest (most selective) banding that is still
-    * pigeonhole-complete. Using more, narrower bands than completeness
-    * needs would inflate random collisions: e.g. 8×8-bit bands collide a
-    * random pair on some band with probability ~1-(255/256)^8 ≈ 3%, so
-    * the candidate join would still be ~3% of all-pairs at corpus
-    * scale, whereas the default r=3 gets 4×16-bit bands at ~6e-5.
-    * Candidate volume therefore tracks true signature agreement plus a
-    * ~(r+1)·2^-(64/(r+1)) random floor — small for r ≤ 7, but banding
-    * is a candidate FILTER, not a skew guarantee: a corpus of
-    * near-identical documents still concentrates in few buckets. */
-  def simhashPairs(sim: DataFrame, maxHamming: Int = 3): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 7,
-      s"bit-range blocking supports hamming 0..7 (bands of >=8 bits), got $maxHamming")
-    val nBands = maxHamming + 1
-    val bounds = (0 to nBands).map(i => i * 64 / nBands) // partition of bits 0..63
-    val bands = (0 until nBands).map { nb =>
-      val lo = bounds(nb)
-      val width = bounds(nb + 1) - lo
-      val mask = if (width == 64) -1L else (1L << width) - 1L
-      // arithmetic shift on a negative long is fine: the mask discards
-      // the sign-extended high bits.
-      struct(lit(nb).as("band"),
-        shiftright(col("simhash"), lo).bitwiseAND(lit(mask)).as("bk"))
-    }
-    val banded = sim
-      .select(col("doc_id"), col("simhash"), explode(array(bands: _*)).as("x"))
-      .select(col("doc_id"), col("simhash"), col("x.band").as("band"), col("x.bk").as("bk"))
-      .repartition(col("band"), col("bk")) // shared Exchange for the self-join
-    val ham = bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).cast("long")
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bk") === col("b.bk") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_id1"), col("b.doc_id").as("doc_id2"),
-        ham.as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
   }
 
   /** Paragraph segmentation (d27 front half): one row per paragraph,

@@ -121,20 +121,9 @@ object PairIndex {
     * generations — a concurrent flow in this session is safe. */
   def sweepStale(spark: SparkSession, prefix: String): Unit = {
     val lower = prefix.toLowerCase
-    val pidTag = "_p([0-9]+)_".r
-    // unparseable pid tags (e.g. a >19-digit run of digits overflowing
-    // Long) are treated as STALE, never as a crash: sweepStale runs at
-    // the top of every registered query, so a single weird directory
-    // name in a shared warehouse must not take the whole suite down
-    // (round-14, ADVICE)
-    def ownerAlive(n: String): Boolean = pidTag.findFirstMatchIn(n) match {
-      case Some(m) =>
-        scala.util.Try(ProcessHandle.of(m.group(1).toLong)).toOption
-          .exists(o => o.isPresent && o.get.isAlive)
-      case None => false
-    }
     def stale(n: String) =
-      n.startsWith(lower) && !n.contains(s"_${jvmTag}_") && !ownerAlive(n)
+      n.startsWith(lower) && !n.contains(s"_${jvmTag}_") &&
+        graft.LocalCatalog.liveOwner(n).isEmpty
     spark.catalog.listTables().collect().map(_.name).filter(stale)
       .foreach(n => spark.sql(s"DROP TABLE IF EXISTS `$n`"))
     val wh = new org.apache.hadoop.fs.Path(
@@ -288,15 +277,13 @@ object PairIndex {
     * `numBuckets` explicitly for non-file sources that are genuinely
     * large.
     *
-    * `targetInputBytesPerBucket = 0` (the default) reads the session
-    * conf `spark.graft.autoBuckets.targetBytes` (falling back to
-    * 128 MB) so tests and deployments can tune the per-bucket input
-    * target without threading a parameter through every call site. */
-  def autoBuckets(df: DataFrame, targetInputBytesPerBucket: Long = 0L): Int = {
-    val target =
-      if (targetInputBytesPerBucket > 0) targetInputBytesPerBucket
-      else df.sparkSession.conf
-        .get("spark.graft.autoBuckets.targetBytes", (128L << 20).toString).toLong
+    * The per-bucket input target is the session conf
+    * `spark.graft.autoBuckets.targetBytes` (default 128 MB), so tests
+    * and deployments can tune it without threading a parameter through
+    * every call site. */
+  def autoBuckets(df: DataFrame): Int = {
+    val target = df.sparkSession.conf
+      .get("spark.graft.autoBuckets.targetBytes", (128L << 20).toString).toLong
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     // the sentinel and the floor come from THIS DataFrame's session
     // conf, not the thread-local SQLConf.get: in a multi-session or
@@ -363,7 +350,7 @@ object PairIndex {
     * sessions. */
   def materializeDocIndex(docs: DataFrame, idCol: String, textCol: String,
                           threshold: Double = 0.6, maxDocFreq: Int = 100,
-                          shingleK: Int = 3, numBuckets: Int = 0,
+                          numBuckets: Int = 0,
                           survivorsTable: String = freshName(SurvivorsBase),
                           pairsTable: String = freshName(PairsBase),
                           keepPostings: Boolean = false,
@@ -383,7 +370,7 @@ object PairIndex {
     val pairsDf =
       if (!keepPostings)
         Dedup.jaccardPairs(
-          Dedup.shingles(survivors, idCol, textCol, shingleK),
+          Dedup.shingles(survivors, idCol, textCol, Dedup.ShingleK),
           threshold, maxDocFreq)
       else {
         // standing-artifact mode: persist the hashed posting relation
@@ -392,7 +379,7 @@ object PairIndex {
         // posting aggregation plan with no exchange, and the same
         // artifact later feeds advanceDocIndex's delta rescore
         graft.etl.Layout.writeBucketed(
-          Dedup.shingles(survivors, idCol, textCol, shingleK)
+          Dedup.shingles(survivors, idCol, textCol, Dedup.ShingleK)
             .select(col("doc_id"), xxhash64(col("s")).as("s"))
             .distinct(),
           postingsTable, "s", buckets)
@@ -412,7 +399,7 @@ object PairIndex {
     // can never silently run with a different cap/threshold than the
     // index it extends. nDocs (survivor count — a parquet metadata
     // read) feeds the advance's economy guard.
-    writeStamp(spark, pairsTable, Stamp(threshold, maxDocFreq, shingleK,
+    writeStamp(spark, pairsTable, Stamp(threshold, maxDocFreq, Dedup.ShingleK,
       buckets, spark.table(survivorsTable).count()))
     DocIndex(survivorsTable, pairsTable,
       if (keepPostings) Some(postingsTable) else None,
@@ -1011,21 +998,19 @@ object PairIndex {
 
   /** d12's curation tail reading the index: survivors anti-join the
     * drop list (bucket-co-located, zero shuffles until the caller's
-    * aggregation), then the same lang/quality/split gates as
-    * `CorpusPipeline.curate`. Result is row-identical to running
-    * `curate` on the raw docs — pinned by the d28 oracle entry. */
+    * aggregation), then `CorpusPipeline.curate`'s lang/quality/split
+    * gate at its default quality floor. Result is row-identical to
+    * running `curate` on the raw docs — pinned by the d28 oracle
+    * entry. */
   def curateFromIndex(spark: SparkSession, idx: DocIndex,
-                      idCol: String, textCol: String,
-                      lang: String = "en", minQuality: Double = 0.3): DataFrame =
+                      idCol: String, textCol: String): DataFrame =
     // the stored canonical-hash helper column is artifact-internal —
     // dropping it keeps this row-identical (schema included) to
     // CorpusPipeline.curate over the raw docs
-    spark.table(idx.survivorsTable).drop(HashCol)
-      .join(droplist(spark, idx, idCol), Seq(idCol), "left_anti")
-      .filter(TextAnalysis.langIdHeuristic(col(textCol)) === lang)
-      .filter(TextAnalysis.qualityScore(col(textCol)) >= minQuality)
-      .withColumn("split",
-        TextAnalysis.hashSplit(TextAnalysis.textHash(col(textCol))))
+    CorpusPipeline.gate(
+      spark.table(idx.survivorsTable).drop(HashCol)
+        .join(droplist(spark, idx, idCol), Seq(idCol), "left_anti"),
+      textCol, CorpusPipeline.DefaultMinQuality)
 
   /** d18's cluster assignment reading the index (survivor universe):
     * connected components over the materialized pairs plus the size
@@ -1077,7 +1062,7 @@ object PairIndex {
     * incoming batch until the corpus advances. Default table names are
     * per-invocation-unique (`freshName`). */
   def materializeCorpusIndex(corpus: DataFrame, idCol: String, textCol: String,
-                             shingleK: Int = 3, numBuckets: Int = 0,
+                             numBuckets: Int = 0,
                              hashesTable: String = freshName(CorpusHashesBase),
                              shinglesTable: String = freshName(CorpusShinglesBase))
       : CorpusIndex = {
@@ -1086,7 +1071,7 @@ object PairIndex {
       corpus.select(TextAnalysis.textHash(col(textCol)).as("__h")).distinct(),
       hashesTable, "__h", buckets)
     graft.etl.Layout.writeBucketed(
-      Dedup.shingles(corpus, idCol, textCol, shingleK),
+      Dedup.shingles(corpus, idCol, textCol, Dedup.ShingleK),
       shinglesTable, "s", buckets)
     CorpusIndex(hashesTable, shinglesTable)
   }
@@ -1097,10 +1082,7 @@ object PairIndex {
     * side a bucketed parquet scan instead of a recompute. */
   def dedupIncrementFromIndex(spark: SparkSession, idx: CorpusIndex,
                               incoming: DataFrame,
-                              idCol: String, textCol: String,
-                              jaccardThreshold: Double = 0.6,
-                              maxDocFreq: Int = 100,
-                              shingleK: Int = 3): DataFrame = {
+                              idCol: String, textCol: String): DataFrame = {
     val batch = Dedup.dropExactDuplicates(incoming, idCol, textCol)
     // merge, not broadcast, for the same cliff reasons as the recompute
     // path (Dedup.dedupIncrement scaladoc)
@@ -1109,9 +1091,9 @@ object PairIndex {
       .join(spark.table(idx.hashesTable).hint("merge"), Seq("__h"), "left_anti")
       .drop("__h")
     val nearIds = Dedup.crossJaccardPairs(
-        Dedup.shingles(fresh, idCol, textCol, shingleK),
+        Dedup.shingles(fresh, idCol, textCol, Dedup.ShingleK),
         spark.table(idx.shinglesTable),
-        jaccardThreshold, maxDocFreq)
+        Dedup.IncrementThreshold, Dedup.IncrementMaxDocFreq)
       .select(col("inc_id").as(idCol))
       .distinct()
     fresh.join(nearIds.hint("merge"), Seq(idCol), "left_anti")

@@ -12,10 +12,11 @@ import org.apache.spark.sql.functions._
   * Mechanics: the skewed side gets a per-row salt in [0, S); the small
   * side is replicated S ways; the join key becomes (key, salt), which
   * splits each hot key's rows across S reducers. Join RESULTS are
-  * identical to the unsalted join (verified by SaltingSpec); only the
-  * partitioning changes — every possible salt value has a replica on
-  * the small side, so the per-row salt choice affects placement, never
-  * membership.
+  * identical to the unsalted join (verified by LayoutSaltingAsOfSpec
+  * "salted join returns exactly the unsalted result under skew"); only
+  * the partitioning changes — every possible salt value has a replica
+  * on the small side, so the per-row salt choice affects placement,
+  * never membership.
   *
   * The salt MUST be deterministic per row: a nondeterministic salt
   * (rand(), monotonically_increasing_id()) feeding a shuffle join key

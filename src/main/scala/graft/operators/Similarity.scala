@@ -103,10 +103,9 @@ object Similarity {
   }
 
   /** Deterministic hash-coin sample predicate: keeps a row iff the
-    * first hex digit of md5(id as string) is below `keepSixteenths` —
-    * a reproducible ~keepSixteenths/16 sample with an exact
-    * cross-engine mirror (DuckDB:
-    * `substring(md5(CAST(id AS VARCHAR)), 1, 1) < '<hex>'`).
+    * first hex digit of md5(id as string) is below 4 — a reproducible
+    * ~1/4 sample with an exact cross-engine mirror (DuckDB:
+    * `substring(md5(CAST(id AS VARCHAR)), 1, 1) < '4'`).
     * NOTE a fixed RATE is a constant-factor cut, not an asymptotic
     * one: anything all-pairs over a rate sample still scales as
     * (rate·N)² = Θ(N²). Use it for rate-proportional work (recall
@@ -114,12 +113,8 @@ object Similarity {
     * that must stay affordable as the corpus grows, use `hashSample`
     * (fixed SIZE → constant pair count) — as the registered e03
     * does. */
-  def hashCoin(idCol: Column, keepSixteenths: Int = 4): Column = {
-    require(keepSixteenths >= 1 && keepSixteenths <= 15,
-      s"keepSixteenths must be in [1,15]: $keepSixteenths")
-    substring(md5(idCol.cast("string")), 1, 1) <
-      lit(Integer.toHexString(keepSixteenths))
-  }
+  def hashCoin(idCol: Column): Column =
+    substring(md5(idCol.cast("string")), 1, 1) < lit("4")
 
   /** Deterministic fixed-SIZE sample: the `n` rows whose md5(id) sorts
     * smallest (id breaks the astronomically-unlikely digest tie).
@@ -281,28 +276,35 @@ object Similarity {
     knnExact(recon, queryFilter, k)
   }
 
+  /** Width of every embedding the LSH family hashes: the `embeddings`
+    * table's vectors have 64 components. */
+  private val Dims = 64
+
+  /** Design bucket occupancy `planesFor` sizes the plane count for. */
+  val TargetOccupancy: Int = 64
+
   /** Deterministic ±1 hyperplane component for (plane, dim): parity of
     * the first hex digit of md5("p<plane>_d<dim>"). Exposed package-wide
     * so the e02 oracle can inline the identical signs as SQL literals. */
-  private[graft] def hyperplane(plane: Int, dims: Int): Array[Double] = {
+  private[graft] def hyperplane(plane: Int): Array[Double] = {
     val mdig = java.security.MessageDigest.getInstance("MD5")
-    (0 until dims).map { d =>
+    (0 until Dims).map { d =>
       val h = mdig.digest(s"p${plane}_d$d".getBytes("UTF-8"))
       if ((h(0) & 1) == 0) 1.0 else -1.0
     }.toArray
   }
 
   /** LSH bucket id: sign bit per hyperplane, packed to an int. */
-  def lshBucket(embCol: Column, planes: Int, dims: Int): Column =
+  def lshBucket(embCol: Column, planes: Int): Column =
     (0 until planes).map { p =>
-      val h = array(hyperplane(p, dims).toIndexedSeq.map(lit): _*)
+      val h = array(hyperplane(p).toIndexedSeq.map(lit): _*)
       when(dotE12(embCol, h) > 0, lit(1 << p)).otherwise(lit(0))
     }.reduce(_ + _)
 
   /** Hot-bucket occupancy cap for every LSH pair/candidate family
     * (round-17 VERDICT item 1 — the one pair generator without a
     * hot-key bound). `planesFor` holds EXPECTED occupancy near
-    * `targetOccupancy` only for sign-uniform corpora; real (and the
+    * `TargetOccupancy` only for sign-uniform corpora; real (and the
     * synthetic bench) embeddings cluster into a bounded set of
     * orthants, so past the point where bucket count saturates, a hot
     * bucket's pair fan-out grows as occ² — measured ~N² on the sf30
@@ -324,20 +326,18 @@ object Similarity {
     * the shared input of the cap filter and the e12 telemetry
     * report. One narrow pass: partial-aggregated to ≤ 2^planes rows
     * per partition before the (tiny) exchange. */
-  def lshBucketOccupancy(emb: DataFrame, planes: Int,
-                         dims: Int = 64): DataFrame =
-    emb.select(lshBucket(col("embedding"), planes, dims).as("bucket"))
+  def lshBucketOccupancy(emb: DataFrame, planes: Int): DataFrame =
+    emb.select(lshBucket(col("embedding"), planes).as("bucket"))
       .groupBy(col("bucket")).agg(count(lit(1)).as("occ"))
 
   /** Cap telemetry (e12): how much of the bucket universe the
     * `maxBucketOcc` cap removes at this corpus/plane count — the
     * "loudly counted" half of the cap contract, driver-verified so a
     * deployment sees the recall trade instead of guessing it. */
-  def lshCapReport(emb: DataFrame, planes: Int = 0, dims: Int = 64,
-                   targetOccupancy: Int = 64, sizeHint: Long = -1L,
+  def lshCapReport(emb: DataFrame, planes: Int = 0, sizeHint: Long = -1L,
                    maxBucketOcc: Int = DefaultMaxBucketOcc): DataFrame = {
-    val p = resolvePlanes(emb, planes, targetOccupancy, sizeHint)
-    lshBucketOccupancy(emb, p, dims).agg(
+    val p = resolvePlanes(emb, planes, sizeHint)
+    lshBucketOccupancy(emb, p).agg(
       count(lit(1)).as("n_buckets"),
       max(col("occ")).as("max_occ"),
       sum(when(col("occ") > maxBucketOcc, 1L).otherwise(0L))
@@ -351,8 +351,8 @@ object Similarity {
     * 1): measured recall of the BANDED and the single-signature
     * multi-probe LSH pair generators against the exact ε-pair
     * universe, on the bounded `hashSample` universe (the e03
-    * pattern: a fixed-SIZE deterministic sample, so the all-pairs
-    * exact baseline costs O(sampleN²) = O(1) in corpus size and the
+    * pattern: a fixed-SIZE deterministic sample of 500 vectors, so the
+    * all-pairs exact baseline costs O(500²) = O(1) in corpus size and the
     * report is runnable at any SF). Driver-verified, so "banded
     * recall 1.0, single-signature ~0.70" is a CORRECTNESS row a
     * deployment reads per-corpus instead of a spec constant measured
@@ -369,20 +369,19 @@ object Similarity {
     * (`ExactNum.roundRatio4`) so the mirror can't half-boundary
     * diverge; an empty ε-universe reports null recalls rather than
     * 0/0. */
-  def lshRecallReport(emb: DataFrame, minCos: Double, sampleN: Int = 500,
-                      bands: Int = DefaultSemDedupBands, dims: Int = 64,
-                      targetOccupancy: Int = 64,
+  def lshRecallReport(emb: DataFrame, minCos: Double,
+                      bands: Int = DefaultSemDedupBands,
                       maxBucketOcc: Int = DefaultMaxBucketOcc): DataFrame = {
-    val sample = hashSample(emb, "vec_id", sampleN)
+    val sample = hashSample(emb, "vec_id", 500)
     val a = sample.select(col("vec_id").as("v1"), col("embedding").as("e1"))
       .withColumn("n1", norm2E12(col("e1")))
     val b = sample.select(col("vec_id").as("v2"), col("embedding").as("e2"))
       .withColumn("n2", norm2E12(col("e2")))
     val exact = thresholdPairs(a.join(b, col("v1") < col("v2")), minCos)
-    val banded = nearDupLshBanded(sample, minCos, bands, dims = dims,
-      targetOccupancy = targetOccupancy, maxBucketOcc = maxBucketOcc)
-    val probe = nearDupLshThreshold(sample, minCos, dims = dims,
-      targetOccupancy = targetOccupancy, maxBucketOcc = maxBucketOcc)
+    val banded = nearDupLshBanded(sample, minCos, bands,
+      maxBucketOcc = maxBucketOcc)
+    val probe = nearDupLshThreshold(sample, minCos,
+      maxBucketOcc = maxBucketOcc)
     import graft.functions.ExactNum.roundRatio4
     exact.agg(count(lit(1)).as("eps_pairs"))
       .crossJoin(banded.agg(count(lit(1)).as("banded_pairs")))
@@ -404,10 +403,9 @@ object Similarity {
     * metadata, a catalog statistic) — else a `count()` job. The hint
     * must EQUAL the true count for oracle parity; it exists to move
     * the lookup off the query's critical path, not to approximate. */
-  private def resolvePlanes(emb: DataFrame, planes: Int,
-                            targetOccupancy: Int, sizeHint: Long): Int =
+  private def resolvePlanes(emb: DataFrame, planes: Int, sizeHint: Long): Int =
     if (planes > 0) planes
-    else planesFor(if (sizeHint > 0) sizeHint else emb.count(), targetOccupancy)
+    else planesFor(if (sizeHint > 0) sizeHint else emb.count())
 
   /** Anti-join both candidate sides against the over-cap bucket list:
     * a candidate pair survives iff its JOIN-KEY bucket's own-bucket
@@ -423,8 +421,8 @@ object Similarity {
 
   /** ANN via LSH buckets: candidates share a bucket; exact cosine
     * re-ranks candidates only. Recall < 1 by construction — pair with
-    * knnExact on a sample to measure it (the scale/quality trade knobs
-    * are `planes` and `multiProbe`).
+    * knnExact on a sample to measure it (the scale/quality trade knob
+    * is `planes`).
     *
     * Multi-probe: a query also probes every bucket at hamming distance
     * 1 from its own (flip one hyperplane sign) — near neighbors that
@@ -437,16 +435,12 @@ object Similarity {
     * per-query candidate cost is bounded at (planes+1)·cap.
     */
   def annLsh(emb: DataFrame, queryFilter: Column, k: Int,
-             planes: Int = 6, dims: Int = 64,
-             multiProbe: Boolean = true,
+             planes: Int = 6,
              maxBucketOcc: Int = DefaultMaxBucketOcc): DataFrame = {
-    val bucketed = emb.withColumn("bucket", lshBucket(col("embedding"), planes, dims))
-    val occ = lshBucketOccupancy(emb, planes, dims)
-    val probes =
-      if (multiProbe)
-        array((col("bucket") +: (0 until planes)
-          .map(p => col("bucket").bitwiseXOR(lit(1 << p)))): _*)
-      else array(col("bucket"))
+    val bucketed = emb.withColumn("bucket", lshBucket(col("embedding"), planes))
+    val occ = lshBucketOccupancy(emb, planes)
+    val probes = array((col("bucket") +: (0 until planes)
+      .map(p => col("bucket").bitwiseXOR(lit(1 << p)))): _*)
     // qn computed BEFORE the probe explode — once per query, not once
     // per probed bucket
     val q = bucketed.filter(queryFilter)
@@ -463,7 +457,7 @@ object Similarity {
   }
 
   /** Smallest hyperplane count whose expected bucket occupancy is at
-    * most `targetOccupancy`: P = ceil(log2(ceil(N / occ))), clamped to
+    * most `TargetOccupancy`: P = ceil(log2(ceil(N / occ))), clamped to
     * [1, 16]. Integer-exact (bit-length, no floating log — Math.log
     * ratios can land a hair above an integer and mis-ceil); the oracle
     * mirrors it as `ceil(log2(k))` over the same integer k, which
@@ -472,9 +466,8 @@ object Similarity {
     * bounds the mirrored sign table; past ~4M vectors occupancy grows
     * linearly again — raise the cap alongside the oracle's sign table
     * if that matters. */
-  def planesFor(n: Long, targetOccupancy: Int = 64): Int = {
-    require(targetOccupancy >= 1, s"targetOccupancy must be >= 1: $targetOccupancy")
-    val k = (n + targetOccupancy - 1) / targetOccupancy
+  def planesFor(n: Long): Int = {
+    val k = (n + TargetOccupancy - 1) / TargetOccupancy
     val ceilLog2 =
       if (k <= 1) 0 else 64 - java.lang.Long.numberOfLeadingZeros(k - 1)
     math.min(16, math.max(1, ceilLog2))
@@ -485,7 +478,7 @@ object Similarity {
     * so its total cost N·c + N²/c bottoms out at c = √N → O(N^1.5);
     * hyperplane-signature buckets assign in O(planes·dims) per row
     * with no training scan, so bucket count can track N (`planesFor`
-    * keeps expected occupancy ≤ `targetOccupancy`) and the blocked
+    * keeps expected occupancy ≤ `TargetOccupancy`) and the blocked
     * self-join stays ~N·occupancy·(planes+1) — linear in N up to the
     * plane cap.
     *
@@ -508,14 +501,13 @@ object Similarity {
     * differently-sized corpora. LSH skew caveat: clustered corpora
     * fill orthants unevenly — AQE's skew-join split absorbs moderate
     * imbalance, `maxBucketOcc` (see `DefaultMaxBucketOcc`) bounds the
-    * saturated-orthant worst case, and raising planes (lower
-    * `targetOccupancy`) thins hot buckets at linear cost. */
+    * saturated-orthant worst case, and raising `planes` thins hot
+    * buckets at linear cost. */
   def nearDupLsh(emb: DataFrame, topN: Int, planes: Int = 0,
-                 dims: Int = 64, targetOccupancy: Int = 64,
                  sizeHint: Long = -1L,
                  maxBucketOcc: Int = DefaultMaxBucketOcc): DataFrame =
     rankTopPairs(
-      lshCandidates(emb, planes, dims, targetOccupancy, sizeHint, maxBucketOcc),
+      lshCandidates(emb, planes, sizeHint, maxBucketOcc),
       topN, minCos = Double.NegativeInfinity)
 
   /** Threshold twin of `nearDupLsh`: EVERY bucket-blocked pair at
@@ -527,11 +519,10 @@ object Similarity {
     * cutoff is the paper's own epsilon. Same recall caveat as
     * `nearDupLsh` (a pair split across ≥2 sign bits is missed). */
   def nearDupLshThreshold(emb: DataFrame, minCos: Double, planes: Int = 0,
-                          dims: Int = 64, targetOccupancy: Int = 64,
                           sizeHint: Long = -1L,
                           maxBucketOcc: Int = DefaultMaxBucketOcc): DataFrame =
     thresholdPairs(
-      lshCandidates(emb, planes, dims, targetOccupancy, sizeHint, maxBucketOcc),
+      lshCandidates(emb, planes, sizeHint, maxBucketOcc),
       minCos)
 
   /** Shared LSH multi-probe candidate stage for the near-dup variants:
@@ -543,11 +534,10 @@ object Similarity {
     * drops over-cap buckets from the join-key universe on BOTH sides
     * (see `DefaultMaxBucketOcc` for the contract). */
   private def lshCandidates(emb: DataFrame, planes: Int,
-                            dims: Int, targetOccupancy: Int,
                             sizeHint: Long, maxBucketOcc: Int): DataFrame = {
-    val p = resolvePlanes(emb, planes, targetOccupancy, sizeHint)
-    val bucketed = emb.withColumn("bucket", lshBucket(col("embedding"), p, dims))
-    val occ = lshBucketOccupancy(emb, p, dims)
+    val p = resolvePlanes(emb, planes, sizeHint)
+    val bucketed = emb.withColumn("bucket", lshBucket(col("embedding"), p))
+    val occ = lshBucketOccupancy(emb, p)
     // own bucket plus every one-bit flip — all distinct; n1 computed
     // BEFORE the explode, once per vector rather than once per probe
     val probes = array((col("bucket") +: (0 until p)
@@ -568,11 +558,10 @@ object Similarity {
     * [b·planes, (b+1)·planes) — one deterministic plane universe
     * shared by every band (and by the oracle's single md5-parity sign
     * rule), no per-band seed state. */
-  def lshBandSignatures(embCol: Column, bands: Int, planes: Int,
-                        dims: Int): Column =
+  def lshBandSignatures(embCol: Column, bands: Int, planes: Int): Column =
     array((0 until bands).map { b =>
       (0 until planes).map { i =>
-        val h = array(hyperplane(b * planes + i, dims).toIndexedSeq.map(lit): _*)
+        val h = array(hyperplane(b * planes + i).toIndexedSeq.map(lit): _*)
         when(dotE12(embCol, h) > 0, lit(1 << i)).otherwise(lit(0))
       }.reduce(_ + _)
     }: _*)
@@ -601,22 +590,19 @@ object Similarity {
     * price of slightly over-dropping inside hot orthants (where the
     * cap is already trading recall for the bound). */
   def nearDupLshBanded(emb: DataFrame, minCos: Double, bands: Int = 8,
-                       planes: Int = 0, dims: Int = 64,
-                       targetOccupancy: Int = 64, sizeHint: Long = -1L,
+                       planes: Int = 0, sizeHint: Long = -1L,
                        maxBucketOcc: Int = DefaultMaxBucketOcc): DataFrame =
     thresholdPairs(
-      lshBandedCandidates(emb, bands, planes, dims, targetOccupancy,
-        sizeHint, maxBucketOcc),
+      lshBandedCandidates(emb, bands, planes, sizeHint, maxBucketOcc),
       minCos)
 
   private def lshBandedCandidates(emb: DataFrame, bands: Int, planes: Int,
-                                  dims: Int, targetOccupancy: Int,
                                   sizeHint: Long,
                                   maxBucketOcc: Int): DataFrame = {
     require(bands >= 1, s"bands must be >= 1: $bands")
-    val p = resolvePlanes(emb, planes, targetOccupancy, sizeHint)
+    val p = resolvePlanes(emb, planes, sizeHint)
     val sigs = emb.withColumn("bks",
-      lshBandSignatures(col("embedding"), bands, p, dims))
+      lshBandSignatures(col("embedding"), bands, p))
     val occ = sigs
       .select(posexplode(col("bks")).as(Seq("band", "bucket")))
       .groupBy(col("band"), col("bucket")).agg(count(lit(1)).as("occ"))
@@ -751,9 +737,10 @@ object Similarity {
     * pairs (e09), `semDedupCurationThreshold` LSH threshold pairs
     * (e10), and the k-means-faithful variant of the paper is
     * `nearDupBlocked(emb, n).select("v1", "v2")` (the IVF generator —
-    * SemDedupSpec pins that the keep-set contract holds under both
-    * generators on a fixture where they disagree). `pairs` must carry
-    * (v1, v2) drawn from `docs`' id universe. */
+    * DedupSimilaritySpec "semDedup keep-set contract holds under BOTH
+    * candidate generators on a fixture where they disagree" pins
+    * that). `pairs` must carry (v1, v2) drawn from `docs`' id
+    * universe. */
   def semDedupCurationWith(docs: DataFrame,
                            idCol: String, textCol: String,
                            pairs: DataFrame): DataFrame = {

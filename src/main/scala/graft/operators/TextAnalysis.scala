@@ -62,15 +62,15 @@ object TextAnalysis {
   /** Stopword occurrences (with multiplicity). Native codegen scan
     * (plans.StopwordCountExpr): the declarative filter() HOF is
     * interpreted and breaks the codegen span per token. */
-  def stopwordCount(text: Column, stops: Seq[String] = DefaultStopwords): Column = {
+  def stopwordCount(text: Column): Column = {
     import org.apache.spark.sql.GraftColumnBridge
     GraftColumnBridge.column(graft.plans.StopwordCountExpr(
-      GraftColumnBridge.expression(text.cast("string")), stops))
+      GraftColumnBridge.expression(text.cast("string")), DefaultStopwords))
   }
 
   /** stop/total as double — exact integer inputs, one IEEE division. */
-  def stopwordRatio(text: Column, stops: Seq[String] = DefaultStopwords): Column =
-    stopwordCount(text, stops).cast("double") / tokenCount(text).cast("double")
+  def stopwordRatio(text: Column): Column =
+    stopwordCount(text).cast("double") / tokenCount(text).cast("double")
 
   /** Whitespace collapse + trim + lowercase: the canonical form for
     * exact deduplication. Collapse BEFORE trim: Spark trim
@@ -108,12 +108,6 @@ object TextAnalysis {
     * callers must pre-materialize the tokens (see bigramsOfTokens). */
   def bigrams(text: Column): Column = bigramsOfTokens(tokens(text))
 
-  /** Duplicate-token fraction 1 − unique/total: the simplest
-    * repetitive-document signal (a high value means the doc repeats
-    * its vocabulary; quality filters threshold it). */
-  def dupTokenFraction(text: Column): Column =
-    lit(1.0) - uniqueTokenCount(text).cast("double") / tokenCount(text).cast("double")
-
   /** BPE-ish subword-unit count: letter runs, digit runs, and single
     * punctuation marks each count as one unit — the regex shape of a
     * byte-pair pre-tokenizer, cheap enough to run inline over a corpus. */
@@ -139,13 +133,12 @@ object TextAnalysis {
         c => ascii(c).cast("long")),
       lit(0L), (acc, x) => (acc * 31 + x) % 1000000007L)
 
-  /** N-gram-free heuristic language ID: function-word density. Real
-    * pipelines plug a model here; the operator shape (per-row scalar,
-    * no shuffle) is what matters at scale. */
-  def langIdHeuristic(text: Column,
-                      stops: Seq[String] = DefaultStopwords,
-                      threshold: Double = 0.05): Column =
-    when(stopwordRatio(text, stops) >= threshold, lit("en"))
+  /** N-gram-free heuristic language ID: function-word density — "en"
+    * at a stopword ratio of at least 0.05. Real pipelines plug a model
+    * here; the operator shape (per-row scalar, no shuffle) is what
+    * matters at scale. */
+  def langIdHeuristic(text: Column): Column =
+    when(stopwordRatio(text) >= 0.05, lit("en"))
       .otherwise(lit("unknown"))
 
   /** PII redaction patterns — the Stack/StarCoder-style scrub step
@@ -190,23 +183,21 @@ object TextAnalysis {
     * each document to train/val/test by a content-hash bucket —
     * reproducible across runs, engines, and partitionings (no RNG, no
     * sampling state), and stable under re-sharding of the corpus.
-    * Buckets: md5 first byte (0..255); val = [0, valPct*256),
-    * test = next band, train = rest. */
-  def hashSplit(keyCol: Column, valPct: Double = 0.1, testPct: Double = 0.1): Column = {
+    * Buckets: md5 first byte (0..255); val = [0, 25), test = [25, 50),
+    * train = rest — a ~10/10/80 split the oracle SQL of d11, d12 and
+    * d42 spells out. */
+  def hashSplit(keyCol: Column): Column = {
     val bucket = conv(substring(md5(keyCol), 1, 2), 16, 10).cast("int")
-    val valMax = (valPct * 256).toInt
-    val testMax = valMax + (testPct * 256).toInt
-    when(bucket < valMax, lit("val"))
-      .when(bucket < testMax, lit("test"))
+    when(bucket < 25, lit("val"))
+      .when(bucket < 50, lit("test"))
       .otherwise(lit("train"))
   }
 
   /** Composite quality score in [0,1]: length credit (saturating at 100
     * tokens) + stopword-density credit. Deterministic: exact ints into
     * a fixed IEEE expression tree. */
-  def qualityScore(text: Column,
-                   stops: Seq[String] = DefaultStopwords): Column = {
+  def qualityScore(text: Column): Column = {
     val lenCredit = least(tokenCount(text), lit(100L)).cast("double") / 100.0
-    lenCredit * 0.7 + stopwordRatio(text, stops) * 0.3
+    lenCredit * 0.7 + stopwordRatio(text) * 0.3
   }
 }

@@ -519,8 +519,9 @@ case class ChunksExpr(child: Expression, size: Int, stride: Int)
   * sf10 decade showed up as GC-bound superlinear growth. This is one
   * byte scan with an open-addressing span table: O(n) per row, zero
   * per-shingle allocation, inside whole-stage codegen. Equivalence
-  * with the sorted-max-run form pinned on random strings in
-  * NativeKernelPropertySpec. */
+  * with a count-per-distinct-shingle maximum is pinned on random
+  * strings in PropertySpec "native text kernels == declarative forms
+  * on random space-riddled strings". */
 case class TopShingleCountExpr(child: Expression, k: Int)
   extends UnaryExpression {
   require(k >= 1, s"k must be >= 1, got $k")

@@ -332,7 +332,13 @@ object TextQueries {
     * counts. The oracle replays the full composition stage by stage —
     * the same fragments d05/d07/d03/d04/d11 pinned individually. */
   private def d12(s: SparkSession, dir: String): DataFrame =
-    graft.operators.CorpusPipeline.curate(Tables.documents(s, dir))
+    splitCounts(graft.operators.CorpusPipeline.curate(Tables.documents(s, dir)))
+
+  /** The per-split doc/token counts every curation query reports
+    * (d12, and d28/d31/d32/d39 over the pair index) — the shape
+    * `d12Sql` pins. */
+  private def splitCounts(curated: DataFrame): DataFrame =
+    curated
       .groupBy(col("split"))
       .agg(count(lit(1)).as("n_docs"),
         sum(TextAnalysis.tokenCount(col("text"))).as("sum_tokens"))
@@ -1061,11 +1067,7 @@ object TextQueries {
     // every repeated bench run) consume the SAME artifact, exactly as
     // a deployment amortizes a standing index across its consumers
     val idx = StandingFixtures.fullDocIndex(s, dir)
-    graft.operators.PairIndex.curateFromIndex(s, idx, "doc_id", "text")
-      .groupBy(col("split"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(TextAnalysis.tokenCount(col("text"))).as("sum_tokens"))
-      .orderBy(col("split"))
+    splitCounts(graft.operators.PairIndex.curateFromIndex(s, idx, "doc_id", "text"))
   }
 
   /** Shared-pair-index cluster assignment (d29): d18's cluster shape
@@ -1164,11 +1166,7 @@ object TextQueries {
       s, base, docs.filter(pmod(col("doc_id"), lit(64)) === 0), "doc_id", "text",
       economyGuard = Double.PositiveInfinity)
     PairIndex.keepLatest(s, "d31", adv.idx)
-    PairIndex.curateFromIndex(s, adv.idx, "doc_id", "text")
-      .groupBy(col("split"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(TextAnalysis.tokenCount(col("text"))).as("sum_tokens"))
-      .orderBy(col("split"))
+    splitCounts(PairIndex.curateFromIndex(s, adv.idx, "doc_id", "text"))
   }
 
   /** Guard-ON pair-index advance (d39, round-18 — VERDICT item 2):
@@ -1194,11 +1192,7 @@ object TextQueries {
     val adv = PairIndex.advanceDocIndex(
       s, base, docs.filter(pmod(col("doc_id"), lit(64)) === 0), "doc_id", "text")
     PairIndex.keepLatest(s, "d39", adv.idx)
-    PairIndex.curateFromIndex(s, adv.idx, "doc_id", "text")
-      .groupBy(col("split"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(TextAnalysis.tokenCount(col("text"))).as("sum_tokens"))
-      .orderBy(col("split"))
+    splitCounts(PairIndex.curateFromIndex(s, adv.idx, "doc_id", "text"))
   }
 
   /** Frozen-cap pair-index advance (d32, round-13): the CHEAP daily
@@ -1229,11 +1223,7 @@ object TextQueries {
       s, base, docs.filter(pmod(col("doc_id"), lit(64)) === 0), "doc_id", "text",
       frozenCaps = true, assertNoCapFlips = true)
     PairIndex.keepLatest(s, "d32", adv.idx)
-    PairIndex.curateFromIndex(s, adv.idx, "doc_id", "text")
-      .groupBy(col("split"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(TextAnalysis.tokenCount(col("text"))).as("sum_tokens"))
-      .orderBy(col("split"))
+    splitCounts(PairIndex.curateFromIndex(s, adv.idx, "doc_id", "text"))
   }
 
   def specs: Seq[QuerySpec] = Seq(

@@ -67,7 +67,7 @@ object VectorQueries {
     // identical signs to Similarity.lshBucket — generated by the same
     // function, inlined as a (plane, dim, sign) literal table
     val hpRows = (0 until planes).flatMap { p =>
-      Similarity.hyperplane(p, 64).zipWithIndex.map { case (sgn, d) =>
+      Similarity.hyperplane(p).zipWithIndex.map { case (sgn, d) =>
         s"($p, ${d + 1}, ${if (sgn > 0) "1.0" else "-1.0"})"
       }
     }.mkString(", ")
@@ -409,7 +409,7 @@ object VectorQueries {
     // identical signs to Similarity.lshBucket — generated by the same
     // function, inlined as a (plane, dim, sign) literal table
     val hpRows = (0 until maxPlanes).flatMap { p =>
-      Similarity.hyperplane(p, 64).zipWithIndex.map { case (sgn, d) =>
+      Similarity.hyperplane(p).zipWithIndex.map { case (sgn, d) =>
         s"($p, ${d + 1}, ${if (sgn > 0) "1.0" else "-1.0"})"
       }
     }.mkString(", ")
@@ -420,7 +420,7 @@ object VectorQueries {
     // spill space
     s"""WITH params$x AS (
        | SELECT GREATEST(1, LEAST($maxPlanes,
-       |   CAST(CEIL(LOG2(CAST(GREATEST(1, (COUNT(*) + 63) // 64) AS DOUBLE))) AS INT))) AS pl
+       |   CAST(CEIL(LOG2(CAST(GREATEST(1, (COUNT(*) + ${Similarity.TargetOccupancy - 1}) // ${Similarity.TargetOccupancy}) AS DOUBLE))) AS INT))) AS pl
        | FROM $src),
        |hp$x AS (SELECT * FROM (VALUES $hpRows) AS t(p, i, sgn)),
        |hpl$x AS (SELECT p, list(sgn ORDER BY i) AS sgns FROM hp$x GROUP BY p),
@@ -653,7 +653,7 @@ object VectorQueries {
   private def lshBandedPairCteFor(src: String, x: String): String =
     s"""WITH params$x AS (
        | SELECT GREATEST(1, LEAST($maxPlanes,
-       |   CAST(CEIL(LOG2(CAST(GREATEST(1, (COUNT(*) + 63) // 64) AS DOUBLE))) AS INT))) AS pl
+       |   CAST(CEIL(LOG2(CAST(GREATEST(1, (COUNT(*) + ${Similarity.TargetOccupancy - 1}) // ${Similarity.TargetOccupancy}) AS DOUBLE))) AS INT))) AS pl
        | FROM $src),
        |hpb$x AS (
        | SELECT p, i,

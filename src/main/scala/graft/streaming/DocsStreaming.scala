@@ -33,8 +33,8 @@ import org.apache.spark.sql.types.StructType
   * Scale notes: state is one boolean per DISTINCT canonical form —
   * the minimum any exact-dedup-over-a-stream can carry; keys are md5
   * digests so state size is corpus-shaped, not text-shaped. Unlike
-  * `dropDuplicatesWithinWatermark` (the EventsStreaming face, state
-  * bounded by a time horizon), corpus dedup is exact-forever by
+  * a watermarked `dropDuplicatesWithinWatermark` (state bounded by a
+  * time horizon), corpus dedup is exact-forever by
   * contract: bound state at 100 TB by sharding the stream on the key
   * (state partitions by the groupByKey exchange already) and by
   * periodic state-store compaction. The foreachBatch parquet append

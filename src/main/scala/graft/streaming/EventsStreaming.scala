@@ -93,8 +93,8 @@ object EventsStreaming {
     * into a multi-batch replay that `readChunkDirStream` reads back.
     * The single-file source above degenerates to one micro-batch,
     * which exercises none of the cross-batch machinery; a ts-ordered
-    * chunk replay is what proves watermark advance, session merges
-    * ACROSS batches, and carried mapGroupsWithState state. */
+    * chunk replay is what proves watermark advance and session merges
+    * ACROSS batches. */
   def eventsFile(spark: SparkSession, dir: String): DataFrame =
     spark.read.schema(layout(spark, dir)._1).parquet(eventsPath(dir).toString)
 
@@ -130,97 +130,10 @@ object EventsStreaming {
   val mergeSessionsLocally: Map[String, String] = Map(
     "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition" -> "true")
 
-  /** Watermarked streaming deduplication: drop events whose event_id
-    * reappears within the watermark horizon — the streaming face of the
-    * exact-dedup operator (state bounded by the watermark, so memory is
-    * O(events per horizon), not O(stream)). Uses
-    * dropDuplicatesWithinWatermark so a redelivered id with a restamped
-    * timestamp is still deduplicated. */
-  def dedupedEvents(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "30 minutes")
-      .dropDuplicatesWithinWatermark("event_id")
-
-  /** Stream-stream join: purchases joined to errors of the same user
-    * within a ±10-minute event-time band. Both sides watermarked, so
-    * join state expires; the time-band condition is what bounds the
-    * buffered range. */
-  def purchasesNearErrors(events: DataFrame): DataFrame = {
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-        col("event_id").as("purchase_id"))
-      .withWatermark("p_ts", "30 minutes")
-    val errors = events.filter(col("event_type") === "error")
-      .select(col("user_id").as("e_user"), col("ts").as("e_ts"),
-        col("event_id").as("error_id"))
-      .withWatermark("e_ts", "30 minutes")
-    purchases.join(errors,
-      col("p_user") === col("e_user") &&
-        col("e_ts") >= col("p_ts") - expr("INTERVAL 10 MINUTES") &&
-        col("e_ts") <= col("p_ts") + expr("INTERVAL 10 MINUTES"))
-      .select(col("purchase_id"), col("error_id"), col("p_user").as("user_id"))
-  }
-
-  /** Custom arbitrary state via mapGroupsWithState: per-user running
-    * totals (event count + value cents) carried across micro-batches.
-    * This is the escape hatch for state machines session_window can't
-    * express; here it doubles as the API demonstration, validated in
-    * batch-equivalent form by StreamingSpec. */
-  case class UserState(userId: Long, nEvents: Long, valueCents: Long)
-
-  def userRunningTotals(spark: SparkSession,
-                        events: DataFrame): org.apache.spark.sql.Dataset[UserState] = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.GroupStateTimeout
-    events
-      .select(col("user_id").as("userId"),
-        col("event_id"),
-        graft.functions.ExactNum.cents(col("value")).as("valueCents"))
-      .as[(Long, Long, Long)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[UserState, UserState](GroupStateTimeout.NoTimeout) {
-        case (uid, rows, state) =>
-          val prev = state.getOption.getOrElse(UserState(uid, 0L, 0L))
-          var n = prev.nEvents
-          var v = prev.valueCents
-          rows.foreach { r => n += 1; v += r._3 }
-          val next = UserState(uid, n, v)
-          state.update(next)
-          next
-      }
-  }
-
-  /** flatMapGroupsWithState: zero-or-more outputs per group per batch —
-    * here, an alert row the first time a user's running spend crosses
-    * the threshold (state remembers both the total and whether the
-    * alert already fired, so re-deliveries emit nothing). */
-  case class SpendState(totalCents: Long, alerted: Boolean)
-  case class SpendAlert(userId: Long, totalCents: Long)
-
-  def spendAlerts(spark: SparkSession, events: DataFrame,
-                  thresholdCents: Long): org.apache.spark.sql.Dataset[SpendAlert] = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    events
-      .select(col("user_id").as("userId"),
-        graft.functions.ExactNum.cents(col("value")).as("valueCents"))
-      .as[(Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[SpendState, SpendAlert](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (uid, rows, state: GroupState[SpendState]) =>
-          val prev = state.getOption.getOrElse(SpendState(0L, alerted = false))
-          val total = prev.totalCents + rows.map(_._2).sum
-          val fire = !prev.alerted && total >= thresholdCents
-          state.update(SpendState(total, prev.alerted || fire))
-          if (fire) Iterator(SpendAlert(uid, total)) else Iterator.empty
-      }
-  }
-
-  /** Stateful per-user sessionization via flatMapGroupsWithState-style
-    * processing expressed with built-in session windows: events within
-    * `gap` of each other form one session (custom state without custom
-    * state code — session_window is Catalyst-native and codegen'd). */
+  /** Stateful per-user sessionization with built-in session windows:
+    * events within `gap` of each other form one session (custom state
+    * without custom state code — session_window is Catalyst-native and
+    * codegen'd). */
   def userSessions(events: DataFrame, gap: String = "10 minutes"): DataFrame =
     events
       .withWatermark("ts", "30 minutes")

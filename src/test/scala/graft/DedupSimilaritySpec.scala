@@ -60,61 +60,10 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestSession {
     assert(capped.map(r => (r.getLong(0), r.getLong(1))).toSeq === Seq((100L, 101L)))
   }
 
-  test("simhash: identical docs share a fingerprint; pairs respect hamming") {
+  test("simhash: identical docs share a fingerprint") {
     val sim = Dedup.simhash64(docs, "doc_id", "text")
     val byId = sim.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(byId(1L) === byId(2L))
-    val pairs = Dedup.simhashPairs(sim, maxHamming = 3)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
-    assert(pairs((1L, 2L)) === 0L)
-    pairs.values.foreach(h => assert(h <= 3L))
-  }
-
-  test("simhash byte banding is pigeonhole-complete for hamming <= 7") {
-    // Synthetic fingerprints that stress every band INCLUDING the sign
-    // byte (band 7): base, flips of 1..7 bits spread across different
-    // bytes, a bit-63 flip (negative long), and an 8-bit flip that a
-    // complete blocking must NOT return at maxHamming=7.
-    val base = 0x0123456789abcdefL
-    val all = Seq(
-      10L -> base,
-      11L -> (base ^ 1L),                                    // hamming 1
-      12L -> (base ^ (1L << 8) ^ (1L << 16) ^ (1L << 24)),   // hamming 3
-      13L -> (base ^ 0x7fL),                                 // 7 bits in one byte
-      14L -> (base ^ (1L << 63)),                            // sign byte flip
-      15L -> (base ^ ((1L << 56) | (1L << 48) | (1L << 40) | (1L << 32) |
-                      (1L << 20) | (1L << 12) | (1L << 4))), // 7 bits, 7 bytes
-      16L -> (base ^ 0xff00L))                               // hamming 8: excluded
-    val got = Dedup.simhashPairs(all.toDF("doc_id", "simhash"), maxHamming = 7)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
-    // brute-force ground truth over all pairs
-    val want = (for {
-      (i, a) <- all; (j, b) <- all if i < j
-      h = java.lang.Long.bitCount(a ^ b) if h <= 7
-    } yield ((i, j), h.toLong)).toMap
-    assert(got === want, "banded pairs must equal brute-force hamming<=7 pairs")
-    assert(!got.contains((10L, 16L))) // hamming 8 correctly outside radius
-  }
-
-  test("simhash default r=3 banding (4×16-bit) is pigeonhole-complete") {
-    // worst case for 16-bit bands: 3 flipped bits landing in 3 DIFFERENT
-    // bands (only one band survives untouched), plus a sign-band flip,
-    // plus a hamming-4 pair that must be excluded at r=3
-    val base = 0x0123456789abcdefL
-    val all = Seq(
-      20L -> base,
-      21L -> (base ^ (1L << 0) ^ (1L << 16) ^ (1L << 32)),   // 3 bits, 3 bands
-      22L -> (base ^ (1L << 63) ^ (1L << 47) ^ (1L << 31)),  // incl. sign band
-      23L -> (base ^ (1L << 1) ^ (1L << 17) ^ (1L << 33) ^ (1L << 49))) // hamming 4
-    val got = Dedup.simhashPairs(all.toDF("doc_id", "simhash"), maxHamming = 3)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
-    val want = (for {
-      (i, a) <- all; (j, b) <- all if i < j
-      h = java.lang.Long.bitCount(a ^ b) if h <= 3
-    } yield ((i, j), h.toLong)).toMap
-    assert(got === want, "banded pairs must equal brute-force hamming<=3 pairs")
-    assert(!got.keySet.exists { case (i, j) => i == 23L || j == 23L },
-      "hamming-4 fingerprint must pair with nothing at r=3")
   }
 
   test("winnowing: shared runs >= w+k-1 share a fingerprint; compression holds") {
@@ -139,20 +88,18 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestSession {
       s"winnowing must compress: ${fp(1L).size} fingerprints vs $doc1Kgrams k-grams")
   }
 
-  test("repetition signals: bigrams with multiplicity, dup-token fraction") {
+  test("repetition signals: bigrams with multiplicity") {
     import graft.operators.TextAnalysis
     val df = Seq(
-      (1L, "spam spam spam spam"),          // dup 0.75; "spam spam" x3 -> top frac 1.0
-      (2L, "all tokens here are different"), // dup 0; every bigram unique -> 0.25
+      (1L, "spam spam spam spam"),          // "spam spam" x3 -> top frac 1.0
+      (2L, "all tokens here are different"), // every bigram unique -> 0.25
       (3L, "one"))                           // single token: no bigrams
       .toDF("doc_id", "text")
-    val bg = df.select(col("doc_id"), TextAnalysis.bigrams(col("text")).as("b"),
-        TextAnalysis.dupTokenFraction(col("text")).as("d"))
-      .collect().map(r => r.getLong(0) -> (r.getSeq[String](1), r.getDouble(2))).toMap
-    assert(bg(1L)._1 === Seq("spam spam", "spam spam", "spam spam"))
-    assert(bg(1L)._2 === 0.75)
-    assert(bg(2L)._1.distinct.size === 4 && bg(2L)._2 === 0.0)
-    assert(bg(3L)._1.isEmpty)
+    val bg = df.select(col("doc_id"), TextAnalysis.bigrams(col("text")).as("b"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
+    assert(bg(1L) === Seq("spam spam", "spam spam", "spam spam"))
+    assert(bg(2L).distinct.size === 4)
+    assert(bg(3L).isEmpty)
   }
 
   test("d16: per-row max-run bigram stats match the explode/groupBy reference") {
@@ -461,15 +408,12 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestSession {
 
   test("hash-coin sample is deterministic and near the nominal rate") {
     val emb = Tables.embeddings(spark, sfDir)
-    val keep = Similarity.hashCoin(col("vec_id")) // default ¼
+    val keep = Similarity.hashCoin(col("vec_id")) // ¼
     val n1 = emb.filter(keep).count()
     val n2 = emb.filter(keep).count()
     assert(n1 === n2, "hash-coin must be deterministic across runs")
     val rate = n1.toDouble / emb.count()
     assert(rate > 0.15 && rate < 0.35, f"¼-coin kept $rate%.2f of rows")
-    intercept[IllegalArgumentException] {
-      Similarity.hashCoin(col("vec_id"), 16)
-    }
   }
 
   test("near-dup cells sizing: √N default + recall at two cell counts (sampled universe)") {
@@ -522,7 +466,6 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestSession {
     assert(Similarity.planesFor(5000) === 7)
     assert(Similarity.planesFor(500000) === 13)
     assert(Similarity.planesFor(Long.MaxValue / 4) === 16) // cap
-    intercept[IllegalArgumentException](Similarity.planesFor(10, 0))
     // recall methodology as for the IVF-blocked path: exact all-pairs
     // on the hash-coin sampled universe, LSH-blocked on the same
     val emb = Tables.embeddings(spark, sfDir)
@@ -549,8 +492,8 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestSession {
     // planes, A=(h0+h1)/8 lands in bucket 3, C=-A in bucket 0, and
     // D=(h0-h1)/8 in bucket 1 (hamming 1 from A). 10 copies of A make
     // bucket 3 hot at cap 8.
-    val h0 = Similarity.hyperplane(0, 64)
-    val h1 = Similarity.hyperplane(1, 64)
+    val h0 = Similarity.hyperplane(0)
+    val h1 = Similarity.hyperplane(1)
     def mix(a: Double, b: Double): Array[Float] =
       h0.zip(h1).map { case (x, y) => ((a * x + b * y) / 8.0).toFloat }
     val a = mix(1, 1); val c = mix(-1, -1); val d = mix(1, -1)
@@ -715,7 +658,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestSession {
     ks.foreach { k =>
       val viaDouble = math.min(16, math.max(1,
         math.ceil(math.log(k.toDouble) / math.log(2.0)).toInt))
-      val viaBits = Similarity.planesFor(k * 64) // targetOccupancy=64 → this k
+      val viaBits = Similarity.planesFor(k * Similarity.TargetOccupancy) // → this k
       assert(viaDouble === viaBits, s"k=$k double=$viaDouble bits=$viaBits")
     }
   }
@@ -785,37 +728,17 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestSession {
     assert(strict === Set(1L)) // keep-first: smaller id 1 survives, 3 drops
   }
 
-  test("curation persists survivors by default (both consumers read the " +
-       "cache); opt-out plan is cache-free; release() drops the cache") {
+  test("curate persists survivors: both consumers read the cache") {
     import graft.operators.CorpusPipeline
-    import org.apache.spark.storage.StorageLevel
-    // round-11 default flip (see CorpusPipeline scaladoc for the
-    // four-rung A/B): the survivor set feeds two consumers (shingle
-    // pipeline + anti-join left side) and exchange reuse does not
-    // reliably cover the shared subtree, so the default plan must
-    // surface the cache boundary as InMemoryTableScan on BOTH reads
-    val (curated, release) = CorpusPipeline.curateManaged(docs,
-      minQuality = 0.1,
-      persistSurvivors = Some(StorageLevel.MEMORY_AND_DISK))
-    try {
-      val plan = curated.queryExecution.executedPlan.toString
-      val scans = "InMemoryTableScan".r.findAllIn(plan).size
-      assert(scans >= 2, s"expected both consumers to read the cache, got $scans:\n$plan")
-      // default == the managed opt-in level
-      val defaultPlan = CorpusPipeline.curate(docs, minQuality = 0.1)
-        .queryExecution.executedPlan.toString
-      assert(defaultPlan.contains("InMemoryTableScan"),
-        s"default curate must persist survivors:\n$defaultPlan")
-    } finally release()
-    // opt-out: explicit None plans without any cache boundary
-    val optOut = CorpusPipeline.curate(docs, minQuality = 0.1,
-        persistSurvivors = None)
+    // round-11 policy (see CorpusPipeline scaladoc for the four-rung
+    // A/B): the survivor set feeds two consumers (shingle pipeline +
+    // anti-join left side) and exchange reuse does not reliably cover
+    // the shared subtree, so the plan must surface the cache boundary
+    // as InMemoryTableScan on BOTH reads
+    val plan = CorpusPipeline.curate(docs, minQuality = 0.1)
       .queryExecution.executedPlan.toString
-    assert(!optOut.contains("InMemoryTableScan"),
-      s"opt-out curate must not cache:\n$optOut")
-    // the cache manager matches by logical plan, so if release() leaked
-    // the cache the opt-out plan above would have silently picked it
-    // up — the assert doubles as the leak check
+    val scans = "InMemoryTableScan".r.findAllIn(plan).size
+    assert(scans >= 2, s"expected both consumers to read the cache, got $scans:\n$plan")
   }
 
   test("e05 plan is cartesian-free (the point of blocking)") {
@@ -1502,27 +1425,6 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestSession {
         maxOcc = 1)
     }
   }
-
-  test("jaccardPairsHashed: pairWidth override rewires the pinned shuffles, rows identical") {
-    // round-16 ADVICE: a batch-scale invocation inside a session sized
-    // for a large corpus must be able to override the session pin
-    val sh = Dedup.shingles(docs, "doc_id", "text", 3)
-      .select(col("doc_id"), xxhash64(col("s")).as("s"))
-      .repartition(col("s")).distinct()
-    val dflt = Dedup.jaccardPairsHashed(sh, 0.35)
-    val overridden = Dedup.jaccardPairsHashed(sh, 0.35, pairWidth = Some(3))
-    val p = overridden.queryExecution.executedPlan.toString
-    assert("hashpartitioning\\([^)]*, 3\\), REPARTITION_BY_NUM".r
-      .findAllIn(p).size >= 2,
-      s"pairWidth=3 did not reach both pinned exchanges:\n$p")
-    assert(dflt.collect().map(_.toString).sorted.toSeq ===
-      overridden.collect().map(_.toString).sorted.toSeq)
-    intercept[IllegalArgumentException] {
-      Dedup.jaccardPairsHashed(sh, 0.35, pairWidth = Some(0))
-    }
-  }
-
-  // ---------------- SemDeDup generator twin (round-17, VERDICT 6) ----------------
 
   test("semDedup keep-set contract holds under BOTH candidate generators " +
       "on a fixture where they disagree") {

@@ -19,7 +19,7 @@ class EnrichEdgeSpec extends AnyFunSuite with SparkTestSession {
     val partial = OmdbJson.parse(
       """{"Response":"True","imdbID":"tt1","imdbRating":"N/A"}""").get
     assert(partial.director === None)
-    assert(partial.imdbRating === Some("N/A")) // raw; nullifNA is a transform concern
+    assert(partial.imdbRating === Some("N/A")) // raw; cleaning "N/A" is a transform concern
   }
 
   test("F5 coercion parity: malformed ratings rows null out and are dropped") {

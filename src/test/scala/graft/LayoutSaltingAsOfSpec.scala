@@ -1,7 +1,7 @@
 package graft
 
 import graft.etl.Layout
-import graft.operators.{AsOfJoin, Salting}
+import graft.operators.Salting
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -84,22 +84,6 @@ class LayoutSaltingAsOfSpec extends AnyFunSuite with SparkTestSession {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  test("partitioned layout prunes non-matching partitions at scan") {
-    val dir = "/root/testdata/sf0.001"
-    val out = java.nio.file.Files.createTempDirectory("graft_part").toString
-    Layout.writePartitioned(
-      Tables.orders(spark, dir)
-        .withColumn("order_year", year(col("o_orderdate"))),
-      out, "order_year")
-    val pruned = spark.read.parquet(out).filter(col("order_year") === 1996)
-    assert(Layout.partitionFilterCount(pruned) >= 1,
-      pruned.queryExecution.executedPlan.toString)
-    assert(pruned.count() > 0)
-    // pruned read touches only the matching partition directory's rows
-    val full = spark.read.parquet(out)
-    assert(pruned.count() === full.filter(col("order_year") === 1996).count())
-  }
-
   test("IVF assigned table bucketed by cell_id: near-dup pair join has no Exchange") {
     // the at-scale layout the Ivf scaladoc promises: persist the cell
     // map bucketed on cell_id, and the e05-style pair self-join runs
@@ -160,21 +144,5 @@ class LayoutSaltingAsOfSpec extends AnyFunSuite with SparkTestSession {
     assert(salted.count() === plain.count())
     assert(salted.select("k", "v").groupBy("k", "v").count().collect().toSet ===
       plain.select("k", "v").groupBy("k", "v").count().collect().toSet)
-  }
-
-  test("two-table as-of join attaches most recent prior payload") {
-    val quotes = Seq(
-      (1L, 10L, 100.0, 1L), (1L, 20L, 101.0, 2L), (1L, 30L, 102.0, 3L),
-      (2L, 15L, 200.0, 4L)).toDF("sym", "t", "px", "quote_id")
-    val trades = Seq(
-      (1L, 25L, 101L), (1L, 5L, 102L), (2L, 15L, 103L), (3L, 9L, 104L))
-      .toDF("sym", "t", "trade_id")
-    val out = AsOfJoin.asOfPrior(trades, quotes, "sym", "t", "trade_id", "quote_id")
-      .select(col("trade_id"), col("asof.px").as("px"))
-      .collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap
-    assert(out(101L) === Some(101.0)) // trade t=25 sees quote t=20
-    assert(out(102L) === None)        // trade t=5 predates all quotes
-    assert(out(103L) === Some(200.0)) // equal timestamps visible
-    assert(out(104L) === None)        // no quotes for sym 3
   }
 }

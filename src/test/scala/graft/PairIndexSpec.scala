@@ -750,6 +750,17 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     assert(!spark.catalog.tableExists(weird))
   }
 
+  test("liveOwner: own pid is live; a dead or overflowing pid tag is stale") {
+    // the one owner-tag parser behind both sweepStale and
+    // LocalCatalog.reset's concurrent-JVM guard
+    val self = ProcessHandle.current().pid()
+    assert(LocalCatalog.liveOwner(s"graft_pair_index_p${self}_g7") === Some(self))
+    // a pid far past the kernel pid ceiling is never a live process
+    assert(LocalCatalog.liveOwner("graft_pair_index_p999999999_g1") === None)
+    assert(LocalCatalog.liveOwner(
+      "graft_pair_index_p99999999999999999999_g1") === None)
+  }
+
   test("autoBuckets falls back to the floor on unknown-stats inputs") {
     // a LogicalRDD (createDataFrame over an RDD) reports Catalyst's
     // defaultSizeInBytes sentinel, not a real estimate — trusting it

@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.ExactNum
 import graft.queries.Registry
 import graft.sources.Tables
 import graft.streaming.{DocsStreaming, EventsStreaming, Replay}
@@ -89,86 +88,6 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getLong(3)))
       .toSet
     assert(sunk === batch)
-  }
-
-  test("mapGroupsWithState running totals match a plain aggregation") {
-    val q = EventsStreaming.userRunningTotals(
-      spark, EventsStreaming.readEventsStream(spark, sfDir))
-      .writeStream.outputMode("update").format("memory")
-      .queryName("user_totals_test")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // update mode emits one row per (user, batch); the last per user is
-    // the final state — with a single AvailableNow batch there is one.
-    val streamed = spark.table("user_totals_test")
-      .groupBy("userId")
-      .agg(max("nEvents").as("n"), max("valueCents").as("v"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val batch = Tables.events(spark, sfDir)
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n"), sum(ExactNum.cents(col("value"))).as("v"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(streamed === batch)
-  }
-
-  test("stream-stream time-band join matches its batch equivalent") {
-    val q = EventsStreaming.purchasesNearErrors(
-      EventsStreaming.readEventsStream(spark, sfDir))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("pp_near_err_test")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val streamed = spark.table("pp_near_err_test")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // batch equivalent of the same band join
-    val ev = graft.sources.Tables.events(spark, sfDir)
-    val p = ev.filter(org.apache.spark.sql.functions.col("event_type") === "purchase")
-      .selectExpr("user_id AS pu", "ts AS pts", "event_id AS pid")
-    val e = ev.filter(org.apache.spark.sql.functions.col("event_type") === "error")
-      .selectExpr("user_id AS eu", "ts AS ets", "event_id AS eid")
-    val batch = p.join(e, org.apache.spark.sql.functions.expr(
-      "pu = eu AND ets >= pts - INTERVAL 10 MINUTES AND ets <= pts + INTERVAL 10 MINUTES"))
-      .collect().map(r => (r.getAs[Long]("pid"), r.getAs[Long]("eid"))).toSet
-    assert(streamed === batch)
-    assert(streamed.nonEmpty)
-  }
-
-  test("watermarked streaming dedup passes unique events through") {
-    val q = EventsStreaming.dedupedEvents(
-      EventsStreaming.readEventsStream(spark, sfDir))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("dedup_events_test")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // event_ids are unique in the source, so dedup must be lossless
-    assert(spark.table("dedup_events_test").count() ===
-      graft.sources.Tables.events(spark, sfDir).count())
-  }
-
-  test("flatMapGroupsWithState emits one alert per user crossing the threshold") {
-    val threshold = 300000L // $3k in cents — splits the sf0.001 users
-    val q = EventsStreaming.spendAlerts(
-      spark, EventsStreaming.readEventsStream(spark, sfDir), threshold)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("spend_alerts_test")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val alertRows = spark.table("spend_alerts_test").collect()
-    val alerts = alertRows.map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(alertRows.length === alerts.size, "duplicate alerts for a user")
-    // batch truth: users whose total spend crosses the threshold
-    val totals = Tables.events(spark, sfDir)
-      .groupBy(col("user_id"))
-      .agg(sum(ExactNum.cents(col("value"))).as("total"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val expected = totals.filter(_._2 >= threshold).keySet
-    assert(alerts.keySet === expected)
-    assert(alerts.nonEmpty)
-    alerts.foreach { case (u, t) => assert(t >= threshold && t <= totals(u)) }
   }
 
   test("session_window assignment == batch Sessionize twin (per-user session sizes)") {

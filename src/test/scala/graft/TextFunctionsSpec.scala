@@ -82,11 +82,4 @@ class TextFunctionsSpec extends AnyFunSuite with SparkTestSession {
     assert(out(0) === Seq("Adventure", "Animation", "Comedy"))
     assert(out(1) === Seq("(no genres listed)"))
   }
-
-  test("nullifNA maps the OMDb sentinel") {
-    val out = Seq("N/A", "Nolan").toDF("d")
-      .select(TextFunctions.nullifNA(col("d")))
-      .collect().map(r => Option(r.getString(0)))
-    assert(out.toSeq === Seq(None, Some("Nolan")))
-  }
 }

@@ -37,7 +37,7 @@ def planes_check(con) -> int:
                  for d in (-1, 0, 1)} | {1, 3, 5, 100})
     bad = 0
     for k in ks:
-        # engine: planesFor over n = k*64 (targetOccupancy=64) ->
+        # engine: planesFor over n = k*64 (TargetOccupancy=64) ->
         # ceil(log2(k)) via bit length, clamped to [1, 16]
         ceil_log2 = 0 if k <= 1 else (k - 1).bit_length()
         eng = min(16, max(1, ceil_log2))

@@ -5,7 +5,7 @@
 #   (a) reader's consumption == writer's consumption
 #   (b) reader's cross-JVM advance == reader's from-scratch full build
 set -euo pipefail
-cd /root/repo
+cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.01}
 rm -rf spark-warehouse metastore_db
 sbt -batch "runMain graft.tools.CrossJvmPin write $SF" 2>/dev/null \

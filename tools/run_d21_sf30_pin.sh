@@ -10,11 +10,12 @@
 # round 15: duckdb_temp_storage hit "No space left on device" with
 # ~76 GB free at start).
 set -euo pipefail
+cd "$(dirname "$0")/.."
 out=/tmp/vout_sf30_d21
 SPARK_DRIVER_MEM=64g \
 SPARK_GRAFT_CPUS=32 \
 SPARK_GRAFT_VERIFY_ONLY=d21_cluster_curation \
-  sbt -batch "runMain graft.Verify /root/repo/benchdata/sf30 $out" 2>&1 \
+  sbt -batch "runMain graft.Verify $PWD/benchdata/sf30 $out" 2>&1 \
   | grep -E "\[verify\]|success" | tail -2
-python3 /root/repo/tools/pin_d21_sf30.py /root/repo/benchdata/sf30 "$out" /root/d21_pin_work
+python3 tools/pin_d21_sf30.py benchdata/sf30 "$out" /tmp/d21_pin_work
 echo D21_SF30_PIN_COMPLETE

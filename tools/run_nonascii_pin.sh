@@ -3,7 +3,7 @@
 # fixture, dump the engine's m01-m06 over it, compare against the
 # committed oracle SQL byte-for-byte -> CORRECTNESS_nonascii_r18.json
 set -euo pipefail
-cd /root/repo
+cd "$(dirname "$0")/.."
 FIX=/tmp/graft_nonascii_fixture
 OUT=/tmp/graft_nonascii_vout
 rm -rf "$FIX" "$OUT"
