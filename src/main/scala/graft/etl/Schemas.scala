@@ -44,13 +44,3 @@ case class Movie(
     box_office: Option[String],
     imdb_rating: Option[Double],
     runtime: Option[String])
-
-case class Genre(genre_id: Int, genre_name: String)
-
-case class MovieGenre(movie_id: Int, genre_id: Int)
-
-case class Rating(
-    movie_id: Int,
-    user_id: Int,
-    rating: Double,
-    timestamp: Option[Long])

@@ -2,7 +2,6 @@ package graft.etl
 
 import graft.functions.TextFunctions
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The reference's transform layer (SURVEY.md §2.2/§2.4: P1-P7, A1-A3,

@@ -839,11 +839,8 @@ object Dedup {
           .as("jaccard_r4"))
   }
 
-  /** Default Jaccard threshold and the df cap of the incremental
-    * contract, shared with `PairIndex.dedupIncrementFromIndex` (d30)
-    * so it stays row-identical to `dedupIncrement` (d13). */
-  private[operators] val IncrementThreshold = 0.6
-  private[operators] val IncrementMaxDocFreq = 100
+  /** Default Jaccard threshold of d13 and d30, which must agree. */
+  private val IncrementThreshold = 0.6
 
   /** Incremental dedup — the daily-crawl workflow at corpus scale: a
     * new batch is deduplicated against an EXISTING corpus without
@@ -864,7 +861,21 @@ object Dedup {
     * keeping the two policies separate keeps both oracle-exact. */
   def dedupIncrement(corpus: DataFrame, incoming: DataFrame,
                      idCol: String, textCol: String,
-                     jaccardThreshold: Double = IncrementThreshold): DataFrame = {
+                     jaccardThreshold: Double = IncrementThreshold): DataFrame =
+    dedupIncrementAgainst(
+      corpus.select(TextAnalysis.textHash(col(textCol)).as("__h")).distinct(),
+      shingles(corpus, idCol, textCol, ShingleK),
+      incoming, idCol, textCol, jaccardThreshold)
+
+  /** The three stages of `dedupIncrement` against a corpus given as its
+    * canonical-hash set (`__h`) and its raw shingle relation — computed
+    * from the corpus (d13) or read from the standing artifacts (d30,
+    * `PairIndex.dedupIncrementFromIndex`), so the two stay row-identical
+    * by construction. */
+  private[operators] def dedupIncrementAgainst(
+      corpusHashes: DataFrame, corpusShingles: DataFrame, incoming: DataFrame,
+      idCol: String, textCol: String,
+      jaccardThreshold: Double = IncrementThreshold): DataFrame = {
     val batch = dropExactDuplicates(incoming, idCol, textCol)
     // merge hint: the corpus hash set is Θ(corpus docs) and its
     // distinct-aggregate size estimate is unreliably small, so the
@@ -873,16 +884,13 @@ object Dedup {
     // duplicated wherever `fresh` is reused, so the broadcast would
     // be built more than once). Sort-merge shuffles batch-vs-corpus
     // hashes linearly at any corpus size.
-    val corpusHashes = corpus
-      .select(TextAnalysis.textHash(col(textCol)).as("__h")).distinct()
     val fresh = batch
       .withColumn("__h", TextAnalysis.textHash(col(textCol)))
       .join(corpusHashes.hint("merge"), Seq("__h"), "left_anti")
       .drop("__h")
     val nearIds = crossJaccardPairs(
-        shingles(fresh, idCol, textCol, ShingleK),
-        shingles(corpus, idCol, textCol, ShingleK),
-        jaccardThreshold, IncrementMaxDocFreq)
+        shingles(fresh, idCol, textCol, ShingleK), corpusShingles,
+        jaccardThreshold, maxDocFreq = 100)
       .select(col("inc_id").as(idCol))
       .distinct()
     // same class: nearIds is batch-bounded in practice but estimated

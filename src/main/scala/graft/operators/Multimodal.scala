@@ -26,18 +26,6 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal {
 
-  /** Generic decoded-media metadata row — the cross-kind fixture/frame
-    * shape for the metadata-level operators (`resizeMeta` and
-    * `sampleFrames` consume any frame with these columns). */
-  case class MediaMeta(
-      media_id: Long,
-      kind: String,
-      n_bytes: Long,
-      width: Int,
-      height: Int,
-      n_frames: Int,
-      fingerprint: String)
-
   // ---------------- real BMP codec (round-14) ----------------
 
   /** One decoded 24-bit BMP: dimensions plus the pixel bytes in

@@ -19,18 +19,29 @@ import org.apache.spark.storage.StorageLevel
   * downstream consumer (drop-list curation, cluster assignment,
   * cluster-best selection, incremental dedup) JOINS the artifact.
   *
-  * Two artifacts, as a real pipeline maintains between runs:
+  * Four artifacts per generation, as a real pipeline maintains
+  * between runs, all bucketed with the same count:
   *  - `survivorsTable`: exact-dedup survivors, bucketed+sorted by the
   *    doc id. (Pair generation runs over survivors — clustering exact
   *    duplicates is pointless, and their identical shingle sets would
   *    only inflate per-shingle document frequencies toward the df-cap.)
-  *  - `pairsTable`: `Dedup.jaccardPairs` over the survivors (the exact
-  *    universe d07/d12 pin against DuckDB), bucketed+sorted by
-  *    `doc_id2` — the key the hottest consumer (the curation drop list
-  *    → anti join) probes with.
+  *  - `postingsTable`: the hashed shingle postings (doc_id, s: long)
+  *    of the survivors, bucketed by `s`. They make EXACT incremental
+  *    advance possible (`advanceDocIndex`): without them, a batch that
+  *    moves a shingle's df across the cap would need the whole corpus
+  *    re-shingled to rescore the affected pairs.
+  *  - `dfTable`: per-shingle df DELTA rows (s: long, cnt: long),
+  *    bucketed by `s`; a shingle's df is `sum(cnt)`. Advances append
+  *    ±counts instead of rewriting, and reading it is a bucket-local
+  *    aggregation over ~|distinct shingles| rows, not a recount of the
+  *    postings.
+  *  - `pairsTable`: `Dedup.jaccardPairsHashed` over the written
+  *    postings (the exact universe d07/d12 pin against DuckDB),
+  *    bucketed+sorted by `doc_id2` — the key the hottest consumer (the
+  *    curation drop list → anti join) probes with.
   *
-  * Because both tables are bucketed with the SAME bucket count on
-  * their join keys, the drop-list consumer plans with ZERO exchanges:
+  * Because survivors and pairs are bucketed with the SAME bucket count
+  * on their join keys, the drop-list consumer plans with ZERO exchanges:
   * the bucketed scans already satisfy the distinct's and the anti
   * join's distribution requirements (asserted by PairIndexSpec). At
   * 1000 executors that is the difference between re-shuffling the
@@ -43,29 +54,14 @@ import org.apache.spark.storage.StorageLevel
   */
 object PairIndex {
 
-  /** Catalog table names of one materialized index generation.
-    * `postingsTable` (present when materialized with
-    * `keepPostings = true`) is the hashed shingle posting relation
-    * (doc_id, s: long) bucketed by `s` — the third standing artifact
-    * that makes EXACT incremental advance possible
-    * (`advanceDocIndex`): without it, a batch that pushes a shingle's
-    * document frequency across the df-cap would require re-shingling
-    * the whole corpus to rescore the affected pairs.
-    *
-    * `dfTable` (round-13) is the FOURTH standing artifact: per-shingle
-    * document-frequency DELTA rows (s: long, cnt: long), bucketed by
-    * `s`. The current df of a shingle is `sum(cnt)` over its rows —
-    * append-only by construction (a batch appends +counts, an eviction
-    * appends −counts), so every advance maintains it with a bucketed
-    * append instead of a rewrite, and reading it costs a bucket-local
-    * aggregation over ~|distinct shingles| rows instead of re-counting
-    * the full posting relation (~|doc,shingle| rows) — the dominant
-    * advance overhead the round-12 measurements flagged. */
+  /** A set of standing catalog tables materialized together. */
+  sealed trait Artifact { def tables: Seq[String] }
+
+  /** Catalog table names of one index generation: the four artifacts
+    * above, every one always present. */
   final case class DocIndex(survivorsTable: String, pairsTable: String,
-                            postingsTable: Option[String] = None,
-                            dfTable: Option[String] = None) {
-    def tables: Seq[String] =
-      Seq(survivorsTable, pairsTable) ++ postingsTable ++ dfTable
+                            postingsTable: String, dfTable: String) extends Artifact {
+    def tables: Seq[String] = Seq(survivorsTable, pairsTable, postingsTable, dfTable)
   }
 
   val SurvivorsBase = "graft_pair_survivors"
@@ -102,27 +98,24 @@ object PairIndex {
   def freshName(prefix: String): String =
     s"${prefix}_${jvmTag}_g${gen.incrementAndGet()}"
 
-  /** Garbage-collect index generations left by DEAD JVMs: drops
-    * catalog tables and deletes orphaned warehouse directories whose
-    * name starts with `prefix`, does not carry this JVM's tag, AND
-    * whose embedded `_p<pid>_` owner is no longer a live process on
-    * this host (round-13, ADVICE: a liveness check, so a second
-    * concurrently running JVM sharing the warehouse — the very
-    * scenario the pid-tagged naming exists for — never has its live
-    * index dropped mid-read). A name without a parseable pid tag is
-    * treated as stale; for that reason explicit standing-artifact
-    * names passed by callers MUST NOT start with the reserved
-    * `graft_pair_*` / `graft_corpus_*` prefixes. Liveness is
-    * host-local — on a multi-host cluster sharing a metastore, gate
-    * sweeps on artifact age instead (don't call this blindly).
-    * Registered queries call this before materializing, so a shared
-    * warehouse (./spark-warehouse across bench runs) holds at most the
-    * live JVMs' generations. Never touches this JVM's own live
-    * generations — a concurrent flow in this session is safe. */
-  def sweepStale(spark: SparkSession, prefix: String): Unit = {
-    val lower = prefix.toLowerCase
+  /** The name prefixes of every generation `freshName` makes here. */
+  private val Reserved = Seq("graft_pair_", "graft_corpus_")
+
+  /** Garbage-collect generations left by DEAD JVMs: drop the catalog
+    * tables and delete the orphaned warehouse directories whose name
+    * starts with a reserved prefix, lacks this JVM's tag, and whose
+    * `_p<pid>_` owner is not a live process on this host — one catalog
+    * listing and one warehouse listing for all six artifact kinds. The
+    * liveness check means a second JVM sharing the warehouse never has
+    * its live index dropped mid-read, and this JVM's own generations
+    * are never touched. A name without a parseable pid tag is stale, so
+    * explicit standing-artifact names MUST NOT start with a reserved
+    * prefix. Liveness is host-local: on a multi-host cluster sharing a
+    * metastore, gate sweeps on artifact age instead. The standing
+    * fixtures sweep before they materialize. */
+  def sweepStale(spark: SparkSession): Unit = {
     def stale(n: String) =
-      n.startsWith(lower) && !n.contains(s"_${jvmTag}_") &&
+      Reserved.exists(n.startsWith) && !n.contains(s"_${jvmTag}_") &&
         graft.LocalCatalog.liveOwner(n).isEmpty
     spark.catalog.listTables().collect().map(_.name).filter(stale)
       .foreach(n => spark.sql(s"DROP TABLE IF EXISTS `$n`"))
@@ -235,8 +228,8 @@ object PairIndex {
     }
   }
 
-  def keepLatest(spark: SparkSession, key: String, idx: DocIndex): Unit =
-    keepLatest(spark, key, idx.tables)
+  def keepLatest(spark: SparkSession, key: String, a: Artifact): Unit =
+    keepLatest(spark, key, a.tables)
 
   /** Bucket count for a corpus artifact set when the caller doesn't
     * pin one: Catalyst's pre-scan size estimate of the input divided by
@@ -338,7 +331,7 @@ object PairIndex {
   /** A long aggregate cell, 0 when null (a sum over no rows). */
   private def longOr0(r: Row, i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
 
-  /** Compute survivors + pair index once and write both bucketed.
+  /** Compute the four artifacts once and write them bucketed.
     * `numBuckets` sizes the co-location unit — pass 0 (the default)
     * to derive it from the input size, floored at the session's
     * shuffle-partition count (`autoBuckets`): buckets are the
@@ -353,57 +346,50 @@ object PairIndex {
                           numBuckets: Int = 0,
                           survivorsTable: String = freshName(SurvivorsBase),
                           pairsTable: String = freshName(PairsBase),
-                          keepPostings: Boolean = false,
                           postingsTable: String = freshName(PostingsBase),
                           dfTable: String = freshName(DfBase)): DocIndex = {
     val spark = docs.sparkSession
     val buckets = if (numBuckets > 0) numBuckets else autoBuckets(docs)
-    graft.etl.Layout.writeBucketed(
-      Dedup.dropExactDuplicates(docs, idCol, textCol)
+    val idx = DocIndex(survivorsTable, pairsTable, postingsTable, dfTable)
+    // nDocs (survivor count) is a parquet metadata read of the written
+    // survivors; it feeds the advance's economy guard
+    writeIndex(Dedup.dropExactDuplicates(docs, idCol, textCol)
         .withColumn(HashCol, TextAnalysis.textHash(col(textCol))),
-      survivorsTable, idCol, buckets)
-    // pair generation reads the WRITTEN survivors artifact (not the
-    // lazy dedup plan): the exact-dedup window runs once at write time,
-    // and the shingle pipeline scans bucketed parquet — on a cluster
-    // that read is the cheap, re-runnable part
-    val survivors = spark.table(survivorsTable)
-    val pairsDf =
-      if (!keepPostings)
-        Dedup.jaccardPairs(
-          Dedup.shingles(survivors, idCol, textCol, Dedup.ShingleK),
-          threshold, maxDocFreq)
-      else {
-        // standing-artifact mode: persist the hashed posting relation
-        // first and score pairs FROM the written table — the bucketed
-        // scan already clusters by `s`, so the df-cap window and the
-        // posting aggregation plan with no exchange, and the same
-        // artifact later feeds advanceDocIndex's delta rescore
-        graft.etl.Layout.writeBucketed(
-          Dedup.shingles(survivors, idCol, textCol, Dedup.ShingleK)
-            .select(col("doc_id"), xxhash64(col("s")).as("s"))
-            .distinct(),
-          postingsTable, "s", buckets)
-        // fourth standing artifact: per-shingle df delta rows, derived
-        // from the freshly written postings (bucketed scan → bucket-
-        // local count → bucketed write, no exchange). Advances append
-        // ±delta rows; consumers read sum(cnt) per shingle.
-        graft.etl.Layout.writeBucketed(
-          spark.table(postingsTable).groupBy(col("s"))
-            .agg(count(lit(1)).as("cnt")),
-          dfTable, "s", buckets)
-        Dedup.jaccardPairsHashed(spark.table(postingsTable), threshold, maxDocFreq)
-      }
-    graft.etl.Layout.writeBucketed(pairsDf, pairsTable, "doc_id2", buckets)
-    // record the materialization parameters on the artifact itself:
-    // advanceDocIndex derives its semantics from these, so an advance
-    // can never silently run with a different cap/threshold than the
-    // index it extends. nDocs (survivor count — a parquet metadata
-    // read) feeds the advance's economy guard.
-    writeStamp(spark, pairsTable, Stamp(threshold, maxDocFreq, Dedup.ShingleK,
-      buckets, spark.table(survivorsTable).count()))
-    DocIndex(survivorsTable, pairsTable,
-      if (keepPostings) Some(postingsTable) else None,
-      if (keepPostings) Some(dfTable) else None)
+      idCol, textCol, idx, buckets,
+      Stamp(threshold, maxDocFreq, Dedup.ShingleK, buckets,
+        spark.table(survivorsTable).count()))
+    idx
+  }
+
+  /** The hashed shingle postings (doc_id, s: long) of `docs` — the one
+    * derivation behind the postings artifact and every advance probe. */
+  private def hashedPostings(docs: DataFrame, idCol: String, textCol: String,
+                             k: Int): DataFrame =
+    Dedup.shingles(docs, idCol, textCol, k)
+      .select(col("doc_id"), xxhash64(col("s")).as("s"))
+      .distinct()
+
+  /** The one writer of a full generation, for `materializeDocIndex` and
+    * the advance's fallback: survivors, then postings from the written
+    * survivors, then df and pairs from the written postings (a bucketed
+    * scan clustered by `s`: the count, the df-cap window and the
+    * posting aggregation run with no exchange), then the stamp. `stamp`
+    * is evaluated once, after the survivors write, so it may count them. */
+  private def writeIndex(survivors: DataFrame, idCol: String, textCol: String,
+                         to: DocIndex, buckets: Int, stamp: => Stamp): Unit = {
+    val spark = survivors.sparkSession
+    Layout.writeBucketed(survivors, to.survivorsTable, idCol, buckets)
+    val st = stamp
+    Layout.writeBucketed(
+      hashedPostings(spark.table(to.survivorsTable), idCol, textCol, st.shingleK),
+      to.postingsTable, "s", buckets)
+    val postings = spark.table(to.postingsTable)
+    Layout.writeBucketed(postings.groupBy(col("s")).agg(count(lit(1)).as("cnt")),
+      to.dfTable, "s", buckets)
+    Layout.writeBucketed(
+      Dedup.jaccardPairsHashed(postings, st.threshold, st.maxDocFreq),
+      to.pairsTable, "doc_id2", buckets)
+    writeStamp(spark, to.pairsTable, st)
   }
 
   /** Outcome of one `advanceDocIndex` call. `idx` names tables the
@@ -504,13 +490,11 @@ object PairIndex {
     * phase drops every table this call created (clones and fresh
     * generations). The input index is left as it was.
     *
-    * Preconditions: the index was materialized with `keepPostings =
-    * true` (postings and df artifacts; a missing one is an
-    * `IllegalArgumentException`) and carries its `graft.*` stamp —
-    * semantics are read from it, so an advance never runs with
-    * different threshold/cap/k/buckets than the index it extends;
-    * batch ids are distinct from surviving corpus ids; the batch
-    * schema matches the corpus schema. */
+    * Preconditions: the index carries its `graft.*` stamp — semantics
+    * are read from it, so an advance never runs with different
+    * threshold/cap/k/buckets than the index it extends; batch ids are
+    * distinct from surviving corpus ids; the batch schema matches the
+    * corpus schema. */
   def advanceDocIndex(spark: SparkSession, idx: DocIndex, batch: DataFrame,
                       idCol: String, textCol: String,
                       frozenCaps: Boolean = false,
@@ -586,6 +570,10 @@ object PairIndex {
       t
     }
 
+    /** A fresh four-table generation owned by this call. */
+    def freshIndex(): DocIndex = DocIndex(fresh(SurvivorsBase), fresh(PairsBase),
+      fresh(PostingsBase), fresh(DfBase))
+
     def cloneTable(src: String, prefix: String): String =
       cloneTableWithData(spark, src, fresh(prefix))
 
@@ -608,21 +596,13 @@ object PairIndex {
     * semantics stamped on it. */
   private final class AdvanceInput(val spark: SparkSession, val idx: DocIndex,
                                    val idCol: String, val textCol: String) {
-    private def required(table: Option[String], artifact: String): String =
-      table.getOrElse(throw new IllegalArgumentException(
-        s"advanceDocIndex needs the $artifact artifact: materialize " +
-          s"${idx.pairsTable} with keepPostings = true"))
-    val postingsTable: String = required(idx.postingsTable, "postings")
-    val dfTable: String = required(idx.dfTable, "df")
     val stamp: Stamp = readStamp(spark, idx.pairsTable)
     val survivors: DataFrame = spark.table(idx.survivorsTable)
-    val stored: DataFrame = spark.table(postingsTable)
+    val stored: DataFrame = spark.table(idx.postingsTable)
     val survCols = survivors.columns.toIndexedSeq.map(col)
 
-    def hashedPostings(docs: DataFrame): DataFrame =
-      Dedup.shingles(docs, idCol, textCol, stamp.shingleK)
-        .select(col("doc_id"), xxhash64(col("s")).as("s"))
-        .distinct()
+    def postingsOf(docs: DataFrame): DataFrame =
+      hashedPostings(docs, idCol, textCol, stamp.shingleK)
   }
 
   /** Step 1 output: the batch's survivors (with their canonical hash)
@@ -694,14 +674,14 @@ object PairIndex {
                         frozenCaps: Boolean, assertNoCapFlips: Boolean): CapStatus = {
     import in._
     val cap = stamp.maxDocFreq
-    val shB = run.checkpoint("ckpt_shb")(hashedPostings(d.newSurv))
+    val shB = run.checkpoint("ckpt_shb")(postingsOf(d.newSurv))
     val dfB = shB.groupBy(col("s")).agg(count(lit(1)).as("__dfb"))
     // per-shingle df deltas: batch additions minus eviction removals —
     // df can only change for shingles present in one of these
     val dfDelta = run.checkpoint("ckpt_dfdelta")(
       if (d.nEvicted == 0) dfB.withColumn("__dfe", lit(0L))
       else dfB.join(
-          hashedPostings(survivors.join(d.evictedIds, Seq(idCol), "left_semi"))
+          postingsOf(survivors.join(d.evictedIds, Seq(idCol), "left_semi"))
             .groupBy(col("s")).agg(count(lit(1)).as("__dfe")),
           Seq("s"), "full_outer")
         .select(col("s"), coalesce(col("__dfb"), lit(0L)).as("__dfb"),
@@ -714,7 +694,7 @@ object PairIndex {
     // corpus-scale cache, and deserialized caching starved the bucketed
     // sorts to OOM at sf10.
     val dfCombFull = run.cache(
-      spark.table(dfTable).groupBy(col("s")).agg(sum(col("cnt")).as("__dfo"))
+      spark.table(idx.dfTable).groupBy(col("s")).agg(sum(col("cnt")).as("__dfo"))
         .join(dfDelta, Seq("s"), "full_outer")
         .select(col("s"), coalesce(col("__dfo"), lit(0L)).as("__dfo0"),
           (coalesce(col("__dfo"), lit(0L)) - coalesce(col("__dfe"), lit(0L))
@@ -764,15 +744,12 @@ object PairIndex {
     * re-shingles, the rescore and the copy-forward rewrites); once that
     * set is a sizable fraction of the corpus, from-scratch pair
     * generation is cheaper. Reuses the survivor DECISIONS (no second
-    * exact-dedup window) and writes fresh generations exactly like
-    * `materializeDocIndex`. */
+    * exact-dedup window) and writes a fresh generation through
+    * `writeIndex`, the writer `materializeDocIndex` uses. */
   private def rematerialize(in: AdvanceInput, run: AdvanceRun, d: Decision,
                             cs: CapStatus): AdvanceResult = {
     import in._
-    val sTab = run.fresh(SurvivorsBase)
-    val pTab = run.fresh(PairsBase)
-    val postTab = run.fresh(PostingsBase)
-    val dTab = run.fresh(DfBase)
+    val to = run.freshIndex()
     run.phase("fallback_rematerialize") {
       val combinedSurv = liveSurvivors(in, d).select(survCols: _*)
         .unionByName(d.newSurv.select(survCols: _*))
@@ -782,19 +759,10 @@ object PairIndex {
       // max() with it so an unknown-stats estimate (autoBuckets' floor)
       // never SHRINKS a large index's parallelism
       val fbBuckets = math.max(stamp.numBuckets, autoBuckets(combinedSurv))
-      Layout.writeBucketed(combinedSurv, sTab, idCol, fbBuckets)
-      Layout.writeBucketed(hashedPostings(spark.table(sTab)), postTab, "s", fbBuckets)
-      Layout.writeBucketed(
-        spark.table(postTab).groupBy(col("s")).agg(count(lit(1)).as("cnt")),
-        dTab, "s", fbBuckets)
-      Layout.writeBucketed(
-        Dedup.jaccardPairsHashed(spark.table(postTab), stamp.threshold, stamp.maxDocFreq),
-        pTab, "doc_id2", fbBuckets)
-      writeStamp(spark, pTab, stamp.copy(numBuckets = fbBuckets,
-        nDocs = stamp.nDocs + d.nNew - d.nEvicted))
+      writeIndex(combinedSurv, idCol, textCol, to, fbBuckets, stamp.copy(
+        numBuckets = fbBuckets, nDocs = stamp.nDocs + d.nNew - d.nEvicted))
     }
-    AdvanceResult(DocIndex(sTab, pTab, Some(postTab), Some(dTab)),
-      d.nNew, d.nEvicted, cs.nAffected, cs.nFlips, 0L)
+    AdvanceResult(to, d.nNew, d.nEvicted, cs.nAffected, cs.nFlips, 0L)
   }
 
   private def liveSurvivors(in: AdvanceInput, d: Decision): DataFrame =
@@ -820,7 +788,7 @@ object PairIndex {
     val aOldDocs = cs.affectedOld
     val shAOld =
       if (cs.nAffected == 0) cs.shB.limit(0)
-      else hashedPostings(survivors.join(
+      else postingsOf(survivors.join(
         aOldDocs.select(col(idCol)), Seq(idCol), "left_semi"))
     val candKeys = cs.dfB.select(col("s"))
       .unionByName(shAOld.select(col("s"))).distinct()
@@ -893,7 +861,7 @@ object PairIndex {
     val bParticipants = interPruned.select(col("doc_id1").as("__pid"))
       .unionByName(interPruned.select(col("doc_id2").as("__pid"))).distinct()
       .join(aIds, col("__pid") === col("__aid"), "left_anti")
-    val bSh = run.checkpoint("ckpt_bsh")(hashedPostings(survivors.join(
+    val bSh = run.checkpoint("ckpt_bsh")(postingsOf(survivors.join(
       bParticipants.select(col("__pid").as(idCol)), Seq(idCol), "left_semi")))
     val card = run.checkpoint("ckpt_card")(
       bSh.join(cappedKeys(bSh.select(col("s")).distinct()), Seq("s"), "left_semi")
@@ -920,8 +888,8 @@ object PairIndex {
       val target = run.phase("clone_index")(DocIndex(
         run.cloneTable(idx.survivorsTable, SurvivorsBase),
         if (appendPairs) run.cloneTable(idx.pairsTable, PairsBase) else idx.pairsTable,
-        Some(run.cloneTable(postingsTable, PostingsBase)),
-        Some(run.cloneTable(dfTable, DfBase))))
+        run.cloneTable(idx.postingsTable, PostingsBase),
+        run.cloneTable(idx.dfTable, DfBase)))
       run.releaseCaches()
       val pairsTable =
         if (appendPairs) {
@@ -938,41 +906,37 @@ object PairIndex {
           pTab
         }
       run.phase("append_postings")(
-        Layout.appendBucketed(cs.shB, target.postingsTable.get, "s", nb))
+        Layout.appendBucketed(cs.shB, target.postingsTable, "s", nb))
       run.phase("append_survivors")(
         Layout.appendBucketed(delta.newSurv, target.survivorsTable, idCol, nb))
       run.phase("append_df")(
-        Layout.appendBucketed(dfRows, target.dfTable.get, "s", nb))
+        Layout.appendBucketed(dfRows, target.dfTable, "s", nb))
       writeStamp(spark, pairsTable, stamp.copy(nDocs = stamp.nDocs + d.nNew))
       AdvanceResult(target.copy(pairsTable = pairsTable),
         d.nNew, 0L, cs.nAffected, cs.nFlips, cs.flipHolders)
     } else {
-      val sTab = run.fresh(SurvivorsBase)
-      val pTab = run.fresh(PairsBase)
-      val postTab = run.fresh(PostingsBase)
-      val dTab = run.fresh(DfBase)
+      val to = run.freshIndex()
       run.phase("rewrite_survivors")(Layout.writeBucketed(
         liveSurvivors(in, d).select(survCols: _*).unionByName(delta.newSurv),
-        sTab, idCol, nb))
+        to.survivorsTable, idCol, nb))
       val livePost = stored.join(evictedSide(in, d), stored("doc_id") === col("__eid"), "left_anti")
       run.phase("rewrite_postings")(Layout.writeBucketed(
         livePost.select(col("doc_id"), col("s")).unionByName(cs.shB),
-        postTab, "s", nb))
+        to.postingsTable, "s", nb))
       val removal = delta.aIds.unionByName(d.evictedIds.select(col(idCol).as("__aid")))
       val keptPairs = spark.table(idx.pairsTable)
         .join(removal, col("doc_id1") === col("__aid"), "left_anti")
         .join(removal, col("doc_id2") === col("__aid"), "left_anti")
       run.phase("rewrite_pairs")(Layout.writeBucketed(
-        keptPairs.unionByName(delta.pairs), pTab, "doc_id2", nb))
-      writeStamp(spark, pTab, stamp.copy(nDocs = stamp.nDocs + d.nNew - d.nEvicted))
+        keptPairs.unionByName(delta.pairs), to.pairsTable, "doc_id2", nb))
+      writeStamp(spark, to.pairsTable, stamp.copy(nDocs = stamp.nDocs + d.nNew - d.nEvicted))
       // a fresh COMPACTED df generation straight off the cached
       // cap-status relation; net-zero shingles (all holders evicted)
       // drop out
       run.phase("rewrite_df")(Layout.writeBucketed(
         cs.dfCombFull.filter(col("__dfc") > 0).select(col("s"), col("__dfc").as("cnt")),
-        dTab, "s", nb))
-      AdvanceResult(DocIndex(sTab, pTab, Some(postTab), Some(dTab)),
-        d.nNew, d.nEvicted, cs.nAffected, cs.nFlips, cs.flipHolders)
+        to.dfTable, "s", nb))
+      AdvanceResult(to, d.nNew, d.nEvicted, cs.nAffected, cs.nFlips, cs.flipHolders)
     }
   }
 
@@ -1054,6 +1018,9 @@ object PairIndex {
     * rows); with cheap local text scans, recompute and keep only the
     * hash-set artifact. */
   final case class CorpusIndex(hashesTable: String, shinglesTable: String)
+      extends Artifact {
+    def tables: Seq[String] = Seq(hashesTable, shinglesTable)
+  }
 
   /** Materialize the standing corpus's hash set (bucketed by the hash —
     * the batch anti-join key) and shingle index (bucketed by the
@@ -1067,10 +1034,10 @@ object PairIndex {
                              shinglesTable: String = freshName(CorpusShinglesBase))
       : CorpusIndex = {
     val buckets = if (numBuckets > 0) numBuckets else autoBuckets(corpus)
-    graft.etl.Layout.writeBucketed(
+    Layout.writeBucketed(
       corpus.select(TextAnalysis.textHash(col(textCol)).as("__h")).distinct(),
       hashesTable, "__h", buckets)
-    graft.etl.Layout.writeBucketed(
+    Layout.writeBucketed(
       Dedup.shingles(corpus, idCol, textCol, Dedup.ShingleK),
       shinglesTable, "s", buckets)
     CorpusIndex(hashesTable, shinglesTable)
@@ -1082,20 +1049,7 @@ object PairIndex {
     * side a bucketed parquet scan instead of a recompute. */
   def dedupIncrementFromIndex(spark: SparkSession, idx: CorpusIndex,
                               incoming: DataFrame,
-                              idCol: String, textCol: String): DataFrame = {
-    val batch = Dedup.dropExactDuplicates(incoming, idCol, textCol)
-    // merge, not broadcast, for the same cliff reasons as the recompute
-    // path (Dedup.dedupIncrement scaladoc)
-    val fresh = batch
-      .withColumn("__h", TextAnalysis.textHash(col(textCol)))
-      .join(spark.table(idx.hashesTable).hint("merge"), Seq("__h"), "left_anti")
-      .drop("__h")
-    val nearIds = Dedup.crossJaccardPairs(
-        Dedup.shingles(fresh, idCol, textCol, Dedup.ShingleK),
-        spark.table(idx.shinglesTable),
-        Dedup.IncrementThreshold, Dedup.IncrementMaxDocFreq)
-      .select(col("inc_id").as(idCol))
-      .distinct()
-    fresh.join(nearIds.hint("merge"), Seq(idCol), "left_anti")
-  }
+                              idCol: String, textCol: String): DataFrame =
+    Dedup.dedupIncrementAgainst(spark.table(idx.hashesTable),
+      spark.table(idx.shinglesTable), incoming, idCol, textCol)
 }

@@ -102,20 +102,6 @@ object Similarity {
     rankTopK(c.join(broadcast(q), col("qid") =!= col("vid")), k)
   }
 
-  /** Deterministic hash-coin sample predicate: keeps a row iff the
-    * first hex digit of md5(id as string) is below 4 — a reproducible
-    * ~1/4 sample with an exact cross-engine mirror (DuckDB:
-    * `substring(md5(CAST(id AS VARCHAR)), 1, 1) < '4'`).
-    * NOTE a fixed RATE is a constant-factor cut, not an asymptotic
-    * one: anything all-pairs over a rate sample still scales as
-    * (rate·N)² = Θ(N²). Use it for rate-proportional work (recall
-    * measurement over a thinned universe); for an all-pairs baseline
-    * that must stay affordable as the corpus grows, use `hashSample`
-    * (fixed SIZE → constant pair count) — as the registered e03
-    * does. */
-  def hashCoin(idCol: Column): Column =
-    substring(md5(idCol.cast("string")), 1, 1) < lit("4")
-
   /** Deterministic fixed-SIZE sample: the `n` rows whose md5(id) sorts
     * smallest (id breaks the astronomically-unlikely digest tie).
     * Unlike a fixed-rate coin, the sampled universe is CONSTANT as the
@@ -135,8 +121,8 @@ object Similarity {
 
   /** Embedding-cosine near-dup: the globally most-similar pairs (or all
     * pairs above a threshold via the filter). All-pairs is the exact
-    * baseline — at corpus scale run it on a `hashCoin` sample (as the
-    * registered e03 does) or swap the candidate stage for annLsh/IVF
+    * baseline — at corpus scale run it on a fixed-size `hashSample` (as
+    * the registered e03 does) or swap the candidate stage for annLsh/IVF
     * buckets and keep the same scoring/ranking tail. */
   def topSimilarPairs(emb: DataFrame, topN: Int,
                       minCos: Double = Double.NegativeInfinity): DataFrame = {

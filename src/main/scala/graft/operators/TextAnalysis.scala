@@ -89,25 +89,6 @@ object TextAnalysis {
   def bagFingerprint(text: Column): Column =
     md5(concat_ws(" ", array_sort(array_distinct(tokens(text)))))
 
-  /** Adjacent token bigrams (with multiplicity — repetition is the
-    * signal here, unlike the deduplication shingles which are
-    * per-document distinct). Empty for single-token docs.
-    *
-    * `toks` should be a MATERIALIZED token-array column (a plain
-    * attribute): element_at inside the lambda re-evaluates its operand
-    * per element, so passing the split() expression directly
-    * re-tokenizes the document once per bigram — O(tokens²). */
-  def bigramsOfTokens(toks: Column): Column = {
-    val n = size(toks)
-    transform(
-      when(n >= 2, sequence(lit(1), n - 1)).otherwise(array().cast("array<int>")),
-      i => concat_ws(" ", element_at(toks, i), element_at(toks, i + 1)))
-  }
-
-  /** Convenience form over raw text — fine for toy inputs; corpus-scale
-    * callers must pre-materialize the tokens (see bigramsOfTokens). */
-  def bigrams(text: Column): Column = bigramsOfTokens(tokens(text))
-
   /** BPE-ish subword-unit count: letter runs, digit runs, and single
     * punctuation marks each count as one unit — the regex shape of a
     * byte-pair pre-tokenizer, cheap enough to run inline over a corpus. */

@@ -1,10 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.types.{AbstractDataType, DataType, LongType, StringType}
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Tight-loop kernels shared by the interpreted and generated paths of
@@ -582,90 +580,35 @@ case class WinnowExpr(child: Expression, k: Int, w: Int)
   override def prettyName: String = "graft_winnow"
 }
 
-/** Session extensions: registers engine-native SQL functions.
-  * `withExtensions(new GraftExtensions)` on a session builder, or
-  * `spark.sql.extensions=graft.plans.GraftExtensions`. */
-/** Shared SQL-surface builders: extract foldable INT literals for the
-  * parameterized expressions so `graft_shingles(text, 3)` etc. work
-  * from SQL, failing at analysis time (not runtime) on non-literals. */
-private[plans] object GraftBuilders {
-  def litInt(e: Expression, fn: String, arg: String): Int = e match {
+/** The engine-native SQL functions, registered per session; the
+  * parameterized ones take foldable INT literals so
+  * `graft_shingles(text, 3)` etc. work from SQL, failing at analysis
+  * time (not runtime) on non-literals. Idempotent. */
+object GraftFunctions {
+  private def litInt(e: Expression, fn: String, arg: String): Int = e match {
     case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
     case other => throw new IllegalArgumentException(
       s"$fn: $arg must be an INT literal, got ${other.sql}")
   }
-  def stopwordCount(exprs: Seq[Expression]): StopwordCountExpr =
-    StopwordCountExpr(exprs.head,
-      graft.operators.TextAnalysis.DefaultStopwords)
-  def shingles(exprs: Seq[Expression]): ShinglesExpr =
-    ShinglesExpr(exprs.head, litInt(exprs(1), "graft_shingles", "k"))
-  def chunks(exprs: Seq[Expression]): ChunksExpr =
-    ChunksExpr(exprs.head, litInt(exprs(1), "graft_chunks", "size"),
-      litInt(exprs(2), "graft_chunks", "stride"))
-  def topShingleCount(exprs: Seq[Expression]): TopShingleCountExpr =
-    TopShingleCountExpr(exprs.head,
-      litInt(exprs(1), "graft_top_shingle_count", "k"))
-  def winnow(exprs: Seq[Expression]): WinnowExpr =
-    WinnowExpr(exprs.head, litInt(exprs(1), "graft_winnow", "k"),
-      litInt(exprs(2), "graft_winnow", "w"))
-}
 
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      new FunctionIdentifier("graft_rolling_hash"),
-      new ExpressionInfo(classOf[RollingHashExpr].getName, "graft_rolling_hash"),
-      (exprs: Seq[Expression]) => RollingHashExpr(exprs.head)))
-    e.injectFunction((
-      new FunctionIdentifier("graft_dot_e12"),
-      new ExpressionInfo(classOf[DotE12Expr].getName, "graft_dot_e12"),
-      (exprs: Seq[Expression]) => DotE12Expr(exprs.head, exprs(1))))
-    e.injectFunction((
-      new FunctionIdentifier("graft_token_count"),
-      new ExpressionInfo(classOf[TokenCountExpr].getName, "graft_token_count"),
-      (exprs: Seq[Expression]) => TokenCountExpr(exprs.head)))
-    e.injectFunction((
-      new FunctionIdentifier("graft_stopword_count"),
-      new ExpressionInfo(classOf[StopwordCountExpr].getName, "graft_stopword_count"),
-      (exprs: Seq[Expression]) => GraftBuilders.stopwordCount(exprs)))
-    e.injectFunction((
-      new FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[ShinglesExpr].getName, "graft_shingles"),
-      (exprs: Seq[Expression]) => GraftBuilders.shingles(exprs)))
-    e.injectFunction((
-      new FunctionIdentifier("graft_chunks"),
-      new ExpressionInfo(classOf[ChunksExpr].getName, "graft_chunks"),
-      (exprs: Seq[Expression]) => GraftBuilders.chunks(exprs)))
-    e.injectFunction((
-      new FunctionIdentifier("graft_top_shingle_count"),
-      new ExpressionInfo(classOf[TopShingleCountExpr].getName, "graft_top_shingle_count"),
-      (exprs: Seq[Expression]) => GraftBuilders.topShingleCount(exprs)))
-    e.injectFunction((
-      new FunctionIdentifier("graft_winnow"),
-      new ExpressionInfo(classOf[WinnowExpr].getName, "graft_winnow"),
-      (exprs: Seq[Expression]) => GraftBuilders.winnow(exprs)))
-  }
-}
+  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "graft_rolling_hash" -> (e => RollingHashExpr(e.head)),
+    "graft_dot_e12" -> (e => DotE12Expr(e.head, e(1))),
+    "graft_token_count" -> (e => TokenCountExpr(e.head)),
+    "graft_stopword_count" -> (e =>
+      StopwordCountExpr(e.head, graft.operators.TextAnalysis.DefaultStopwords)),
+    "graft_shingles" -> (e =>
+      ShinglesExpr(e.head, litInt(e(1), "graft_shingles", "k"))),
+    "graft_chunks" -> (e => ChunksExpr(e.head, litInt(e(1), "graft_chunks", "size"),
+      litInt(e(2), "graft_chunks", "stride"))),
+    "graft_top_shingle_count" -> (e => TopShingleCountExpr(e.head,
+      litInt(e(1), "graft_top_shingle_count", "k"))),
+    "graft_winnow" -> (e => WinnowExpr(e.head, litInt(e(1), "graft_winnow", "k"),
+      litInt(e(2), "graft_winnow", "w"))))
 
-/** Per-session registration fallback for sessions built without
-  * extensions (e.g. the driver's own Verify session). Idempotent. */
-object GraftFunctions {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rolling_hash", exprs => RollingHashExpr(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot_e12", exprs => DotE12Expr(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_token_count", exprs => TokenCountExpr(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_stopword_count", exprs => GraftBuilders.stopwordCount(exprs), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles", exprs => GraftBuilders.shingles(exprs), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_chunks", exprs => GraftBuilders.chunks(exprs), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_top_shingle_count", exprs => GraftBuilders.topShingleCount(exprs), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_winnow", exprs => GraftBuilders.winnow(exprs), "built-in")
-  }
+  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+    builders.foreach { case (name, build) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        name, build, "built-in")
+    }
 }

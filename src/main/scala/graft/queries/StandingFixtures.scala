@@ -2,113 +2,83 @@ package graft.queries
 
 import graft.operators.PairIndex
 import graft.sources.Tables
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Per-run standing-artifact fixtures for the registered query suite
-  * (round-19, VERDICT item 4): the d28 compute-once/join-many contract
-  * applied to the SUITE itself. Six registered queries consume a
-  * standing index — d28/d29 the full-corpus doc index, d30 the 4/5
-  * corpus index, d31/d32/d39 the 63/64 base index they advance — and
-  * before this round each invocation REBUILT its index from scratch
-  * (~48 s of the 134 s round-18 suite wall), which is exactly the
-  * anti-pattern the standing-artifact protocol exists to avoid: a
-  * daily pipeline materializes the index once per corpus snapshot and
-  * every consumer joins the artifact.
+import scala.reflect.ClassTag
+
+/** Per-run standing-artifact fixtures for the registered query suite:
+  * the compute-once/join-many contract applied to the suite itself.
+  * Six registered queries consume a standing index — d28/d29 the
+  * full-corpus doc index, d30 the 4/5 corpus index, d31/d32/d39 the
+  * 63/64 base index they advance — and each is built once per run
+  * instead of once per invocation (rebuilding was ~48 s of a 134 s
+  * suite wall).
   *
-  * The memo is per-JVM and keyed by the corpus directory; entries are
-  * validated against the live session's catalog before reuse (a test
-  * JVM cycles sessions, and `keepLatest` rings / warehouse resets can
-  * drop a memoized generation) and rebuilt when stale. Build cost is
-  * surfaced loudly via `Telemetry` (`fixture.*_build_ms`) so the bench
-  * attributes it instead of burying it in whichever query ran first.
+  * One memo, keyed by fixture and corpus directory, holds all three. An
+  * entry is reused only while every table it names exists in the live
+  * session's catalog (a test JVM cycles sessions, and `keepLatest`
+  * rings / warehouse resets can drop a generation), and is rebuilt
+  * otherwise. A build sweeps dead JVMs' generations
+  * (`PairIndex.sweepStale`), materializes, registers the result under
+  * its `fx_<fixture>` ring and records `fixture.<fixture>_build_ms`, so
+  * the bench attributes build cost instead of burying it in whichever
+  * query ran first.
   *
   * SHARING CONTRACT for the advanced base (d31/d32/d39): each consumer
   * advances the shared base directly. `advanceDocIndex` never writes
-  * its input — every write case lands in tables the call creates — so
-  * the base is built once per run and every consumer advances the same
-  * rows. A consumer registers its advanced generation under its OWN
-  * `keepLatest` ring; the base stays owned by the fixture ring. If a
-  * base table is dropped anyway (a warehouse reset, a session change),
-  * the memo's table-existence check rebuilds it.
-  * Correctness never depends on the memo: each consumer's result is
-  * pinned by its own oracle.
+  * its input, so every consumer advances the same rows, and registers
+  * its result under its OWN `keepLatest` ring. Correctness never
+  * depends on the memo: each consumer's result is pinned by its own
+  * oracle.
   */
 object StandingFixtures {
 
-  private val memo = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+  private val memo = new java.util.concurrent.ConcurrentHashMap[String, PairIndex.Artifact]()
 
-  private def timed[T](key: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    graft.Telemetry.record(s"fixture.${key}_build_ms",
-      (System.nanoTime() - t0) / 1000000L)
-    r
-  }
-
-  private def cachedDocIndex(s: SparkSession, key: String)
-                            (build: => PairIndex.DocIndex): PairIndex.DocIndex =
+  /** The memoized artifact `name` over `dir`, built (and timed) when
+    * absent or when any of its tables is gone. */
+  private def cached[A <: PairIndex.Artifact : ClassTag](s: SparkSession, name: String,
+                                                         dir: String)(build: => A): A =
     synchronized {
-      memo.get(key) match {
-        case idx: PairIndex.DocIndex
-            if idx.tables.forall(s.catalog.tableExists) => idx
+      memo.get(s"$name:$dir") match {
+        case a: A if a.tables.forall(s.catalog.tableExists) => a
         case _ =>
-          val idx = timed(key.takeWhile(_ != ':'))(build)
-          memo.put(key, idx)
-          idx
+          val t0 = System.nanoTime()
+          PairIndex.sweepStale(s)
+          val a = build
+          PairIndex.keepLatest(s, s"fx_$name", a)
+          graft.Telemetry.record(s"fixture.${name}_build_ms",
+            (System.nanoTime() - t0) / 1000000L)
+          memo.put(s"$name:$dir", a)
+          a
       }
     }
 
-  /** Full-corpus doc index (survivors + pairs) — consumed read-only by
-    * d28's curation and d29's clustering. */
-  def fullDocIndex(s: SparkSession, dir: String): PairIndex.DocIndex =
-    cachedDocIndex(s, s"full_doc_index:$dir") {
-      PairIndex.sweepStale(s, PairIndex.SurvivorsBase)
-      PairIndex.sweepStale(s, PairIndex.PairsBase)
-      val idx = PairIndex.materializeDocIndex(
-        Tables.documents(s, dir), "doc_id", "text")
-      PairIndex.keepLatest(s, "fx_full_doc_index", idx)
-      idx
+  /** The doc index over the corpus rows `keep` selects. */
+  private def docIndex(s: SparkSession, name: String, dir: String,
+                       keep: Column): PairIndex.DocIndex =
+    cached(s, name, dir) {
+      PairIndex.materializeDocIndex(
+        Tables.documents(s, dir).filter(keep), "doc_id", "text")
     }
 
-  /** 63/64-corpus base index with postings + df (the advance family's
-    * standing input) — shared by d31/d32/d39, each of which advances
-    * it with the mod-64 batch and registers the result under its own
-    * `keepLatest` ring. */
+  /** Full-corpus doc index — consumed read-only by d28's curation and
+    * d29's clustering. */
+  def fullDocIndex(s: SparkSession, dir: String): PairIndex.DocIndex =
+    docIndex(s, "full_doc_index", dir, lit(true))
+
+  /** 63/64-corpus base index (the advance family's standing input) —
+    * shared by d31/d32/d39, each of which advances it with the mod-64
+    * batch and registers the result under its own `keepLatest` ring. */
   def baseDocIndex(s: SparkSession, dir: String): PairIndex.DocIndex =
-    cachedDocIndex(s, s"base63_doc_index:$dir") {
-      PairIndex.sweepStale(s, PairIndex.SurvivorsBase)
-      PairIndex.sweepStale(s, PairIndex.PairsBase)
-      PairIndex.sweepStale(s, PairIndex.PostingsBase)
-      PairIndex.sweepStale(s, PairIndex.DfBase)
-      val idx = PairIndex.materializeDocIndex(
-        Tables.documents(s, dir)
-          .filter(pmod(col("doc_id"), lit(64)) =!= 0), "doc_id", "text",
-        keepPostings = true)
-      PairIndex.keepLatest(s, "fx_base63_doc_index", idx)
-      idx
-    }
+    docIndex(s, "base63_doc_index", dir, pmod(col("doc_id"), lit(64)) =!= 0)
 
   /** 4/5-corpus hash + shingle index — d30's standing corpus side. */
   def corpusIndex(s: SparkSession, dir: String): PairIndex.CorpusIndex =
-    synchronized {
-      val key = s"corpus45_index:$dir"
-      memo.get(key) match {
-        case idx: PairIndex.CorpusIndex
-            if s.catalog.tableExists(idx.hashesTable) &&
-               s.catalog.tableExists(idx.shinglesTable) => idx
-        case _ =>
-          PairIndex.sweepStale(s, PairIndex.CorpusHashesBase)
-          PairIndex.sweepStale(s, PairIndex.CorpusShinglesBase)
-          val idx = timed("corpus45_index") {
-            PairIndex.materializeCorpusIndex(
-              Tables.documents(s, dir)
-                .filter(pmod(col("doc_id"), lit(5)) =!= 0), "doc_id", "text")
-          }
-          PairIndex.keepLatest(s, "fx_corpus45_index",
-            Seq(idx.hashesTable, idx.shinglesTable))
-          memo.put(key, idx)
-          idx
-      }
+    cached(s, "corpus45_index", dir) {
+      PairIndex.materializeCorpusIndex(
+        Tables.documents(s, dir).filter(pmod(col("doc_id"), lit(5)) =!= 0),
+        "doc_id", "text")
     }
 }

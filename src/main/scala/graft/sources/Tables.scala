@@ -4,9 +4,9 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types._
 
 /** Readers for the driver-generated TPC-H-ish parquet tables
   * (TESTDATA.md): region nation customer supplier part orders lineitem
@@ -104,9 +104,8 @@ object Tables {
     * TIMESTAMP(NANOS), which Spark's vectorized parquet reader rejects
     * ([PARQUET_TYPE_ILLEGAL]), and (round 8 onward) plain TIMESTAMP
     * micros, which reads natively. Probing the schema (`schemaOf`: one
-    * footer inference per session, no data scan) keeps both working,
-    * and `events` then reads through the same resolved schema. The
-    * nanos layout fails inference, caches nothing, and is read
+    * footer inference per session, no data scan) keeps both working.
+    * The nanos layout fails inference, caches nothing, and is read
     * through an explicit LongType schema — no session-wide legacy conf,
     * no hidden sticky state for other readers — and floor-divided to
     * micros, matching how nanos-truncating engines downscale; the
@@ -116,15 +115,13 @@ object Tables {
     *
     * The driver writes the micros layout with isAdjustedToUTC=false, so
     * Spark infers TimestampNTZType; every graft session pins
-    * spark.sql.session.timeZone=UTC, so the cast to session-TZ
-    * TimestampType below is value-preserving and matches DuckDB's
+    * spark.sql.session.timeZone=UTC, so `eventsLayout`'s cast to
+    * session-TZ TimestampType is value-preserving and matches DuckDB's
     * naive read of the same file. */
-  def eventsTsNativeType(s: SparkSession, d: String): Option[org.apache.spark.sql.types.DataType] =
+  def eventsTsNativeType(s: SparkSession, d: String): Option[DataType] =
     try schemaOf(s, s"$d/events.parquet").fields
       .find(_.name == "ts").map(_.dataType)
-      .filter(dt =>
-        dt == org.apache.spark.sql.types.TimestampType ||
-        dt == org.apache.spark.sql.types.TimestampNTZType)
+      .filter(dt => dt == TimestampType || dt == TimestampNTZType)
     catch { case scala.util.control.NonFatal(e) =>
       // Only the TIMESTAMP(NANOS) schema-conversion rejection means
       // "legacy layout". Anything else (missing file, FS hiccup) must
@@ -141,13 +138,35 @@ object Tables {
       else throw e
     }
 
-  def events(s: SparkSession, d: String): DataFrame =
-    if (eventsTsNativeType(s, d).isDefined)
-      table(s, d, "events").withColumn("ts", col("ts").cast("timestamp"))
-    else s.read
-      .schema("event_id LONG, ts LONG, user_id LONG, event_type STRING, value DOUBLE, props STRING")
-      .parquet(s"$d/events.parquet")
-      .withColumn("ts", timestamp_micros(expr("ts div 1000")))
+  /** events columns for the legacy TIMESTAMP(NANOS) layout (ts read
+    * as a nanos long, normalized after). */
+  private val eventsRawSchema = StructType(Seq(
+    StructField("event_id", LongType),
+    StructField("ts", LongType),
+    StructField("user_id", LongType),
+    StructField("event_type", StringType),
+    StructField("value", DoubleType),
+    StructField("props", StringType)))
+
+  /** The events files' schema for `d` and the `ts` normalization: the
+    * one decision every events reader applies, the batch table and the
+    * streams alike (readStream requires an explicit schema). The native
+    * layout keeps its ts flavor (TimestampNTZType for the generated
+    * files, TimestampType for Spark-written GenScale data). */
+  private[graft] def eventsLayout(s: SparkSession, d: String): (StructType, Column) =
+    eventsTsNativeType(s, d) match {
+      case Some(tsType) =>
+        (StructType(eventsRawSchema.fields.map {
+          case f if f.name == "ts" => f.copy(dataType = tsType)
+          case f => f
+        }), col("ts").cast("timestamp"))
+      case None => (eventsRawSchema, timestamp_micros(expr("ts div 1000")))
+    }
+
+  def events(s: SparkSession, d: String): DataFrame = {
+    val (schema, ts) = eventsLayout(s, d)
+    s.read.schema(schema).parquet(s"$d/events.parquet").withColumn("ts", ts)
+  }
   def documents(s: SparkSession, d: String): DataFrame  = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 

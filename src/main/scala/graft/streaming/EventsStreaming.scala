@@ -1,9 +1,9 @@
 package graft.streaming
 
 import graft.functions.ExactNum.cents
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.sources.Tables
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Structured Streaming over the `events` table (SURVEY.md §7.5 — the
   * reference has no streaming; this is the harness-driven extension).
@@ -17,37 +17,6 @@ import org.apache.spark.sql.types._
   * the property that matters at 100 TB/day.
   */
 object EventsStreaming {
-
-  /** events schema for the legacy TIMESTAMP(NANOS) layout (ts read as
-    * nanos long, converted after); see Tables.eventsTsNativeType. */
-  private val eventsRawSchema = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", LongType), // TIMESTAMP(NANOS) surfaced as long
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
-  /** Same columns with `ts` as a native micros timestamp of the given
-    * flavor — TimestampNTZType for the driver's isAdjustedToUTC=false
-    * files, TimestampType for Spark-written (GenScale) benchdata. */
-  private def eventsNativeSchema(tsType: DataType) = StructType(
-    eventsRawSchema.fields.map {
-      case f if f.name == "ts" => f.copy(dataType = tsType)
-      case f => f
-    })
-
-  /** The events files' schema for `dir` and the `ts` normalization the
-    * sources apply. readStream requires an explicit schema, so the
-    * batch-side schema probe (resolved once per session) decides which
-    * ts layout this dir carries (see Tables.events); the cast to session-TZ timestamp is a
-    * value-preserving no-op for already-TimestampType files (sessions
-    * pin UTC). */
-  private def layout(spark: SparkSession, dir: String): (StructType, Column) =
-    graft.sources.Tables.eventsTsNativeType(spark, dir) match {
-      case Some(tsType) => (eventsNativeSchema(tsType), col("ts").cast("timestamp"))
-      case None => (eventsRawSchema, timestamp_micros(expr("ts div 1000")))
-    }
 
   private def eventsPath(dir: String) =
     java.nio.file.Paths.get(dir, "events.parquet").toAbsolutePath
@@ -83,7 +52,7 @@ object EventsStreaming {
           "unsupported events layout for the file-stream source")
     } else
       java.nio.file.Files.createSymbolicLink(streamDir.resolve("events.parquet"), src)
-    val (schema, ts) = layout(spark, dir)
+    val (schema, ts) = Tables.eventsLayout(spark, dir)
     spark.readStream.schema(schema).parquet(streamDir.toString)
       .withColumn("ts", ts)
   }
@@ -96,7 +65,8 @@ object EventsStreaming {
     * chunk replay is what proves watermark advance and session merges
     * ACROSS batches. */
   def eventsFile(spark: SparkSession, dir: String): DataFrame =
-    spark.read.schema(layout(spark, dir)._1).parquet(eventsPath(dir).toString)
+    spark.read.schema(Tables.eventsLayout(spark, dir)._1)
+      .parquet(eventsPath(dir).toString)
 
   /** One-micro-batch-per-file reader over events chunks staged from
     * `eventsFile`, with the same ts normalization as the other source.
@@ -104,7 +74,7 @@ object EventsStreaming {
     * staged chunks inherited. */
   def readChunkDirStream(spark: SparkSession, dir: String,
                          streamDir: java.nio.file.Path): DataFrame = {
-    val (schema, ts) = layout(spark, dir)
+    val (schema, ts) = Tables.eventsLayout(spark, dir)
     Replay.readChunks(spark, schema, streamDir).withColumn("ts", ts)
   }
 

@@ -55,19 +55,17 @@ object CrossJvmPin {
       case "write" =>
         val idx = PairIndex.materializeDocIndex(
           docs.filter(pmod(col("doc_id"), lit(16)) =!= 0), "doc_id", "text",
-          keepPostings = true,
           survivorsTable = Surv, pairsTable = Pairs,
           postingsTable = Post, dfTable = Df)
         show("corpus80", curate(idx))
       case "read" =>
-        val idx = PairIndex.DocIndex(Surv, Pairs, Some(Post), Some(Df))
+        val idx = PairIndex.DocIndex(Surv, Pairs, Post, Df)
         show("corpus80", curate(idx))
         val adv = PairIndex.advanceDocIndex(spark, idx,
           docs.filter(pmod(col("doc_id"), lit(16)) === 0), "doc_id", "text",
           economyGuard = Double.PositiveInfinity)
         show("advanced", curate(adv.idx))
-        val scratch = PairIndex.materializeDocIndex(docs, "doc_id", "text",
-          keepPostings = true)
+        val scratch = PairIndex.materializeDocIndex(docs, "doc_id", "text")
         show("fullscratch", curate(scratch))
         PairIndex.dropDocIndex(spark, scratch)
         PairIndex.dropDocIndex(spark, idx)

@@ -8,6 +8,16 @@ import org.scalatest.funsuite.AnyFunSuite
 class DedupSimilaritySpec extends AnyFunSuite with SparkTestSession {
   import spark.implicits._
 
+  /** Deterministic ~1/4 sample predicate: keeps a row iff the first hex
+    * digit of md5(id as string) is below 4. */
+  private def hashCoin(id: org.apache.spark.sql.Column) =
+    substring(md5(id.cast("string")), 1, 1) < lit("4")
+
+  /** Decoded-media metadata rows as `resizeMeta` reads them. */
+  private def mediaMeta(rows: (Long, Int, Int)*) =
+    rows.map { case (id, w, h) => (id, "img", 0L, w, h, 1, "f") }
+      .toDF("media_id", "kind", "n_bytes", "width", "height", "n_frames", "fingerprint")
+
   private val sfDir = "/root/testdata/sf0.001"
 
   private val docs = Seq(
@@ -86,20 +96,6 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestSession {
     val doc1Kgrams = Dedup.shingles(df.filter(col("doc_id") === 1), "doc_id", "text", 3).count()
     assert(fp(1L).size < doc1Kgrams,
       s"winnowing must compress: ${fp(1L).size} fingerprints vs $doc1Kgrams k-grams")
-  }
-
-  test("repetition signals: bigrams with multiplicity") {
-    import graft.operators.TextAnalysis
-    val df = Seq(
-      (1L, "spam spam spam spam"),          // "spam spam" x3 -> top frac 1.0
-      (2L, "all tokens here are different"), // every bigram unique -> 0.25
-      (3L, "one"))                           // single token: no bigrams
-      .toDF("doc_id", "text")
-    val bg = df.select(col("doc_id"), TextAnalysis.bigrams(col("text")).as("b"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
-    assert(bg(1L) === Seq("spam spam", "spam spam", "spam spam"))
-    assert(bg(2L).distinct.size === 4)
-    assert(bg(3L).isEmpty)
   }
 
   test("d16: per-row max-run bigram stats match the explode/groupBy reference") {
@@ -408,7 +404,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestSession {
 
   test("hash-coin sample is deterministic and near the nominal rate") {
     val emb = Tables.embeddings(spark, sfDir)
-    val keep = Similarity.hashCoin(col("vec_id")) // ¼
+    val keep = hashCoin(col("vec_id")) // ¼
     val n1 = emb.filter(keep).count()
     val n2 = emb.filter(keep).count()
     assert(n1 === n2, "hash-coin must be deterministic across runs")
@@ -423,7 +419,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestSession {
     // repo refuses to register), and the blocked path is measured on
     // the SAME sampled universe.
     val emb = Tables.embeddings(spark, sfDir)
-      .filter(Similarity.hashCoin(col("vec_id")))
+      .filter(hashCoin(col("vec_id")))
     val n = emb.count()
     assert(Similarity.cellsFor(n) === math.round(math.sqrt(n.toDouble)).toInt)
     assert(Similarity.cellsFor(1L) === 1)
@@ -469,7 +465,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestSession {
     // recall methodology as for the IVF-blocked path: exact all-pairs
     // on the hash-coin sampled universe, LSH-blocked on the same
     val emb = Tables.embeddings(spark, sfDir)
-      .filter(Similarity.hashCoin(col("vec_id")))
+      .filter(hashCoin(col("vec_id")))
     val exactTop = Similarity.topSimilarPairs(emb, 20)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     val got = Similarity.nearDupLsh(emb, 20)
@@ -700,7 +696,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestSession {
 
   test("blocked near-dup overlaps exact top pairs with exact cosines") {
     val emb = Tables.embeddings(spark, sfDir)
-      .filter(Similarity.hashCoin(col("vec_id")))
+      .filter(hashCoin(col("vec_id")))
     val exact = Similarity.topSimilarPairs(emb, 20)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     val blocked = Similarity.nearDupBlocked(emb, 20, cells = 8)
@@ -752,16 +748,13 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("multimodal resize: fit-within integer scaling incl. 1px clamp") {
-    import graft.operators.Multimodal
-    import graft.operators.Multimodal.MediaMeta
-    def m(id: Long, w: Int, h: Int) = MediaMeta(id, "img", 0L, w, h, 1, "f")
-    val meta = Seq(
-      m(1, 100, 50),   // fits → unchanged
-      m(2, 512, 256),  // wider → clamp width
-      m(3, 300, 600),  // taller → clamp height
-      m(4, 2000, 1)    // extreme aspect → floor hits 0, clamps to 1
-    ).toDS()
-    val out = Multimodal.resizeMeta(meta.toDF(), 256, 256)
+    val meta = mediaMeta(
+      (1L, 100, 50),   // fits → unchanged
+      (2L, 512, 256),  // wider → clamp width
+      (3L, 300, 600),  // taller → clamp height
+      (4L, 2000, 1)    // extreme aspect → floor hits 0, clamps to 1
+    )
+    val out = Multimodal.resizeMeta(meta, 256, 256)
       .collect().map(r => r.getLong(0) -> (r.getInt(3), r.getInt(4))).toMap
     assert(out(1L) === (100, 50))
     assert(out(2L) === (256, 128))
@@ -770,15 +763,13 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("resizeMeta is exact past the 2^53 double-mantissa boundary") {
-    import graft.operators.Multimodal
-    import graft.operators.Multimodal.MediaMeta
     // w*maxH = 36028794854703104 = q*h - 1 with h = 2^31-1 (constructed
     // via w ≡ -inv(2^24) mod h): exact integral division yields q-1 =
     // 16777214, while the pre-fix double division rounds the 2^55-sized
     // product and truncates to q = 16777215 — off by one. Pins that the
     // plan uses IntegralDivide, not Divide-then-cast.
-    val meta = Seq(MediaMeta(1L, "img", 0L, 2147483519, 2147483647, 1, "f")).toDS()
-    val out = Multimodal.resizeMeta(meta.toDF(), 16777216, 16777216)
+    val out = Multimodal.resizeMeta(mediaMeta((1L, 2147483519, 2147483647)),
+      16777216, 16777216)
       .collect().map(r => r.getLong(0) -> (r.getInt(3), r.getInt(4))).toMap
     assert(out(1L) === (16777214, 16777216))
   }

@@ -117,21 +117,28 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
   test("sweepStale collects other-JVM generations but spares this JVM's") {
     val mine = PairIndex.materializeDocIndex(
       Tables.documents(spark, sfDir), "doc_id", "text", numBuckets = 4)
-    // fake a DEAD JVM's leftover (pid far past the kernel pid ceiling)
-    // and a LIVE foreign JVM's (pid 1 — the container init process):
-    // the round-13 liveness gate must collect the first and spare the
-    // second (ADVICE: a concurrent JVM sharing the warehouse must not
-    // have its live index dropped mid-read)
-    spark.range(3).toDF("x")
-      .write.mode("overwrite").saveAsTable("graft_pair_survivors_p999999999_g1")
-    spark.range(3).toDF("x")
-      .write.mode("overwrite").saveAsTable("graft_pair_survivors_p1_g1")
-    PairIndex.sweepStale(spark, PairIndex.SurvivorsBase)
-    assert(!spark.catalog.tableExists("graft_pair_survivors_p999999999_g1"))
-    assert(spark.catalog.tableExists("graft_pair_survivors_p1_g1"))
-    spark.sql("DROP TABLE IF EXISTS graft_pair_survivors_p1_g1")
-    assert(spark.catalog.tableExists(mine.survivorsTable))
-    assert(spark.table(mine.survivorsTable).count() > 0)
+    // one call sweeps all six reserved prefixes. Under each, fake a DEAD
+    // JVM's leftover (pid far past the kernel pid ceiling) and a LIVE
+    // foreign JVM's (pid 1 — the init process): the liveness gate must
+    // collect the first and spare the second, so a concurrent JVM
+    // sharing the warehouse never has its live index dropped mid-read
+    val prefixes = Seq(PairIndex.SurvivorsBase, PairIndex.PairsBase,
+      PairIndex.PostingsBase, PairIndex.DfBase,
+      PairIndex.CorpusHashesBase, PairIndex.CorpusShinglesBase)
+    // and a generation of THIS JVM under each, which must survive too
+    val own = prefixes.map(PairIndex.freshName)
+    for (t <- prefixes.flatMap(p => Seq(s"${p}_p999999999_g1", s"${p}_p1_g1")) ++ own)
+      spark.range(3).toDF("x").write.mode("overwrite").saveAsTable(t)
+    PairIndex.sweepStale(spark)
+    for (p <- prefixes) {
+      assert(!spark.catalog.tableExists(s"${p}_p999999999_g1"), p)
+      assert(spark.catalog.tableExists(s"${p}_p1_g1"), p)
+      spark.sql(s"DROP TABLE IF EXISTS ${p}_p1_g1")
+    }
+    own.foreach(t => assert(spark.table(t).count() === 3, t))
+    own.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    // the materialized index survives, all four artifacts of it
+    mine.tables.foreach(t => assert(spark.table(t).count() > 0, t))
     PairIndex.dropDocIndex(spark, mine)
   }
 
@@ -151,14 +158,14 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     }
     eq(a.survivorsTable, b.survivorsTable)
     eq(a.pairsTable, b.pairsTable)
-    eq(a.postingsTable.get, b.postingsTable.get)
+    eq(a.postingsTable, b.postingsTable)
     // the df artifact stores append-only DELTA rows — semantic content
     // is the per-shingle sum, so equality is over the aggregate
     def dfAgg(t: String) = spark.table(t).groupBy(col("s"))
       .agg(sum(col("cnt")).as("df")).filter(col("df") > 0)
-    val (da, db) = (dfAgg(a.dfTable.get), dfAgg(b.dfTable.get))
+    val (da, db) = (dfAgg(a.dfTable), dfAgg(b.dfTable))
     assert(da.exceptAll(db).isEmpty && db.exceptAll(da).isEmpty,
-      s"df artifacts ${a.dfTable.get} vs ${b.dfTable.get} differ")
+      s"df artifacts ${a.dfTable} vs ${b.dfTable} differ")
   }
 
   /** Every table of `idx` with its rows, taken before an advance. */
@@ -203,12 +210,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
       102L -> "m n o p q r s t",
       103L -> "m n o p q r s u") // within-batch near-dup of 102
     val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
-      numBuckets = 4, keepPostings = true)
-    // precondition: an index without its df artifact is refused up
-    // front, like one without postings
-    val noDf = intercept[IllegalArgumentException](PairIndex.advanceDocIndex(
-      spark, idx.copy(dfTable = None), batch, "doc_id", "text"))
-    assert(noDf.getMessage.contains("df artifact"))
+      numBuckets = 4)
     val before = snapshot(idx)
     val r = PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text",
       economyGuard = Double.PositiveInfinity)
@@ -216,7 +218,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     assertInputIntact(before, r)
     val scratch = PairIndex.materializeDocIndex(
       corpus.unionByName(batch), "doc_id", "text",
-      numBuckets = 4, keepPostings = true)
+      numBuckets = 4)
     assertTablesEqual(r.idx, scratch)
     // the advanced index must actually hold cross AND within-batch pairs
     val pairKeys = spark.table(r.idx.pairsTable)
@@ -243,14 +245,14 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
       102L -> "m n o p q r s t",
       103L -> "m n o p q r s u")
     val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
-      numBuckets = 4, keepPostings = true)
+      numBuckets = 4)
     val before = snapshot(idx)
     val r = PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text",
       economyGuard = Double.PositiveInfinity)
     assertInputIntact(before, r)
     val scratch = PairIndex.materializeDocIndex(
       corpus.unionByName(batch), "doc_id", "text",
-      numBuckets = 4, keepPostings = true)
+      numBuckets = 4)
     assertTablesEqual(r.idx, scratch)
     // frozen daily mode: same guarantees
     val rf = PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text",
@@ -279,7 +281,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
       102L -> "m n o p q r s t",
       103L -> "m n o p q r s u")
     val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
-      numBuckets = 4, keepPostings = true)
+      numBuckets = 4)
     val before = snapshot(idx)
     graft.Telemetry.drain()
     val r = PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text",
@@ -315,7 +317,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
       102L -> "m n o p q r s t",
       103L -> "m n o p q r s u")
     val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
-      numBuckets = 4, keepPostings = true)
+      numBuckets = 4)
     val before = snapshot(idx)
     val inputFiles = idx.tables.map(t => t -> dataFiles(t)).toMap
     val r = PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text",
@@ -343,7 +345,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     assertInputIntact(before, r)
     val scratch = PairIndex.materializeDocIndex(
       corpus.unionByName(batch), "doc_id", "text",
-      numBuckets = 4, keepPostings = true)
+      numBuckets = 4)
     assertTablesEqual(r.idx, scratch)
     PairIndex.dropDocIndex(spark, idx)
     PairIndex.dropDocIndex(spark, r.idx)
@@ -360,7 +362,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
       2L -> "p q r s t v")
     val batch = docsDf(101L -> "p q r z1 z2 z3")
     val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
-      threshold = 0.6, maxDocFreq = 2, numBuckets = 4, keepPostings = true)
+      threshold = 0.6, maxDocFreq = 2, numBuckets = 4)
     val before = snapshot(idx)
     graft.Telemetry.drain()
     val r = PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text",
@@ -377,7 +379,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     assertInputIntact(before, r)
     val scratch = PairIndex.materializeDocIndex(
       corpus.unionByName(batch), "doc_id", "text",
-      threshold = 0.6, maxDocFreq = 2, numBuckets = 4, keepPostings = true)
+      threshold = 0.6, maxDocFreq = 2, numBuckets = 4)
     assertTablesEqual(r.idx, scratch)
     PairIndex.dropDocIndex(spark, idx)
     PairIndex.dropDocIndex(spark, r.idx)
@@ -391,7 +393,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
       12L -> "completely different text lives in this row")
     val batch = docsDf(5L -> "alpha beta gamma delta epsilon zeta") // == doc 10
     val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
-      numBuckets = 4, keepPostings = true)
+      numBuckets = 4)
     val before = snapshot(idx)
     val r = PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text",
       economyGuard = Double.PositiveInfinity)
@@ -399,7 +401,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     assertInputIntact(before, r)
     val scratch = PairIndex.materializeDocIndex(
       corpus.unionByName(batch), "doc_id", "text",
-      numBuckets = 4, keepPostings = true)
+      numBuckets = 4)
     assertTablesEqual(r.idx, scratch)
     PairIndex.dropDocIndex(spark, idx)
     PairIndex.dropDocIndex(spark, r.idx)
@@ -417,7 +419,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
       2L -> "p q r s t v")
     val batch = docsDf(101L -> "p q r z1 z2 z3")
     val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
-      threshold = 0.6, maxDocFreq = 2, numBuckets = 4, keepPostings = true)
+      threshold = 0.6, maxDocFreq = 2, numBuckets = 4)
     assert(spark.table(idx.pairsTable).count() === 1) // (1,2) pre-advance
     val before = snapshot(idx)
     val r = PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text",
@@ -427,7 +429,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     assert(spark.table(r.idx.pairsTable).count() === 0)
     val scratch = PairIndex.materializeDocIndex(
       corpus.unionByName(batch), "doc_id", "text",
-      threshold = 0.6, maxDocFreq = 2, numBuckets = 4, keepPostings = true)
+      threshold = 0.6, maxDocFreq = 2, numBuckets = 4)
     assertTablesEqual(r.idx, scratch)
     PairIndex.dropDocIndex(spark, idx)
     PairIndex.dropDocIndex(spark, r.idx)
@@ -441,7 +443,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
       12L -> "completely different text lives in this row")
     val batch = docsDf(5L -> "alpha beta gamma delta epsilon zeta") // == doc 10
     val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
-      numBuckets = 4, keepPostings = true)
+      numBuckets = 4)
     val before = snapshot(idx)
     val r = PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text",
       economyGuard = Double.PositiveInfinity)
@@ -452,7 +454,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     assert(survivors === Set(5L, 11L, 12L))
     val scratch = PairIndex.materializeDocIndex(
       corpus.unionByName(batch), "doc_id", "text",
-      numBuckets = 4, keepPostings = true)
+      numBuckets = 4)
     assertTablesEqual(r.idx, scratch)
     PairIndex.dropDocIndex(spark, idx)
     PairIndex.dropDocIndex(spark, r.idx)
@@ -466,7 +468,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     val b1 = docsDf(101L -> "j k l m n o p q")
     val b2 = docsDf(201L -> "j k l m n o p r") // near-dup of B1's doc
     val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
-      numBuckets = 4, keepPostings = true)
+      numBuckets = 4)
     val before = snapshot(idx)
     val r1 = PairIndex.advanceDocIndex(spark, idx, b1, "doc_id", "text",
       economyGuard = Double.PositiveInfinity)
@@ -482,7 +484,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     assert(pairKeys.contains((101L, 201L))) // advance 2 saw B1's postings
     val scratch = PairIndex.materializeDocIndex(
       corpus.unionByName(b1).unionByName(b2), "doc_id", "text",
-      numBuckets = 4, keepPostings = true)
+      numBuckets = 4)
     assertTablesEqual(r2.idx, scratch)
     Seq(idx, r1.idx, r2.idx, scratch).foreach(PairIndex.dropDocIndex(spark, _))
   }
@@ -498,7 +500,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
       101L -> "a b c d e f g y",
       102L -> "m n o p q r s t")
     val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
-      numBuckets = 4, keepPostings = true)
+      numBuckets = 4)
     val before = snapshot(idx)
     Telemetry.drain()
     val r = PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text")
@@ -508,7 +510,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     assertInputIntact(before, r)
     val scratch = PairIndex.materializeDocIndex(
       corpus.unionByName(batch), "doc_id", "text",
-      numBuckets = 4, keepPostings = true)
+      numBuckets = 4)
     assertTablesEqual(r.idx, scratch)
     // the advanced index stays advanceable: semantics + nDocs stamped
     val props = spark.sql(s"SHOW TBLPROPERTIES `${r.idx.pairsTable}`")
@@ -529,7 +531,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
       102L -> "m n o p q r s t",
       103L -> "m n o p q r s u")
     val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
-      numBuckets = 4, keepPostings = true)
+      numBuckets = 4)
     val before = snapshot(idx)
     val r = PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text",
       frozenCaps = true)
@@ -537,7 +539,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     assertInputIntact(before, r)
     val scratch = PairIndex.materializeDocIndex(
       corpus.unionByName(batch), "doc_id", "text",
-      numBuckets = 4, keepPostings = true)
+      numBuckets = 4)
     assertTablesEqual(r.idx, scratch)
     PairIndex.dropDocIndex(spark, idx)
     PairIndex.dropDocIndex(spark, r.idx)
@@ -555,7 +557,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
       2L -> "p q r s t v")
     val batch = docsDf(101L -> "p q r z1 z2 z3")
     val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
-      threshold = 0.6, maxDocFreq = 2, numBuckets = 4, keepPostings = true)
+      threshold = 0.6, maxDocFreq = 2, numBuckets = 4)
     val before = snapshot(idx)
     val r = PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text",
       frozenCaps = true)
@@ -576,7 +578,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
       12L -> "completely different text lives in this row")
     val batch = docsDf(5L -> "alpha beta gamma delta epsilon zeta") // == doc 10
     val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
-      numBuckets = 4, keepPostings = true)
+      numBuckets = 4)
     val before = snapshot(idx)
     val r = PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text",
       frozenCaps = true)
@@ -585,7 +587,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     // no cap flips in this fixture, so frozen == exact == from-scratch
     val scratch = PairIndex.materializeDocIndex(
       corpus.unionByName(batch), "doc_id", "text",
-      numBuckets = 4, keepPostings = true)
+      numBuckets = 4)
     assertTablesEqual(r.idx, scratch)
     PairIndex.dropDocIndex(spark, idx)
     PairIndex.dropDocIndex(spark, r.idx)
@@ -599,7 +601,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     val b1 = docsDf(101L -> "j k l m n o p q")
     val b2 = docsDf(201L -> "j k l m n o p r") // near-dup of B1's doc
     val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
-      numBuckets = 4, keepPostings = true)
+      numBuckets = 4)
     val before = snapshot(idx)
     val r1 = PairIndex.advanceDocIndex(spark, idx, b1, "doc_id", "text",
       frozenCaps = true)
@@ -616,7 +618,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     assert(pairKeys.contains((101L, 201L)))
     val scratch = PairIndex.materializeDocIndex(
       corpus.unionByName(b1).unionByName(b2), "doc_id", "text",
-      numBuckets = 4, keepPostings = true)
+      numBuckets = 4)
     assertTablesEqual(r2.idx, scratch)
     Seq(idx, r1.idx, r2.idx, scratch).foreach(PairIndex.dropDocIndex(spark, _))
   }
@@ -657,7 +659,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
       df.orderBy(df.columns.map(col).toSeq: _*).collect().toSeq
     val docs = Tables.documents(spark, sfDir)
     val byBuckets = Seq(1, 4, 32).map(n => n -> PairIndex.materializeDocIndex(
-      docs, "doc_id", "text", numBuckets = n, keepPostings = true)).toMap
+      docs, "doc_id", "text", numBuckets = n)).toMap
     val curated = byBuckets.map { case (n, i) =>
       n -> rows(PairIndex.curateFromIndex(spark, i, "doc_id", "text")) }
     val clusters = byBuckets.map { case (n, i) =>
@@ -673,7 +675,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     val batch = docs.filter(pmod(col("doc_id"), lit(64)) === 0)
     val advanced = Seq(4, 32).map { n =>
       val in = PairIndex.materializeDocIndex(base, "doc_id", "text",
-        numBuckets = n, keepPostings = true)
+        numBuckets = n)
       val before = snapshot(in)
       val r = PairIndex.advanceDocIndex(spark, in,
         batch, "doc_id", "text", economyGuard = Double.PositiveInfinity)
@@ -746,7 +748,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     // NumberFormatException killed every registered query that swept
     val weird = "graft_pair_survivors_p99999999999999999999_g1"
     spark.range(3).toDF("x").write.mode("overwrite").saveAsTable(weird)
-    PairIndex.sweepStale(spark, PairIndex.SurvivorsBase) // must not throw
+    PairIndex.sweepStale(spark) // must not throw
     assert(!spark.catalog.tableExists(weird))
   }
 
@@ -797,7 +799,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
       101L -> "a b c d e f g y",
       102L -> "m n o p q r s t")
     val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
-      numBuckets = 4, keepPostings = true)
+      numBuckets = 4)
     val before = snapshot(idx)
     spark.conf.set("spark.graft.autoBuckets.targetBytes", "8")
     val r =
@@ -814,12 +816,12 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     def bucketsOf(t: String): String = describe(t).getOrElse("Num Buckets", "?")
     assert(bucketsOf(r.idx.pairsTable) === stamped.toString)
     assert(bucketsOf(r.idx.survivorsTable) === stamped.toString)
-    assert(bucketsOf(r.idx.postingsTable.get) === stamped.toString)
-    assert(bucketsOf(r.idx.dfTable.get) === stamped.toString)
+    assert(bucketsOf(r.idx.postingsTable) === stamped.toString)
+    assert(bucketsOf(r.idx.dfTable) === stamped.toString)
     // results stay row-identical to a from-scratch materialization
     val scratch = PairIndex.materializeDocIndex(
       corpus.unionByName(batch), "doc_id", "text",
-      numBuckets = 4, keepPostings = true)
+      numBuckets = 4)
     assertTablesEqual(r.idx, scratch)
     // and the grown index stays consumable with zero exchanges
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -844,7 +846,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
       2L -> "p q r s t v")
     val batch = docsDf(101L -> "p q r z1 z2 z3") // pushes "p q r" over cap 2
     val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
-      threshold = 0.6, maxDocFreq = 2, numBuckets = 4, keepPostings = true)
+      threshold = 0.6, maxDocFreq = 2, numBuckets = 4)
     val e = intercept[IllegalStateException] {
       PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text",
         frozenCaps = true, assertNoCapFlips = true)
@@ -873,13 +875,13 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
         5L -> "alpha beta gamma delta epsilon zeta", // evicts doc 10
         103L -> "m n o p q r s u")
       val idx0 = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
-        numBuckets = 4, keepPostings = true)
+        numBuckets = 4)
       val r = PairIndex.advanceDocIndex(spark, idx0, batch, "doc_id", "text",
         economyGuard = Double.PositiveInfinity)
       assert(r.evicted === 1)
       val scratch = PairIndex.materializeDocIndex(
         corpus.unionByName(batch), "doc_id", "text",
-        numBuckets = 4, keepPostings = true)
+        numBuckets = 4)
       assertTablesEqual(r.idx, scratch)
       PairIndex.dropDocIndex(spark, idx0)
       PairIndex.dropDocIndex(spark, r.idx)
@@ -909,7 +911,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
       spark.catalog.listTables().collect().map(_.name).toSet
     for ((corpus, batch, threshold, cap) <- Seq(appendCase, capFlipCase)) {
       val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
-        threshold = threshold, maxDocFreq = cap, numBuckets = 4, keepPostings = true)
+        threshold = threshold, maxDocFreq = cap, numBuckets = 4)
       spark.sql(s"ALTER TABLE `${idx.pairsTable}` SET TBLPROPERTIES('graft.numBuckets'='8')")
       val before = snapshot(idx)
       val tablesBefore = catalogTables()
@@ -934,7 +936,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     // status, rescore, clone, rewrite and appends
     val idx = PairIndex.materializeDocIndex(
       docsDf(1L -> "p q r s t u", 2L -> "p q r s t v"), "doc_id", "text",
-      threshold = 0.6, maxDocFreq = 2, numBuckets = 4, keepPostings = true)
+      threshold = 0.6, maxDocFreq = 2, numBuckets = 4)
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
