@@ -1,7 +1,11 @@
 package graft.streaming
 
 import java.nio.file.{Files, Path}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FSDataOutputStream, LocalFileSystem, Path => HPath}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, ntile}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -17,9 +21,9 @@ import org.apache.spark.sql.types.StructType
   *    chunk;
   *  - `parquetSink` lands each micro-batch through `foreachBatch` under
   *    an `AvailableNow` trigger (swap the writer for Delta/JDBC in
-  *    production), checkpointing through Spark's FileSystem-based
-  *    checkpoint manager, which renames without forking a process per
-  *    file (see `parquetSink`);
+  *    production), in a stream session that shares the JVM's generated
+  *    code and checkpoints through `NioCheckpointFileManager` (see
+  *    `parquetSink`);
   *  - `runBounded` runs one such stream into a scratch sink, awaits it,
   *    records its `<tag>.*` state and phase telemetry, and returns the
   *    sink read back, with the stream's own schema, as the query result.
@@ -102,11 +106,12 @@ object Replay {
       .option("maxFilesPerTrigger", "1")
       .parquet(dir.toString)
 
-  /** The checkpoint-manager conf every `parquetSink` stream starts
-    * with (see there). */
-  private val checkpointManager = Map(
+  /** The session confs every `parquetSink` stream starts with (see
+    * there). */
+  private val streamSession = Map(
+    "spark.sql.artifact.isolation.enabled" -> "false",
     "spark.sql.streaming.checkpointFileManagerClass" ->
-      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
+      classOf[NioCheckpointFileManager].getName)
 
   /** Start `stream` into a parquet sink at `outDir`: every micro-batch
     * is written with `saveMode` (complete + overwrite keeps the sink
@@ -118,13 +123,20 @@ object Replay {
     * the stream clones the session when it starts, so they bind to this
     * stream alone and the caller's values are restored.
     *
-    * Every stream also starts with `checkpointManager`, the same way.
-    * Without libhadoop, Hadoop's local `FileContext` forks a `readlink`
-    * process to resolve each rename's path, so Spark's default
-    * FileContext-based checkpoint manager forks once for every offset,
-    * commit, metadata and state file it writes (~110 per q29 run). The
-    * FileSystem-based manager renames with one `rename(2)`. Spark's
-    * checkpoint checksum files are written either way. */
+    * Every stream also starts with `streamSession`, the same way:
+    *  - Artifact isolation off. Spark keys its generated-class cache on
+    *    the thread's class loader, and an isolated session (each stream
+    *    run clones a new one) gets a class loader of its own on the
+    *    executor, so every run would recompile every generated class.
+    *    No stream adds session artifacts, so isolation guards nothing
+    *    here.
+    *  - `NioCheckpointFileManager`. Without libhadoop, Hadoop's local
+    *    file system forks a `chmod` for every file and directory it
+    *    creates; the offset, commit, metadata and state files of a
+    *    checkpoint are created through java.nio instead. The sink's
+    *    parquet writes and the file source's metadata log (built from
+    *    the caller's session) still go through Hadoop and still fork.
+    *    Spark's checkpoint checksum files are written either way. */
   def parquetSink[T](stream: Dataset[T], outDir: String, outputMode: String,
                      saveMode: String, checkpoint: Option[String] = None,
                      confs: Map[String, String] = Map.empty): StreamingQuery = {
@@ -136,7 +148,7 @@ object Replay {
       .trigger(Trigger.AvailableNow())
     checkpoint.foreach(cp => writer.option("checkpointLocation", cp))
     val conf = stream.sparkSession.conf
-    val prev = (checkpointManager ++ confs).map { case (k, v) =>
+    val prev = (streamSession ++ confs).map { case (k, v) =>
       val p = conf.getOption(k); conf.set(k, v); k -> p
     }
     try writer.start()
@@ -155,9 +167,10 @@ object Replay {
   def runBounded(spark: SparkSession, tag: String, schema: StructType)(
       start: String => StreamingQuery): DataFrame = {
     val sink = scratchDir(s"graft_${tag}_sink").toString
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val q = start(sink)
     q.awaitTermination()
-    recordStateTelemetry(tag, q)
+    recordStateTelemetry(tag, q, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles)
     spark.read.schema(schema).parquet(sink)
   }
 
@@ -167,11 +180,15 @@ object Replay {
     *    i.e. the cross-batch carry;
     *  - `<prefix>.state_rows_updated`: state rows updated across batches;
     *  - `<prefix>.batches`: the data-bearing micro-batch count;
+    *  - `<prefix>.codegen_compiles`: generated classes compiled while
+    *    the stream ran (counted JVM-wide, so a concurrent query's count
+    *    too), 0 once the stream's code is cached;
     *  - `<prefix>.dur_<phase>`: each `durationMs` phase (planning,
     *    state commit, sink addBatch, …) summed across micro-batches —
     *    bounded runs are fixed-cost dominated, and these say which
     *    phase carries that cost. */
-  private def recordStateTelemetry(prefix: String, q: StreamingQuery): Unit = {
+  private def recordStateTelemetry(prefix: String, q: StreamingQuery,
+                                   compiles: Long): Unit = {
     val ps = q.recentProgress.toSeq
     val withState = ps.filter(_.stateOperators.nonEmpty)
     withState.lastOption.foreach { last =>
@@ -183,9 +200,37 @@ object Replay {
         withState.flatMap(_.stateOperators).map(_.numRowsUpdated).sum)
     }
     graft.Telemetry.record(s"$prefix.batches", ps.count(_.numInputRows > 0))
+    graft.Telemetry.record(s"$prefix.codegen_compiles", compiles)
     import scala.jdk.CollectionConverters._
     ps.flatMap(_.durationMs.asScala).groupBy(_._1).foreach { case (k, vs) =>
       graft.Telemetry.record(s"$prefix.dur_$k", vs.map(_._2.longValue()).sum)
     }
+  }
+}
+
+/** Spark's FileSystem-based checkpoint manager, creating directories
+  * and temporary files of `file:` checkpoints through java.nio: Hadoop's
+  * local file system forks a `chmod` for each without libhadoop. Reads,
+  * renames, lists and deletes stay Hadoop's, which fork nothing. A file
+  * written here has no hidden `.<file>.crc`; Hadoop reads such a file
+  * unchecked, and Spark's own checksum files are unaffected. */
+class NioCheckpointFileManager(path: HPath, conf: Configuration)
+    extends FileSystemBasedCheckpointFileManager(path, conf) {
+
+  private def local(p: HPath): Option[Path] = fs match {
+    case l: LocalFileSystem => Some(l.pathToFile(p).toPath)
+    case _ => None
+  }
+
+  override def mkdirs(p: HPath): Unit = local(p) match {
+    case Some(dir) => Files.createDirectories(dir)
+    case None => super.mkdirs(p)
+  }
+
+  override def createTempFile(p: HPath): FSDataOutputStream = local(p) match {
+    case Some(f) =>
+      Files.createDirectories(f.getParent)
+      new FSDataOutputStream(Files.newOutputStream(f), null)
+    case None => super.createTempFile(p)
   }
 }

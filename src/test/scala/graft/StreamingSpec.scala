@@ -3,6 +3,7 @@ package graft
 import graft.queries.Registry
 import graft.sources.Tables
 import graft.streaming.{DocsStreaming, EventsStreaming, Replay}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
@@ -271,7 +272,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     // q29/q31 read the single-file testdata as ONE micro-batch; q33
     // replays 4 id-ordered chunks as 4. The `<tag>.*` keys feed
     // perfbench's streaming.* layer metrics, so the set is pinned too.
-    val keys = Set("batches", "state_rows", "state_bytes", "state_rows_updated",
+    val keys = Set("batches", "codegen_compiles", "state_rows", "state_bytes",
+      "state_rows_updated",
       "dur_addBatch", "dur_commitOffsets", "dur_getBatch", "dur_latestOffset",
       "dur_queryPlanning", "dur_triggerExecution", "dur_walCommit")
     for (dir <- Seq(sfDir, java.nio.file.Paths.get(sfDir).resolveSibling("sf0.01").toString);
@@ -285,6 +287,20 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       assert(t.keySet === keys, s"$name at $dir")
       assert(t("batches") === batches, s"$name at $dir")
     }
+  }
+
+  test("a second q29 run in one session compiles no code") {
+    // Spark caches generated classes per class loader: a stream session
+    // that loaded classes through a class loader of its own would
+    // recompile the whole stream on every run
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def q29() = Registry.queries("q29_events_stream_sink")(spark, sfDir).count()
+    assert(q29() > 0)
+    Telemetry.drain()
+    val before = compiles
+    assert(q29() > 0)
+    assert(compiles - before === 0)
+    assert(Telemetry.drain().get("q29.codegen_compiles") === Some(0L))
   }
 
   test("q29/q31/q33 read their sink back with the stream's own schema, inferring none") {
@@ -346,7 +362,9 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
 
   test("replay checkpoints keep checksums and leak no checkpoint-manager conf") {
     val key = "spark.sql.streaming.checkpointFileManagerClass"
+    val isolation = "spark.sql.artifact.isolation.enabled"
     assert(spark.conf.getOption(key).isEmpty)
+    val isolationBefore = spark.conf.getOption(isolation)
     // each registered query starts its stream internally: catch the
     // handles when the start events are posted (synchronously, while
     // the queries are active)
@@ -363,16 +381,20 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
                          "q33_stream_dedup")) {
       assert(Registry.queries(name)(spark, sfDir).count() > 0)
       assert(spark.conf.getOption(key).isEmpty, s"$name left $key set")
+      assert(spark.conf.getOption(isolation) === isolationBefore, s"$name changed $isolation")
     } finally spark.streams.removeListener(listener)
-    // ... and their streams' own sessions ran with the FileSystem manager
-    val managers = started.asScala.toSeq.map(_.asInstanceOf[
+    // ... and their streams' own sessions ran with the java.nio manager,
+    // without artifact isolation
+    val sessions = started.asScala.toSeq.map(_.asInstanceOf[
         org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
-      .streamingQuery.lastExecution.sparkSession.conf.getOption(key))
-    assert(managers === Seq.fill(3)(Some("org.apache.spark.sql.execution.streaming." +
-      "checkpointing.FileSystemBasedCheckpointFileManager")))
+      .streamingQuery.lastExecution.sparkSession.conf)
+    assert(sessions.map(_.getOption(key)) ===
+      Seq.fill(3)(Some("graft.streaming.NioCheckpointFileManager")))
+    assert(sessions.map(_.get(isolation)) === Seq.fill(3)("false"))
     // a durable checkpoint written through the runner still carries
-    // Spark's own checksum files (`<file>.crc`, next to Hadoop's hidden
-    // `.<file>.crc`) for its state files
+    // Spark's own checksum files (`<file>.crc`, not Hadoop's hidden
+    // `.<file>.crc`, which the java.nio manager does not write) for its
+    // state files
     val ckpt = java.nio.file.Files.createTempDirectory("graft_crc_ckpt")
     val out = java.nio.file.Files.createTempDirectory("graft_crc_sink").toString
     Replay.parquetSink(EventsStreaming.hourlyAgg(
@@ -390,6 +412,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     }
     assert(sparkCrcs.exists(_.startsWith("state/")), files.sorted.mkString("\n"))
     assert(spark.conf.getOption(key).isEmpty)
+    assert(spark.conf.getOption(isolation) === isolationBefore)
   }
 
   test("session windows produce bounded, ordered sessions") {
