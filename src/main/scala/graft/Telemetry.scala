@@ -2,13 +2,13 @@ package graft
 
 /** In-process metrics registry for operator convergence telemetry.
   *
-  * Iterative operators (Components' label propagation / star rounds)
-  * record how many rounds they actually executed; Bench drains the
-  * registry after each query and emits the values in its JSON line, so
-  * scale runs self-report convergence behavior — the number to watch
-  * is that round counts stay FLAT as data grows a decade, which is
-  * what makes the O(diameter) / O(log² n) bounds evidence rather than
-  * assertion.
+  * Iterative operators (Components' label rounds) record how many
+  * rounds they actually executed; Bench drains the registry after each
+  * query and emits the values in its JSON line, so scale runs
+  * self-report convergence behavior — the number to watch is that
+  * round counts stay FLAT as data grows a decade, which is what makes
+  * the O(diameter) plain rounds and the O(log n) hook-and-shortcut
+  * rounds evidence rather than assertion.
   *
   * Driver-side only state (a ConcurrentHashMap on the driver JVM):
   * operators record from driver code after their action completes,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Observation}
 import org.apache.spark.sql.functions._
 
 /** Connected components over a pair list — the "cluster the near-dup
@@ -10,105 +10,62 @@ import org.apache.spark.sql.functions._
   * both endpoints of a chain; cluster-then-keep-representative retains
   * exactly one per group).
   *
-  * Two algorithms, same (v, lbl) contract:
+  * One loop over (v, lbl) labels. Every vertex starts labeled with the
+  * minimum of itself and its neighbors; each round lowers labels until
+  * they stop changing, and the fixpoint is each component uniformly
+  * carrying its minimum vertex id. Two kinds of round:
   *
-  *  - `connectedComponents` (default): iterative min-label propagation.
-  *    Every vertex starts labeled with itself; each round a vertex
-  *    takes the minimum label among itself and its neighbors; fixpoint
-  *    = each component uniformly carries its minimum vertex id. Rounds
-  *    needed = graph diameter, and dedup graphs are near-cliques (a
-  *    duplicated document pairs with most of its copies), so 2-4
-  *    rounds are typical. Each round is one shuffle-join on the vertex
-  *    id plus a partial-aggregated min — no driver-side graph state,
-  *    no vertex ever holds more than its label.
+  *  - plain min-label rounds (rounds 2..`PlainRounds`): a vertex takes
+  *    the minimum label among itself and its neighbors. Rounds needed =
+  *    graph diameter, and dedup graphs are near-cliques (a duplicated
+  *    document pairs with most of its copies), so 2-5 rounds are
+  *    typical. Each round is one shuffle-join on the vertex id plus a
+  *    partial-aggregated min — no driver-side graph state.
+  *  - hook-and-shortcut rounds, only for graphs still unsettled after
+  *    `PlainRounds` (long chains): each directed edge (s, d) offers
+  *    L(s) both to d and to the vertex L(d) (the hook), then each
+  *    vertex takes its label's label (the shortcut) — the hooking and
+  *    pointer-jumping steps of Shiloach and Vishkin's algorithm, which
+  *    fold a chain in O(log n) rounds instead of O(n). They continue
+  *    from the current labels; nothing restarts.
   *
-  *  - `connectedComponentsStar`: alternating large-star/small-star
-  *    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-  *    SoCC'14) — the adversarial-graph fallback. Converges in
-  *    O(log² n) rounds regardless of diameter, with the same
-  *    per-round shuffle shape (one aggregation + one join over the
-  *    edge list), so a long-chain graph that min-label propagation
-  *    `require`s out of still resolves. Slightly more work per round
-  *    (the edge list is rewritten, not just the labels), which is why
-  *    it is the fallback rather than the default for near-clique dedup
-  *    graphs.
+  * Labels only fall, and each stays a vertex of its own component, so
+  * the label sum strictly falls on every round but the last: an
+  * unchanged sum IS the fixpoint, and the loop needs no round budget.
+  * The sum is read off each round's own checkpoint job through
+  * `Dataset.observe` (a new `Observation` per round), not by a separate
+  * aggregate job. A stage retry cannot double-count it: the
+  * `CollectMetricsExec` is the top of the checkpointed plan, so it runs
+  * in the checkpoint job's result stage, and Spark merges a result
+  * task's accumulator updates once per partition; retried map stages
+  * hold no metrics node.
   *
   * Lineage is truncated with an eager checkpoint per round: without it
-  * the iterated self-join doubles the plan each round and the
-  * convergence check re-executes the whole history. `checkpointDir`
-  * selects durability: `None` (default) uses `localCheckpoint` —
-  * executor-memory snapshots, right for local[*] and fault-tolerant-
-  * enough interactive clusters — while `Some(dir)` uses reliable
-  * `checkpoint()` against that directory, surviving executor loss on a
-  * real cluster (the dir should be on the cluster's shared store, e.g.
-  * HDFS/S3). Each round's snapshot is unpersisted as soon as the next
-  * round materializes, so block-manager usage is O(1) in the iteration
-  * count, not O(rounds).
+  * the iterated self-join doubles the plan each round. Durability
+  * follows the session: reliable `checkpoint()` when the context has a
+  * checkpoint dir (`spark.checkpoint.dir`, which should be on the
+  * cluster's shared store, surviving executor loss), executor-local
+  * `localCheckpoint` otherwise. Each round's snapshot is unpersisted
+  * as soon as the next round materializes, so block-manager usage is
+  * O(1) in the round count.
   */
 object Components {
 
-  /** Labels plus convergence telemetry: `iterations` is the number of
-    * label-refinement (or star-rewrite) rounds actually executed, the
-    * number a scale run should watch stay flat as data grows. */
-  final case class Result(labels: DataFrame, iterations: Int)
-
-  /** Typed non-convergence signal (round-12, VERDICT item 6): thrown by
-    * `minLabel` / `connectedComponentsStar` when `maxIter` rounds did
-    * not reach a fixpoint. The `connectedComponents` facade catches
-    * EXACTLY this type for its star fallback — an unrelated
-    * `IllegalArgumentException` raised inside an iteration (bad
-    * checkpoint path, malformed input) propagates instead of silently
-    * triggering a second full pair-generation pass. Extends
-    * IllegalArgumentException so pre-round-12 callers catching the old
-    * contract keep working. */
-  final class NonConvergenceException(message: String)
-    extends IllegalArgumentException(message)
+  /** Plain min-label rounds (the fused first round included) before
+    * the loop adds hooking and shortcutting. Above every registered
+    * query's measured round count (2-5 at sf0.1 through sf10), so those
+    * never reach a hook round. */
+  val PlainRounds = 8
 
   /** (v, lbl) for every vertex appearing in `edges`, where lbl is the
     * minimum vertex id of v's component. Vertices with no edges are
     * absent (a singleton is its own representative — union them in if
-    * needed). Deterministic for any partitioning of the input.
-    *
-    * Algorithm selection is automatic (round-11, VERDICT item 3): the
-    * min-label default converges in diameter rounds — 2-4 on the
-    * near-clique graphs dedup produces — but a pathological long-chain
-    * graph exceeds `maxIter`. Rather than abort a 10-hour cluster job
-    * with "use the other algorithm", non-convergence is CAUGHT (the
-    * typed `NonConvergenceException` only — an unrelated failure
-    * propagates) and the same edges re-run through
-    * `connectedComponentsStar` (O(log² n) rounds on any shape, same
-    * (v, lbl) contract). The fallback's round budget is its own
-    * `StarMaxIter` — NOT the caller's `maxIter`, which bounds diameter
-    * rounds and would be far too tight for log²-round star alternation
-    * (round-12, ADVICE). The fallback is observable:
-    * `components.fallback_star` = 1 plus the usual
-    * `components.star_rounds` land in the telemetry map. */
-  def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
-                          maxIter: Int = 25,
-                          checkpointDir: Option[String] = None): DataFrame =
-    try minLabel(edges, srcCol, dstCol, maxIter, checkpointDir).labels
-    catch {
-      case _: NonConvergenceException =>
-        graft.Log.warn(
-          s"[components] min-label hit maxIter=$maxIter; falling back to " +
-            s"large/small-star (maxIter=$StarMaxIter)")
-        graft.Telemetry.record("components.fallback_star", 1L)
-        connectedComponentsStar(edges, srcCol, dstCol,
-          maxIter = StarMaxIter, checkpointDir = checkpointDir).labels
-    }
-
-  private val StarMaxIter = 50
-
-  /** `connectedComponents` with the iteration count — bench/scale runs
-    * log it to confirm convergence behavior stays flat across scale
-    * decades. */
-  def minLabel(edges: DataFrame, srcCol: String, dstCol: String,
-               maxIter: Int = 25,
-               checkpointDir: Option[String] = None): Result = {
-    // per-phase wall attribution (round-10): every materialization here
-    // is EAGER (checkpoint / aggregate action), so inline timers are
-    // exact — decade runs read these from Bench's telemetry map to see
-    // WHICH phase grew instead of guessing from the whole-query wall
+    * needed). Deterministic for any partitioning of the input. Records
+    * the executed round count as `components.min_label_rounds`. */
+  def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
+    // per-phase wall attribution: every materialization here is EAGER,
+    // so inline timers are exact — decade runs read these from Bench's
+    // telemetry map to see WHICH phase grew
     def timed[T](metric: String)(body: => T): T = {
       val t0 = System.nanoTime()
       val r = body
@@ -117,54 +74,31 @@ object Components {
         graft.Telemetry.snapshot().getOrElse(metric, 0L) + ms)
       r
     }
-    val ck = checkpointer(edges, checkpointDir)
-    // materialize the edge list once: every round (and every convergence
-    // check) joins against it, and without the checkpoint the upstream
-    // pair-generation pipeline would lazily re-execute per round.
-    // Round-10: checkpoint the ONE-directional E-row projection and
-    // symmetrize lazily on top of the cache. The previous plan
-    // checkpointed the symmetrized UNION — which executes the whole
-    // upstream pair-generation pipeline once PER UNION BRANCH unless
-    // Spark happens to reuse the exchange, and that reuse measurably
-    // fails at decade scale: an interleaved same-JVM A/B at sf30
-    // (benchlogs_r10/ccab.log) put the union plan at 910.6 s wall /
-    // 22,300 CPU-s vs 413.9 s / 9,304 for this one — 2.2× — with the
-    // whole delta in the sym materialization phase (897 s → 404 s).
-    // The lazy union costs each consumer a 2E-row scan of cached
-    // blocks, exactly what reading a 2E checkpoint would, for half
-    // the write/storage and a guaranteed single pair-gen execution.
-    // metric renamed from components.sym_ms in round 11: since the
-    // round-10 onedir fix this phase times only the one-directional
-    // edge checkpoint (symmetrization is lazy; its cost lands in
-    // init_ms/round_ms consumers), so cross-round comparisons against
-    // pre-fix sym_ms numbers are not like-for-like under the old name
-    // The checkpoint is re-partitioned by EDGE bytes, not by whatever
-    // width the upstream pair pipeline ran at (round-16): the pair
-    // stages pin a scale-proportional shuffle width for their own
-    // explode volumes, and inheriting it here made every propagation
-    // round run 2×that many tasks over a far smaller edge list — at
-    // sf10, 352 tasks each rebuilding the 500k-row broadcast label
-    // relation, ~8 s/round for a 65 MB edge list. The AQE-coalescible
-    // repartition costs one edge-scale shuffle once and sizes the
-    // rounds' task count to the data.
-    // Round-17 (VERDICT item 1): the materialization is SPLIT so the
-    // telemetry attributes honestly. A single checkpoint of the
-    // projected edges executes the caller's ENTIRE upstream pipeline
-    // (for d18/d21 that is the full Jaccard pair generation — ~40 s of
-    // d18's 48 s sf10 wall, ≈ d07 standalone) inside one timer that
-    // reads as if the CHECKPOINT were the cost. First materialize the
+    val reliable = edges.sparkSession.sparkContext.getCheckpointDir.isDefined
+    def ck(df: DataFrame): DataFrame =
+      if (reliable) df.checkpoint() else df.localCheckpoint()
+    // checkpoint one round's labels and read their sum off the same job;
+    // decimal: immune to overflow at any vertex-id scale. The sum over
+    // no labels (no edges at all) is null — fold it to zero.
+    def ckSum(labels: DataFrame): (DataFrame, java.math.BigDecimal) = {
+      val obs = new Observation()
+      val out = ck(labels.observe(obs, sum(col("lbl").cast("decimal(38,0)")).as("s")))
+      (out, Option(obs.get("s").asInstanceOf[java.math.BigDecimal])
+        .getOrElse(java.math.BigDecimal.ZERO))
+    }
+    // Materialize the edge list once — every round joins against it.
+    // Two snapshots so the telemetry attributes honestly: first the
     // projected (src, dst) pairs at the upstream's own width
-    // (pairgen_ms = the upstream execution, the irreducible cost of
-    // clustering from scratch), then checkpoint the edge-byte-sized
-    // repartition (edges_ckpt_ms = the components machinery's own
-    // edge-scale shuffle + snapshot — tens of MB at sf10). The extra
-    // materialization writes the 2-long edge list once more; both
-    // snapshots use the caller's durability policy and the first is
-    // released as soon as the second exists — block-manager storage
-    // for local checkpoints, checkpoint-store FILES for reliable ones
-    // (Spark itself never deletes non-streaming reliable checkpoints
-    // mid-session, so without the explicit delete every cluster-mode
-    // call would hold two edge-list snapshots instead of one).
+    // (pairgen_ms = the caller's whole upstream pipeline, e.g. d18's
+    // Jaccard pair generation), then an edge-byte-sized repartition
+    // (edges_ckpt_ms = the components machinery's own edge-scale
+    // shuffle; inheriting the pair stages' scale-proportional width
+    // made every round run far more tasks than the edge list needs).
+    // The first is released, files included, once the second exists.
+    // Only the ONE-directional list is checkpointed and symmetrized
+    // lazily on top: checkpointing the union re-ran the upstream once
+    // per union branch at decade scale (2.2× wall at sf30,
+    // benchlogs_r10/ccab.log).
     val raw = timed("components.pairgen_ms")(ck(edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))))
     val onedir = timed("components.edges_ckpt_ms")(ck(
@@ -173,152 +107,49 @@ object Components {
     GraftColumnBridge.removeCheckpointFiles(raw)
     val sym = onedir.unionByName(
       onedir.select(col("dst").as("src"), col("src").as("dst")))
-    // initial labels fused with the first propagation round: label0(v) =
-    // min(v, min neighbor) is exactly what round 1 would produce from
-    // the identity labeling, for the cost of the distinct() aggregation
-    // alone — one fewer checkpoint+aggregate cycle per call
-    var labels = timed("components.init_ms")(ck(sym
-      .select(col("dst").as("v"), least(col("src"), col("dst")).as("lbl"))
-      .groupBy(col("v")).agg(min(col("lbl")).as("lbl"))))
-    // convergence via the label-sum invariant: labels only ever
-    // decrease elementwise over a fixed vertex set, so an unchanged sum
-    // IS the fixpoint — one cheap aggregate per round instead of a
-    // change-detection join. Decimal sum: immune to overflow at any
-    // vertex-id scale.
-    // null-safe: sum over an EMPTY label set (no edges at all) is null —
-    // fold it to zero so the first round compares equal and the loop
-    // terminates with the correct empty result instead of an NPE
-    def lblSum(df: DataFrame): java.math.BigDecimal =
-      Option(df.agg(sum(col("lbl").cast("decimal(38,0)"))).head().getDecimal(0))
-        .getOrElse(java.math.BigDecimal.ZERO)
-    var prevSum = timed("components.sumagg_ms")(lblSum(labels))
-    var iter = 1 // the fused initialization IS round 1's propagation
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val next = timed("components.round_ms")(ck(sym.as("e")
+
+    def plainRound(labels: DataFrame): DataFrame =
+      sym.as("e")
         .join(labels.as("l"), col("e.src") === col("l.v"))
         .select(col("e.dst").as("v"), col("l.lbl").as("lbl"))
         .unionByName(labels)
-        .groupBy(col("v")).agg(min(col("lbl")).as("lbl"))))
-      val nextSum = timed("components.sumagg_ms")(lblSum(next))
+        .groupBy(col("v")).agg(min(col("lbl")).as("lbl"))
+
+    // each (s, d) offers L(s) to d and to L(d) (the hook), then each
+    // vertex takes its label's label (the shortcut); every label is a
+    // vertex of the edge list, so the shortcut join drops no vertex
+    def hookRound(labels: DataFrame): DataFrame = {
+      val offers = sym
+        .join(labels.select(col("v").as("src"), col("lbl").as("ls")), "src")
+        .join(labels.select(col("v").as("dst"), col("lbl").as("ld")), "dst")
+        .select(explode(array(col("dst"), col("ld"))).as("v"), col("ls").as("lbl"))
+      val hooked = offers.unionByName(labels)
+        .groupBy(col("v")).agg(min(col("lbl")).as("lbl"))
+      hooked.as("a").join(hooked.as("b"), col("a.lbl") === col("b.v"))
+        .select(col("a.v"), col("b.lbl"))
+    }
+
+    // round 1 fused with the initial labeling: min(v, min neighbor) is
+    // exactly what a round over the identity labeling would produce
+    var (labels, prevSum) = timed("components.init_ms")(ckSum(sym
+      .select(col("dst").as("v"), least(col("src"), col("dst")).as("lbl"))
+      .groupBy(col("v")).agg(min(col("lbl")).as("lbl"))))
+    var rounds = 1
+    var converged = false
+    while (!converged) {
+      val (next, nextSum) = timed("components.round_ms")(ckSum(
+        if (rounds < PlainRounds) plainRound(labels) else hookRound(labels)))
       converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
       // the checkpoint above is eager, so `next` no longer reads the old
-      // snapshot — release it now instead of holding one snapshot per
-      // round until session end
+      // snapshot — release it now instead of holding one per round
       GraftColumnBridge.unpersistCheckpointed(labels)
       labels = next
-      iter += 1
+      prevSum = nextSum
+      rounds += 1
     }
-    if (!converged) {
-      // release this attempt's snapshots before throwing: the caller's
-      // star fallback re-runs pair generation from scratch, and a
-      // leaked O(E) block-manager residue per failed attempt is
-      // exactly the storage squatting the per-round unpersist exists
-      // to prevent
-      GraftColumnBridge.unpersistCheckpointed(labels)
-      GraftColumnBridge.unpersistCheckpointed(onedir)
-    }
-    if (!converged)
-      throw new NonConvergenceException(
-        s"connectedComponents did not converge in $maxIter rounds — " +
-          "pathological chain graph; use connectedComponentsStar instead")
     GraftColumnBridge.unpersistCheckpointed(onedir)
-    graft.Log.info(s"[components] min-label converged in $iter rounds")
-    graft.Telemetry.record("components.min_label_rounds", iter.toLong)
-    Result(labels, iter)
+    graft.Log.info(s"[components] converged in $rounds rounds")
+    graft.Telemetry.record("components.min_label_rounds", rounds.toLong)
+    labels
   }
-
-  /** Large-star/small-star alternation — same (v, lbl) contract as
-    * `connectedComponents`, O(log² n) rounds on ANY graph shape.
-    *
-    * One round = large-star then small-star over the current edge list:
-    *  - large-star: every vertex points its strictly-larger neighbors
-    *    at the minimum of its neighborhood (incl. itself) — long
-    *    chains fold toward their minimum in halving steps;
-    *  - small-star: every vertex and its smaller parents re-link to
-    *    the minimum parent — stars flatten.
-    * Fixpoint = the edge list is exactly the star {(v, root)}; the
-    * labels are then the star itself plus root→root, restricted and
-    * extended to the input's vertex set (so self-loop-only vertices
-    * still appear as their own singleton, matching min-label). */
-  def connectedComponentsStar(edges: DataFrame, srcCol: String, dstCol: String,
-                              maxIter: Int = 50,
-                              checkpointDir: Option[String] = None): Result = {
-    val ck = checkpointer(edges, checkpointDir)
-    val in = edges
-      .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
-
-    // large-star: symmetrize, m(u) = min(u, min Γ(u)), emit (v, m(u))
-    // for every neighbor v > u. Every undirected edge {u,v} appears
-    // centered at both endpoints; only the smaller center emits it, so
-    // the output is oriented src > dst and self-loop-free.
-    def largeStar(e: DataFrame): DataFrame = {
-      val sym = e.unionByName(e.select(col("b").as("a"), col("a").as("b")))
-      val mins = sym.groupBy(col("a"))
-        .agg(min(col("b")).as("mb"))
-        .select(col("a"), least(col("a"), col("mb")).as("m"))
-      sym.join(mins, "a")
-        .where(col("b") > col("a"))
-        .select(col("b").as("a"), col("m").as("b"))
-        .distinct()
-    }
-
-    // small-star: on a src>dst-oriented list, every vertex's parents
-    // (and the vertex itself) re-link to its minimum parent.
-    def smallStar(e: DataFrame): DataFrame = {
-      val mins = e.groupBy(col("a")).agg(min(col("b")).as("m"))
-      e.join(mins, "a").select(col("b").as("a"), col("m").as("b"))
-        .unionByName(mins.select(col("a"), col("m").as("b")))
-        .where(col("a") =!= col("b"))
-        .distinct()
-    }
-
-    var cur = ck(largeStar(in.where(col("a") =!= col("b"))))
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val next = ck(largeStar(smallStar(cur)))
-      // exact set-equality fixpoint test (no hashing shortcut: a
-      // collision-driven early stop would be a silent wrong answer)
-      converged = next.count() == cur.count() &&
-        next.except(cur).limit(1).count() == 0
-      GraftColumnBridge.unpersistCheckpointed(cur)
-      cur = next
-      iter += 1
-    }
-    if (!converged)
-      throw new NonConvergenceException(
-        s"connectedComponentsStar did not converge in $maxIter rounds")
-    // at fixpoint `cur` IS the star (v → component-min); restore the
-    // input's full vertex universe (roots and self-loop-only vertices
-    // have no out-edge) as their own label
-    val verts = in.select(col("a").as("v"))
-      .unionByName(in.select(col("b").as("v"))).distinct()
-    val labels = verts.join(cur.withColumnRenamed("a", "v"), Seq("v"), "left")
-      .select(col("v"), coalesce(col("b"), col("v")).as("lbl"))
-    graft.Log.info(s"[components] large/small-star converged in $iter rounds")
-    graft.Telemetry.record("components.star_rounds", iter.toLong)
-    Result(labels, iter)
-  }
-
-  /** Per-round checkpoint policy: reliable `checkpoint()` into
-    * `checkpointDir` when given (survives executor loss — pass a
-    * shared-store path on a real cluster), else executor-local
-    * `localCheckpoint` (no durability, no extra I/O — right for
-    * local[*]). Both are eager, so callers may unpersist the previous
-    * round as soon as the call returns. */
-  private def checkpointer(edges: DataFrame,
-                           checkpointDir: Option[String]): DataFrame => DataFrame =
-    checkpointDir match {
-      case Some(dir) =>
-        val sc = edges.sparkSession.sparkContext
-        // a dir that came from the context (spark.checkpoint.dir) is
-        // already its checkpoint root; setting it again would nest a
-        // fresh subdirectory under it
-        if (!sc.getCheckpointDir.contains(dir)) sc.setCheckpointDir(dir)
-        df => df.checkpoint()
-      case None =>
-        df => df.localCheckpoint()
-    }
 }

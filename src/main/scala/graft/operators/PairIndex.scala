@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Telemetry
 import graft.etl.Layout
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -729,13 +729,17 @@ object PairIndex {
           "fixture or re-pin the oracle), not an advance bug. Run with " +
           "frozenCaps=false (exact) if the batch must be absorbed exactly.")
     val nChanged = if (frozenCaps) 0L else nFlips
-    val affectedOld =
-      if (nChanged == 0) d.newSurv.select(col(idCol)).limit(0)
-      else run.checkpoint("ckpt_affected")(
-        stored.join(changedKeys, Seq("s"), "left_semi")
-          .select(col("doc_id").as(idCol)).distinct())
-    val nAffected = run.phase("count_affected")(
-      if (nChanged == 0) 0L else affectedOld.count())
+    val (affectedOld, nAffected) =
+      if (nChanged == 0) (d.newSurv.select(col(idCol)).limit(0), 0L)
+      else {
+        // the count rides on the checkpoint job that materializes the rows
+        val obs = new Observation()
+        val affected = run.checkpoint("ckpt_affected")(
+          stored.join(changedKeys, Seq("s"), "left_semi")
+            .select(col("doc_id").as(idCol)).distinct()
+            .observe(obs, count(lit(1)).as("n")))
+        (affected, obs.get("n").asInstanceOf[Long])
+      }
     CapStatus(shB, dfB, dfCombFull, affectedOld, nAffected, nFlips, flipHolders)
   }
 
@@ -979,15 +983,13 @@ object PairIndex {
   /** d18's cluster assignment reading the index (survivor universe):
     * connected components over the materialized pairs plus the size
     * join — pair generation is a parquet scan here, not a recompute.
-    * `checkpointDir` selects Components' per-round snapshot durability
-    * (round-12, VERDICT item 5): pass a shared-store path on a real
-    * cluster so an executor loss mid-clustering resumes from the
-    * reliable checkpoint instead of killing the job. */
-  def clustersFromIndex(spark: SparkSession, idx: DocIndex,
-                        checkpointDir: Option[String] = None): DataFrame = {
+    * Components' per-round snapshots follow the session: reliable when
+    * the context has a checkpoint dir (set `spark.checkpoint.dir` to a
+    * shared-store path on a real cluster, so an executor loss
+    * mid-clustering resumes from the snapshot), local otherwise. */
+  def clustersFromIndex(spark: SparkSession, idx: DocIndex): DataFrame = {
     val cc = Components.connectedComponents(
-      spark.table(idx.pairsTable), "doc_id1", "doc_id2",
-      checkpointDir = checkpointDir)
+      spark.table(idx.pairsTable), "doc_id1", "doc_id2")
     cc.hint("merge")
       .join(cc.groupBy(col("lbl")).agg(count(lit(1)).as("cluster_size")), "lbl")
       .select(col("v").as("doc_id"), col("lbl").as("cluster_rep"),

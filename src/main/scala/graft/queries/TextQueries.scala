@@ -13,14 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object TextQueries {
 
-  /** Reliable-checkpoint directory for the iterative clustering queries
-    * (d18/d21/d29) — round-12, VERDICT item 5: the session's own
-    * `spark.checkpoint.dir` (SparkContext.getCheckpointDir). Set →
-    * Components snapshots per round into that (shared-store) path and
-    * survives executor loss; unset → executor-local `localCheckpoint`,
-    * right for local[*]. */
-  private def ckDir(s: SparkSession): Option[String] = s.sparkContext.getCheckpointDir
-
   // globs for the shared micro-nat tables graft.Verify materializes
   // (see LmScore scaladoc for the shared-table oracle protocol)
   private val SharedLmCostsGlob =
@@ -616,7 +608,7 @@ object TextQueries {
     val sh = Dedup.shingles(Tables.documents(s, dir), "doc_id", "text", 3)
     val pairs = Dedup.jaccardPairs(sh, 0.6, maxDocFreq = 100)
     val cc = graft.operators.Components
-      .connectedComponents(pairs, "doc_id1", "doc_id2", checkpointDir = ckDir(s))
+      .connectedComponents(pairs, "doc_id1", "doc_id2")
     cc.join(cc.groupBy(col("lbl")).agg(count(lit(1)).as("cluster_size")), "lbl")
       .select(col("v").as("doc_id"), col("lbl").as("cluster_rep"),
         col("cluster_size"))
@@ -752,7 +744,7 @@ object TextQueries {
     val pairs = Dedup.jaccardPairs(
       Dedup.shingles(docs, "doc_id", "text", 3), 0.6, maxDocFreq = 100)
     val cc = graft.operators.Components
-      .connectedComponents(pairs, "doc_id1", "doc_id2", checkpointDir = ckDir(s))
+      .connectedComponents(pairs, "doc_id1", "doc_id2")
     val scores = graft.operators.LmScore.score(docs, "doc_id", "text")
       .select(col("doc_id"), (col("sum_nlp_micro").cast("double")
         / col("n_tokens").cast("double")).as("__score"))
@@ -1081,7 +1073,7 @@ object TextQueries {
     // second read-only consumer of the shared full-corpus index — see
     // d28 for the fixture contract
     val idx = StandingFixtures.fullDocIndex(s, dir)
-    graft.operators.PairIndex.clustersFromIndex(s, idx, checkpointDir = ckDir(s))
+    graft.operators.PairIndex.clustersFromIndex(s, idx)
       .orderBy(col("doc_id"))
   }
 

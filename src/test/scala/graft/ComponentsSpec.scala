@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Components
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class ComponentsSpec extends AnyFunSuite with SparkTestSession {
@@ -11,6 +10,37 @@ class ComponentsSpec extends AnyFunSuite with SparkTestSession {
     Components.connectedComponents(
         edges.toDF("a", "b").repartition(parts), "a", "b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** The labels and `components.min_label_rounds` of one call on `edges`. */
+  private def rounds(edges: Seq[(Long, Long)]): (Map[Long, Long], Long) = {
+    Telemetry.drain()
+    val got = cc(edges)
+    (got, Telemetry.drain()("components.min_label_rounds"))
+  }
+
+  /** The round bound of the loop on an n-vertex graph. */
+  private def roundBound(n: Int): Int =
+    Components.PlainRounds + 2 * (32 - Integer.numberOfLeadingZeros(n - 1))
+
+  /** Runs `body` with the context's checkpoint dir set — to a fresh
+    * temp root if the context has none, unset again after, so later
+    * specs keep local snapshots. */
+  private def withContextCheckpointDir[T](body: String => T): T = {
+    val sc = spark.sparkContext
+    val preset = sc.getCheckpointDir
+    if (preset.isEmpty)
+      sc.setCheckpointDir(java.nio.file.Files.createTempDirectory("graft_cc_ctx").toString)
+    try body(sc.getCheckpointDir.get)
+    finally if (preset.isEmpty) sc.setCheckpointDir(null)
+  }
+
+  /** Reliable checkpoints are FILES named rdd-* under the dir;
+    * localCheckpoint writes none. */
+  private def wroteSnapshots(dir: String): Boolean = {
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(new java.net.URI(dir)))
+    try walk.anyMatch(p => p.getFileName.toString.startsWith("rdd-"))
+    finally walk.close()
+  }
 
   test("two disjoint cliques get their min-id representatives") {
     val got = cc(Seq((1L, 2L), (2L, 3L), (1L, 3L), (10L, 11L)))
@@ -38,124 +68,88 @@ class ComponentsSpec extends AnyFunSuite with SparkTestSession {
     assert(cc(Seq.empty[(Long, Long)]) === Map.empty[Long, Long])
   }
 
-  test("minLabel non-convergence within maxIter fails loudly and TYPED") {
-    // the raw algorithm keeps the loud-failure contract; the
-    // connectedComponents facade catches exactly this type and falls
-    // back (round-12, VERDICT item 6: typed signal, not message-sniffed)
-    val edges = (1L to 8L).map(i => (i + 1, i))
-    val ex = intercept[Components.NonConvergenceException] {
-      Components.minLabel(
-        edges.toDF("a", "b"), "a", "b", maxIter = 2).labels.collect()
-    }
-    assert(ex.getMessage.contains("did not converge"))
+  test("cliques, chains, mixed graphs and a self-loop-only vertex get their minimum") {
+    val expected = Seq(
+      Seq((1L, 2L), (2L, 3L), (1L, 3L), (10L, 11L)) ->
+        Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L),
+      (1L to 8L).map(i => (i + 1, i)) -> (1L to 9L).map(_ -> 1L).toMap,
+      Seq((5L, 2L), (2L, 5L), (5L, 2L), (7L, 5L)) -> Map(2L -> 2L, 5L -> 2L, 7L -> 2L),
+      Seq((1L, 2L), (3L, 2L), (9L, 4L), (4L, 8L), (6L, 7L)) ->
+        Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 8L -> 4L, 9L -> 4L, 6L -> 6L, 7L -> 6L),
+      Seq((4L, 4L)) -> Map(4L -> 4L), // a self-loop-only vertex stays a singleton
+      Seq.empty[(Long, Long)] -> Map.empty[Long, Long])
+    expected.foreach { case (g, want) => assert(cc(g) === want, s"edges: $g") }
   }
 
-  test("an unrelated IllegalArgumentException does NOT trigger the star fallback") {
-    // checkpointDir="" raises Hadoop's "Can not create a Path from an
-    // empty string" IllegalArgumentException inside the try — before
-    // the typed-catch fix, any IAE risked being misread; the facade
-    // must propagate it (running a second full pair-generation pass to
-    // "recover" from a config typo would mask the real failure)
-    graft.Telemetry.drain()
-    val edges = Seq((1L, 2L), (2L, 3L))
-    val ex = intercept[IllegalArgumentException] {
-      Components.connectedComponents(
-        edges.toDF("a", "b"), "a", "b", checkpointDir = Some("")).collect()
-    }
-    assert(!ex.isInstanceOf[Components.NonConvergenceException])
-    assert(graft.Telemetry.drain().get("components.fallback_star").isEmpty,
-      "fallback must not fire on a non-convergence-unrelated IAE")
-  }
-
-  test("connectedComponents auto-falls back to star on a long-chain graph") {
-    // 40-hop path: diameter 40 > maxIter 6, so min-label cannot
-    // converge — the facade must resolve through the star fallback
-    // instead of aborting (a 10-hour cluster job dying at round 25
-    // with "use the other algorithm" is an operational bug), and the
-    // fallback must be visible in telemetry
-    graft.Telemetry.drain()
+  test("a 40-hop chain resolves in one loop") {
+    // diameter 40 > PlainRounds: the loop hooks and shortcuts from the
+    // labels it has, with no second algorithm and no restart
     val edges = (1L to 40L).map(i => (i + 1, i))
-    val got = Components.connectedComponents(
-        edges.toDF("a", "b").repartition(4), "a", "b", maxIter = 6)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (got, n) = rounds(edges)
     assert(got === (1L to 41L).map(_ -> 1L).toMap)
-    val t = graft.Telemetry.drain()
-    assert(t.get("components.fallback_star") === Some(1L))
-    assert(t.get("components.star_rounds").exists(_ > 0L))
+    assert(n > Components.PlainRounds && n <= roundBound(41), s"$n rounds")
   }
 
-  private def ccStar(edges: Seq[(Long, Long)], maxIter: Int = 50): Map[Long, Long] =
-    Components.connectedComponentsStar(
-        edges.toDF("a", "b").repartition(4), "a", "b", maxIter)
-      .labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-
-  test("large/small-star matches min-label on cliques, chains, and mixed graphs") {
-    val graphs = Seq(
-      Seq((1L, 2L), (2L, 3L), (1L, 3L), (10L, 11L)),
-      (1L to 8L).map(i => (i + 1, i)),
-      Seq((5L, 2L), (2L, 5L), (5L, 2L), (7L, 5L)),
-      Seq((1L, 2L), (3L, 2L), (9L, 4L), (4L, 8L), (6L, 7L)),
-      Seq((4L, 4L)), // self-loop-only vertex stays a singleton
-      Seq.empty[(Long, Long)])
-    graphs.foreach { g => assert(ccStar(g) === cc(g)) }
-  }
-
-  test("large/small-star resolves a chain min-label propagation requires out of") {
-    // path of 64 hops: min-label needs ~64 rounds (fails at maxIter=6);
-    // star alternation folds it in O(log^2 n)
-    val edges = (1L to 64L).map(i => (i + 1, i))
-    intercept[IllegalArgumentException] {
-      Components.minLabel(edges.toDF("a", "b"), "a", "b", maxIter = 6)
-        .labels.collect()
+  test("1,000-vertex paths resolve within PlainRounds + 2 log2 n rounds") {
+    // plain min-label propagation needs a round per hop on these; the
+    // hook-and-shortcut rounds fold them logarithmically
+    val n = 1000
+    val sorted = (1L to n.toLong).toIndexedSeq
+    val shuffled = new scala.util.Random(7).shuffle(sorted)
+    // minimum in the middle, ids growing toward both ends
+    val middle = (0 until n).map { i =>
+      val d = i - n / 2
+      if (d >= 0) 2L * d + 1 else -2L * d
     }
-    val r = Components.connectedComponentsStar(
-      edges.toDF("a", "b"), "a", "b", maxIter = 12)
-    assert(r.labels.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap ===
-      (1L to 65L).map(_ -> 1L).toMap)
-    assert(r.iterations <= 12)
+    for ((name, ids) <- Seq("sorted" -> sorted, "shuffled" -> shuffled, "middle" -> middle)) {
+      val (got, r) = rounds(ids.zip(ids.tail))
+      assert(got === (1L to n.toLong).map(_ -> 1L).toMap, name)
+      assert(r <= roundBound(n), s"$name path took $r rounds")
+    }
+  }
+
+  test("a 6-clique runs no standalone aggregate job per round") {
+    // one call runs one Dataset action per checkpoint — two edge
+    // snapshots and one per round — and no other: the label sum rides
+    // on the round's own checkpoint
+    val clique = for (i <- 1L to 6L; j <- (i + 1) to 6L) yield (i, j)
+    val edges = clique.toDF("a", "b").repartition(4)
+    Telemetry.drain()
+    val jobs = Jobs.during(spark)(Components.connectedComponents(edges, "a", "b"))
+    val rounds = Telemetry.drain()("components.min_label_rounds")
+    assert(rounds === 2L)
+    assert(jobs.forall(_.sqlExecution.isDefined), jobs)
+    assert(jobs.flatMap(_.sqlExecution).distinct.size === 2 + rounds, jobs)
   }
 
   test("reliable checkpointDir produces the identical result as localCheckpoint") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
     val edges = Seq((1L, 2L), (3L, 2L), (9L, 4L), (4L, 8L), (6L, 7L), (8L, 1L))
     val local = cc(edges)
-    val reliable = Components.connectedComponents(
-        edges.toDF("a", "b").repartition(3), "a", "b",
-        maxIter = 25, checkpointDir = Some(dir))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(reliable === local)
-    val starReliable = Components.connectedComponentsStar(
-        edges.toDF("a", "b"), "a", "b", maxIter = 50, checkpointDir = Some(dir))
-      .labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(starReliable === local)
+    withContextCheckpointDir { dir =>
+      assert(cc(edges, parts = 3) === local)
+      assert(wroteSnapshots(dir), s"no reliable checkpoint written under $dir")
+    }
   }
 
   test("a checkpoint dir taken from the context is reused, not nested") {
-    // the clustering queries pass the session's spark.checkpoint.dir
-    // (SparkContext.getCheckpointDir) back in; setting it again would
-    // move the context's checkpoint root into a new subdirectory
-    val sc = spark.sparkContext
-    if (sc.getCheckpointDir.isEmpty)
-      sc.setCheckpointDir(java.nio.file.Files.createTempDirectory("graft_cc_ctx").toString)
-    val root = sc.getCheckpointDir
+    // the context's spark.checkpoint.dir selects reliable snapshots;
+    // Components never sets it, which would move the context's
+    // checkpoint root into a new subdirectory
     val edges = Seq((1L, 2L), (2L, 3L), (5L, 4L))
-    val got = Components.connectedComponents(
-        edges.toDF("a", "b"), "a", "b", checkpointDir = root)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got === cc(edges))
-    assert(sc.getCheckpointDir === root)
+    val local = cc(edges)
+    withContextCheckpointDir { root =>
+      assert(cc(edges) === local)
+      assert(spark.sparkContext.getCheckpointDir === Some(root))
+      assert(wroteSnapshots(root), s"no reliable checkpoint written under $root")
+    }
   }
 
   test("clustersFromIndex threads checkpointDir through to reliable snapshots") {
-    // round-12, VERDICT item 5: the index consumers must expose the
-    // durability knob — an executor loss mid-clustering on a real
-    // cluster survives only if Components snapshots into shared store.
-    // Proof of mode: reliable checkpoints are FILES under the dir
-    // (localCheckpoint writes none), so a non-empty rdd-* set after the
-    // call shows the reliable path actually ran; results must be
-    // identical to default (local) mode.
+    // the index consumers follow the same rule: an executor loss
+    // mid-clustering on a real cluster survives only if Components
+    // snapshots into shared store. Results must be identical to local
+    // mode.
     import graft.operators.PairIndex
-    val dir = java.nio.file.Files.createTempDirectory("graft_pi_ckpt")
     val idx = PairIndex.materializeDocIndex(
       graft.sources.Tables.documents(spark, "/root/testdata/sf0.001"),
       "doc_id", "text", numBuckets = 4,
@@ -163,33 +157,31 @@ class ComponentsSpec extends AnyFunSuite with SparkTestSession {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val local = rows(PairIndex.clustersFromIndex(spark, idx))
-    val reliable = rows(PairIndex.clustersFromIndex(spark, idx,
-      checkpointDir = Some(dir.toString)))
-    assert(reliable === local)
-    assert(reliable.nonEmpty)
-    val walk = java.nio.file.Files.walk(dir)
-    val wroteSnapshots =
-      try walk.anyMatch(p => p.getFileName.toString.startsWith("rdd-"))
-      finally walk.close()
-    assert(wroteSnapshots, s"no reliable checkpoint written under $dir")
+    withContextCheckpointDir { dir =>
+      val reliable = rows(PairIndex.clustersFromIndex(spark, idx))
+      assert(reliable === local)
+      assert(reliable.nonEmpty)
+      assert(wroteSnapshots(dir), s"no reliable checkpoint written under $dir")
+    }
   }
 
   test("iteration telemetry: near-clique graphs converge in few rounds") {
     val clique = for (i <- 1L to 6L; j <- (i + 1) to 6L) yield (i, j)
-    val r = Components.minLabel(clique.toDF("a", "b"), "a", "b")
-    assert(r.labels.collect().map(x => x.getLong(1)).forall(_ == 1L))
-    assert(r.iterations <= 3, s"clique took ${r.iterations} rounds")
+    val (got, n) = rounds(clique)
+    assert(got.values.forall(_ == 1L))
+    assert(n <= 3, s"clique took $n rounds")
   }
 
   test("round counts land in the Telemetry registry for bench self-reporting") {
-    graft.Telemetry.drain()
-    val r = Components.minLabel(Seq((1L, 2L), (2L, 3L)).toDF("a", "b"), "a", "b")
-    assert(graft.Telemetry.snapshot().get("components.min_label_rounds")
-      === Some(r.iterations.toLong))
-    val s = Components.connectedComponentsStar(
-      Seq((5L, 6L)).toDF("a", "b"), "a", "b")
-    val drained = graft.Telemetry.drain()
-    assert(drained.get("components.star_rounds") === Some(s.iterations.toLong))
-    assert(graft.Telemetry.snapshot().isEmpty) // drain resets
+    // path 1-2-3: the fused first round labels 3 with 2, round 2 with 1,
+    // round 3 changes nothing
+    Telemetry.drain()
+    cc(Seq((1L, 2L), (2L, 3L)))
+    val drained = Telemetry.drain()
+    assert(drained.get("components.min_label_rounds") === Some(3L))
+    assert(drained.keySet.filter(_.startsWith("components.")) ===
+      Set("components.min_label_rounds", "components.pairgen_ms",
+        "components.edges_ckpt_ms", "components.init_ms", "components.round_ms"))
+    assert(Telemetry.snapshot().isEmpty) // drain resets
   }
 }

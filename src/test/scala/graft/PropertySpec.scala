@@ -216,7 +216,12 @@ class PropertySpec extends AnyFunSuite with SparkTestSession {
       a <- Gen.chooseNum(0L, 60L)
       b <- Gen.chooseNum(0L, 60L)
     } yield (a, b)
-    val edges = samples(Gen.chooseNum(5, 40).flatMap(Gen.listOfN(_, edgeGen)), 6)
+    // plus two 200-vertex paths that plain min-label propagation cannot
+    // settle in few rounds: shuffled ids, and the minimum in the middle
+    val ids = new scala.util.Random(11).shuffle((0L until 200L).toList)
+    val middle = (0 until 200).map(i => if (i >= 100) 2L * (i - 100) else 2L * (100 - i) - 1)
+    val edges = samples(Gen.chooseNum(5, 40).flatMap(Gen.listOfN(_, edgeGen)), 6) ++
+      Seq(ids.zip(ids.tail), middle.zip(middle.tail).toList)
     edges.foreach { es =>
       val parent = scala.collection.mutable.Map[Long, Long]()
       def find(x: Long): Long = {

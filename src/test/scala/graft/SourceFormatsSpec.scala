@@ -1,8 +1,6 @@
 package graft
 
 import graft.sources.Tables
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -63,27 +61,6 @@ class SourceFormatsSpec extends AnyFunSuite with SparkTestSession {
     assert(rows(native).nonEmpty)
   }
 
-  /** Spark jobs started by `body` on this thread (tagged by a job
-    * group, so jobs from other threads are not counted). */
-  private def jobsDuring(s: SparkSession)(body: => Unit): Int = {
-    val tag = s"graft-jobs-${System.nanoTime}"
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == tag) n.incrementAndGet()
-    }
-    s.sparkContext.addSparkListener(listener)
-    s.sparkContext.setJobGroup(tag, tag)
-    try body
-    finally {
-      s.sparkContext.clearJobGroup()
-      assert(GraftColumnBridge.waitListenerBusEmpty(s, 10000))
-      s.sparkContext.removeSparkListener(listener)
-    }
-    n.get
-  }
-
   test("every table reads with the schema Spark itself infers") {
     def fields(st: org.apache.spark.sql.types.StructType) =
       st.fields.toSeq.map(f => (f.name, f.dataType, f.nullable, f.metadata))
@@ -102,13 +79,13 @@ class SourceFormatsSpec extends AnyFunSuite with SparkTestSession {
   test("a table's schema is inferred once per session, not once per build") {
     Tables.lineitem(spark, sfDir)
     Tables.events(spark, sfDir)
-    assert(jobsDuring(spark) {
+    assert(Jobs.during(spark) {
       Tables.lineitem(spark, sfDir)
       Tables.events(spark, sfDir)
-    } === 0)
+    }.isEmpty)
     val other = spark.newSession()
-    assert(jobsDuring(other)(Tables.lineitem(other, sfDir)) >= 1)
-    assert(jobsDuring(other)(Tables.lineitem(other, sfDir)) === 0)
+    assert(Jobs.during(other)(Tables.lineitem(other, sfDir)).nonEmpty)
+    assert(Jobs.during(other)(Tables.lineitem(other, sfDir)).isEmpty)
   }
 
   test("a path rewritten with a different schema is inferred again") {
