@@ -45,9 +45,9 @@ import org.apache.spark.sql.functions._
   * follows the session: reliable `checkpoint()` when the context has a
   * checkpoint dir (`spark.checkpoint.dir`, which should be on the
   * cluster's shared store, surviving executor loss), executor-local
-  * `localCheckpoint` otherwise. Each round's snapshot is unpersisted
-  * as soon as the next round materializes, so block-manager usage is
-  * O(1) in the round count.
+  * `localCheckpoint` otherwise. Each round's snapshot is released (its
+  * reliable files too) once the next round materializes, the edges' at
+  * the end, so checkpoint usage is O(1) in the round count.
   */
 object Components {
 
@@ -141,13 +141,16 @@ object Components {
         if (rounds < PlainRounds) plainRound(labels) else hookRound(labels)))
       converged = nextSum.compareTo(prevSum) == 0
       // the checkpoint above is eager, so `next` no longer reads the old
-      // snapshot — release it now instead of holding one per round
+      // snapshot — release it, files included, instead of holding one
+      // per round
       GraftColumnBridge.unpersistCheckpointed(labels)
+      GraftColumnBridge.removeCheckpointFiles(labels)
       labels = next
       prevSum = nextSum
       rounds += 1
     }
     GraftColumnBridge.unpersistCheckpointed(onedir)
+    GraftColumnBridge.removeCheckpointFiles(onedir)
     graft.Log.info(s"[components] converged in $rounds rounds")
     graft.Telemetry.record("components.min_label_rounds", rounds.toLong)
     labels

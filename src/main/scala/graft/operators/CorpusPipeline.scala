@@ -55,7 +55,7 @@ object CorpusPipeline {
     val exact = Dedup.dropExactDuplicates(docs, "doc_id", "text")
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nearDupIds = Dedup
-      .jaccardPairs(Dedup.shingles(exact, "doc_id", "text", Dedup.ShingleK),
+      .jaccardPairs(Dedup.postings(exact, "doc_id", "text"),
         jaccardThreshold, maxDocFreq)
       .select(col("doc_id2").as("doc_id"))
       .distinct()

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,12 +13,20 @@ import org.apache.spark.sql.functions._
   *    actual collisions, never all-pairs.
   *  - SimHash: 64-bit bit-vote fingerprint per document; near-dups
   *    sit at a small hamming distance.
-  *  - n-gram Jaccard: inverted-index join on shingles (pairs that share
-  *    at least one shingle), again never all-pairs.
+  *  - n-gram Jaccard: every path (full, batch-vs-corpus, and the pair
+  *    and corpus indexes in `PairIndex`) starts from ONE shingle
+  *    postings relation (`postings`), expands pairs with ONE posting-
+  *    list kernel (`pairsWithin` for pairs inside a relation,
+  *    `pairsAcross` for pairs between a probe side and the rest — the
+  *    exact-substring family uses the same two), and scores with ONE
+  *    tail (`scored`). Pairs share at least one shingle, never
+  *    all-pairs.
   *
-  * Hashing is md5-based (not Spark's murmur `hash()`) so every stage is
-  * engine-independent and oracle-checkable; md5 is also stable across
-  * Spark versions, which matters for incremental dedup state at scale.
+  * Output-visible hashing is md5-based (not Spark's murmur `hash()`),
+  * so every stage is engine-independent and oracle-checkable; md5 is
+  * also stable across Spark versions, which matters for incremental
+  * dedup state at scale. The Jaccard postings key on xxhash64 of the
+  * shingle, an internal join key that never reaches an output.
   */
 object Dedup {
 
@@ -47,22 +55,23 @@ object Dedup {
 
   // ---------------- shingles ----------------
 
-  /** Word-shingle width of every whole-document Jaccard near-dup
-    * contract: `CorpusPipeline.curate`, `dedupIncrement`, and the pair
-    * and corpus indexes that must stay row-identical to them. */
+  /** Word-shingle width of `shingles`, so of every whole-document
+    * near-dup contract: MinHash (d06), `CorpusPipeline.curate`,
+    * `dedupIncrement`, and the pair and corpus indexes that must stay
+    * row-identical to them (their stamp records it). */
   private[operators] val ShingleK = 3
 
-  /** Distinct k-token shingles per document: (doc_id, s) — one narrow
-    * pass over the corpus via the native generator. Per-document dedup
-    * happens inside the row (array_distinct BEFORE explode), so no
-    * global distinct() shuffle: the output is shuffle-free however
-    * large the corpus. */
-  def shingles(df: DataFrame, idCol: String, textCol: String, k: Int = 3): DataFrame = {
+  /** Distinct `ShingleK`-token shingles per document: (doc_id, s) —
+    * one narrow pass over the corpus via the native generator.
+    * Per-document dedup happens inside the row (array_distinct BEFORE
+    * explode), so no global distinct() shuffle: the output is
+    * shuffle-free however large the corpus. */
+  def shingles(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     // native codegen shingle array (plans.ShinglesExpr): the hottest
     // path of the dedup family — one byte copy per row, zero-copy
     // shingle windows, no interpreted per-shingle lambda
     df.select(col(idCol).as("doc_id"),
-      explode(array_distinct(TextAnalysis.shinglesCol(col(textCol), k))).as("s"))
+      explode(array_distinct(TextAnalysis.shinglesCol(col(textCol), ShingleK))).as("s"))
   }
 
   // ---------------- MinHash + LSH ----------------
@@ -115,9 +124,37 @@ object Dedup {
 
   // ---------------- n-gram Jaccard ----------------
 
+  /** The shingle postings (doc_id, s: long) of `docs`: the one
+    * derivation behind every whole-document Jaccard path — the full
+    * pair kernel, the incremental batch-vs-corpus pass, and the pair
+    * and corpus indexes.
+    *
+    * `s` is xxhash64 of the shingle, not the shingle string: the
+    * exchange ships 8-byte longs instead of ~25-byte strings and every
+    * downstream comparison is integer — the string itself is never
+    * needed (only membership counts are). The distinct after hashing
+    * restores SET semantics under a 64-bit collision: two distinct
+    * shingles of one doc colliding would otherwise leave duplicate
+    * (doc_id, s) rows that inflate both the per-shingle df (perturbing
+    * the cap decision) and the per-doc cardinality/intersection
+    * counts. With the distinct, a collision merges two postings into
+    * their union — still wrong vs raw strings (P ≈ 3·10⁻⁴ for ONE
+    * merged posting at 10^8 distinct shingles, and the raw-string
+    * oracle would flag it) but internally consistent. The distinct
+    * rides the `s` exchange (hash(s) clusters (doc_id, s)), and so does
+    * every per-shingle stage downstream. */
+  def postings(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    shingles(docs, idCol, textCol)
+      .select(col("doc_id"), xxhash64(col("s")).as("s"))
+      .repartition(col("s"))
+      .distinct()
+
   /** Pairwise Jaccard over shingle sets, restricted to pairs sharing at
-    * least one shingle (inverted-index join — never all-pairs). Returns
-    * exact intersection/union counts plus a rounded similarity.
+    * least one shingle (posting-list pair expansion — never
+    * all-pairs). Returns exact intersection/union counts plus a rounded
+    * similarity. `sh0` is a `postings` relation, computed or read from
+    * a bucketed index scan (already hash-partitioned by `s`, so the
+    * df-cap window rides the bucketing with no exchange).
     *
     * `maxDocFreq` caps hot-shingle fan-out: a shingle appearing in d
     * documents emits O(d²) candidate pairs, so one corpus-common
@@ -128,83 +165,36 @@ object Dedup {
     * semantics, mirrored verbatim in the d07 oracle). The trade: a
     * pair whose every shared shingle is corpus-hot scores lower —
     * acceptable for near-dup mining, where corpus-hot shingles carry
-    * no dedup signal anyway. */
-  def jaccardPairs(shingleDf: DataFrame, threshold: Double,
+    * no dedup signal anyway.
+    *
+    * The kernel re-shuffles the POSTING stream twice more (doc_id for
+    * the cardinality window, then the pinned-width s repartition
+    * feeding the pair explosion) — posting-scale shuffles bought to
+    * eliminate the two PAIR-scale cardinality joins of a join-scored
+    * tail (~16× more data at the sf10 decade). */
+  def jaccardPairs(sh0: DataFrame, threshold: Double,
                    maxDocFreq: Int = Int.MaxValue): DataFrame = {
-    // The inverted index is keyed on xxhash64(shingle), not the shingle
-    // string: the exchange ships 8-byte longs instead of ~25-byte
-    // strings and every downstream comparison is integer — the string
-    // itself is never needed (only membership counts are). The
-    // .distinct() after hashing restores SET semantics under a 64-bit
-    // collision: two distinct shingles of one doc colliding would
-    // otherwise leave duplicate (doc_id, s) rows that inflate both the
-    // per-shingle df (perturbing the cap decision) and the per-doc
-    // cardinality/intersection counts. With the distinct, a collision
-    // merges two postings into their union — still wrong vs raw
-    // strings (P ≈ 3·10⁻⁴ for ONE merged posting at 10^8 distinct
-    // shingles, and the raw-string oracle would flag it) but
-    // internally consistent. distinct() and the window below both ride
-    // the single Exchange (hash(s) clusters (doc_id, s)); no extra
-    // shuffle.
-    jaccardPairsHashed(
-      shingleDf.select(col("doc_id"), xxhash64(col("s")).as("s"))
-        .repartition(col("s"))
-        .distinct(),
-      threshold, maxDocFreq)
-  }
-
-  /** `jaccardPairs` over an ALREADY-hashed, already-distinct
-    * (doc_id, s:long) posting relation — the entry point for
-    * MATERIALIZED shingle indexes (PairIndex): a bucketed index scan
-    * is already hash-partitioned by `s`, so the df-cap window rides
-    * the bucketing with no exchange. The carded kernel below (round
-    * 16) then deliberately re-shuffles the POSTING stream twice more
-    * (doc_id for the cardinality window, then the pinned-width s
-    * repartition feeding the pair explosion) — posting-scale shuffles
-    * bought to eliminate the two PAIR-scale cardinality joins the old
-    * tail paid (~16× more data at the sf10 decade). Caller contract:
-    * rows are distinct and `s` is `xxhash64` of the shingle string
-    * (collision semantics identical to `jaccardPairs` by
-    * construction). */
-  def jaccardPairsHashed(sh0: DataFrame, threshold: Double,
-                         maxDocFreq: Int = Int.MaxValue): DataFrame = {
-    // df-cap BEFORE the posting-list aggregation: the window counts
-    // docs per shingle and drops over-cap shingles, so every
-    // collect_list state below — map-side partials included — is
-    // bounded by maxDocFreq. The cap is the memory guard that makes
-    // the posting-list plan safe at corpus scale; the uncapped path is
-    // for small inputs/tests only (a corpus-hot shingle would collect
-    // an unbounded list).
-    val sh =
-      if (maxDocFreq == Int.MaxValue) sh0
-      else sh0
-        .withColumn("__df", count(lit(1)).over(Window.partitionBy(col("s"))))
-        .filter(col("__df") <= maxDocFreq)
-        .drop("__df")
-    // Carry each doc's capped cardinality INTO the posting lists
-    // (round-16, VERDICT item 1): the former tail re-joined the PAIR
-    // stream against the per-doc cardinalities twice — at the sf10
-    // decade that was 2 × ~440M-row sort-merge shuffles (6.5 GB of
-    // exchange + ~4 GB disk spill) to attach 16 bytes per pair. One
-    // window over the POSTING stream (27M rows at the same decade —
-    // ~16× smaller) attaches n once; sort_array on (doc_id, n) structs
-    // keeps the same doc_id order (ids are unique), and n1/n2 ride the
-    // grouping keys (functionally dependent on the pair, so the
-    // aggregate is unchanged). The pair stream is born fully scored —
-    // zero joins from here to the result at ANY corpus size.
+    // df-cap BEFORE the posting-list aggregation, so every collect_list
+    // state below — map-side partials included — is bounded by
+    // maxDocFreq: the memory guard that makes the posting-list plan
+    // safe at corpus scale
+    val sh = underCap(sh0, maxDocFreq)
+    // Carry each doc's capped cardinality INTO the posting lists: the
+    // former tail re-joined the PAIR stream against the per-doc
+    // cardinalities twice — at the sf10 decade that was 2 × ~440M-row
+    // sort-merge shuffles (6.5 GB of exchange + ~4 GB disk spill) to
+    // attach 16 bytes per pair. One window over the POSTING stream
+    // (27M rows at the same decade — ~16× smaller) attaches n once;
+    // sort_array on (doc_id, n) structs keeps the same doc_id order
+    // (ids are unique), and n1/n2 ride the grouping keys (functionally
+    // dependent on the pair, so the aggregate is unchanged). The pair
+    // stream is born fully scored — zero joins from here to the result
+    // at ANY corpus size.
     val shN = sh.withColumn("n",
       count(lit(1)).over(Window.partitionBy(col("doc_id"))))
     val p = pairParallelism(sh0)
-    val postings = shN
-      .repartition(p, col("s"))
-      .groupBy(col("s"))
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("n")))).as("ids"))
-      .filter(size(col("ids")) > 1)
-      .select(col("ids"))
-    val pairs = postings
-      .select(posexplode(col("ids")).as(Seq("__i", "d1")), col("ids"))
-      .select(col("d1"),
-        explode(slice(col("ids"), col("__i") + lit(2), size(col("ids")))).as("d2"))
+    val pairs = pairsWithin(shN.repartition(p, col("s")), col("s"),
+        struct(col("doc_id"), col("n")))
       .select(col("d1").getField("doc_id").as("doc_id1"),
         col("d1").getField("n").as("n1"),
         col("d2").getField("doc_id").as("doc_id2"),
@@ -224,16 +214,17 @@ object Dedup {
       .repartition(p, col("doc_id1"), col("doc_id2"))
       .groupBy(col("doc_id1"), col("doc_id2"), col("n1"), col("n2"))
       .agg(count(lit(1)).as("n_inter"))
-    val jac = col("n_inter").cast("double") / col("n_union").cast("double")
-    inter
-      .withColumn("n_union", col("n1") + col("n2") - col("n_inter"))
-      .filter(jac >= threshold)
-      .select(col("doc_id1"), col("doc_id2"), col("n_inter"), col("n_union"),
-        // exact half-up integer rounding: round(double,4) diverges from
-        // the oracle on half-boundary ratios (see ExactNum.roundRatio4)
-        graft.functions.ExactNum.roundRatio4(col("n_inter"), col("n_union"))
-          .as("jaccard_r4"))
+    scored(inter, "doc_id1", "doc_id2", threshold)
   }
+
+  /** The postings whose shingle is held by at most `maxDocFreq` docs
+    * (a window over `s`: it rides an `s`-clustered input). */
+  private def underCap(sh: DataFrame, maxDocFreq: Int): DataFrame =
+    if (maxDocFreq == Int.MaxValue) sh
+    else sh
+      .withColumn("__df", count(lit(1)).over(Window.partitionBy(col("s"))))
+      .filter(col("__df") <= maxDocFreq)
+      .drop("__df")
 
   /** Shuffle width for PAIR-VOLUME stages (the posting aggregation
     * that explodes into pairs, and the pair aggregation itself). AQE's
@@ -261,67 +252,92 @@ object Dedup {
     math.max(base, init)
   }
 
-  /** Shared-shingle counts per ordered doc pair from a capped
-    * (doc_id, s) posting relation: aggregate the postings per shingle
-    * ONCE, then explode the bounded ordered pairs. Replaces the former
-    * self-join, whose two sorted copies of the full index (dual sort +
-    * sort-merge join) made wall time superlinear at the sf10 decade
-    * (28× for 10× data): one aggregation over one sorted pass of the
-    * index, pair volume unchanged (≤ C(maxDocFreq,2) per shingle,
-    * linear in corpus size by construction). sort_array makes
-    * doc_id1 < doc_id2 positional instead of a join predicate.
-    *
-    * Used by `PairIndex.advanceDocIndex` (delta rescore over candidate
-    * shingles — batch-scale volumes, scored via `scoreJaccardPairs`'s
-    * cardinality joins because the standing artifact cannot carry n:
-    * a batch changes OTHER docs' capped cardinalities). The full-run
-    * path (`jaccardPairsHashed`) instead carries n inside the posting
-    * structs — same math on both paths, pinned row-identical by
-    * PairIndexSpec. */
-  private[operators] def pairIntersections(sh: DataFrame): DataFrame = {
-    val postings = sh.groupBy(col("s"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
+  // ---------------- posting-list pair kernel ----------------
+
+  /** Every pair of `item`s that share a `key`, within one relation:
+    * aggregate the items per key ONCE into a sorted list, then explode
+    * each list's ordered pairs (posexplode plus slice) as (d1, d2), d1
+    * before d2 in sorted `item` order. No self-join — one aggregation over one
+    * pass of the postings, pair volume C(list size, 2) per key. Serves
+    * the Jaccard kernel (item (doc_id, n)), the advance's batch-side
+    * intersections (item doc_id) and the exact-substring chain (item
+    * (doc_id, pos)). Keys held once emit nothing and are dropped before
+    * the explode. */
+  private[operators] def pairsWithin(postings: DataFrame, key: Column,
+                                     item: Column): DataFrame =
+    postings.groupBy(key)
+      .agg(sort_array(collect_list(item)).as("ids"))
       .filter(size(col("ids")) > 1)
       .select(col("ids"))
-    val pairs = postings
-      .select(posexplode(col("ids")).as(Seq("__i", "doc_id1")), col("ids"))
-      .select(col("doc_id1"),
-        explode(slice(col("ids"), col("__i") + lit(2), size(col("ids")))).as("doc_id2"))
-    pairs
-      .groupBy(col("doc_id1"), col("doc_id2"))
-      .agg(count(lit(1)).as("n_inter"))
-  }
+      .select(posexplode(col("ids")).as(Seq("__i", "d1")), col("ids"))
+      .select(col("d1"),
+        explode(slice(col("ids"), col("__i") + lit(2), size(col("ids")))).as("d2"))
 
-  /** Scoring tail shared by the full and incremental Jaccard paths:
-    * join per-doc capped-universe cardinalities `card` (doc_id, n) onto
-    * the intersection counts, threshold, and round. `card` must cover
-    * every doc appearing in `inter` (inner joins). */
-  private[operators] def scoreJaccardPairs(inter: DataFrame, card: DataFrame,
-                                           threshold: Double): DataFrame = {
+  /** Every (probe item, other item) pair sharing a `key` across the two
+    * sides of one tagged relation (`__side` 1 = probe, 0 = other): one
+    * aggregation collects both sides' lists per key (collect_list skips
+    * the nulls the `when` leaves for the other side), then the bounded
+    * probe × other product explodes per key as (a, b). Keys one side
+    * lacks emit nothing and are dropped before the explode. Serves the
+    * batch-vs-corpus Jaccard pass and the probe-vs-corpus substring
+    * sweep. */
+  private def pairsAcross(tagged: DataFrame, key: Column, item: Column): DataFrame =
+    tagged.groupBy(key)
+      .agg(
+        collect_list(when(col("__side") === 1, item)).as("ps"),
+        collect_list(when(col("__side") === 0, item)).as("cs"))
+      .filter(size(col("ps")) > 0 && size(col("cs")) > 0)
+      .select(col("ps"), col("cs"))
+      .select(explode(col("ps")).as("a"), col("cs"))
+      .select(col("a"), explode(col("cs")).as("b"))
+
+  // ---------------- Jaccard scoring ----------------
+
+  /** The one Jaccard scoring tail: `inter` carries per-pair `n_inter`
+    * and both endpoints' capped cardinalities `n1`/`n2`; keep pairs at
+    * J ≥ threshold as (id1, id2, n_inter, n_union, jaccard_r4). */
+  private def scored(inter: DataFrame, id1: String, id2: String,
+                     threshold: Double): DataFrame = {
     val jac = col("n_inter").cast("double") / col("n_union").cast("double")
-    // merge hints, not broadcasts, for the cardinality joins: Catalyst's
-    // static size estimate of the pair aggregate shrinks below the
-    // broadcast threshold (aggregates scale the child estimate down), so
-    // without the hint the planner broadcasts the PAIR table — measured
-    // as a 10 GiB broadcast attempt at sf3, past the 8 GiB hard limit —
-    // and AQE never demotes a statically planned broadcast join (its
-    // cost evaluator rejects replans that add shuffles). Sort-merge is
-    // also the only plan that survives corpus scale: at billions of
-    // docs BOTH sides (pair counts and per-doc cardinalities) are far
-    // past any broadcast limit, and a broadcast(card) hint would fail
-    // hard instead of degrading to a linear shuffle.
-    inter.hint("merge")
-      .join(card.as("c1"), col("doc_id1") === col("c1.doc_id"))
-      .hint("merge")
-      .join(card.as("c2"), col("doc_id2") === col("c2.doc_id"))
-      .withColumn("n_union", col("c1.n") + col("c2.n") - col("n_inter"))
+    inter
+      .withColumn("n_union", col("n1") + col("n2") - col("n_inter"))
       .filter(jac >= threshold)
-      .select(col("doc_id1"), col("doc_id2"), col("n_inter"), col("n_union"),
+      .select(col(id1), col(id2), col("n_inter"), col("n_union"),
         // exact half-up integer rounding: round(double,4) diverges from
         // the oracle on half-boundary ratios (see ExactNum.roundRatio4)
         graft.functions.ExactNum.roundRatio4(col("n_inter"), col("n_union"))
           .as("jaccard_r4"))
   }
+
+  /** `scored` for intersection counts that do not carry cardinalities:
+    * join each endpoint's (doc_id, n) from `card1`/`card2` (each must
+    * cover every doc of its column in `inter` — inner joins). Used by
+    * the incremental paths, where the batch changes other docs' capped
+    * cardinalities, so they cannot ride the postings.
+    *
+    * Merge hints, not broadcasts, for the cardinality joins: Catalyst's
+    * static size estimate of the pair aggregate shrinks below the
+    * broadcast threshold (aggregates scale the child estimate down), so
+    * without the hint the planner broadcasts the PAIR table — measured
+    * as a 10 GiB broadcast attempt at sf3, past the 8 GiB hard limit —
+    * and AQE never demotes a statically planned broadcast join (its
+    * cost evaluator rejects replans that add shuffles). Sort-merge is
+    * also the only plan that survives corpus scale: at billions of
+    * docs BOTH sides (pair counts and per-doc cardinalities) are far
+    * past any broadcast limit. When the incremental batch really is
+    * tiny the sort sides are tiny too, so the hint costs nothing. */
+  private[operators] def scoreJaccardPairs(inter: DataFrame,
+                                           id1: String, card1: DataFrame,
+                                           id2: String, card2: DataFrame,
+                                           threshold: Double): DataFrame =
+    scored(
+      inter.hint("merge")
+        .join(card1.select(col("doc_id").as("__c1"), col("n").as("n1")),
+          col(id1) === col("__c1"))
+        .hint("merge")
+        .join(card2.select(col("doc_id").as("__c2"), col("n").as("n2")),
+          col(id2) === col("__c2")),
+      id1, id2, threshold)
 
   // ---------------- winnowing ----------------
 
@@ -382,8 +398,8 @@ object Dedup {
     *     contamination signal; the result is exact over the capped
     *     gram universe, mirrored verbatim in the d35 oracle (same
     *     consistent-universe contract as jaccardPairs' maxDocFreq);
-    *  3. posting-list pair explosion per gram (the jaccardPairsHashed
-    *     kernel shape): cross-doc occurrence pairs, ≤ C(maxOcc,2) per
+    *  3. posting-list pair explosion per gram (`pairsWithin`, the
+    *     Jaccard kernel's shape): cross-doc occurrence pairs, ≤ C(maxOcc,2) per
     *     gram — linear in corpus size at fixed duplication density;
     *  4. run confirmation: two matches are adjacent iff both positions
     *     advance by one, i.e. they lie on the same DIAGONAL
@@ -412,21 +428,6 @@ object Dedup {
       s"minTokens ($minTokens) must be >= gram size k ($k)")
     require(maxOcc >= 2, s"maxOcc must allow cross-doc pairs: $maxOcc")
     val p = pairParallelism(df)
-    // 1-based positions so the oracle's tokens[i] indexing mirrors
-    // directly; md5 of the byte-span gram = md5 of the space-joined
-    // token form on the single-space-normalized corpus. The
-    // fingerprint is stored as 16-byte BINARY (unhex of the hex form),
-    // not the 32-byte hex string (round-20, guide §2.3 narrower
-    // types): f is the dominant column of the gram stream — the
-    // kernel's one corpus-scale shuffle — and it never reaches any
-    // output, so halving it halves the exchange and the posting
-    // aggregation state with bit-identical match semantics (same
-    // 128 bits).
-    val grams = df
-      .select(col(idCol).cast("long").as("doc_id"),
-        posexplode(TextAnalysis.shinglesCol(col(textCol), k)).as(Seq("pos", "g")))
-      .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"),
-        unhex(md5(col("g"))).as("f"))
     // ONE numbered repartition on the gram key serves the occurrence
     // aggregate, the cap filter AND the posting aggregation (all are
     // clustered by the same f) — pinned pair width because this
@@ -439,28 +440,39 @@ object Dedup {
     // reads. sort_array orders by (doc_id, pos), so the sliced pair
     // explosion below yields doc_id1 <= doc_id2 positionally and the
     // inequality filter leaves strictly cross-doc pairs.
-    val widened = grams.repartition(p, col("f"))
+    val widened = positionalGrams(df, idCol, textCol, k).repartition(p, col("f"))
     val underCap = widened
       .groupBy(col("f")).agg(count(lit(1)).as("__occ"))
       .filter(col("__occ") <= maxOcc)
       .select(col("f"))
     val capped = widened
       .join(underCap.hint("shuffle_hash"), Seq("f"), "left_semi")
-    val postings = capped
-      .groupBy(col("f"))
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("pos")))).as("os"))
-      .filter(size(col("os")) > 1)
-      .select(col("os"))
-    val pairs = postings
-      .select(posexplode(col("os")).as(Seq("__i", "a")), col("os"))
-      .select(col("a"),
-        explode(slice(col("os"), col("__i") + lit(2), size(col("os")))).as("b"))
-      .filter(col("a.doc_id") =!= col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_id1"), col("a.pos").as("pos1"),
-        col("b.doc_id").as("doc_id2"), col("b.pos").as("pos2"))
+    val pairs = pairsWithin(capped, col("f"), struct(col("doc_id"), col("pos")))
+      .filter(col("d1.doc_id") =!= col("d2.doc_id"))
+      .select(col("d1.doc_id").as("doc_id1"), col("d1.pos").as("pos1"),
+        col("d2.doc_id").as("doc_id2"), col("d2.pos").as("pos2"))
     maximalRuns(pairs, "doc_id1", "pos1", "doc_id2", "pos2",
       p, k, minTokens)
   }
+
+  /** Positional k-gram digests (doc_id, pos, f) of `df`: one narrow
+    * generator pass (native ShinglesExpr + posexplode). 1-based
+    * positions so the oracle's tokens[i] indexing mirrors directly; md5
+    * of the byte-span gram = md5 of the space-joined token form on the
+    * single-space-normalized corpus. The fingerprint is stored as
+    * 16-byte BINARY (unhex of the hex form), not the 32-byte hex string
+    * (round-20, guide §2.3 narrower types): f is the dominant column of
+    * the gram stream — the kernel's one corpus-scale shuffle — and it
+    * never reaches any output, so halving it halves the exchange and
+    * the posting aggregation state with bit-identical match semantics
+    * (same 128 bits). `tags` are constant columns projected alongside,
+    * in the same projection. */
+  private def positionalGrams(df: DataFrame, idCol: String, textCol: String,
+                              k: Int, tags: Column*): DataFrame = df
+    .select(col(idCol).cast("long").as("doc_id"),
+      posexplode(TextAnalysis.shinglesCol(col(textCol), k)).as(Seq("pos", "g")))
+    .select(Seq(col("doc_id"), (col("pos") + 1).cast("long").as("pos"),
+      unhex(md5(col("g"))).as("f")) ++ tags: _*)
 
   /** Diagonal gaps-and-islands run confirmation shared by the
     * within-corpus (d35) and cross-corpus (d36) substring kernels:
@@ -523,39 +535,11 @@ object Dedup {
                                   idCol: String, textCol: String,
                                   minTokens: Int, k: Int = 5,
                                   maxOcc: Int = 100): DataFrame = {
-    require(k >= 1, s"k must be >= 1: $k")
     require(minTokens >= k,
       s"minTokens ($minTokens) must be >= gram size k ($k)")
     require(maxOcc >= 2, s"maxOcc must allow cross-side pairs: $maxOcc")
     val p = pairParallelism(corpus)
-    def grams(df: DataFrame, side: Int): DataFrame = df
-      .select(col(idCol).cast("long").as("doc_id"),
-        posexplode(TextAnalysis.shinglesCol(col(textCol), k)).as(Seq("pos", "g")))
-      .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"),
-        unhex(md5(col("g"))).as("f"), lit(side).as("__side"))
-    val tagged = grams(probe, 1).unionByName(grams(corpus, 0))
-    // probe gram keys recomputed from the small side (narrow scan, no
-    // dependence on the big union Exchange)
-    val probeKeys = probe
-      .select(explode(TextAnalysis.shinglesCol(col(textCol), k)).as("g"))
-      .select(unhex(md5(col("g"))).as("f")).distinct()
-    // Gram-stream width note: the numbered repartition below is
-    // DEFENSIVE — the optimizer pushes the semi join through both it
-    // and the union (PushDownLeftSemiAntiJoin), plans one
-    // ShuffledHashJoin per union branch, and then removes the
-    // repartition as redundant because Spark 4 propagates the
-    // branches' compatible hash(f) partitioning through the Union —
-    // the window and posting aggregation ride the joins' exchanges
-    // (verified in the d36 plan assert). Those exchanges are
-    // AQE-coalescible by gram map bytes, which is SAFE here, unlike
-    // d35's corpus×corpus kernel: d36's pair fan-out is
-    // probe-bounded (probe×corpus occurrences per gram, grams pruned
-    // to the probe's universe), so the post-aggregation explode is
-    // small relative to the corpus-scale gram stream the coalescing
-    // actually measures. The diagonal island stage below keeps its
-    // own pinned width. If a future Spark stops propagating union
-    // partitioning, this repartition materializes and pins the width
-    // instead — either plan is sound.
+    val prunedGrams = probePrunedGrams(corpus, probe, idCol, textCol, k, p)
     // Occurrence cap via a bucket-local per-gram aggregate + semi join
     // instead of a window count (round-20, guide §1.2): the window
     // planned as a SORT of the corpus-scale gram stream before the
@@ -565,24 +549,12 @@ object Dedup {
     // key set on the same partitioning. AQE reuses the gram exchange
     // between the two reads, so the explode/md5 map side still runs
     // once; rows kept are identical (the cap is per-gram).
-    val prunedGrams = tagged
-      .repartition(p, col("f"))
-      .join(probeKeys.hint("shuffle_hash"), Seq("f"), "left_semi")
     val underCapKeys = prunedGrams
       .groupBy(col("f")).agg(count(lit(1)).as("__occ"))
       .filter(col("__occ") <= maxOcc)
       .select(col("f"))
     val capped = prunedGrams
       .join(underCapKeys.hint("shuffle_hash"), Seq("f"), "left_semi")
-    val postings = capped
-      .groupBy(col("f"))
-      .agg(
-        collect_list(when(col("__side") === 1,
-          struct(col("doc_id"), col("pos")))).as("ps"),
-        collect_list(when(col("__side") === 0,
-          struct(col("doc_id"), col("pos")))).as("cs"))
-      .filter(size(col("ps")) > 0 && size(col("cs")) > 0)
-      .select(col("ps"), col("cs"))
     // the same-id guard protects the natural misuse of sweeping an
     // eval split against the FULL corpus without excluding the eval
     // rows (probe ⊆ corpus): a doc id present on BOTH sides is the
@@ -590,14 +562,50 @@ object Dedup {
     // such probe doc self-matches end-to-end and `decontaminate`
     // silently erases it to the empty string. Distinct-id text
     // duplicates still report (that IS contamination).
-    val pairs = postings
-      .select(explode(col("ps")).as("a"), col("cs"))
-      .select(col("a"), explode(col("cs")).as("b"))
+    val pairs = pairsAcross(capped, col("f"), struct(col("doc_id"), col("pos")))
       .filter(col("a.doc_id") =!= col("b.doc_id"))
       .select(col("a.doc_id").as("probe_id"), col("a.pos").as("probe_pos"),
         col("b.doc_id").as("corpus_id"), col("b.pos").as("corpus_pos"))
     maximalRuns(pairs, "probe_id", "probe_pos", "corpus_id", "corpus_pos",
       p, k, minTokens)
+  }
+
+  /** The gram stream the decontamination sweep and its cap report
+    * share: both sides' positional k-grams (`__side` 1 = probe, 0 =
+    * corpus) in ONE exchange keyed on the gram digest, with corpus-only
+    * grams pruned by a shuffled-hash semi join against the probe's
+    * distinct gram keys — recomputed from the small side (narrow scan,
+    * no dependence on the big union Exchange).
+    *
+    * Gram-stream width note: the numbered repartition below is
+    * DEFENSIVE — the optimizer pushes the semi join through both it
+    * and the union (PushDownLeftSemiAntiJoin), plans one
+    * ShuffledHashJoin per union branch, and then removes the
+    * repartition as redundant because Spark 4 propagates the
+    * branches' compatible hash(f) partitioning through the Union —
+    * the window and posting aggregation ride the joins' exchanges
+    * (verified in the d36 plan assert). Those exchanges are
+    * AQE-coalescible by gram map bytes, which is SAFE here, unlike
+    * d35's corpus×corpus kernel: d36's pair fan-out is
+    * probe-bounded (probe×corpus occurrences per gram, grams pruned
+    * to the probe's universe), so the post-aggregation explode is
+    * small relative to the corpus-scale gram stream the coalescing
+    * actually measures. The diagonal island stage keeps its
+    * own pinned width. If a future Spark stops propagating union
+    * partitioning, this repartition materializes and pins the width
+    * instead — either plan is sound. */
+  private def probePrunedGrams(corpus: DataFrame, probe: DataFrame,
+                               idCol: String, textCol: String,
+                               k: Int, p: Int): DataFrame = {
+    require(k >= 1, s"k must be >= 1: $k")
+    def grams(df: DataFrame, side: Int): DataFrame =
+      positionalGrams(df, idCol, textCol, k, lit(side).as("__side"))
+    val probeKeys = probe
+      .select(explode(TextAnalysis.shinglesCol(col(textCol), k)).as("g"))
+      .select(unhex(md5(col("g"))).as("f")).distinct()
+    grams(probe, 1).unionByName(grams(corpus, 0))
+      .repartition(p, col("f"))
+      .join(probeKeys.hint("shuffle_hash"), Seq("f"), "left_semi")
   }
 
   /** Cap telemetry for the decontamination sweep (d40, round-17
@@ -615,33 +623,19 @@ object Dedup {
   def contaminationCapReport(corpus: DataFrame, probe: DataFrame,
                              idCol: String, textCol: String,
                              k: Int = 5, maxOcc: Int = 100): DataFrame = {
-    require(k >= 1, s"k must be >= 1: $k")
+    // occurrence counts come from a bucket-local GROUP BY on the
+    // sweep's hash(f) exchange. Round-20 (guide §1.2 per-task work):
+    // the former shape — a window count over partition-by-f followed
+    // by one aggregate with THREE count_distincts — planned as Sort +
+    // Window + Expand(×4) over the corpus-scale gram stream, measured
+    // as 14.3 CPU-s at 32 threads vs 2.6 at 8 on a 12 MB stream (the
+    // stage is memory-bound, and ×4-expanded sort/window traffic is
+    // what it is bound ON). The per-gram aggregate needs no sort and
+    // no Expand; the three gram totals are one pass over the ~|grams|
+    // relation, and the probe-doc count probes the probe's grams
+    // against the (small) over-cap key set.
     require(maxOcc >= 2, s"maxOcc must allow cross-side pairs: $maxOcc")
-    val p = pairParallelism(corpus)
-    def grams(df: DataFrame, side: Int): DataFrame = df
-      .select(col(idCol).cast("long").as("doc_id"),
-        explode(TextAnalysis.shinglesCol(col(textCol), k)).as("g"))
-      .select(col("doc_id"), unhex(md5(col("g"))).as("f"), lit(side).as("__side"))
-    val tagged = grams(probe, 1).unionByName(grams(corpus, 0))
-    val probeKeys = probe
-      .select(explode(TextAnalysis.shinglesCol(col(textCol), k)).as("g"))
-      .select(unhex(md5(col("g"))).as("f")).distinct()
-    // prune exactly like the sweep; occurrence counts come from a
-    // bucket-local GROUP BY on the same hash(f) exchange. Round-20
-    // (guide §1.2 per-task work): the former shape — a window count
-    // over partition-by-f followed by one aggregate with THREE
-    // count_distincts — planned as Sort + Window + Expand(×4) over the
-    // corpus-scale gram stream, measured as 14.3 CPU-s at 32 threads
-    // vs 2.6 at 8 on a 12 MB stream (the stage is memory-bound, and
-    // ×4-expanded sort/window traffic is what it is bound ON). The
-    // per-gram aggregate needs no sort and no Expand; the three gram
-    // totals are one pass over the ~|grams| relation, and the probe-doc
-    // count re-reads the pruned stream against the (small) over-cap
-    // key set — AQE reuses the gram exchange, so the map side runs
-    // once.
-    val pruned = tagged
-      .repartition(p, col("f"))
-      .join(probeKeys.hint("shuffle_hash"), Seq("f"), "left_semi")
+    val pruned = probePrunedGrams(corpus, probe, idCol, textCol, k, pairParallelism(corpus))
     val perF = pruned.groupBy(col("f")).agg(count(lit(1)).as("__occ"))
     val gramTotals = perF.agg(
       count(lit(1)).as("grams_surviving_prune"),
@@ -649,8 +643,9 @@ object Dedup {
       sum(when(col("__occ") > maxOcc, col("__occ")).otherwise(0L))
         .as("occurrences_dropped"))
     val overCapKeys = perF.filter(col("__occ") > maxOcc).select(col("f"))
-    val probeDocs = pruned
-      .filter(col("__side") === 1)
+    // the probe-key prune keeps every probe gram, so the probe side
+    // needs no prune and no union here
+    val probeDocs = positionalGrams(probe, idCol, textCol, k)
       .join(overCapKeys.hint("shuffle_hash"), Seq("f"), "left_semi")
       .agg(count_distinct(col("doc_id")).as("probe_docs_touched"))
     gramTotals.crossJoin(probeDocs)
@@ -760,83 +755,49 @@ object Dedup {
     * universe of the COMBINED corpus (a corpus-hot shingle carries no
     * dedup signal whichever side it comes from — same rationale and
     * same windowed cap as `jaccardPairs`, mirrored in the d13 oracle).
+    * Both sides are `postings` relations — computed (d13) or read
+    * from the corpus index (d30).
     *
-    * Scale shape: both sides union into ONE Exchange partitioned on
-    * the shingle; the df-cap window and the incoming×corpus equi-join
-    * all ride that partitioning, so the incremental pass costs one
-    * shuffle of the combined shingle index — never all-pairs, and no
-    * per-side re-shingling. */
-  def crossJaccardPairs(shIncoming: DataFrame, shCorpus: DataFrame,
+    * Scale shape: both sides union into one `s`-clustered relation;
+    * the df-cap window, the corpus-only prune and the posting-list
+    * aggregation all ride that clustering — never all-pairs, no
+    * self-join, and no per-side re-shingling. Each side is already a
+    * set and the side tag keeps the two apart, so the union needs no
+    * distinct. The combined df-cap bounds every list at maxDocFreq. */
+  def crossJaccardPairs(incoming: DataFrame, corpus: DataFrame,
                         threshold: Double,
                         maxDocFreq: Int = Int.MaxValue): DataFrame = {
-    // same internal xxhash64 key as jaccardPairs, same set-restoring
-    // .distinct() (rides the Exchange), and the same posting-list plan:
-    // one aggregation collects BOTH sides' postings per shingle
-    // (collect_list skips the nulls the `when` leaves for the other
-    // side), then the bounded incoming×corpus cross product explodes
-    // per shingle — no self-join, one sorted pass over the combined
-    // index. The combined df-cap bounds every list at maxDocFreq.
-    val tagged = shIncoming
-      .select(col("doc_id"), xxhash64(col("s")).as("s"), lit(1).as("__side"))
-      .unionByName(shCorpus
-        .select(col("doc_id"), xxhash64(col("s")).as("s"), lit(0).as("__side")))
-      .repartition(col("s"))
-      .distinct()
-    val capped =
-      if (maxDocFreq == Int.MaxValue) tagged
-      else tagged
-        .withColumn("__df", count(lit(1)).over(Window.partitionBy(col("s"))))
-        .filter(col("__df") <= maxDocFreq)
-        .drop("__df")
+    val capped = underCap(
+      incoming.withColumn("__side", lit(1))
+        .unionByName(corpus.withColumn("__side", lit(0))),
+      maxDocFreq)
     val card = capped.groupBy(col("__side"), col("doc_id")).agg(count(lit(1)).as("n"))
     // Prune corpus-only shingles BEFORE the posting-list aggregation:
-    // a shingle no incoming doc carries can never produce a pair (its
-    // `inc` list would be empty and the filter below drops it), yet
-    // without this semi-join the groupBy aggregates collect_list state
-    // for the ENTIRE corpus index — the first-cut posting-list plan
+    // a shingle no incoming doc carries can never produce a pair, yet
+    // without this semi-join the aggregation collects list state for
+    // the ENTIRE corpus index — the first-cut posting-list plan
     // regressed d13 to 20× decade growth exactly this way (the old
     // equi-join had pruned those shingles implicitly). The build side
-    // is the batch's distinct 8-byte shingle hashes, recomputed from
-    // the small incoming side (narrow scan, no dependence on the big
-    // combined Exchange). shuffle_hash, not broadcast: batch shingle
-    // keys are Θ(batch), so a statically committed broadcast is the
-    // 8 GiB-cliff class found at sf3 for large batches — a shuffled
-    // hash semi join instead re-uses the combined index's existing
-    // hash(s) partitioning (no corpus re-shuffle, NO corpus sort —
-    // sort-merge would have to sort the whole index), ships only the
-    // batch keys, and builds a per-partition hash table bounded by
-    // batchKeys/partitions. `card` stays on the FULL capped index —
-    // n2 must count all of a corpus doc's capped shingles for
-    // correct union cardinalities, not just the incoming-present ones.
-    val incKeys = shIncoming.select(xxhash64(col("s")).as("s")).distinct()
-    val postings = capped.join(incKeys.hint("shuffle_hash"), Seq("s"), "left_semi")
-      .groupBy(col("s")).agg(
-        collect_list(when(col("__side") === 1, col("doc_id"))).as("inc"),
-        collect_list(when(col("__side") === 0, col("doc_id"))).as("cor"))
-      .filter(size(col("inc")) > 0 && size(col("cor")) > 0)
-      .select(col("inc"), col("cor"))
-    val inter = postings
-      .select(explode(col("inc")).as("inc_id"), col("cor"))
-      .select(col("inc_id"), explode(col("cor")).as("cor_id"))
-      .groupBy(col("inc_id"), col("cor_id"))
+    // is the batch's distinct 8-byte shingle hashes. shuffle_hash, not
+    // broadcast: batch shingle keys are Θ(batch), so a statically
+    // committed broadcast is the 8 GiB-cliff class found at sf3 for
+    // large batches — a shuffled hash semi join instead re-uses the
+    // combined index's existing hash(s) partitioning (no corpus
+    // re-shuffle, NO corpus sort — sort-merge would have to sort the
+    // whole index), ships only the batch keys, and builds a
+    // per-partition hash table bounded by batchKeys/partitions. `card`
+    // stays on the FULL capped index — n2 must count all of a corpus
+    // doc's capped shingles for correct union cardinalities, not just
+    // the incoming-present ones.
+    val incKeys = incoming.select(col("s")).distinct()
+    val inter = pairsAcross(
+        capped.join(incKeys.hint("shuffle_hash"), Seq("s"), "left_semi"),
+        col("s"), col("doc_id"))
+      .groupBy(col("a").as("inc_id"), col("b").as("cor_id"))
       .agg(count(lit(1)).as("n_inter"))
-    val jac = col("n_inter").cast("double") / col("n_union").cast("double")
-    // same merge hints as jaccardPairs (see there): the pair aggregate's
-    // static size estimate is unreliably small, and a mis-chosen
-    // broadcast of the pair side fails hard past 8 GiB instead of
-    // degrading; when the incremental batch really is tiny the sort
-    // sides are tiny too, so the hint costs nothing in that case.
-    inter.hint("merge")
-      .join(card.filter(col("__side") === 1).select(col("doc_id"), col("n").as("n1")),
-        col("inc_id") === col("doc_id")).drop("doc_id")
-      .hint("merge")
-      .join(card.filter(col("__side") === 0).select(col("doc_id"), col("n").as("n2")),
-        col("cor_id") === col("doc_id")).drop("doc_id")
-      .withColumn("n_union", col("n1") + col("n2") - col("n_inter"))
-      .filter(jac >= threshold)
-      .select(col("inc_id"), col("cor_id"), col("n_inter"), col("n_union"),
-        graft.functions.ExactNum.roundRatio4(col("n_inter"), col("n_union"))
-          .as("jaccard_r4"))
+    scoreJaccardPairs(inter,
+      "inc_id", card.filter(col("__side") === 1),
+      "cor_id", card.filter(col("__side") === 0), threshold)
   }
 
   /** Default Jaccard threshold of d13 and d30, which must agree. */
@@ -846,7 +807,7 @@ object Dedup {
     * new batch is deduplicated against an EXISTING corpus without
     * re-deduplicating the corpus itself. Survivors of `incoming` are
     * returned; `corpus` is only read (its canonical hashes and its
-    * shingle index — at 100 TB both are the precomputed artifacts an
+    * shingle postings — at 100 TB both are the precomputed artifacts an
     * incremental pipeline maintains between runs).
     *
     * Contract, in order:
@@ -864,16 +825,17 @@ object Dedup {
                      jaccardThreshold: Double = IncrementThreshold): DataFrame =
     dedupIncrementAgainst(
       corpus.select(TextAnalysis.textHash(col(textCol)).as("__h")).distinct(),
-      shingles(corpus, idCol, textCol, ShingleK),
+      postings(corpus, idCol, textCol),
       incoming, idCol, textCol, jaccardThreshold)
 
   /** The three stages of `dedupIncrement` against a corpus given as its
-    * canonical-hash set (`__h`) and its raw shingle relation — computed
-    * from the corpus (d13) or read from the standing artifacts (d30,
+    * canonical-hash set (`__h`) and its `postings` over EVERY corpus
+    * doc, exact duplicates included — computed from the corpus (d13) or
+    * read from the standing artifacts (d30,
     * `PairIndex.dedupIncrementFromIndex`), so the two stay row-identical
     * by construction. */
   private[operators] def dedupIncrementAgainst(
-      corpusHashes: DataFrame, corpusShingles: DataFrame, incoming: DataFrame,
+      corpusHashes: DataFrame, corpusPostings: DataFrame, incoming: DataFrame,
       idCol: String, textCol: String,
       jaccardThreshold: Double = IncrementThreshold): DataFrame = {
     val batch = dropExactDuplicates(incoming, idCol, textCol)
@@ -889,7 +851,7 @@ object Dedup {
       .join(corpusHashes.hint("merge"), Seq("__h"), "left_anti")
       .drop("__h")
     val nearIds = crossJaccardPairs(
-        shingles(fresh, idCol, textCol, ShingleK), corpusShingles,
+        postings(fresh, idCol, textCol), corpusPostings,
         jaccardThreshold, maxDocFreq = 100)
       .select(col("inc_id").as(idCol))
       .distinct()

@@ -25,8 +25,8 @@ import org.apache.spark.storage.StorageLevel
   *    doc id. (Pair generation runs over survivors — clustering exact
   *    duplicates is pointless, and their identical shingle sets would
   *    only inflate per-shingle document frequencies toward the df-cap.)
-  *  - `postingsTable`: the hashed shingle postings (doc_id, s: long)
-  *    of the survivors, bucketed by `s`. They make EXACT incremental
+  *  - `postingsTable`: `Dedup.postings` (doc_id, s: long) of the
+  *    survivors, bucketed by `s`. They make EXACT incremental
   *    advance possible (`advanceDocIndex`): without them, a batch that
   *    moves a shingle's df across the cap would need the whole corpus
   *    re-shingled to rescore the affected pairs.
@@ -35,7 +35,7 @@ import org.apache.spark.storage.StorageLevel
   *    ±counts instead of rewriting, and reading it is a bucket-local
   *    aggregation over ~|distinct shingles| rows, not a recount of the
   *    postings.
-  *  - `pairsTable`: `Dedup.jaccardPairsHashed` over the written
+  *  - `pairsTable`: `Dedup.jaccardPairs` over the written
   *    postings (the exact universe d07/d12 pin against DuckDB),
   *    bucketed+sorted by `doc_id2` — the key the hottest consumer (the
   *    curation drop list → anti join) probes with.
@@ -69,7 +69,7 @@ object PairIndex {
   val PostingsBase = "graft_pair_postings"
   val DfBase = "graft_pair_df"
   val CorpusHashesBase = "graft_corpus_hashes"
-  val CorpusShinglesBase = "graft_corpus_shingles"
+  val CorpusPostingsBase = "graft_corpus_postings"
 
   /** Canonical-hash column stored IN the survivors artifact (round-15,
     * VERDICT item 5): the advance's exact-dedup decision probes the
@@ -306,14 +306,17 @@ object PairIndex {
     * the index was materialized with (`advanceDocIndex` reads them, so
     * an advance never runs with a different cap/threshold than the
     * index it extends) and the survivor count the advance's economy
-    * guard compares against. Other `graft.*` keys on an older index
-    * (the former `graft.drift.*` counters) are ignored. */
+    * guard compares against. The stamp also records the shingle width
+    * (`graft.shingleK`, always `Dedup.ShingleK`): `readStamp` rejects an
+    * index stamped with another width, whose stored postings no
+    * advance could extend. Other `graft.*` keys on an older index (the
+    * former `graft.drift.*` counters) are ignored. */
   private[graft] final case class Stamp(threshold: Double, maxDocFreq: Int,
-                                        shingleK: Int, numBuckets: Int, nDocs: Long)
+                                        numBuckets: Int, nDocs: Long)
 
   private def writeStamp(spark: SparkSession, table: String, s: Stamp): Unit = {
     val kv = Seq("threshold" -> s.threshold, "maxDocFreq" -> s.maxDocFreq,
-      "shingleK" -> s.shingleK, "numBuckets" -> s.numBuckets, "nDocs" -> s.nDocs)
+      "shingleK" -> Dedup.ShingleK, "numBuckets" -> s.numBuckets, "nDocs" -> s.nDocs)
     spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES(" +
       kv.map { case (k, v) => s"'graft.$k'='$v'" }.mkString(",") + ")")
   }
@@ -324,8 +327,13 @@ object PairIndex {
     def prop(k: String): String = props.getOrElse(s"graft.$k",
       throw new IllegalArgumentException(
         s"$table lacks TBLPROPERTY graft.$k — not a materializeDocIndex artifact"))
+    val k = prop("shingleK").toInt
+    if (k != Dedup.ShingleK)
+      throw new IllegalArgumentException(
+        s"$table is stamped graft.shingleK=$k, but postings are ${Dedup.ShingleK}-token " +
+          "shingles — rematerialize the index")
     Stamp(prop("threshold").toDouble, prop("maxDocFreq").toInt,
-      prop("shingleK").toInt, prop("numBuckets").toInt, prop("nDocs").toLong)
+      prop("numBuckets").toInt, prop("nDocs").toLong)
   }
 
   /** A long aggregate cell, 0 when null (a sum over no rows). */
@@ -356,18 +364,10 @@ object PairIndex {
     writeIndex(Dedup.dropExactDuplicates(docs, idCol, textCol)
         .withColumn(HashCol, TextAnalysis.textHash(col(textCol))),
       idCol, textCol, idx, buckets,
-      Stamp(threshold, maxDocFreq, Dedup.ShingleK, buckets,
+      Stamp(threshold, maxDocFreq, buckets,
         spark.table(survivorsTable).count()))
     idx
   }
-
-  /** The hashed shingle postings (doc_id, s: long) of `docs` — the one
-    * derivation behind the postings artifact and every advance probe. */
-  private def hashedPostings(docs: DataFrame, idCol: String, textCol: String,
-                             k: Int): DataFrame =
-    Dedup.shingles(docs, idCol, textCol, k)
-      .select(col("doc_id"), xxhash64(col("s")).as("s"))
-      .distinct()
 
   /** The one writer of a full generation, for `materializeDocIndex` and
     * the advance's fallback: survivors, then postings from the written
@@ -380,14 +380,13 @@ object PairIndex {
     val spark = survivors.sparkSession
     Layout.writeBucketed(survivors, to.survivorsTable, idCol, buckets)
     val st = stamp
-    Layout.writeBucketed(
-      hashedPostings(spark.table(to.survivorsTable), idCol, textCol, st.shingleK),
+    Layout.writeBucketed(Dedup.postings(spark.table(to.survivorsTable), idCol, textCol),
       to.postingsTable, "s", buckets)
     val postings = spark.table(to.postingsTable)
     Layout.writeBucketed(postings.groupBy(col("s")).agg(count(lit(1)).as("cnt")),
       to.dfTable, "s", buckets)
     Layout.writeBucketed(
-      Dedup.jaccardPairsHashed(postings, st.threshold, st.maxDocFreq),
+      Dedup.jaccardPairs(postings, st.threshold, st.maxDocFreq),
       to.pairsTable, "doc_id2", buckets)
     writeStamp(spark, to.pairsTable, st)
   }
@@ -600,9 +599,6 @@ object PairIndex {
     val survivors: DataFrame = spark.table(idx.survivorsTable)
     val stored: DataFrame = spark.table(idx.postingsTable)
     val survCols = survivors.columns.toIndexedSeq.map(col)
-
-    def postingsOf(docs: DataFrame): DataFrame =
-      hashedPostings(docs, idCol, textCol, stamp.shingleK)
   }
 
   /** Step 1 output: the batch's survivors (with their canonical hash)
@@ -674,14 +670,15 @@ object PairIndex {
                         frozenCaps: Boolean, assertNoCapFlips: Boolean): CapStatus = {
     import in._
     val cap = stamp.maxDocFreq
-    val shB = run.checkpoint("ckpt_shb")(postingsOf(d.newSurv))
+    val shB = run.checkpoint("ckpt_shb")(Dedup.postings(d.newSurv, idCol, textCol))
     val dfB = shB.groupBy(col("s")).agg(count(lit(1)).as("__dfb"))
     // per-shingle df deltas: batch additions minus eviction removals —
     // df can only change for shingles present in one of these
     val dfDelta = run.checkpoint("ckpt_dfdelta")(
       if (d.nEvicted == 0) dfB.withColumn("__dfe", lit(0L))
       else dfB.join(
-          postingsOf(survivors.join(d.evictedIds, Seq(idCol), "left_semi"))
+          Dedup.postings(survivors.join(d.evictedIds, Seq(idCol), "left_semi"),
+              idCol, textCol)
             .groupBy(col("s")).agg(count(lit(1)).as("__dfe")),
           Seq("s"), "full_outer")
         .select(col("s"), coalesce(col("__dfb"), lit(0L)).as("__dfb"),
@@ -792,8 +789,8 @@ object PairIndex {
     val aOldDocs = cs.affectedOld
     val shAOld =
       if (cs.nAffected == 0) cs.shB.limit(0)
-      else postingsOf(survivors.join(
-        aOldDocs.select(col(idCol)), Seq(idCol), "left_semi"))
+      else Dedup.postings(survivors.join(
+        aOldDocs.select(col(idCol)), Seq(idCol), "left_semi"), idCol, textCol)
     val candKeys = cs.dfB.select(col("s"))
       .unionByName(shAOld.select(col("s"))).distinct()
     // batch-scale key set, re-walked by aPart (twice: A-B join and A-A
@@ -808,7 +805,7 @@ object PairIndex {
     // candidate postings split into aPart (batch postings + affected-old
     // stored postings: exactly A's docs) and bPart (every other stored
     // holder). A×B intersections are one linear join (≤ |aPart| × cap
-    // rows); A×A runs the shared pairIntersections kernel over
+    // rows); A×A runs the shared `Dedup.pairsWithin` kernel over
     // batch-scale postings only. Generate-all-then-filter pays df² per
     // candidate shingle for B×B pairs it discards — measured 7× slower
     // at sf0.01, growing with near-dup density.
@@ -834,7 +831,10 @@ object PairIndex {
       .agg(count(lit(1)).as("n_inter"))
     val aIds = run.checkpoint("ckpt_aids")(d.newSurv.select(col(idCol).as("__aid"))
       .unionByName(aOldDocs.select(col(idCol).as("__aid"))))
-    val interA = Dedup.pairIntersections(aPart).unionByName(interAB)
+    val interAA = Dedup.pairsWithin(aPart, col("s"), col("doc_id"))
+      .groupBy(col("d1").as("doc_id1"), col("d2").as("doc_id2"))
+      .agg(count(lit(1)).as("n_inter"))
+    val interA = interAA.unionByName(interAB)
     // A-side capped cardinalities come free from aPart: an A doc's
     // aPart rows are exactly its capped shingle set
     val naA = run.checkpoint("ckpt_naa")(
@@ -865,14 +865,15 @@ object PairIndex {
     val bParticipants = interPruned.select(col("doc_id1").as("__pid"))
       .unionByName(interPruned.select(col("doc_id2").as("__pid"))).distinct()
       .join(aIds, col("__pid") === col("__aid"), "left_anti")
-    val bSh = run.checkpoint("ckpt_bsh")(postingsOf(survivors.join(
-      bParticipants.select(col("__pid").as(idCol)), Seq(idCol), "left_semi")))
+    val bSh = run.checkpoint("ckpt_bsh")(Dedup.postings(survivors.join(
+      bParticipants.select(col("__pid").as(idCol)), Seq(idCol), "left_semi"),
+      idCol, textCol))
     val card = run.checkpoint("ckpt_card")(
       bSh.join(cappedKeys(bSh.select(col("s")).distinct()), Seq("s"), "left_semi")
         .groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
         .unionByName(naA.select(col("doc_id"), col("__na").as("n"))))
-    val pairs = run.checkpoint("force_delta")(
-      Dedup.scoreJaccardPairs(interPruned, card, threshold))
+    val pairs = run.checkpoint("force_delta")(Dedup.scoreJaccardPairs(
+      interPruned, "doc_id1", card, "doc_id2", card, threshold))
     // newSurv reads the decided cache, released before the writes
     Delta(pairs, aIds, run.checkpoint("checkpoint_writes")(d.newSurv.select(survCols: _*)))
   }
@@ -999,50 +1000,50 @@ object PairIndex {
   /** Standing-corpus artifacts for INCREMENTAL dedup — what
     * `Dedup.dedupIncrement`'s scaladoc promises a 100 TB pipeline
     * maintains between daily runs: the corpus canonical-hash set and
-    * the corpus shingle index, so a new batch is deduplicated without
-    * re-hashing or re-shingling the corpus. Shingles are stored as the
-    * RAW strings `Dedup.shingles` emits (not pre-hashed), so the
+    * the corpus `Dedup.postings`, so a new batch is deduplicated
+    * without re-hashing or re-shingling the corpus. The postings cover
+    * EVERY corpus document, exact duplicates included: d13's df-cap is
+    * defined over the combined batch+corpus universe, where a
+    * duplicate's shingles count toward df, so the survivor postings of
+    * a `DocIndex` are not the same relation and cannot stand in. The
     * from-index consumer feeds `crossJaccardPairs` the exact relation
-    * the recompute path does — results are row-identical by
-    * construction (pinned by the d30 oracle entry).
+    * the recompute path builds — results are row-identical by
+    * construction (pinned by the d30 oracle entry and PairIndexSpec).
     *
-    * Measured caveat (benchlogs_r11/pairidx_sf01_r2.log): unlike the
-    * pair index — a 4.7x suite win at sf10 — the SHINGLE index is a
-    * measured LOSS at sf0.1 (consumer 3.75 s vs 3.30 s recompute,
-    * before materialize cost): the native codegen shingle kernel
-    * (plans.ShinglesExpr) makes corpus re-shingling a cheap byte scan,
-    * while the expanded raw-string index is ~10x the text in parquet
-    * I/O. A hashed, pre-capped posting list would be far smaller, but
-    * d13's df-cap is defined over the COMBINED batch+corpus universe,
-    * so pre-capping the corpus side would change the semantics — the
-    * raw index is what preserves exactness. Use this artifact when the
-    * corpus text itself is expensive to re-read (remote store, wide
-    * rows); with cheap local text scans, recompute and keep only the
-    * hash-set artifact. */
-  final case class CorpusIndex(hashesTable: String, shinglesTable: String)
+    * Stored as hashed postings bucketed by `s`, so the consumer's
+    * corpus side is a bucketed scan of two long columns: no shingling,
+    * no hashing, no distinct and no exchange (the union with the
+    * batch's postings keeps the bucketing when the session's shuffle
+    * width equals the bucket count). Measured at sf0.1 (`graft.Bench`,
+    * 4 cores, 5 interleaved windows against the raw-string index it
+    * replaced): d30 median 2.14 s wall and 6.1 CPU-s vs 2.40 s and
+    * 6.9 (d13, which re-shingles the corpus, 2.49 s); the postings
+    * table is 803 KB on disk vs 743 KB of dictionary-encoded strings,
+    * and the index builds in 2.5 s vs 2.7 s. The per-window spread
+    * (d30 1.9-2.5 s) covers the difference at this scale. */
+  final case class CorpusIndex(hashesTable: String, postingsTable: String)
       extends Artifact {
-    def tables: Seq[String] = Seq(hashesTable, shinglesTable)
+    def tables: Seq[String] = Seq(hashesTable, postingsTable)
   }
 
   /** Materialize the standing corpus's hash set (bucketed by the hash —
-    * the batch anti-join key) and shingle index (bucketed by the
-    * shingle — the key every downstream aggregation and semi-join
+    * the batch anti-join key) and postings (bucketed by the shingle
+    * hash — the key every downstream aggregation and semi-join
     * clusters on). Run once per corpus snapshot; consumed by every
     * incoming batch until the corpus advances. Default table names are
     * per-invocation-unique (`freshName`). */
   def materializeCorpusIndex(corpus: DataFrame, idCol: String, textCol: String,
                              numBuckets: Int = 0,
                              hashesTable: String = freshName(CorpusHashesBase),
-                             shinglesTable: String = freshName(CorpusShinglesBase))
+                             postingsTable: String = freshName(CorpusPostingsBase))
       : CorpusIndex = {
     val buckets = if (numBuckets > 0) numBuckets else autoBuckets(corpus)
     Layout.writeBucketed(
       corpus.select(TextAnalysis.textHash(col(textCol)).as("__h")).distinct(),
       hashesTable, "__h", buckets)
-    Layout.writeBucketed(
-      Dedup.shingles(corpus, idCol, textCol, Dedup.ShingleK),
-      shinglesTable, "s", buckets)
-    CorpusIndex(hashesTable, shinglesTable)
+    Layout.writeBucketed(Dedup.postings(corpus, idCol, textCol),
+      postingsTable, "s", buckets)
+    CorpusIndex(hashesTable, postingsTable)
   }
 
   /** `Dedup.dedupIncrement` reading the materialized corpus artifacts:
@@ -1053,5 +1054,5 @@ object PairIndex {
                               incoming: DataFrame,
                               idCol: String, textCol: String): DataFrame =
     Dedup.dedupIncrementAgainst(spark.table(idx.hashesTable),
-      spark.table(idx.shinglesTable), incoming, idCol, textCol)
+      spark.table(idx.postingsTable), incoming, idCol, textCol)
 }

@@ -74,7 +74,7 @@ object StandingFixtures {
   def baseDocIndex(s: SparkSession, dir: String): PairIndex.DocIndex =
     docIndex(s, "base63_doc_index", dir, pmod(col("doc_id"), lit(64)) =!= 0)
 
-  /** 4/5-corpus hash + shingle index — d30's standing corpus side. */
+  /** 4/5-corpus hash set + shingle postings — d30's standing corpus side. */
   def corpusIndex(s: SparkSession, dir: String): PairIndex.CorpusIndex =
     cached(s, "corpus45_index", dir) {
       PairIndex.materializeCorpusIndex(

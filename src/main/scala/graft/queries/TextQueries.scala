@@ -145,9 +145,10 @@ object TextQueries {
   /** Shared capped-Jaccard pair fragment in POSTING-LIST form (round-9):
     * group the (distinct) doc×shingle relation `src` by shingle into a
     * sorted doc list, cap at df<=100 in the same aggregation, and emit
-    * ordered pairs by unnesting each list — the same plan shape the
-    * engine's Dedup.jaccardPairs uses. Replaces the raw-string
-    * self-join (`shc a JOIN shc b ON a.s = b.s`), which was quadratic
+    * ordered pairs by unnesting each list — the same plan shape as the
+    * engine's pair kernel (Dedup.pairsWithin, under Dedup.jaccardPairs).
+    * Replaces the raw-string self-join
+    * (`shc a JOIN shc b ON a.s = b.s`), which was quadratic
     * in DuckDB's hash-probe work and made the ORACLE the sf10
     * bottleneck (NOTES round-8): pair output is unchanged and the
     * df-cap bounds every list at 100, so this mirror is linear in
@@ -171,7 +172,7 @@ object TextQueries {
   /** MinHash + LSH candidate pairs (d06): 8 seeded-md5 minhashes, 4
     * bands of 2 — the scale path for fuzzy dedup. */
   private def d06(s: SparkSession, dir: String): DataFrame = {
-    val sh  = Dedup.shingles(Tables.documents(s, dir), "doc_id", "text", 3)
+    val sh  = Dedup.shingles(Tables.documents(s, dir), "doc_id", "text")
     val sig = Dedup.minhashSignature(sh, numHashes = 8)
     Dedup.lshCandidatePairs(sig, numHashes = 8, bands = 4)
       .orderBy(col("doc_id1"), col("doc_id2"))
@@ -199,8 +200,8 @@ object TextQueries {
     * df-cap (drop shingles in >100 docs) bounds per-shingle pair
     * fan-out at scale; the oracle mirrors the capped universe exactly. */
   private def d07(s: SparkSession, dir: String): DataFrame = {
-    val sh = Dedup.shingles(Tables.documents(s, dir), "doc_id", "text", 3)
-    Dedup.jaccardPairs(sh, 0.6, maxDocFreq = 100)
+    Dedup.jaccardPairs(Dedup.postings(Tables.documents(s, dir), "doc_id", "text"),
+        0.6, maxDocFreq = 100)
       // materialization point between the pair aggregation and the
       // presentation sort (round-16): a global orderBy SAMPLES its
       // child to pick range bounds, re-executing the whole subtree —
@@ -605,8 +606,8 @@ object TextQueries {
     * (operators.Components). The oracle computes the same components
     * via a recursive transitive-closure CTE + min-per-vertex. */
   private def d18(s: SparkSession, dir: String): DataFrame = {
-    val sh = Dedup.shingles(Tables.documents(s, dir), "doc_id", "text", 3)
-    val pairs = Dedup.jaccardPairs(sh, 0.6, maxDocFreq = 100)
+    val pairs = Dedup.jaccardPairs(
+      Dedup.postings(Tables.documents(s, dir), "doc_id", "text"), 0.6, maxDocFreq = 100)
     val cc = graft.operators.Components
       .connectedComponents(pairs, "doc_id1", "doc_id2")
     cc.join(cc.groupBy(col("lbl")).agg(count(lit(1)).as("cluster_size")), "lbl")
@@ -742,7 +743,7 @@ object TextQueries {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(s, dir)
     val pairs = Dedup.jaccardPairs(
-      Dedup.shingles(docs, "doc_id", "text", 3), 0.6, maxDocFreq = 100)
+      Dedup.postings(docs, "doc_id", "text"), 0.6, maxDocFreq = 100)
     val cc = graft.operators.Components
       .connectedComponents(pairs, "doc_id1", "doc_id2")
     val scores = graft.operators.LmScore.score(docs, "doc_id", "text")
@@ -1110,7 +1111,7 @@ object TextQueries {
 
   /** Incremental dedup from the standing-corpus index (d30): d13's
     * daily-crawl contract with the corpus side read from the
-    * MATERIALIZED artifacts (canonical-hash set + shingle index,
+    * MATERIALIZED artifacts (canonical-hash set + shingle postings,
     * operators.PairIndex.materializeCorpusIndex) instead of recomputed
     * — the third oracle-pinned consumer of the compute-once/join-many
     * protocol, and the one a daily pipeline actually amortizes (the

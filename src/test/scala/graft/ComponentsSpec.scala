@@ -3,6 +3,8 @@ package graft
 import graft.operators.Components
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 class ComponentsSpec extends AnyFunSuite with SparkTestSession {
   import spark.implicits._
 
@@ -126,7 +128,20 @@ class ComponentsSpec extends AnyFunSuite with SparkTestSession {
     val edges = Seq((1L, 2L), (3L, 2L), (9L, 4L), (4L, 8L), (6L, 7L), (8L, 1L))
     val local = cc(edges)
     withContextCheckpointDir { dir =>
-      assert(cc(edges, parts = 3) === local)
+      def snapshots(): Set[String] = {
+        val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(new java.net.URI(dir)))
+        try walk.iterator().asScala.map(_.toString)
+          .filter(_.split('/').last.startsWith("rdd-")).toSet
+        finally walk.close()
+      }
+      val before = snapshots()
+      val labels = Components.connectedComponents(
+        edges.toDF("a", "b").repartition(3), "a", "b")
+      // superseded rounds and the edge snapshots are deleted as the call
+      // goes: only the returned labels' snapshot remains, and it reads
+      val left = snapshots() -- before
+      assert(left.size === 1, s"expected only the result's snapshot, found $left")
+      assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap === local)
       assert(wroteSnapshots(dir), s"no reliable checkpoint written under $dir")
     }
   }

@@ -34,7 +34,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("minhash LSH surfaces exact and near dups, not unrelated docs") {
-    val sh = Dedup.shingles(docs, "doc_id", "text", 3)
+    val sh = Dedup.shingles(docs, "doc_id", "text")
     val sig = Dedup.minhashSignature(sh, 8)
     val pairs = Dedup.lshCandidatePairs(sig, 8, 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -45,7 +45,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestSession {
   test("jaccard pairs: exact dup = 1.0, near dup high, threshold filters") {
     // doc 3 differs from 1/2 in one word of nine: 4 shared shingles of
     // 7+7 -> jaccard 4/10 = 0.4
-    val sh = Dedup.shingles(docs, "doc_id", "text", 3)
+    val sh = Dedup.postings(docs, "doc_id", "text")
     val pairs = Dedup.jaccardPairs(sh, 0.35)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(4))).toMap
     assert(pairs((1L, 2L)) === 1.0)
@@ -61,7 +61,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestSession {
     // have unique shingles; docs 100/101 additionally share a rare one.
     val hot = (1L to 50L).map(i => (i, s"hot hot hot uniq$i"))
     val rare = Seq((100L, "alpha beta gamma x"), (101L, "alpha beta gamma y"))
-    val sh = Dedup.shingles((hot ++ rare).toDF("doc_id", "text"), "doc_id", "text", 3)
+    val sh = Dedup.postings((hot ++ rare).toDF("doc_id", "text"), "doc_id", "text")
     // uncapped: the hot shingle alone fans out to C(50,2) pairs
     assert(Dedup.jaccardPairs(sh, 0.0).count() === 50L * 49L / 2L + 1L)
     // capped: the hot shingle is dropped, so only the rare-shingle pair
@@ -93,7 +93,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestSession {
     assert((fp(1L) intersect fp(3L)).isEmpty, "no shared 3-gram -> no shared fingerprint")
     assert((fp(2L) intersect fp(3L)).isEmpty)
     // selection stores far fewer than all k-gram hashes (~2/(w+1))
-    val doc1Kgrams = Dedup.shingles(df.filter(col("doc_id") === 1), "doc_id", "text", 3).count()
+    val doc1Kgrams = Dedup.shingles(df.filter(col("doc_id") === 1), "doc_id", "text").count()
     assert(fp(1L).size < doc1Kgrams,
       s"winnowing must compress: ${fp(1L).size} fingerprints vs $doc1Kgrams k-grams")
   }

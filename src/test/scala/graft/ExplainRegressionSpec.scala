@@ -102,6 +102,30 @@ class ExplainRegressionSpec extends AnyFunSuite with SparkTestSession {
       s"incoming/corpus sides don't share the shingle-union Exchange:\n$p")
   }
 
+  test("d30 reads the corpus index as bigint postings") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SparkPlan}
+    // the standing corpus side is stored hashed: its scan reads the two
+    // long columns, and no shingle generator runs over it — every
+    // shingle generator in the plan belongs to the incoming batch
+    val p = Registry.queries("d30_incremental_from_index")(spark, sfDir)
+      .queryExecution.sparkPlan
+    def indexScans(t: SparkPlan): Seq[FileSourceScanExec] = t.collect {
+      case s: FileSourceScanExec
+          if s.tableIdentifier.exists(_.table.startsWith(
+            graft.operators.PairIndex.CorpusPostingsBase)) => s
+    }
+    val scans = indexScans(p)
+    assert(scans.nonEmpty, s"no corpus postings scan in d30:\n$p")
+    scans.foreach(s => assert(s.requiredSchema.simpleString === "struct<doc_id:bigint,s:bigint>",
+      s"corpus postings scan reads ${s.requiredSchema.simpleString}:\n$p"))
+    val shinglers = p.collect {
+      case g: GenerateExec if g.generator.toString.contains("graft_shingles") => g
+    }
+    assert(shinglers.nonEmpty, s"no incoming-side shingle generator in d30:\n$p")
+    shinglers.foreach(g => assert(indexScans(g).isEmpty,
+      s"a shingle generator runs over the corpus postings in d30:\n$p"))
+  }
+
   test("d07/d13: cardinality joins stay sort-merge — the pair side must never broadcast") {
     // Catalyst's static estimate of the posting-list pair aggregate
     // shrinks below the broadcast threshold, and AQE cannot demote a

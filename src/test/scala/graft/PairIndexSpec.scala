@@ -51,7 +51,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     val survivors = Dedup.dropExactDuplicates(
       Tables.documents(spark, sfDir), "doc_id", "text")
     val pairs = Dedup.jaccardPairs(
-      Dedup.shingles(survivors, "doc_id", "text", 3), 0.6, 100)
+      Dedup.postings(survivors, "doc_id", "text"), 0.6, 100)
     val cc = graft.operators.Components
       .connectedComponents(pairs, "doc_id1", "doc_id2")
     val expected = cc
@@ -69,17 +69,54 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     val docs = Tables.documents(spark, sfDir)
     val corpus = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
     val incoming = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
-    val cidx = PairIndex.materializeCorpusIndex(corpus, "doc_id", "text",
-      numBuckets = 4,
-      hashesTable = "pis_corpus_hashes", shinglesTable = "pis_corpus_shingles")
-    val fromIndex = PairIndex
-      .dedupIncrementFromIndex(spark, cidx, incoming, "doc_id", "text")
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val recomputed = Dedup
-      .dedupIncrement(corpus, incoming, "doc_id", "text")
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(fromIndex === recomputed)
-    assert(fromIndex.nonEmpty)
+    def survivors(corpus: org.apache.spark.sql.DataFrame,
+                  incoming: org.apache.spark.sql.DataFrame, name: String): Set[Long] = {
+      val cidx = PairIndex.materializeCorpusIndex(corpus, "doc_id", "text",
+        numBuckets = 4,
+        hashesTable = s"pis_${name}_hashes", postingsTable = s"pis_${name}_postings")
+      assert(spark.table(cidx.postingsTable).schema("s").dataType.simpleString === "bigint")
+      val fromIndex = PairIndex
+        .dedupIncrementFromIndex(spark, cidx, incoming, "doc_id", "text")
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      val recomputed = Dedup
+        .dedupIncrement(corpus, incoming, "doc_id", "text")
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      assert(fromIndex === recomputed, name)
+      fromIndex
+    }
+    assert(survivors(corpus, incoming, "corpus").nonEmpty)
+    // the df-cap boundary: "h1 h2 h3" is held by exactly 100 corpus
+    // docs, two of them exact duplicates (doc 2 repeats doc 1). Incoming
+    // doc 1000 shares 3 of its 5 shingles with doc 1, "h1 h2 h3" among
+    // them. Counting every corpus doc (d13's rule) the combined df is
+    // 101 > 100, the shingle leaves the universe, and J = 2/4 < 0.6, so
+    // doc 1000 survives; postings of the exact-dedup survivors only
+    // (99 + 1 = 100) would keep it at J = 3/5 and drop the doc.
+    val capCorpus = docsDf(
+      (Seq(1L -> "h1 h2 h3 q1 q2", 2L -> "h1 h2 h3 q1 q2") ++
+        (3L to 100L).map(i => i -> s"h1 h2 h3 u$i v$i")): _*)
+    assert(survivors(capCorpus, docsDf(1000L -> "h1 h2 h3 q1 q2 z1 z2"), "cap") ===
+      Set(1000L))
+  }
+
+  test("an index stamped with another shingle width is rejected; input intact") {
+    val idx = PairIndex.materializeDocIndex(
+      docsDf(1L -> "a b c d e f g h", 2L -> "a b c d e f g x"), "doc_id", "text",
+      numBuckets = 4)
+    spark.sql(s"ALTER TABLE `${idx.pairsTable}` SET TBLPROPERTIES('graft.shingleK'='5')")
+    val before = snapshot(idx)
+    val tablesBefore = spark.catalog.listTables().collect().map(_.name).toSet
+    val e = intercept[IllegalArgumentException] {
+      PairIndex.advanceDocIndex(spark, idx, docsDf(101L -> "a b c d e f g y"),
+        "doc_id", "text")
+    }
+    assert(e.getMessage.contains(s"${idx.pairsTable} is stamped graft.shingleK=5"),
+      e.getMessage)
+    assert(spark.catalog.listTables().collect().map(_.name).toSet === tablesBefore)
+    before.foreach { case (t, rows) =>
+      assert(spark.table(t).collect().toSet === rows, s"rejected advance changed $t")
+    }
+    PairIndex.dropDocIndex(spark, idx)
   }
 
   test("two concurrent default-named materialize+consume flows don't collide") {
@@ -124,7 +161,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
     // sharing the warehouse never has its live index dropped mid-read
     val prefixes = Seq(PairIndex.SurvivorsBase, PairIndex.PairsBase,
       PairIndex.PostingsBase, PairIndex.DfBase,
-      PairIndex.CorpusHashesBase, PairIndex.CorpusShinglesBase)
+      PairIndex.CorpusHashesBase, PairIndex.CorpusPostingsBase)
     // and a generation of THIS JVM under each, which must survive too
     val own = prefixes.map(PairIndex.freshName)
     for (t <- prefixes.flatMap(p => Seq(s"${p}_p999999999_g1", s"${p}_p1_g1")) ++ own)
