@@ -123,18 +123,22 @@ object LmScore {
     * mirrors re-validate counts exactly and the ln link within 1
     * micro-nat — see the class scaladoc). */
   def dsirCosts(docs: DataFrame, textCol: String,
-                isTarget: Column): DataFrame = {
-    val toks = docs
+                isTarget: Column): DataFrame =
+    dsirCostTable(docs
       .select(explode(TextAnalysis.tokens(col(textCol))).as("tok"),
-        isTarget.as("__t"))
-    val counts = toks.groupBy(col("tok")).agg(
+        isTarget.as("__t")), "tok")
+
+  /** The DSIR cost body shared by d33 (feature `tok`) and d34 (feature
+    * `b`): `feats` holds one row per feature occurrence, (f, __t). */
+  private def dsirCostTable(feats: DataFrame, f: String): DataFrame = {
+    val counts = feats.groupBy(col(f)).agg(
       sum(when(col("__t"), 1L).otherwise(0L)).as("cnt_t"),
       count(lit(1)).as("cnt_r"))
     val tot = counts.agg(
       sum(col("cnt_t")).as("__tt"), sum(col("cnt_r")).as("__tr"),
       count(lit(1)).as("__v"))
     counts.crossJoin(broadcast(tot)).select(
-      col("tok"), col("cnt_t"), col("cnt_r"),
+      col(f), col("cnt_t"), col("cnt_r"),
       round(log((col("cnt_t") + 1L).cast("double") /
         (col("__tt") + col("__v")).cast("double")) * 1e6)
         .cast("long").as("lpt_micro"),
@@ -152,14 +156,20 @@ object LmScore {
     * (doc_id, n_tokens, weight_micro) — exact integer math after the
     * shared cost table, so ranking is engine-exact. */
   def dsirWeights(docs: DataFrame, idCol: String, textCol: String,
-                  isTarget: Column): DataFrame = {
-    val toks = docs.select(col(idCol).as("doc_id"),
-      explode(TextAnalysis.tokens(col(textCol))).as("tok"))
-    toks.join(broadcast(dsirCosts(docs, textCol, isTarget)), "tok")
+                  isTarget: Column): DataFrame =
+    dsirWeighted(docs.select(col(idCol).as("doc_id"),
+        explode(TextAnalysis.tokens(col(textCol))).as("tok")),
+      dsirCosts(docs, textCol, isTarget), "tok", "n_tokens")
+
+  /** The per-doc weight body shared by d33 and d34: `feats` (doc_id, f)
+    * holds one row per feature occurrence; the cost table over `f` is
+    * the broadcast side. Output: (doc_id, <nCol>, weight_micro). */
+  private def dsirWeighted(feats: DataFrame, costs: DataFrame, f: String,
+                           nCol: String): DataFrame =
+    feats.join(broadcast(costs), f)
       .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_tokens"),
+      .agg(count(lit(1)).as(nCol),
         sum(col("lpt_micro") - col("lpr_micro")).as("weight_micro"))
-  }
 
   /** DSIR selection: every document's weight plus a `selected` flag
     * marking the top-`k` by (weight desc, doc_id) — the deterministic
@@ -170,12 +180,16 @@ object LmScore {
     * k-row id set back as the flag join — the shape that survives a
     * billion-document weight table. */
   def dsirSelect(docs: DataFrame, idCol: String, textCol: String,
-                 isTarget: Column, k: Int): DataFrame = {
-    val w = dsirWeights(docs, idCol, textCol, isTarget)
+                 isTarget: Column, k: Int): DataFrame =
+    flagTopK(dsirWeights(docs, idCol, textCol, isTarget), "n_tokens", k)
+
+  /** The top-k flag shared by d33 and d34, over (doc_id, <nCol>,
+    * weight_micro). */
+  private def flagTopK(w: DataFrame, nCol: String, k: Int): DataFrame = {
     val top = w.orderBy(col("weight_micro").desc, col("doc_id"))
       .limit(k).select(col("doc_id").as("__sid"))
     w.join(broadcast(top), w("doc_id") === col("__sid"), "left")
-      .select(col("doc_id"), col("n_tokens"), col("weight_micro"),
+      .select(col("doc_id"), col(nCol), col("weight_micro"),
         col("__sid").isNotNull.cast("int").as("selected"))
   }
 
@@ -207,24 +221,10 @@ object LmScore {
   def dsirCostsBigram(docs: DataFrame, textCol: String, isTarget: Column,
                       buckets: Int): DataFrame = {
     require(buckets > 0, s"bad bucket count $buckets")
-    val feats = docs
+    dsirCostTable(docs
       .select(explode(TextAnalysis.shinglesCol(col(textCol), 2)).as("bg"),
         isTarget.as("__t"))
-      .select(bucketOf(col("bg"), buckets).as("b"), col("__t"))
-    val counts = feats.groupBy(col("b")).agg(
-      sum(when(col("__t"), 1L).otherwise(0L)).as("cnt_t"),
-      count(lit(1)).as("cnt_r"))
-    val tot = counts.agg(
-      sum(col("cnt_t")).as("__tt"), sum(col("cnt_r")).as("__tr"),
-      count(lit(1)).as("__v"))
-    counts.crossJoin(broadcast(tot)).select(
-      col("b"), col("cnt_t"), col("cnt_r"),
-      round(log((col("cnt_t") + 1L).cast("double") /
-        (col("__tt") + col("__v")).cast("double")) * 1e6)
-        .cast("long").as("lpt_micro"),
-      round(log((col("cnt_r") + 1L).cast("double") /
-        (col("__tr") + col("__v")).cast("double")) * 1e6)
-        .cast("long").as("lpr_micro"))
+      .select(bucketOf(col("bg"), buckets).as("b"), col("__t")), "b")
   }
 
   /** DSIR selection over hashed bigrams (d34): same contract as
@@ -242,15 +242,7 @@ object LmScore {
       .select(col(idCol).as("doc_id"),
         explode(TextAnalysis.shinglesCol(col(textCol), 2)).as("bg"))
       .select(col("doc_id"), bucketOf(col("bg"), buckets).as("b"))
-    val w = feats
-      .join(broadcast(dsirCostsBigram(docs, textCol, isTarget, buckets)), "b")
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_bigrams"),
-        sum(col("lpt_micro") - col("lpr_micro")).as("weight_micro"))
-    val top = w.orderBy(col("weight_micro").desc, col("doc_id"))
-      .limit(k).select(col("doc_id").as("__sid"))
-    w.join(broadcast(top), w("doc_id") === col("__sid"), "left")
-      .select(col("doc_id"), col("n_bigrams"), col("weight_micro"),
-        col("__sid").isNotNull.cast("int").as("selected"))
+    flagTopK(dsirWeighted(feats, dsirCostsBigram(docs, textCol, isTarget, buckets),
+      "b", "n_bigrams"), "n_bigrams", k)
   }
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Telemetry
 import graft.etl.Layout
-import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -336,9 +336,6 @@ object PairIndex {
       prop("numBuckets").toInt, prop("nDocs").toLong)
   }
 
-  /** A long aggregate cell, 0 when null (a sum over no rows). */
-  private def longOr0(r: Row, i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
-
   /** Compute the four artifacts once and write them bucketed.
     * `numBuckets` sizes the co-location unit — pass 0 (the default)
     * to derive it from the input size, floored at the session's
@@ -424,14 +421,20 @@ object PairIndex {
     *
     * Phases, in order (private steps below; `AdvanceRun` runs each
     * one under the job description `advanceDocIndex:<phase>` and
-    * records its wall as `pairindex.advance_ms_<phase>`):
-    *  1. decide (`decideBatch`): exact-dedup the batch and probe the
-    *     survivors' stored canonical hash → new survivors and evicted
-    *     corpus docs, counted in one action.
-    *  2. cap status (`capStatus`): the df delta of batch and
-    *     evictions, ONE combined per-shingle cap-status relation off
-    *     the df artifact (the advance's only corpus-scale cache), the
-    *     flip scalars and the affected old docs.
+    * records its wall as `pairindex.advance_ms_<phase>`). Frames are
+    * materialized one way — eager local checkpoints (`ckpt_*`), each
+    * read by more than one consumer, every count observed on the job
+    * that materializes the frame it counts:
+    *  1. decide (`decideBatch`): exact-dedup the batch (`ckpt_batch`,
+    *     its row count) and probe the survivors' stored canonical hash
+    *     (`ckpt_decided`) → new survivors and evicted corpus docs,
+    *     both counted on that checkpoint.
+    *  2. cap status (`capStatus`): the batch's postings (`ckpt_shb`),
+    *     ONE combined per-shingle cap-status relation off the df
+    *     artifact and the df delta of batch and evictions
+    *     (`ckpt_dfcomb`, the advance's only corpus-scale frame, with
+    *     the flip scalars observed on it) and the affected old docs
+    *     (`ckpt_affected`, counted).
     *  3. economy guard (`rematerialize`): when new + evicted + affected
     *     docs exceed `economyGuard` × corpus docs (the stamped
     *     `graft.nDocs`), the delta path cannot beat a rebuild; the
@@ -439,7 +442,9 @@ object PairIndex {
     *     instead — row-identical either way, telemetry
     *     `pairindex.advance_fallback` records it. Pass
     *     `Double.PositiveInfinity` to force the delta path.
-    *  4. delta rescore (`rescoreDelta`): pairs touching A.
+    *  4. delta rescore (`rescoreDelta`): pairs touching A, over
+    *     batch-scale checkpoints; the scoring join runs in the pairs
+    *     write, its one consumer.
     *  5. write (`writeDelta`), by case:
     *     - no evictions: no existing survivor, posting or df row
     *       changes, so those three tables are CLONED (phase
@@ -485,9 +490,12 @@ object PairIndex {
     * base (the registered d31/d32/d39 do). Release the input with
     * `dropDocIndex` once its readers are done.
     *
-    * Failure: the caches are released on every exit, and a throw in any
-    * phase drops every table this call created (clones and fresh
-    * generations). The input index is left as it was.
+    * Release and failure: every checkpoint is released on every exit
+    * (a no-eviction advance releases `ckpt_dfcomb` before its writes,
+    * which do not read it), so an advance leaves no persisted RDD
+    * behind; a throw in any phase also drops every table this call
+    * created (clones and fresh generations). The input index is left
+    * as it was.
     *
     * Preconditions: the index carries its `graft.*` stamp — semantics
     * are read from it, so an advance never runs with different
@@ -513,12 +521,12 @@ object PairIndex {
   }
 
   /** The one runner of an advance's phases, and the owner of what they
-    * leave behind: every cache and every table the call creates is
-    * registered here, and `guarded` releases the caches on every exit
-    * and drops the created tables on a throw. */
+    * leave behind: every checkpoint and every table the call creates is
+    * registered here, and `guarded` releases the checkpoints on every
+    * exit and drops the created tables on a throw. */
   private final class AdvanceRun(spark: SparkSession) {
     private val sc = spark.sparkContext
-    private val caches = scala.collection.mutable.Buffer.empty[DataFrame]
+    private val checkpoints = scala.collection.mutable.Buffer.empty[DataFrame]
     private val created = scala.collection.mutable.Buffer.empty[String]
 
     /** One named phase: its jobs carry the description
@@ -537,29 +545,34 @@ object PairIndex {
       } finally sc.setJobDescription(callerDescription)
     }
 
-    /** A phase whose output is eagerly localCheckpoint'd, not persisted:
-      * a lazy advance DAG grows multiplicatively — every downstream
-      * plan embeds the full upstream tree, and Catalyst re-analyzing
-      * thousands of nodes per action measured ~half the advance wall at
-      * sf0.1 (and an explain-string heap blowout in long sessions). A
-      * checkpoint is one small eager job whose output the rest of the
-      * advance reads as a flat block scan. Blocks are released by
-      * ContextCleaner (set spark.cleaner.periodicGC.interval low on
-      * long-lived sessions); advance-internal state is not recoverable
-      * on executor loss — rerun the advance. */
-    def checkpoint(name: String)(df: => DataFrame): DataFrame =
-      phase(name)(df.localCheckpoint(true))
+    /** The advance's one way to materialize a frame: an eager
+      * localCheckpoint at `level`, run as phase `name`. A lazy advance
+      * DAG grows multiplicatively — every downstream plan embeds the
+      * full upstream tree, and Catalyst re-analyzing thousands of nodes
+      * per action measured ~half the advance wall at sf0.1 — so a frame
+      * with more than one consumer is materialized once and read as a
+      * flat block scan. `metrics` (named aggregates) ride the same job
+      * through `Dataset.observe` and come back by name, null (a sum over
+      * no rows) as 0. The checkpoint lives until `guarded` exits or
+      * `release`; a released one fails when read (it is never
+      * recomputed), and none survives executor loss — rerun the
+      * advance. */
+    def checkpoint(name: String, level: StorageLevel = StorageLevel.MEMORY_AND_DISK)
+                  (df: => DataFrame, metrics: Column*): (DataFrame, Map[String, Long]) =
+      phase(name) {
+        val obs = new Observation()
+        val out = (if (metrics.isEmpty) df else df.observe(obs, metrics.head, metrics.tail: _*))
+          .localCheckpoint(true, level)
+        checkpoints += out
+        (out, if (metrics.isEmpty) Map.empty[String, Long]
+              else obs.get.map { case (k, v) => k -> Option(v).fold(0L)(_.asInstanceOf[Long]) })
+      }
 
-    def cache(df: DataFrame, level: StorageLevel): DataFrame = {
-      caches += df
-      df.persist(level)
-    }
-
-    /** Release once the frames the writes read are checkpointed, so the
-      * write phases do not share executor memory with the caches. */
-    def releaseCaches(): Unit = {
-      caches.foreach(_.unpersist())
-      caches.clear()
+    /** Release a checkpoint (`guarded` releases the rest at exit);
+      * nothing may read it after. */
+    def release(df: DataFrame): Unit = {
+      GraftColumnBridge.unpersistCheckpointed(df)
+      checkpoints -= df
     }
 
     /** A fresh generation name owned by this call. */
@@ -583,7 +596,7 @@ object PairIndex {
         completed = true
         r
       } finally {
-        releaseCaches()
+        checkpoints.toList.foreach(release)
         // created names are fresh generations, never the input's tables
         if (!completed)
           created.foreach(t => scala.util.Try(spark.sql(s"DROP TABLE IF EXISTS `$t`")))
@@ -618,12 +631,14 @@ object PairIndex {
     import in._
     // Corpus survivors are unique per canonical hash, so the left join
     // fans out at most 1:1; the decision relation is batch-scale and is
-    // persisted so every downstream plan reads the decided state instead
-    // of replaying the join.
-    val batchD = run.cache(Dedup.dropExactDuplicates(batch, idCol, textCol)
-      .withColumn("__h", TextAnalysis.textHash(col(textCol))),
-      StorageLevel.MEMORY_AND_DISK)
-    val nBatch = run.phase("count_batch")(batchD.count())
+    // checkpointed so every downstream plan reads the decided state
+    // instead of replaying the join. Each count rides the checkpoint
+    // job of the frame it counts.
+    val (batchD, nb) = run.checkpoint("ckpt_batch")(
+      Dedup.dropExactDuplicates(batch, idCol, textCol)
+        .withColumn("__h", TextAnalysis.textHash(col(textCol))),
+      count(lit(1)).as("n"))
+    val nBatch = nb("n")
     // Batch ≪ corpus is the daily regime, so the decision is a PROBE of
     // the corpus, not a merge with it: the merge plan shuffled and
     // sorted the full survivors relation by hash every advance (~5 s of
@@ -636,26 +651,21 @@ object PairIndex {
     val probeMax = spark.conf
       .get("spark.graft.advance.broadcastProbeMaxBatch", "5000000").toLong
     val survHashed = survivors.select(col(idCol).as("__cid"), col(HashCol).as("__h"))
-    val decided = run.cache(
+    val evicts = col("__cid").isNotNull && col(idCol) < col("__cid")
+    val keeps = col("__cid").isNull || col(idCol) < col("__cid")
+    val (decided, cnts) = run.checkpoint("ckpt_decided")(
       if (nBatch <= probeMax) {
         val matched = survHashed.join(
           broadcast(batchD.select(col("__h"))), Seq("__h"), "left_semi")
         batchD.join(broadcast(matched), Seq("__h"), "left")
       } else
         batchD.join(survHashed.hint("merge"), Seq("__h"), "left"),
-      StorageLevel.MEMORY_AND_DISK)
-    val evicts = col("__cid").isNotNull && col(idCol) < col("__cid")
-    val keeps = col("__cid").isNull || col(idCol) < col("__cid")
-    // both decision counts in ONE action over the persisted relation —
-    // each count() here is a full multi-stage job at small batch sizes
-    val cnts = run.phase("count_new_evicted")(decided.agg(
-      sum(when(evicts, 1L).otherwise(0L)).as("e"),
-      sum(when(keeps, 1L).otherwise(0L)).as("n")).head())
+      count(when(evicts, true)).as("e"), count(when(keeps, true)).as("n"))
     Decision(
       newSurv = decided.filter(keeps)
         .withColumn(HashCol, col("__h")).drop("__h", "__cid"),
       evictedIds = decided.filter(evicts).select(col("__cid").as(idCol)),
-      nNew = longOr0(cnts, 1), nEvicted = longOr0(cnts, 0))
+      nNew = cnts("n"), nEvicted = cnts("e"))
   }
 
   /** Step 2 output. `dfB` is the batch's per-shingle df; `dfCombFull`
@@ -670,11 +680,11 @@ object PairIndex {
                         frozenCaps: Boolean, assertNoCapFlips: Boolean): CapStatus = {
     import in._
     val cap = stamp.maxDocFreq
-    val shB = run.checkpoint("ckpt_shb")(Dedup.postings(d.newSurv, idCol, textCol))
+    val (shB, _) = run.checkpoint("ckpt_shb")(Dedup.postings(d.newSurv, idCol, textCol))
     val dfB = shB.groupBy(col("s")).agg(count(lit(1)).as("__dfb"))
     // per-shingle df deltas: batch additions minus eviction removals —
     // df can only change for shingles present in one of these
-    val dfDelta = run.checkpoint("ckpt_dfdelta")(
+    val dfDelta =
       if (d.nEvicted == 0) dfB.withColumn("__dfe", lit(0L))
       else dfB.join(
           Dedup.postings(survivors.join(d.evictedIds, Seq(idCol), "left_semi"),
@@ -682,42 +692,33 @@ object PairIndex {
             .groupBy(col("s")).agg(count(lit(1)).as("__dfe")),
           Seq("s"), "full_outer")
         .select(col("s"), coalesce(col("__dfb"), lit(0L)).as("__dfb"),
-          coalesce(col("__dfe"), lit(0L)).as("__dfe")))
-    // ONE corpus-wide df pass per advance: a bucketed scan + bucket-
-    // local sum over the df artifact's ~|distinct shingles| delta rows,
-    // computed once and probed by every consumer (three separate
-    // full-postings aggregations measured 2.6-6.6× a rematerialization
-    // at sf0.1-sf1). Serialized storage: this is the advance's one
-    // corpus-scale cache, and deserialized caching starved the bucketed
-    // sorts to OOM at sf10.
-    val dfCombFull = run.cache(
-      spark.table(idx.dfTable).groupBy(col("s")).agg(sum(col("cnt")).as("__dfo"))
-        .join(dfDelta, Seq("s"), "full_outer")
-        .select(col("s"), coalesce(col("__dfo"), lit(0L)).as("__dfo0"),
-          (coalesce(col("__dfo"), lit(0L)) - coalesce(col("__dfe"), lit(0L))
-            + coalesce(col("__dfb"), lit(0L))).as("__dfc")),
-      StorageLevel.MEMORY_AND_DISK_SER)
+          coalesce(col("__dfe"), lit(0L)).as("__dfe"))
     // shingles whose cap status changes AND that some old doc holds:
     // only these can perturb old pairs. A flip requires a df change, and
     // rows absent from dfDelta have __dfc == __dfo0, so no key-set join
     // is needed.
     val flipCond = col("__dfo0") >= 1 &&
       ((col("__dfo0") <= cap) =!= (col("__dfc") <= cap))
-    val changedKeys = dfCombFull.filter(flipCond).select(col("s"))
-    // Frozen mode skips the rescore by definition, but ONE fused pass
-    // over the persisted relation yields the flip count and the flip
-    // HOLDER mass (Σ per flipped shingle of its smaller-side df): how
-    // far the frozen scores drift, exported as telemetry.
-    val (nFlips, flipHolders) =
-      if (!frozenCaps)
-        (run.phase("count_changed")(changedKeys.count()), 0L)
-      else {
-        val r = run.phase("count_changed")(dfCombFull.agg(
-          sum(when(flipCond, 1L).otherwise(0L)).as("f"),
-          sum(when(flipCond, least(col("__dfo0"), col("__dfc")))
-            .otherwise(0L)).as("h")).head())
-        (longOr0(r, 0), longOr0(r, 1))
-      }
+    // ONE corpus-wide df pass per advance: a bucketed scan + bucket-
+    // local sum over the df artifact's ~|distinct shingles| delta rows,
+    // computed once and probed by every consumer (three separate
+    // full-postings aggregations measured 2.6-6.6× a rematerialization
+    // at sf0.1-sf1). Serialized storage: this is the advance's one
+    // corpus-scale frame, and deserialized storage starved the bucketed
+    // sorts to OOM at sf10. Its job also yields the flip count and the
+    // flip HOLDER mass (Σ per flipped shingle of its smaller-side df):
+    // frozen mode skips the rescore by definition, but exports how far
+    // its scores drift as telemetry.
+    val (dfCombFull, flips) = run.checkpoint("ckpt_dfcomb", StorageLevel.MEMORY_AND_DISK_SER)(
+      spark.table(idx.dfTable).groupBy(col("s")).agg(sum(col("cnt")).as("__dfo"))
+        .join(dfDelta, Seq("s"), "full_outer")
+        .select(col("s"), coalesce(col("__dfo"), lit(0L)).as("__dfo0"),
+          (coalesce(col("__dfo"), lit(0L)) - coalesce(col("__dfe"), lit(0L))
+            + coalesce(col("__dfb"), lit(0L))).as("__dfc")),
+      count(when(flipCond, true)).as("f"),
+      sum(when(flipCond, least(col("__dfo0"), col("__dfc")))).as("h"))
+    val nFlips = flips("f")
+    val flipHolders = if (frozenCaps) flips("h") else 0L
     if (frozenCaps && assertNoCapFlips && nFlips > 0)
       throw new IllegalStateException(
         s"frozen-cap advance precondition violated: $nFlips shingle cap-status " +
@@ -729,13 +730,11 @@ object PairIndex {
     val (affectedOld, nAffected) =
       if (nChanged == 0) (d.newSurv.select(col(idCol)).limit(0), 0L)
       else {
-        // the count rides on the checkpoint job that materializes the rows
-        val obs = new Observation()
-        val affected = run.checkpoint("ckpt_affected")(
-          stored.join(changedKeys, Seq("s"), "left_semi")
-            .select(col("doc_id").as(idCol)).distinct()
-            .observe(obs, count(lit(1)).as("n")))
-        (affected, obs.get("n").asInstanceOf[Long])
+        val (affected, m) = run.checkpoint("ckpt_affected")(
+          stored.join(dfCombFull.filter(flipCond).select(col("s")), Seq("s"), "left_semi")
+            .select(col("doc_id").as(idCol)).distinct(),
+          count(lit(1)).as("n"))
+        (affected, m("n"))
       }
     CapStatus(shB, dfB, dfCombFull, affectedOld, nAffected, nFlips, flipHolders)
   }
@@ -770,9 +769,9 @@ object PairIndex {
     if (d.nEvicted == 0) in.survivors
     else in.survivors.join(evictedSide(in, d), in.survivors(in.idCol) === col("__eid"), "left_anti")
 
-  /** Step 4 output, every frame checkpointed: the rescored pairs
-    * touching A, A's ids, and the new survivor rows to write. */
-  private final case class Delta(pairs: DataFrame, aIds: DataFrame, newSurv: DataFrame)
+  /** Step 4 output: the rescored pairs touching A (a scoring join over
+    * checkpoints, run by the pairs write) and A's ids. */
+  private final case class Delta(pairs: DataFrame, aIds: DataFrame)
 
   private def rescoreDelta(in: AdvanceInput, run: AdvanceRun, d: Decision,
                            cs: CapStatus): Delta = {
@@ -795,7 +794,7 @@ object PairIndex {
       .unionByName(shAOld.select(col("s"))).distinct()
     // batch-scale key set, re-walked by aPart (twice: A-B join and A-A
     // kernel) and bPart — checkpointed so the cap-status probe runs once
-    val cappedCandKeys = run.checkpoint("ckpt_capped_cand")(cappedKeys(candKeys))
+    val (cappedCandKeys, _) = run.checkpoint("ckpt_capped_cand")(cappedKeys(candKeys))
     val storedCand = {
       val sc = stored.join(cappedCandKeys, Seq("s"), "left_semi")
       if (d.nEvicted == 0) sc
@@ -821,7 +820,7 @@ object PairIndex {
       }
     // batch-scale postings, consumed by the A-B join, the A-A kernel
     // and the naA cardinalities
-    val aPart = run.checkpoint("ckpt_apart")(aPart0)
+    val (aPart, _) = run.checkpoint("ckpt_apart")(aPart0)
     // candidate keys cover every pair-touching-A intersection: a shared
     // shingle of any such pair is held by its A-side doc
     val interAB = aPart.select(col("s"), col("doc_id").as("__a"))
@@ -829,7 +828,7 @@ object PairIndex {
       .groupBy(least(col("__a"), col("__b")).as("doc_id1"),
         greatest(col("__a"), col("__b")).as("doc_id2"))
       .agg(count(lit(1)).as("n_inter"))
-    val aIds = run.checkpoint("ckpt_aids")(d.newSurv.select(col(idCol).as("__aid"))
+    val (aIds, _) = run.checkpoint("ckpt_aids")(d.newSurv.select(col(idCol).as("__aid"))
       .unionByName(aOldDocs.select(col(idCol).as("__aid"))))
     val interAA = Dedup.pairsWithin(aPart, col("s"), col("doc_id"))
       .groupBy(col("d1").as("doc_id1"), col("d2").as("doc_id2"))
@@ -837,7 +836,7 @@ object PairIndex {
     val interA = interAA.unionByName(interAB)
     // A-side capped cardinalities come free from aPart: an A doc's
     // aPart rows are exactly its capped shingle set
-    val naA = run.checkpoint("ckpt_naa")(
+    val (naA, _) = run.checkpoint("ckpt_naa")(
       aPart.groupBy(col("doc_id")).agg(count(lit(1)).as("__na")))
     // Exact length-bound prune: interA holds every pair sharing >=1
     // capped candidate shingle — overwhelmingly n_inter=1-2 junk from
@@ -848,7 +847,7 @@ object PairIndex {
     // EACH endpoint, so dropping a pair with i < t*na on a known
     // (A-side) endpoint is exact. The epsilon keeps FP rounding from
     // dropping an exactly-boundary pair (the scorer re-filters anyway).
-    val interPruned = run.checkpoint("ckpt_inter_pruned")(interA
+    val (interPruned, _) = run.checkpoint("ckpt_inter_pruned")(interA
       .join(naA.select(col("doc_id").as("doc_id1"), col("__na").as("__na1")),
         Seq("doc_id1"), "left")
       .join(naA.select(col("doc_id").as("doc_id2"), col("__na").as("__na2")),
@@ -865,22 +864,22 @@ object PairIndex {
     val bParticipants = interPruned.select(col("doc_id1").as("__pid"))
       .unionByName(interPruned.select(col("doc_id2").as("__pid"))).distinct()
       .join(aIds, col("__pid") === col("__aid"), "left_anti")
-    val bSh = run.checkpoint("ckpt_bsh")(Dedup.postings(survivors.join(
+    val (bSh, _) = run.checkpoint("ckpt_bsh")(Dedup.postings(survivors.join(
       bParticipants.select(col("__pid").as(idCol)), Seq(idCol), "left_semi"),
       idCol, textCol))
-    val card = run.checkpoint("ckpt_card")(
+    val (card, _) = run.checkpoint("ckpt_card")(
       bSh.join(cappedKeys(bSh.select(col("s")).distinct()), Seq("s"), "left_semi")
         .groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
         .unionByName(naA.select(col("doc_id"), col("__na").as("n"))))
-    val pairs = run.checkpoint("force_delta")(Dedup.scoreJaccardPairs(
-      interPruned, "doc_id1", card, "doc_id2", card, threshold))
-    // newSurv reads the decided cache, released before the writes
-    Delta(pairs, aIds, run.checkpoint("checkpoint_writes")(d.newSurv.select(survCols: _*)))
+    // the pairs write is the scored pairs' one consumer: it does the
+    // scoring under its own phase
+    Delta(Dedup.scoreJaccardPairs(interPruned, "doc_id1", card, "doc_id2", card, threshold),
+      aIds)
   }
 
   /** Step 5: the write cases of the scaladoc above. Every frame written
-    * is a checkpoint (or a scan of the old pairs table), so the writes
-    * never replay the candidate pipeline. */
+    * reads checkpoints (or the old tables), so the writes never replay
+    * the candidate pipeline. */
   private def writeDelta(in: AdvanceInput, run: AdvanceRun, d: Decision,
                          cs: CapStatus, delta: Delta): AdvanceResult = {
     import in._
@@ -895,7 +894,9 @@ object PairIndex {
         if (appendPairs) run.cloneTable(idx.pairsTable, PairsBase) else idx.pairsTable,
         run.cloneTable(idx.postingsTable, PostingsBase),
         run.cloneTable(idx.dfTable, DfBase)))
-      run.releaseCaches()
+      // the corpus-scale frame is read by nothing below: release it
+      // before the writes instead of at exit
+      run.release(cs.dfCombFull)
       val pairsTable =
         if (appendPairs) {
           run.phase("append_pairs")(
@@ -913,7 +914,7 @@ object PairIndex {
       run.phase("append_postings")(
         Layout.appendBucketed(cs.shB, target.postingsTable, "s", nb))
       run.phase("append_survivors")(
-        Layout.appendBucketed(delta.newSurv, target.survivorsTable, idCol, nb))
+        Layout.appendBucketed(d.newSurv.select(survCols: _*), target.survivorsTable, idCol, nb))
       run.phase("append_df")(
         Layout.appendBucketed(dfRows, target.dfTable, "s", nb))
       writeStamp(spark, pairsTable, stamp.copy(nDocs = stamp.nDocs + d.nNew))
@@ -922,7 +923,7 @@ object PairIndex {
     } else {
       val to = run.freshIndex()
       run.phase("rewrite_survivors")(Layout.writeBucketed(
-        liveSurvivors(in, d).select(survCols: _*).unionByName(delta.newSurv),
+        liveSurvivors(in, d).select(survCols: _*).unionByName(d.newSurv.select(survCols: _*)),
         to.survivorsTable, idCol, nb))
       val livePost = stored.join(evictedSide(in, d), stored("doc_id") === col("__eid"), "left_anti")
       run.phase("rewrite_postings")(Layout.writeBucketed(
@@ -935,7 +936,7 @@ object PairIndex {
       run.phase("rewrite_pairs")(Layout.writeBucketed(
         keptPairs.unionByName(delta.pairs), to.pairsTable, "doc_id2", nb))
       writeStamp(spark, to.pairsTable, stamp.copy(nDocs = stamp.nDocs + d.nNew - d.nEvicted))
-      // a fresh COMPACTED df generation straight off the cached
+      // a fresh COMPACTED df generation straight off the checkpointed
       // cap-status relation; net-zero shingles (all holders evicted)
       // drop out
       run.phase("rewrite_df")(Layout.writeBucketed(

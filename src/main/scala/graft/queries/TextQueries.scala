@@ -1143,22 +1143,26 @@ object TextQueries {
     * df-cap status changes, delta scoring) end-to-end. The mod split
     * interleaves batch ids below corpus ids, so the advance exercises
     * the eviction-aware exact-dedup path at every scale too. */
-  private def d31(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.PairIndex
-    // the 63/64 base index is the shared standing fixture (round-19,
-    // VERDICT item 4): built once per run, advanced by d31/d32/d39
-    // alike; the advance never writes its input (see StandingFixtures'
-    // sharing contract)
-    val base = StandingFixtures.baseDocIndex(s, dir)
-    val docs = Tables.documents(s, dir)
+  private def d31(s: SparkSession, dir: String): DataFrame =
     // guard disabled: this query exists to oracle-pin the EXACT delta
-    // algebra end-to-end, so it must never silently take the fallback.
-    // The batch is 1/64th (a realistic daily increment) — round 12's
-    // 20% batch made one registered query a third of the whole suite
-    val adv = PairIndex.advanceDocIndex(
-      s, base, docs.filter(pmod(col("doc_id"), lit(64)) === 0), "doc_id", "text",
-      economyGuard = Double.PositiveInfinity)
-    PairIndex.keepLatest(s, "d31", adv.idx)
+    // algebra end-to-end, so it must never silently take the fallback
+    advanceAndCurate(s, dir, "d31")(graft.operators.PairIndex.advanceDocIndex(
+      s, _, _, "doc_id", "text", economyGuard = Double.PositiveInfinity))
+
+  /** The body d31, d32 and d39 share: advance the shared 63/64 base
+    * index (StandingFixtures' standing fixture, built once per run; the
+    * advance never writes its input) with the remaining mod-64 batch —
+    * 1/64th, a realistic daily increment; round 12's 20% batch made one
+    * registered query a third of the whole suite — through the caller's
+    * `advance`, keep the result as the latest generation under `key`,
+    * and run the curation consumer off it. */
+  private def advanceAndCurate(s: SparkSession, dir: String, key: String)(
+      advance: (graft.operators.PairIndex.DocIndex, DataFrame) =>
+        graft.operators.PairIndex.AdvanceResult): DataFrame = {
+    import graft.operators.PairIndex
+    val adv = advance(StandingFixtures.baseDocIndex(s, dir),
+      Tables.documents(s, dir).filter(pmod(col("doc_id"), lit(64)) === 0))
+    PairIndex.keepLatest(s, key, adv.idx)
     splitCounts(PairIndex.curateFromIndex(s, adv.idx, "doc_id", "text"))
   }
 
@@ -1176,17 +1180,10 @@ object TextQueries {
     * decision + internal-rematerialize path end-to-end while d31
     * (guard disabled) pins the exact delta algebra — together the
     * two registrations cover both sides of the economy decision. */
-  private def d39(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.PairIndex
-    // shared base fixture — see d31; the base survives this consumer
-    // on both sides of the guard decision
-    val base = StandingFixtures.baseDocIndex(s, dir)
-    val docs = Tables.documents(s, dir)
-    val adv = PairIndex.advanceDocIndex(
-      s, base, docs.filter(pmod(col("doc_id"), lit(64)) === 0), "doc_id", "text")
-    PairIndex.keepLatest(s, "d39", adv.idx)
-    splitCounts(PairIndex.curateFromIndex(s, adv.idx, "doc_id", "text"))
-  }
+  private def d39(s: SparkSession, dir: String): DataFrame =
+    // the base survives this consumer on both sides of the guard decision
+    advanceAndCurate(s, dir, "d39")(
+      graft.operators.PairIndex.advanceDocIndex(s, _, _, "doc_id", "text"))
 
   /** Frozen-cap pair-index advance (d32, round-13): the CHEAP daily
     * path — same standing three+one-artifact index, advanced with
@@ -1201,23 +1198,15 @@ object TextQueries {
     * regeneration ever breaks that precondition, the oracle
     * hash-compare goes red LOUDLY (the frozen-vs-exact divergence is
     * exactly what it would detect) instead of silently drifting. */
-  private def d32(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.PairIndex
-    // shared base fixture — see d31; this registration oracle-gates
-    // the frozen clone-and-append write path end-to-end
-    val base = StandingFixtures.baseDocIndex(s, dir)
-    val docs = Tables.documents(s, dir)
+  private def d32(s: SparkSession, dir: String): DataFrame =
+    // oracle-gates the frozen clone-and-append write path end-to-end.
     // assertNoCapFlips (round-14, ADVICE): this query's oracle pin is
     // only valid when the mod-64 batch flips no shingle's cap status —
     // asserting it makes a regenerated fixture that breaks the
     // precondition fail with an attributable message instead of an
     // anonymous hash mismatch read as an advance bug
-    val adv = PairIndex.advanceDocIndex(
-      s, base, docs.filter(pmod(col("doc_id"), lit(64)) === 0), "doc_id", "text",
-      frozenCaps = true, assertNoCapFlips = true)
-    PairIndex.keepLatest(s, "d32", adv.idx)
-    splitCounts(PairIndex.curateFromIndex(s, adv.idx, "doc_id", "text"))
-  }
+    advanceAndCurate(s, dir, "d32")(graft.operators.PairIndex.advanceDocIndex(
+      s, _, _, "doc_id", "text", frozenCaps = true, assertNoCapFlips = true))
 
   def specs: Seq[QuerySpec] = Seq(
     QuerySpec("d01_doc_stats", d01, Some(d01Sql)),

@@ -17,10 +17,14 @@ object GraftColumnBridge {
     * `LogicalRDD` scan — without this, every iteration of a loop that
     * checkpoints per round leaks one labels snapshot until session end.
     * No-op for plans that aren't checkpointed-RDD scans and for
-    * reliable (file-based) checkpoints, whose RDD is not persisted. */
+    * reliable (file-based) checkpoints, whose RDD is not persisted.
+    * Goes through the context rather than `RDD.unpersist`, which logs a
+    * WARN per locally checkpointed RDD that its lineage is truncated —
+    * the point of releasing it, and ~12 lines per index advance. */
   def unpersistCheckpointed(df: Dataset[_]): Unit =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.logical match {
-      case lr: execution.LogicalRDD => lr.rdd.unpersist(blocking = false)
+      case lr: execution.LogicalRDD =>
+        lr.rdd.sparkContext.unpersistRDD(lr.rdd.id, blocking = false)
       case _ => ()
     }
 

@@ -946,12 +946,14 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
       docsDf(101L -> "p q r z1 z2 z3"), 0.6, 2)
     def catalogTables(): Set[String] =
       spark.catalog.listTables().collect().map(_.name).toSet
+    def persisted(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
     for ((corpus, batch, threshold, cap) <- Seq(appendCase, capFlipCase)) {
       val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
         threshold = threshold, maxDocFreq = cap, numBuckets = 4)
       spark.sql(s"ALTER TABLE `${idx.pairsTable}` SET TBLPROPERTIES('graft.numBuckets'='8')")
       val before = snapshot(idx)
       val tablesBefore = catalogTables()
+      val persistedBefore = persisted()
       Telemetry.drain()
       intercept[org.apache.spark.sql.AnalysisException] {
         PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text",
@@ -959,10 +961,42 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
       }
       assert(Telemetry.drain().contains("pairindex.advance_ms_clone_index"))
       assert(catalogTables() === tablesBefore)
+      assert(persisted() -- persistedBefore === Set.empty, "a failed advance left persisted RDDs")
       before.foreach { case (t, rows) =>
         assert(spark.table(t).collect().toSet === rows, s"failed advance mutated $t")
       }
       PairIndex.dropDocIndex(spark, idx)
+    }
+  }
+
+  test("an advance leaves no persisted RDD behind, on every write path") {
+    // each checkpoint the advance makes is released when it returns, not
+    // left for ContextCleaner: the cap-flip partial rewrite (its
+    // corpus-scale frame released before the writes), the eviction full
+    // rewrite, a frozen append and the guard fallback
+    val capFlip = (docsDf(1L -> "p q r s t u", 2L -> "p q r s t v"),
+      docsDf(101L -> "p q r z1 z2 z3"), 2, false, Double.PositiveInfinity)
+    val eviction = (docsDf(10L -> "alpha beta gamma delta epsilon zeta",
+      11L -> "alpha beta gamma delta epsilon eta"),
+      docsDf(5L -> "alpha beta gamma delta epsilon zeta"), 100, false, Double.PositiveInfinity)
+    val frozen = (docsDf(1L -> "a b c d e f g h", 2L -> "a b c d e f g x"),
+      docsDf(101L -> "a b c d e f g y"), 100, true, Double.PositiveInfinity)
+    val fallback = (frozen._1, frozen._2, 100, false, 0.0)
+    for (((corpus, batch, cap, frozenCaps, guard), name) <-
+           Seq(capFlip, eviction, frozen, fallback)
+             .zip(Seq("cap flip", "eviction", "frozen", "fallback"))) {
+      val idx = PairIndex.materializeDocIndex(corpus, "doc_id", "text",
+        threshold = 0.6, maxDocFreq = cap, numBuckets = 4)
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      Telemetry.drain()
+      val r = PairIndex.advanceDocIndex(spark, idx, batch, "doc_id", "text",
+        frozenCaps = frozenCaps, economyGuard = guard)
+      val left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+      assert(left === Set.empty, s"$name advance left persisted RDDs $left")
+      val tel = Telemetry.drain()
+      assert(tel.get("pairindex.advance_fallback") === Some(if (guard == 0.0) 1L else 0L), name)
+      PairIndex.dropDocIndex(spark, idx)
+      PairIndex.dropDocIndex(spark, r.idx)
     }
   }
 
@@ -1004,7 +1038,7 @@ class PairIndexSpec extends AnyFunSuite with SparkTestSession {
       assert(group === "caller-group")
     }
     val phases = seen.map(_._1.stripPrefix("advanceDocIndex:")).toSet
-    Seq("count_batch", "ckpt_shb", "ckpt_affected", "force_delta",
+    Seq("ckpt_batch", "ckpt_shb", "ckpt_affected", "ckpt_dfcomb",
       "rewrite_pairs", "append_postings")
       .foreach(p => assert(phases.contains(p), s"no job labelled $p in $phases"))
     PairIndex.dropDocIndex(spark, idx)

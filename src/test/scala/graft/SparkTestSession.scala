@@ -13,10 +13,5 @@ trait SparkTestSession {
     .config("spark.ui.enabled", "false")
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    // aggressive periodic GC: localCheckpoint blocks (the advance path
-    // makes several per call) are only released when ContextCleaner
-    // sees their RDDs garbage-collected — the 30 min default let a
-    // 16-advance suite accumulate blocks until heap death
-    .config("spark.cleaner.periodicGC.interval", "30s")
     .getOrCreate()
 }
